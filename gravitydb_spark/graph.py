@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .hashing import canonical_json, edge_hash, tagged_property
 from .schema import DEFAULT_SCHEMA, Prop, Schema
 
-__all__ = ["PropertyGraph", "GraphBatchBuilder", "NodeExistsError"]
+__all__ = ["PropertyGraph", "GraphBatchBuilder", "NodeExistsError", "literal_frame"]
 
 VERTICES_SCHEMA = T.StructType(
     [
@@ -74,6 +74,21 @@ PROP_REFS_SCHEMA = T.StructType(
 )
 
 _TABLES = ("vertices", "edges", "properties", "prop_refs")
+
+
+def literal_frame(spark: SparkSession, values: Iterable[str], col: str = "id") -> DataFrame:
+    """A driver-side string set as a one-column ``LocalRelation``.
+
+    Built from an Arrow table, so the plan holds the rows themselves and
+    the optimizer knows their exact size: a join broadcasts this side,
+    not the table it probes, and an empty set lets
+    ``PropagateEmptyRelation`` drop every branch it feeds.
+    (``createDataFrame`` of a Python list is a ``Scan ExistingRDD`` with
+    no size statistics.) Duplicates are dropped, first occurrence kept."""
+    import pyarrow as pa
+
+    vals = list(dict.fromkeys(values))
+    return spark.createDataFrame(pa.table({col: pa.array(vals, pa.string())}))
 
 
 class NodeExistsError(Exception):
@@ -232,7 +247,7 @@ class PropertyGraph:
     def node_adjacency(self, vertex_ids: Sequence[str]) -> DataFrame:
         """Derived incoming/outgoing edge sets (the reference materializes
         these on the node record; we derive them with one pass over edges)."""
-        ids = self.spark.createDataFrame([(v,) for v in vertex_ids], "id string")
+        ids = literal_frame(self.spark, vertex_ids)
         out = (
             self.edges.join(F.broadcast(ids), F.col("src") == F.col("id"))
             .select("id", F.col("edge_id"), F.lit("outgoing").alias("direction"))
@@ -246,7 +261,7 @@ class PropertyGraph:
     # -- CRUD (GraphStore, kv_graph_store.rs:531-752) ------------------------
 
     def _assert_new_node_ids(self, ids: list[str]) -> None:
-        ids_df = self.spark.createDataFrame([(i,) for i in ids], "id string")
+        ids_df = literal_frame(self.spark, ids)
         clash = self.vertices.join(F.broadcast(ids_df), "id", "leftsemi").limit(1).collect()
         if clash:
             raise NodeExistsError(f"node {clash[0]['id']} already exists")
@@ -277,8 +292,7 @@ class PropertyGraph:
         create only the misses. Returns ids in input order (existing id for
         hits, fresh for misses)."""
         items = list(items)
-        hashes = list({p.hash for _, p in items})
-        h_df = self.spark.createDataFrame([(h,) for h in hashes], "prop_hash string")
+        h_df = literal_frame(self.spark, (p.hash for _, p in items), "prop_hash")
         existing = {
             r["prop_hash"]: r["ref_id"]
             for r in self.prop_refs.filter(F.col("ref_kind") == "node")
@@ -314,9 +328,7 @@ class PropertyGraph:
         items = list(items)
         # reference semantics: updating a nonexistent node is an error
         # (update_node does read_node first, kv_graph_store.rs:555-560)
-        ids_df = self.spark.createDataFrame(
-            [(vid,) for vid, _ in items], "id string"
-        )
+        ids_df = literal_frame(self.spark, (vid for vid, _ in items))
         missing = ids_df.join(self.vertices, "id", "leftanti").limit(1).collect()
         if missing:
             raise KeyError(f"update_nodes: node {missing[0]['id']} does not exist")
@@ -355,7 +367,7 @@ class PropertyGraph:
         *documented* behavior (docs/key_value_store.adoc:543-544); the
         reference code leaves them dangling (kv_graph_store.rs:584-602) —
         pass ``cascade=False`` to replicate that."""
-        ids = self.spark.createDataFrame([(v,) for v in vertex_ids], "id string")
+        ids = literal_frame(self.spark, vertex_ids)
         vertices = self.vertices.join(F.broadcast(ids), "id", "leftanti")
         refs_gone = self.prop_refs.join(
             F.broadcast(ids.select(F.col("id").alias("ref_id"))), "ref_id", "leftanti"
@@ -413,7 +425,7 @@ class PropertyGraph:
         return self._with(edges=edges, prop_refs=prop_refs)
 
     def delete_edges(self, edge_ids: Sequence[str]) -> "PropertyGraph":
-        ids = self.spark.createDataFrame([(e,) for e in edge_ids], "edge_id string")
+        ids = literal_frame(self.spark, edge_ids, "edge_id")
         return self._delete_edges_df(ids)
 
     def gc(self, max_iters: int = 10) -> "PropertyGraph":

@@ -6,11 +6,29 @@ at every step with per-element point reads (N+1 loops,
 kv_graph_store.rs:139-305). Here every AST node becomes a DataFrame
 transform over the graph's four tables, so the *whole query* is one lazy
 plan: Catalyst pushes property filters into the parquet scan, prunes
-columns, picks broadcast joins for the (tiny) property-index side, and
-whole-stage-codegens the chain. Traversals are frontier-at-a-time joins
+columns, broadcasts the small side of each join, and whole-stage-codegens
+the chain. Traversals are frontier-at-a-time joins
 instead of element-at-a-time point reads.
 
-Frontier representation:
+Point reads and short traversals compile to the smallest plan:
+
+- a literal id set (``Specific``) is a ``LocalRelation``
+  (``graph.literal_frame``: exact size statistics, so a join broadcasts
+  the literal side, never the table it probes), and a hop taken straight
+  off one (``Out``/``In`` of ``Specific``) is a ``src``/``dst IN (...)``
+  predicate pushed into the edges scan. Never a Python-RDD
+  ``createDataFrame`` (``Scan ExistingRDD``: no size statistics). A
+  top-level literal set is its own result — no lookup, no distinct;
+- ``QueryResult`` plans no branch for a result side known to be empty
+  (and an empty literal set is an empty ``LocalRelation``, which
+  ``PropagateEmptyRelation`` drops), and ``extract_properties`` reads
+  frontier ids as a semi-join key set, so it needs no distinct;
+- result sets compile without paths; ``QueryResult.paths`` compiles a
+  second, path-carrying plan on first read. Only a filter that takes the
+  path context makes the result sets carry paths.
+
+Frontier representation (``_Compiler(paths=True)``; without paths a
+frontier is just ``id``, resp. ``id, src, dst``, and hops are semi-joins):
 
 - vertex frontier: ``id, path, start``
 - edge frontier:   ``id, src, dst, path, start``
@@ -35,16 +53,19 @@ intersection instead (untested, acknowledged bug).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Optional
+import inspect
+from dataclasses import dataclass
+from functools import cached_property, reduce
+from typing import Callable, Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..graph import PropertyGraph
+from ..graph import PropertyGraph, literal_frame
 from ..ql import (
     BasicQuery,
     EdgeQuery,
     ExprFilter,
+    FilterContext,
     PandasFilter,
     PropertyQuery,
     ShellFilter,
@@ -54,18 +75,53 @@ from ..ql import (
 __all__ = ["execute", "QueryResult"]
 
 PATH_TYPE = "array<struct<v:string,e:string>>"
+_NULL_PATH = f"CAST(NULL AS {PATH_TYPE}) AS path"
+_NULL_START = "CAST(NULL AS string) AS start"
 
 
-def _empty_path() -> F.Column:
-    return F.lit(None).cast(PATH_TYPE).alias("path")
+def _hop_path(prev: Optional[str], v: str) -> str:
+    """SQL for the path ``prev`` (None: no hops yet) with the hop
+    ``(v, edge_id)`` appended (into_edge_ctx, ql.rs:281-302)."""
+    hop = f"array(named_struct('v', {v}, 'e', edge_id))"
+    if prev is not None:
+        hop = f"CASE WHEN {prev} IS NULL THEN {hop} ELSE concat({prev}, {hop}) END"
+    return f"CAST({hop} AS {PATH_TYPE}) AS path"
 
 
-def _null_start() -> F.Column:
-    return F.lit(None).cast("string").alias("start")
+def _sql_str(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-_V_COLS = ["id", "path", "start"]
-_E_COLS = ["id", "src", "dst", "path", "start"]
+def _sql_in(col: str, values) -> str:
+    """SQL predicate ``col IN (values...)`` for a literal string set.
+    Predicates are SQL text so the JVM parses each in one call
+    (``Column.isin`` makes two py4j round trips per value)."""
+    return f"{col} IN ({', '.join(map(_sql_str, values))})" if values else "false"
+
+
+def _wants_ctx(fn: Callable) -> bool:
+    """A filter "wants" the query context iff it REQUIRES a third
+    positional argument — defaulted/keyword/var params don't opt in (a
+    2-arg filter with an option like ``strict=False`` must not silently
+    receive the FilterContext as its option)."""
+    try:
+        params = inspect.signature(fn).parameters.values()
+    except (ValueError, TypeError):  # C-implemented callables
+        return False
+    required = [
+        p
+        for p in params
+        if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD) and p.default is p.empty
+    ]
+    return len(required) >= 3
+
+
+def _reads_paths(q) -> bool:
+    """Whether a filter anywhere in ``q`` takes the path context."""
+    if isinstance(q, (ExprFilter, PandasFilter)):
+        return _wants_ctx(q.fn)
+    return any(_reads_paths(a) for a in getattr(q, "args", ()))
 
 
 @dataclass
@@ -112,10 +168,18 @@ class _Compiler:
     queries are frozen dataclasses, so hashable by value) compile to the
     SAME DataFrame object → identical logical subplans → Spark's
     ReusedExchange kicks in at the physical level instead of re-running
-    shared branches (common in set-op trees, e.g. A∪B △ B∪C)."""
+    shared branches (common in set-op trees, e.g. A∪B △ B∪C).
 
-    def __init__(self, graph: PropertyGraph):
+    ``paths=False`` compiles frontiers without ``path``/``start``: a
+    vertex frontier is ``[id]``, an edge frontier ``[id, src, dst]``, and
+    each hop is a semi-join, so a frontier never multiplies by its path
+    count. The result sets are the same either way."""
+
+    def __init__(self, graph: PropertyGraph, paths: bool = False):
         self.g = graph
+        self.paths = paths
+        self.v_cols = ["id", "path", "start"] if paths else ["id"]
+        self.e_cols = ["id", "src", "dst", "path", "start"] if paths else ["id", "src", "dst"]
         self._memo_v: dict = {}
         self._memo_e: dict = {}
         self._memo_p: dict = {}
@@ -125,15 +189,10 @@ class _Compiler:
     def compile_pq(self, q: PropertyQuery) -> DataFrame:
         if q not in self._memo_p:
             self._memo_p[q] = self._compile_pq(q)
-        else:
-            # second use: make the shared subtree a cached leaf — Spark
-            # logical plans are trees, so an uncached reuse would inline
-            # (and re-execute) the whole branch at every use site
-            self._memo_p[q].cache()
         return self._memo_p[q]
 
     @staticmethod
-    def _pq_predicate(q, col: str = "prop_hash") -> Optional[F.Column]:
+    def _pq_predicate(q, col: str = "prop_hash") -> Optional[str]:
         """Literal property probes (Specific / FromTo) compile to a
         pushed-down predicate instead of a broadcast semi-join: no
         broadcast-build job per probe, and the equality/range predicate
@@ -141,35 +200,32 @@ class _Compiler:
         probe into a footer-pruned point read; at gate scale it collapses
         ~10 scheduler round-trips per traversal into zero."""
         if q.kind == "Specific":
-            return F.col(col) == q.args[0]
+            return f"{col} = {_sql_str(q.args[0])}"
         if q.kind == "FromTo":
-            return F.col(col).between(q.args[0], q.args[1])
+            return f"{col} BETWEEN {_sql_str(q.args[0])} AND {_sql_str(q.args[1])}"
         return None
 
     def _compile_pq(self, q: PropertyQuery) -> DataFrame:
         p = self.g.properties
         r = self.g.prop_refs
-        if q.kind == "Specific":
-            # existence probe (kv_graph_store.rs:328-335)
-            return p.filter(F.col("prop_hash") == q.args[0]).select("prop_hash")
-        if q.kind == "FromTo":
-            lo, hi = q.args
-            # range predicate — pushed down to the parquet scan
-            return p.filter(F.col("prop_hash").between(lo, hi)).select("prop_hash")
+        if q.kind in ("Specific", "FromTo"):
+            # existence probe (kv_graph_store.rs:328-335); the equality or
+            # range predicate is pushed down to the parquet scan
+            return p.filter(self._pq_predicate(q)).select("prop_hash")
         if q.kind == "ReferencingProperties":
             # parents that nest any of ``inner`` (backlinks ref_kind='prop')
             pred = self._pq_predicate(q.args[0])
             if pred is not None:
                 return (
-                    r.filter((F.col("ref_kind") == "prop") & pred)
-                    .select(F.col("ref_id").alias("prop_hash"))
+                    r.filter(f"ref_kind = 'prop' AND {pred}")
+                    .selectExpr("ref_id AS prop_hash")
                     .distinct()
                 )
             inner = self.compile_pq(q.args[0])
             return (
-                r.filter(F.col("ref_kind") == "prop")
+                r.filter("ref_kind = 'prop'")
                 .join(F.broadcast(inner), "prop_hash", "leftsemi")
-                .select(F.col("ref_id").alias("prop_hash"))
+                .selectExpr("ref_id AS prop_hash")
                 .distinct()
             )
         if q.kind == "ReferencedProperties":
@@ -178,24 +234,31 @@ class _Compiler:
             pred = self._pq_predicate(q.args[0], col="ref_id")
             if pred is not None:
                 return (
-                    r.filter((F.col("ref_kind") == "prop") & pred)
+                    r.filter(f"ref_kind = 'prop' AND {pred}")
                     .select("prop_hash")
                     .distinct()
                 )
             inner = self.compile_pq(q.args[0])
             return (
-                r.filter(F.col("ref_kind") == "prop")
-                .join(
-                    F.broadcast(inner.select(F.col("prop_hash").alias("ref_id"))),
-                    "ref_id",
-                    "leftsemi",
-                )
+                r.filter("ref_kind = 'prop'")
+                .join(F.broadcast(inner.selectExpr("prop_hash AS ref_id")), "ref_id", "leftsemi")
                 .select("prop_hash")
                 .distinct()
             )
         raise ValueError(f"unknown PropertyQuery kind: {q.kind}")
 
     # -- shared element-query plumbing --------------------------------------
+
+    def _refs(self, pq: PropertyQuery, ref_kind: str) -> DataFrame:
+        """``prop_refs`` backlinks of kind ``ref_kind`` whose property
+        matches ``pq``: a pushed scan predicate for a literal probe, a
+        broadcast semi-join otherwise."""
+        is_kind = f"ref_kind = '{ref_kind}'"
+        pred = self._pq_predicate(pq)
+        if pred is not None:
+            return self.g.prop_refs.filter(f"{is_kind} AND {pred}")
+        props = F.broadcast(self.compile_pq(pq))
+        return self.g.prop_refs.filter(is_kind).join(props, "prop_hash", "leftsemi")
 
     def _prop_leaf_ids(self, q, element: str) -> Optional[DataFrame]:
         """Peephole: a Property leaf used only as a set-op KEY SET doesn't
@@ -205,18 +268,27 @@ class _Compiler:
         if getattr(q, "kind", None) != "Property":
             return None
         ref_kind = "node" if element == "v" else "edge"
-        pred = self._pq_predicate(q.args[0])
-        if pred is not None:
-            return (
-                self.g.prop_refs.filter((F.col("ref_kind") == ref_kind) & pred)
-                .select(F.col("ref_id").alias("id"))
-            )
-        props = self.compile_pq(q.args[0])
-        return (
-            self.g.prop_refs.filter(F.col("ref_kind") == ref_kind)
-            .join(F.broadcast(props), "prop_hash", "leftsemi")
-            .select(F.col("ref_id").alias("id"))
-        )
+        return self._refs(q.args[0], ref_kind).selectExpr("ref_id AS id")
+
+    def ids(self, frontier: DataFrame, element: str) -> DataFrame:
+        """The frontier's ``id`` column (a path-less vertex frontier is
+        nothing else)."""
+        if element == "v" and not self.paths:
+            return frontier
+        return frontier.select("id")
+
+    def _v_leaf(self, df: DataFrame, id_col: str = "id") -> DataFrame:
+        """A vertex frontier with no hops yet, from ``df``'s ``id_col``."""
+        if not self.paths and id_col == "id":
+            return df
+        extra = [_NULL_PATH, _NULL_START] if self.paths else []
+        return df.selectExpr(f"{id_col} AS id", *extra)
+
+    def _e_leaf(self, edges: DataFrame) -> DataFrame:
+        """An edge frontier starting at rows of the edges table (an edge
+        leaf's ``start`` is its own id, EdgeQueryContext::new, ql.rs:325-331)."""
+        extra = [_NULL_PATH, "edge_id AS start"] if self.paths else []
+        return edges.selectExpr("edge_id AS id", "src", "dst", *extra)
 
     def _set_op(
         self,
@@ -227,19 +299,14 @@ class _Compiler:
         element: str = "v",
     ) -> DataFrame:
         fa, fb = a.frontier, b.frontier
-        # semi/anti joins ignore right-side duplicates — no distinct needed
-        ka = fa.select("id")
-        kb = fb.select("id")
-        if qb is not None:
-            kb_direct = self._prop_leaf_ids(qb, element)
-            if kb_direct is not None and kind in ("Intersect", "Substract"):
-                kb = kb_direct
         if kind == "Union":
             return fa.unionByName(fb)
-        if kind == "Intersect":
-            return fa.join(kb, "id", "leftsemi")
-        if kind == "Substract":
-            return fa.join(kb, "id", "leftanti")
+        if kind in ("Intersect", "Substract"):
+            # semi/anti joins ignore right-side duplicates — no distinct needed
+            kb = self._prop_leaf_ids(qb, element)
+            if kb is None:
+                kb = self.ids(fb, element)
+            return fa.join(kb, "id", "leftsemi" if kind == "Intersect" else "leftanti")
         if kind == "DisjunctiveUnion":
             # each side appears twice (frontier + key-set) — pin both so the
             # doubled tree references a leaf, not a re-executed branch.
@@ -249,11 +316,11 @@ class _Compiler:
             # memory twice (SCALE.md §2).
             fa = _pin(fa)
             fb = _pin(fb)
-            ka, kb = fa.select("id"), fb.select("id")
+            ka, kb = self.ids(fa, element), self.ids(fb, element)
             return fa.join(kb, "id", "leftanti").unionByName(fb.join(ka, "id", "leftanti"))
         raise ValueError(kind)
 
-    def _apply_filter(self, frontier: DataFrame, flt, element: str, cols: list[str]) -> DataFrame:
+    def _apply_filter(self, frontier: DataFrame, flt, element: str) -> DataFrame:
         """Join the frontier to its elements' property payloads and filter.
 
         Replaces the never-executed ShellFilter (kv_graph_store.rs:208,301)
@@ -265,39 +332,17 @@ class _Compiler:
                 "ShellFilter is wire-compat only (the reference never executes "
                 "it either); use ExprFilter or PandasFilter"
             )
-        table = self.g.vertices if element == "v" else self.g.edges
-        key = "id" if element == "v" else "edge_id"
-        elem = table.select(F.col(key).alias("id"), "prop_hash")
-        enriched = (
-            frontier.join(elem, "id", "left")
-            .join(
-                self.g.properties.select("prop_hash", "value", "schema_type"),
-                "prop_hash",
-                "left",
-            )
+        if element == "v":
+            elem, cols = self.g.vertices.select("id", "prop_hash"), self.v_cols
+        else:
+            elem, cols = self.g.edges.selectExpr("edge_id AS id", "prop_hash"), self.e_cols
+        enriched = frontier.join(elem, "id", "left").join(
+            self.g.properties.select("prop_hash", "value", "schema_type"),
+            "prop_hash",
+            "left",
         )
-        import inspect
-
-        from ..ql import FilterContext
-
-        # a filter "wants" the context iff it REQUIRES a third positional
-        # argument — defaulted/keyword/var params don't opt in (a 2-arg
-        # filter with an option like `strict=False` must not silently
-        # receive the FilterContext as its option)
-        try:
-            params = inspect.signature(flt.fn).parameters.values()
-            wants_ctx = (
-                sum(
-                    1
-                    for p in params
-                    if p.kind
-                    in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-                    and p.default is p.empty
-                )
-                >= 3
-            )
-        except (ValueError, TypeError):  # C-implemented callables
-            wants_ctx = False
+        # execute() compiles with paths whenever a filter takes the context
+        wants_ctx = _wants_ctx(flt.fn)
         if isinstance(flt, ExprFilter):
             if wants_ctx:
                 # documented filter contract (query_language.adoc:536-543):
@@ -340,41 +385,51 @@ class _Compiler:
             raise TypeError(f"unsupported filter: {type(flt).__name__}")
         return enriched.filter(keep).select(*cols)
 
+    def _hop(self, qv: VertexQuery, end: str) -> _Compiled:
+        """Edges whose ``end`` (``src`` for Out, ``dst`` for In) is in the
+        vertex frontier of ``qv`` (vertex.outgoing/incoming,
+        kv_graph_store.rs:271-285); the hop ``(vertex, edge)`` is appended
+        to the path (into_edge_ctx, ql.rs:281-302)."""
+        g = self.g
+        if qv.kind == "Specific":
+            # a hop straight off a literal set is a scan predicate on the
+            # edges table (pushed to parquet), not a join
+            edges = g.edges.filter(_sql_in(end, qv.args[0]))
+            extra = [_hop_path(None, end), _NULL_START] if self.paths else []
+            return _Compiled(edges.selectExpr("edge_id AS id", "src", "dst", *extra))
+        c = self.compile_vq(qv)
+        if self.paths:
+            v = c.frontier
+            joined = v.join(g.edges, v["id"] == g.edges[end])
+            frontier = joined.selectExpr(
+                "edge_id AS id", "src", "dst", _hop_path("path", "id"), "start"
+            )
+        else:
+            # set semantics: a semi-join, so frontier duplicates never multiply
+            frontier = self._e_leaf(g.edges).join(
+                c.frontier.selectExpr(f"id AS {end}"), end, "leftsemi"
+            )
+        return _Compiled(frontier, c.v_store, c.e_store)
+
     # -- vertex queries → _Compiled(vertex frontier) -------------------------
 
     def compile_vq(self, q: VertexQuery) -> _Compiled:
         if q not in self._memo_v:
             self._memo_v[q] = self._compile_vq(q)
-        else:
-            self._memo_v[q].frontier.cache()  # see compile_pq note
         return self._memo_v[q]
 
     def _compile_vq(self, q: VertexQuery) -> _Compiled:
         g = self.g
         if q.kind == "All":
-            return _Compiled(g.vertices.select("id", _empty_path(), _null_start()))
+            return _Compiled(self._v_leaf(g.vertices))
         if q.kind == "Specific":
-            ids = [(i,) for i in q.args[0]]
-            df = g.spark.createDataFrame(ids, "id string")
             # the reference builds contexts without a store lookup
             # (kv_graph_store.rs:151-155) — nonexistent ids pass through
-            return _Compiled(df.select("id", _empty_path(), _null_start()))
+            return _Compiled(self._v_leaf(literal_frame(g.spark, q.args[0])))
         if q.kind == "Property":
             # no distinct: a vertex has exactly ONE direct property, so its
             # node-backlink appears once per semi-join match
-            pred = self._pq_predicate(q.args[0])
-            if pred is not None:  # literal probe → pushed-down scan predicate
-                frontier = g.prop_refs.filter(
-                    (F.col("ref_kind") == "node") & pred
-                ).select(F.col("ref_id").alias("id"), _empty_path(), _null_start())
-                return _Compiled(frontier)
-            props = self.compile_pq(q.args[0])
-            frontier = (
-                g.prop_refs.filter(F.col("ref_kind") == "node")
-                .join(F.broadcast(props), "prop_hash", "leftsemi")
-                .select(F.col("ref_id").alias("id"), _empty_path(), _null_start())
-            )
-            return _Compiled(frontier)
+            return _Compiled(self._v_leaf(self._refs(q.args[0], "node"), "ref_id"))
         if q.kind in ("Union", "Intersect", "Substract", "DisjunctiveUnion"):
             a, b = self.compile_vq(q.args[0]), self.compile_vq(q.args[1])
             return _Compiled(
@@ -382,25 +437,20 @@ class _Compiler:
                 _merge_store(a.v_store, b.v_store),
                 _merge_store(a.e_store, b.e_store),
             )
-        if q.kind == "Out":
-            # target vertices (n2) of the edge frontier (kv_graph_store.rs:192-199)
+        if q.kind in ("Out", "In"):
+            # target (n2) or source vertices of the edge frontier
+            # (kv_graph_store.rs:192-199)
             c = self.compile_eq(q.args[0])
+            end = "dst" if q.kind == "Out" else "src"
             return _Compiled(
-                c.frontier.select(F.col("dst").alias("id"), "path", "start"),
-                c.v_store,
-                c.e_store,
-            )
-        if q.kind == "In":
-            c = self.compile_eq(q.args[0])
-            return _Compiled(
-                c.frontier.select(F.col("src").alias("id"), "path", "start"),
+                c.frontier.selectExpr(f"{end} AS id", *self.v_cols[1:]),
                 c.v_store,
                 c.e_store,
             )
         if q.kind == "Filter":
             c = self.compile_vq(q.args[0])
             return _Compiled(
-                self._apply_filter(c.frontier, q.args[1], "v", _V_COLS),
+                self._apply_filter(c.frontier, q.args[1], "v"),
                 c.v_store,
                 c.e_store,
             )
@@ -417,54 +467,24 @@ class _Compiler:
     def compile_eq(self, q: EdgeQuery) -> _Compiled:
         if q not in self._memo_e:
             self._memo_e[q] = self._compile_eq(q)
-        else:
-            self._memo_e[q].frontier.cache()  # see compile_pq note
         return self._memo_e[q]
 
     def _compile_eq(self, q: EdgeQuery) -> _Compiled:
         g = self.g
         if q.kind == "All":
-            return _Compiled(
-                g.edges.select(
-                    F.col("edge_id").alias("id"),
-                    "src",
-                    "dst",
-                    _empty_path(),
-                    F.col("edge_id").alias("start"),
-                )
-            )
+            return _Compiled(self._e_leaf(g.edges))
         if q.kind == "Specific":
-            ids = [(i,) for i in q.args[0]]
-            df = g.spark.createDataFrame(ids, "id string")
+            ids = q.args[0]
             # left join: unknown edge ids still appear in the result set
             # (contexts are built without a lookup, kv_graph_store.rs:229-233)
-            frontier = (
-                df.join(g.edges, df.id == g.edges.edge_id, "left")
-                .select("id", "src", "dst", _empty_path(), F.col("id").alias("start"))
-            )
-            return _Compiled(frontier)
+            known = g.edges.filter(_sql_in("edge_id", ids)).withColumnRenamed("edge_id", "id")
+            extra = [_NULL_PATH, "id AS start"] if self.paths else []
+            frontier = literal_frame(g.spark, ids).join(known, "id", "left")
+            return _Compiled(frontier.selectExpr("id", "src", "dst", *extra))
         if q.kind == "Property":
             # no distinct: an edge has exactly one direct property
-            pred = self._pq_predicate(q.args[0])
-            if pred is not None:  # literal probe → pushed-down scan predicate
-                eids = g.prop_refs.filter(
-                    (F.col("ref_kind") == "edge") & pred
-                ).select(F.col("ref_id").alias("edge_id"))
-            else:
-                props = self.compile_pq(q.args[0])
-                eids = (
-                    g.prop_refs.filter(F.col("ref_kind") == "edge")
-                    .join(F.broadcast(props), "prop_hash", "leftsemi")
-                    .select(F.col("ref_id").alias("edge_id"))
-                )
-            frontier = g.edges.join(eids, "edge_id", "leftsemi").select(
-                F.col("edge_id").alias("id"),
-                "src",
-                "dst",
-                _empty_path(),
-                F.col("edge_id").alias("start"),
-            )
-            return _Compiled(frontier)
+            eids = self._refs(q.args[0], "edge").selectExpr("ref_id AS edge_id")
+            return _Compiled(self._e_leaf(g.edges.join(eids, "edge_id", "leftsemi")))
         if q.kind in ("Union", "Intersect", "Substract", "DisjunctiveUnion"):
             a, b = self.compile_eq(q.args[0]), self.compile_eq(q.args[1])
             return _Compiled(
@@ -472,25 +492,12 @@ class _Compiler:
                 _merge_store(a.v_store, b.v_store),
                 _merge_store(a.e_store, b.e_store),
             )
-        if q.kind == "Out":
-            # edges whose source is in the vertex frontier
-            # (vertex.outgoing, kv_graph_store.rs:271-285); the hop is
-            # appended to the path (into_edge_ctx, ql.rs:281-302)
-            c = self.compile_vq(q.args[0])
-            v = c.frontier
-            e = g.edges
-            joined = v.join(e, v.id == e.src)
-            return _Compiled(self._hop_to_edges(joined), c.v_store, c.e_store)
-        if q.kind == "In":
-            c = self.compile_vq(q.args[0])
-            v = c.frontier
-            e = g.edges
-            joined = v.join(e, v.id == e.dst)
-            return _Compiled(self._hop_to_edges(joined), c.v_store, c.e_store)
+        if q.kind in ("Out", "In"):
+            return self._hop(q.args[0], "src" if q.kind == "Out" else "dst")
         if q.kind == "Filter":
             c = self.compile_eq(q.args[0])
             return _Compiled(
-                self._apply_filter(c.frontier, q.args[1], "e", _E_COLS),
+                self._apply_filter(c.frontier, q.args[1], "e"),
                 c.v_store,
                 c.e_store,
             )
@@ -499,28 +506,25 @@ class _Compiler:
             return _Compiled(c.frontier, c.v_store, c.frontier.select("id").distinct())
         raise ValueError(f"unknown EdgeQuery kind: {q.kind}")
 
-    @staticmethod
-    def _hop_to_edges(joined: DataFrame) -> DataFrame:
-        """vertex frontier ⋈ edges → edge frontier, appending (v, e) to path."""
-        hop = F.struct(F.col("id").alias("v"), F.col("edge_id").alias("e"))
-        new_path = F.when(
-            F.col("path").isNull(), F.array(hop)
-        ).otherwise(F.concat(F.col("path"), F.array(hop)))
-        return joined.select(
-            F.col("edge_id").alias("id"),
-            "src",
-            "dst",
-            new_path.cast(PATH_TYPE).alias("path"),
-            "start",
-        )
-
 
 # ---------------------------------------------------------------------------
 # Results
 # ---------------------------------------------------------------------------
 
+# a result id set: None (empty), a tuple of distinct literal ids, or a
+# DF[id] that may repeat an id
+_IdSet = Union[None, tuple, DataFrame]
 
-@dataclass
+
+def _keyed(table: DataFrame, col: str, ids: _IdSet) -> DataFrame:
+    """Rows of ``table`` whose ``col`` is in ``ids``."""
+    if isinstance(ids, tuple):
+        return table.filter(_sql_in(col, ids))
+    if col != "id":
+        ids = ids.withColumnRenamed("id", col)
+    return table.join(ids, col, "leftsemi")
+
+
 class QueryResult:
     """Bundle of result DataFrames (QueryResult, ql.rs:360-374).
 
@@ -530,14 +534,52 @@ class QueryResult:
     - ``properties``: DF[prop_hash] — for top-level P queries (the reference
       stubs these to empty, kv_graph_store.rs:307-317; we return matches)
     - ``variables``: pass-through map (no writer exists in the reference)
+
+    The constructor takes each id set as ``None`` (empty), a tuple of
+    distinct literal ids, or a DF[id] that may repeat an id; the
+    ``vertices``/``edges`` frames are built from them on first read.
+    ``extract_properties`` plans no branch for an empty set, reads a
+    literal set as a scan predicate and a frame as a semi-join key set,
+    so neither needs a distinct. ``paths`` is a callable that compiles
+    the paths frame on first read (None: no paths).
     """
 
-    graph: PropertyGraph
-    vertices: DataFrame
-    edges: DataFrame
-    paths: DataFrame
-    properties: Optional[DataFrame] = None
-    variables: dict = field(default_factory=dict)
+    def __init__(
+        self,
+        graph: PropertyGraph,
+        vertices: _IdSet = None,
+        edges: _IdSet = None,
+        paths: Optional[Callable[[], DataFrame]] = None,
+        properties: Optional[DataFrame] = None,
+        variables: Optional[dict] = None,
+    ):
+        self.graph = graph
+        self._v = vertices
+        self._e = edges
+        self._paths = paths
+        self.properties = properties
+        self.variables = variables or {}
+
+    def _frame(self, ids: _IdSet) -> DataFrame:
+        if ids is None or isinstance(ids, tuple):
+            return literal_frame(self.graph.spark, ids or ())
+        return ids.distinct()
+
+    @cached_property
+    def vertices(self) -> DataFrame:
+        return self._frame(self._v)
+
+    @cached_property
+    def edges(self) -> DataFrame:
+        return self._frame(self._e)
+
+    @cached_property
+    def paths(self) -> DataFrame:
+        if self._paths is not None:
+            return self._paths()
+        return literal_frame(self.graph.spark, (), "start").selectExpr(
+            "start", _NULL_PATH, "CAST(NULL AS string) AS end"
+        )
 
     # -- extract_properties (kv_graph_store.rs:96-106) -----------------------
 
@@ -545,31 +587,19 @@ class QueryResult:
         """Property payloads of matched vertices then edges: DF[kind, id,
         prop_hash, schema_type, value, tagged]."""
         g = self.graph
-        v = (
-            self.vertices.join(g.vertices, "id")
+        vs, es = self._v, self._e
+        if vs is None and es is None:
+            vs = ()  # no rows, but the schema
+        sides = ((vs, g.vertices, "id", "v"), (es, g.edges, "edge_id", "e"))
+        payload = ["prop_hash", "schema_type", "value", "tagged"]
+        parts = [
+            _keyed(table, key, ids)
             .join(g.properties, "prop_hash")
-            .select(
-                F.lit("v").alias("kind"),
-                "id",
-                "prop_hash",
-                "schema_type",
-                "value",
-                "tagged",
-            )
-        )
-        e = (
-            self.edges.join(g.edges, self.edges.id == g.edges.edge_id)
-            .join(g.properties, "prop_hash")
-            .select(
-                F.lit("e").alias("kind"),
-                F.col("edge_id").alias("id"),
-                "prop_hash",
-                "schema_type",
-                "value",
-                "tagged",
-            )
-        )
-        return v.unionByName(e)
+            .selectExpr(f"'{kind}' AS kind", f"{key} AS id", *payload)
+            for ids, table, key, kind in sides
+            if ids is not None
+        ]
+        return reduce(DataFrame.unionByName, parts)
 
     # -- extract_path_properties (kv_graph_store.rs:108-137) ----------------
 
@@ -654,34 +684,34 @@ def execute(graph: PropertyGraph, query) -> QueryResult:
     """Compile + wrap. ``query`` may be a BasicQuery or any of the three
     query families (auto-dispatched like kv_graph_store.rs:79-94)."""
     q = BasicQuery.of(query)
-    comp = _Compiler(graph)
-    spark = graph.spark
-    empty_ids = spark.createDataFrame([], "id string")
-
-    if q.kind == "V":
-        c = comp.compile_vq(q.query)
-        ids = c.frontier.select("id").distinct()
-        vertices = _merge_store(ids, c.v_store) if c.v_store is not None else ids
-        edges = c.e_store if c.e_store is not None else empty_ids
-        # all distinct paths (deterministic superset of the reference's
-        # one-arbitrary-path-per-id, SURVEY.md §7 hard-part 2)
-        paths = c.frontier.select(
-            "start", "path", F.col("id").alias("end")
-        ).dropDuplicates()
-        return QueryResult(graph, vertices, edges, paths)
-    if q.kind == "E":
-        c = comp.compile_eq(q.query)
-        ids = c.frontier.select("id").distinct()
-        edges = _merge_store(ids, c.e_store) if c.e_store is not None else ids
-        vertices = c.v_store if c.v_store is not None else empty_ids
-        paths = c.frontier.select(
-            "start", "path", F.lit(None).cast("string").alias("end")
-        ).dropDuplicates()
-        return QueryResult(graph, vertices, edges, paths)
     if q.kind == "P":
-        props = comp.compile_pq(q.query).distinct()
-        empty_paths = spark.createDataFrame(
-            [], f"start string, path {PATH_TYPE.replace(':', ' ')}, end string"
-        )
-        return QueryResult(graph, empty_ids, empty_ids, empty_paths, properties=props)
-    raise ValueError(f"unknown BasicQuery kind: {q.kind}")
+        props = _Compiler(graph).compile_pq(q.query).distinct()
+        return QueryResult(graph, properties=props)
+    if q.kind not in ("V", "E"):
+        raise ValueError(f"unknown BasicQuery kind: {q.kind}")
+    # result sets need no paths unless a filter reads its path context;
+    # ``paths`` is compiled on first read
+    comp = _Compiler(graph, paths=_reads_paths(q.query))
+    if q.query.kind == "Specific":
+        # a top-level literal set is its own result: no lookup, no distinct
+        found, v_store, e_store = tuple(dict.fromkeys(q.query.args[0])), None, None
+    else:
+        c = comp.compile_vq(q.query) if q.kind == "V" else comp.compile_eq(q.query)
+        found, v_store, e_store = comp.ids(c.frontier, q.kind.lower()), c.v_store, c.e_store
+    own, other = (v_store, e_store) if q.kind == "V" else (e_store, v_store)
+    if own is not None:
+        found = found.unionByName(own)
+    vertices, edges = (found, other) if q.kind == "V" else (other, found)
+    return QueryResult(graph, vertices, edges, paths=lambda: _paths(graph, q, comp))
+
+
+def _paths(graph: PropertyGraph, q: BasicQuery, comp: _Compiler) -> DataFrame:
+    """All distinct paths of a V/E query (a deterministic superset of the
+    reference's one-arbitrary-path-per-id, SURVEY.md §7 hard-part 2)."""
+    if not comp.paths:
+        comp = _Compiler(graph, paths=True)
+    if q.kind == "V":
+        frontier, end = comp.compile_vq(q.query).frontier, "id"
+    else:
+        frontier, end = comp.compile_eq(q.query).frontier, "CAST(NULL AS string)"
+    return frontier.selectExpr("start", "path", f"{end} AS end").dropDuplicates()

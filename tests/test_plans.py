@@ -675,3 +675,140 @@ def test_percolate_bucketed_join_is_guard_pruned(plans):
     assert "LeftSemi" in p  # the candidate-doc prune feeding verification
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+# -- zoe read plans on a graph loaded from parquet -------------------------
+#
+# Literal id sets compile to LocalRelations (exact size statistics) or to
+# predicates pushed into the edges scan, never to Python-RDD scans; a read
+# plans no branch for a result side it knows is empty.
+
+# a tiny road network; "o'b\\x" checks the quoting of literal ids
+_READ_NODES = ("va", "vb", "vc", "vd", "o'b\\x")
+_READ_EDGES = (("va", "vb"), ("vb", "vc"), ("va", "vd"), ("vd", "vc"), ("o'b\\x", "va"))
+
+
+@pytest.fixture(scope="module")
+def read_graph(spark, tmp_path_factory):
+    from gravitydb_spark import GraphBatchBuilder, Prop, PropertyGraph
+
+    b = GraphBatchBuilder()
+    for n in _READ_NODES:
+        b.add_node(Prop("City", n), id=n)
+    eids = {(s, d): b.add_edge(s, d, Prop("road", f"{s}-{d}")) for s, d in _READ_EDGES}
+    path = str(tmp_path_factory.mktemp("read_graph") / "g")
+    b.build(spark).save(path)
+    return PropertyGraph.load(spark, path), eids
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_of(spark, fn) -> int:
+    """Exact number of Spark jobs ``fn`` runs, by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"read-plan-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ids(df, col="id") -> list:
+    return sorted(r[col] for r in df.collect())
+
+
+def test_id_lookup_plans_no_rdd_scan_and_no_edge_branch(read_graph):
+    from gravitydb_spark import execute
+    from gravitydb_spark.ql import vq_from_ids
+
+    g, _ = read_graph
+    df = execute(g, vq_from_ids(["vb"])).extract_properties()
+    plan = _executed(df)
+    assert "ExistingRDD" not in plan
+    assert "/edges" not in plan
+    assert _ids(df) == ["vb"]
+
+
+def test_hop_off_literal_set_is_pushed_edges_predicate(read_graph):
+    from gravitydb_spark import execute
+    from gravitydb_spark.ql import vq_from_ids
+
+    g, _ = read_graph
+    res = execute(g, vq_from_ids(["va"]).outgoing().outgoing())
+    df = res.extract_properties()
+    plan = _executed(df)
+    assert "ExistingRDD" not in plan
+    scans = [s for s in plan.split("FileScan")[1:] if "/edges" in s]
+    assert scans and any(
+        "va" in s.split("PushedFilters: [", 1)[1].split("]", 1)[0] for s in scans
+    )
+    assert _ids(df) == ["vb", "vd"]
+    # quoting: an id with a quote and a backslash still matches exactly
+    res = execute(g, vq_from_ids(["o'b\\x"]).outgoing().outgoing())
+    assert _ids(res.vertices) == ["va"]
+
+
+def test_read_job_counts(spark, read_graph):
+    from gravitydb_spark import execute
+    from gravitydb_spark.ql import vq_from_ids
+
+    g, _ = read_graph
+    one_hop = vq_from_ids(["va"]).outgoing().outgoing()
+    two_hop = one_hop.outgoing().outgoing()
+    id_lookup = vq_from_ids(["va"])
+    for q in (id_lookup, two_hop):  # first-use costs out of the count
+        execute(g, q).extract_properties().collect()
+    id_jobs = _jobs_of(spark, lambda: execute(g, id_lookup).extract_properties().collect())
+    hop_jobs = _jobs_of(spark, lambda: execute(g, two_hop).extract_properties().collect())
+    assert id_jobs <= 3, id_jobs
+    assert hop_jobs <= 5, hop_jobs
+    assert _ids(execute(g, two_hop).vertices) == ["vc"]
+
+
+def test_specific_keeps_unknown_ids_and_ignores_duplicates(read_graph):
+    """Contexts are built without a store lookup (kv_graph_store.rs:151-155,
+    229-233): unknown ids pass through into the result sets."""
+    from gravitydb_spark import execute
+    from gravitydb_spark.ql import eq_from_ids, vq_from_ids
+
+    g, eids = read_graph
+    res = execute(g, vq_from_ids(["va", "nope", "va"]))
+    assert _ids(res.vertices) == ["nope", "va"]
+    assert _ids(res.extract_properties()) == ["va"]
+    assert _ids(res.edges) == []
+    ab = eids[("va", "vb")]
+    res = execute(g, eq_from_ids([ab, "no-edge", ab]))
+    assert _ids(res.edges) == sorted([ab, "no-edge"])
+    assert _ids(res.extract_properties()) == [ab]
+    assert _ids(res.vertices) == []
+    # duplicates in a hop's literal set give the same result
+    dup = execute(g, vq_from_ids(["va", "va", "vd"]).outgoing().outgoing())
+    assert _ids(dup.vertices) == _ids(
+        execute(g, vq_from_ids(["va", "vd"]).outgoing().outgoing()).vertices
+    ) == ["vb", "vc", "vd"]
+
+
+def test_set_op_reads_leave_no_persistent_rdds(spark, read_graph):
+    from gravitydb_spark import execute
+    from gravitydb_spark.ql import VertexQuery, vq_from_ids
+
+    g, _ = read_graph
+    a = vq_from_ids(["va"]).outgoing().outgoing()
+    b = vq_from_ids(["vd"]).outgoing().outgoing()
+    def persistent() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    for kind in ("Union", "Intersect", "Substract"):
+        # each side used twice, so the compiler's memo shares it
+        q = VertexQuery(kind, (VertexQuery("Union", (a, b)), VertexQuery(kind, (a, b))))
+        execute(g, q).extract_properties().collect()
+    assert not persistent() - before
