@@ -35,13 +35,14 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import PropertyGraph, _cut
+from .graph import PROP_REFS_SCHEMA, SCHEMAS, PropertyGraph, _aqe_off, _cut, literal_rows
 
 __all__ = [
     "MergeConflictError",
     "apply_change",
     "change_to_json",
     "change_from_json",
+    "delta_diff",
     "graph_diff",
     "merge_graphs",
     "snapshot_id",
@@ -67,7 +68,9 @@ def snapshot_id(g: PropertyGraph) -> str:
     # r14 (guide §5/§7.3): ONE action instead of four sequential
     # .first()s — each per-table agg re-planned and re-executed the
     # graph's whole op lineage; the tagged union collects all four
-    # (n, s) rows in a single job. Same values, same string, same hash.
+    # (n, s) rows in a single job (AQE off: with it, each partial
+    # aggregate's exchange was a job of its own). Same values, same
+    # string, same hash.
     parts = [
         df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -78,7 +81,8 @@ def snapshot_id(g: PropertyGraph) -> str:
         ).select(F.lit(i).alias("t"), "n", "s")
         for i, df in enumerate((g.vertices, g.edges, g.properties, g.prop_refs))
     ]
-    rows = reduce(lambda a, b: a.unionByName(b), parts).collect()
+    with _aqe_off(g.spark):
+        rows = reduce(lambda a, b: a.unionByName(b), parts).collect()
     sums = [f"{r['n']}:{r['s']}" for r in sorted(rows, key=lambda r: r["t"])]
     return hashlib.sha256("|".join(sums).encode()).hexdigest()
 
@@ -163,6 +167,7 @@ def graph_diff(base: PropertyGraph, new: PropertyGraph) -> dict:
         .join(
             props.select(F.col("prop_hash").alias("ref_id")), "ref_id", "leftsemi"
         )
+        .select(*PROP_REFS_SCHEMA.names)  # the join moved ref_id first
     )
     return {
         "created_nodes": created_nodes,
@@ -174,6 +179,58 @@ def graph_diff(base: PropertyGraph, new: PropertyGraph) -> dict:
         "nest_refs": nest_refs,
         "depends_on": [snapshot_id(base)],
     }
+
+
+def delta_diff(base: PropertyGraph, record: dict, new_dir: str) -> dict:
+    """:func:`graph_diff` of ``base`` and the snapshot at ``new_dir``,
+    read from the delta the snapshot's commit recorded against ``base``
+    (its parent): the rows each table lost and gained. The node and edge
+    changes come from the record alone; the property closure and its
+    nesting backlinks are filtered reads of the new snapshot's files with
+    pyarrow, one per nesting level. Every frame is driver-side rows, so
+    collecting it runs no Spark job; ``depends_on`` is one job over
+    ``base``. Same rows as graph_diff (the tests hold it as the oracle)."""
+    import pyarrow.parquet as papq
+
+    def read(table, flt):
+        names = SCHEMAS[table].names
+        tbl = papq.read_table(f"{new_dir}/{table}", columns=names, filters=flt).select(names)
+        return [list(r) for r in zip(*(c.to_pylist() for c in tbl.columns))]
+
+    def nesting(parents, children=None):
+        flt = [("ref_kind", "=", "prop"), ("ref_id", "in", sorted(parents))]
+        if children is not None:
+            flt.append(("prop_hash", "in", sorted(children)))
+        return read("prop_refs", flt)
+
+    added, removed = record["added"], record["removed"]
+    old_v = {r[0]: r[1] for r in removed["vertices"]}
+    new_v = {r[0] for r in added["vertices"]}
+    old_e = {r[0] for r in removed["edges"]}
+    new_e = {r[0] for r in added["edges"]}
+    created_nodes = [r for r in added["vertices"] if r[0] not in old_v]
+    modified = [r for r in added["vertices"] if r[0] in old_v and old_v[r[0]] != r[1]]
+    created_edges = [r for r in added["edges"] if r[0] not in old_e]
+    # last column of a vertex or edge row is its prop_hash
+    have = {r[-1] for r in created_nodes + modified + created_edges}
+    level = set(have)
+    while level:
+        level = {r[0] for r in nesting(level)} - have
+        have |= level
+    props = read("properties", [("prop_hash", "in", sorted(have))]) if have else []
+    found = {r[0] for r in props}
+    frames = {
+        "created_nodes": ("vertices", created_nodes),
+        "modified": ("vertices", modified),
+        "deleted_nodes": ("vertices", [r for r in removed["vertices"] if r[0] not in new_v]),
+        "created_edges": ("edges", created_edges),
+        "deleted_edges": ("edges", [r for r in removed["edges"] if r[0] not in new_e]),
+        "properties": ("properties", props),
+        "nest_refs": ("prop_refs", nesting(found, found) if found else []),
+    }
+    out = {k: literal_rows(base.spark, rows, SCHEMAS[t].names) for k, (t, rows) in frames.items()}
+    out["depends_on"] = [snapshot_id(base)]
+    return out
 
 
 def change_to_json(change: dict) -> str:
@@ -207,27 +264,21 @@ def change_to_json(change: dict) -> str:
 
 
 def change_from_json(spark, payload: str) -> dict:
-    """Inverse of :func:`change_to_json` (DataFrame-valued Change)."""
+    """Inverse of :func:`change_to_json` (DataFrame-valued Change; each
+    frame a ``LocalRelation`` of the payload's rows)."""
     data = json.loads(payload)
 
-    def df(rows, schema):
-        return spark.createDataFrame([tuple(r) for r in rows], schema)
+    def df(rows, table):
+        return literal_rows(spark, rows, SCHEMAS[table].names)
 
-    node_s = "id string, prop_hash string"
-    edge_s = "edge_id string, src string, dst string, prop_hash string"
     return {
-        "created_nodes": df(data["created"]["nodes"], node_s),
-        "created_edges": df(data["created"]["edges"], edge_s),
-        "modified": df(data["modified"], node_s),
-        "deleted_nodes": df(data["deleted"]["nodes"], node_s),
-        "deleted_edges": df(data["deleted"]["edges"], edge_s),
-        "properties": df(
-            data["properties"],
-            "prop_hash string, schema_type string, value string, tagged string",
-        ),
-        "nest_refs": df(
-            data["nest_refs"], "prop_hash string, ref_kind string, ref_id string"
-        ),
+        "created_nodes": df(data["created"]["nodes"], "vertices"),
+        "created_edges": df(data["created"]["edges"], "edges"),
+        "modified": df(data["modified"], "vertices"),
+        "deleted_nodes": df(data["deleted"]["nodes"], "vertices"),
+        "deleted_edges": df(data["deleted"]["edges"], "edges"),
+        "properties": df(data["properties"], "properties"),
+        "nest_refs": df(data["nest_refs"], "prop_refs"),
         "depends_on": data["depends_on"],
     }
 

@@ -32,8 +32,10 @@ reference code leaves dangling edges (kv_graph_store.rs:584-602).
 
 from __future__ import annotations
 
+import os
 import uuid
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import dataclass, field, replace
 from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -41,7 +43,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .hashing import canonical_json, edge_hash, tagged_property
 from .schema import DEFAULT_SCHEMA, Prop, Schema
 
-__all__ = ["PropertyGraph", "GraphBatchBuilder", "NodeExistsError", "literal_frame"]
+__all__ = [
+    "GraphBatchBuilder",
+    "GraphDelta",
+    "NodeExistsError",
+    "PropertyGraph",
+    "literal_frame",
+]
 
 VERTICES_SCHEMA = T.StructType(
     [
@@ -74,6 +82,26 @@ PROP_REFS_SCHEMA = T.StructType(
 )
 
 _TABLES = ("vertices", "edges", "properties", "prop_refs")
+SCHEMAS = {
+    "vertices": VERTICES_SCHEMA,
+    "edges": EDGES_SCHEMA,
+    "properties": PROPERTIES_SCHEMA,
+    "prop_refs": PROP_REFS_SCHEMA,
+}
+# at most this many rows per table ride a delta (and one driver-side
+# collect); beyond it a graph forgets its delta and commits by cluster write
+ARROW_COMMIT_CAP = 100_000
+
+
+def literal_rows(spark: SparkSession, rows: Sequence[Sequence[str]], names: Sequence[str]) -> DataFrame:
+    """Driver-side string rows as a ``LocalRelation`` with columns
+    ``names`` (see :func:`literal_frame`; collecting it runs no job)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    return spark.createDataFrame(
+        pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
+    )
 
 
 def literal_frame(spark: SparkSession, values: Iterable[str], col: str = "id") -> DataFrame:
@@ -85,10 +113,85 @@ def literal_frame(spark: SparkSession, values: Iterable[str], col: str = "id") -
     ``PropagateEmptyRelation`` drop every branch it feeds.
     (``createDataFrame`` of a Python list is a ``Scan ExistingRDD`` with
     no size statistics.) Duplicates are dropped, first occurrence kept."""
-    import pyarrow as pa
+    return literal_rows(spark, [(v,) for v in dict.fromkeys(values)], [col])
 
-    vals = list(dict.fromkeys(values))
-    return spark.createDataFrame(pa.table({col: pa.array(vals, pa.string())}))
+
+@dataclass(frozen=True)
+class GraphDelta:
+    """What a graph changed relative to its origin snapshot, kept on the
+    driver by the CRUD methods so a commit writes only the change.
+
+    ``origin`` is the snapshot directory the graph was loaded from, or
+    None for the empty graph (a ``GraphBatchBuilder`` graph). The graph
+    is ``origin`` minus every retracted row, plus ``added``:
+
+    - ``added[table]`` maps a row key to the row (for ``prop_refs`` the
+      key is the whole row); rows already in the origin are dropped at
+      commit, as the CRUD unions' ``dropDuplicates`` drop them;
+    - ``retracted[table]`` holds origin keys: ``id``, ``edge_id``,
+      ``prop_hash``, or ``(ref_kind, ref_id)`` for ``prop_refs``;
+    - ``endpoints`` are deleted vertex ids whose origin edges cascade
+      (the commit finds those edges, and retracts their backlinks).
+
+    A retraction also removes the matching added rows, and an add after
+    a retraction survives it, so the delta folds the CRUD calls in
+    order."""
+
+    origin: Optional[str]
+    added: dict = field(default_factory=lambda: {t: {} for t in _TABLES})
+    retracted: dict = field(default_factory=lambda: {t: frozenset() for t in _TABLES})
+    endpoints: frozenset = frozenset()
+
+    def size(self) -> int:
+        """Rows and keys a commit must carry for the largest table
+        (``endpoints`` are retracted vertex keys too)."""
+        return max(len(self.added[t]) + len(self.retracted[t]) for t in _TABLES)
+
+    def add(self, table: str, rows: Iterable[tuple]) -> "GraphDelta":
+        cur = dict(self.added[table])
+        for row in map(tuple, rows):  # every other table's key is its first column
+            cur.setdefault(row if table == "prop_refs" else row[0], row)
+        return replace(self, added={**self.added, table: cur})
+
+    def retract(self, table: str, keys: Iterable) -> "GraphDelta":
+        keys = frozenset(keys)
+        if table == "prop_refs":
+            kept = {k: r for k, r in self.added[table].items() if r[1:] not in keys}
+        else:
+            kept = {k: r for k, r in self.added[table].items() if k not in keys}
+        return replace(
+            self,
+            added={**self.added, table: kept},
+            retracted={**self.retracted, table: self.retracted[table] | keys},
+        )
+
+    def drop_incident_edges(self, vertex_ids: Iterable[str]) -> "GraphDelta":
+        ids = frozenset(vertex_ids)
+        gone = [k for k, r in self.added["edges"].items() if r[1] in ids or r[2] in ids]
+        d = self.retract("edges", gone).retract("prop_refs", [("edge", e) for e in gone])
+        return replace(d, endpoints=self.endpoints | ids)
+
+
+@contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str, default: str = "true"):
+    """Set one boolean session conf for the duration of a block,
+    restoring the previous value (``default`` when unset) in
+    ``finally``. The conf is session-global; every caller here runs its
+    actions sequentially on its session."""
+    prev = spark.conf.get(key, default)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _aqe_off(spark: SparkSession):
+    """Scope-disable AQE around ONE bounded driver-side collect (r14,
+    guide §1.2/§5): a KB-sized collect pays one AQE stage-job per
+    exchange (measured 5 jobs/3.0s vs 1 job/0.06s for a fused union)
+    and adaptivity buys nothing — the result is collected whole."""
+    return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
 class NodeExistsError(Exception):
@@ -121,17 +224,19 @@ def _cut(df: DataFrame) -> DataFrame:
     ``UnionBase.rewriteConstraints`` ("key not found: id#...") — the
     CRUD/changeset tables are exactly that shape. Constraints only feed
     the optimizer's filter inference; the cut plan is KB-sized CRUD
-    state, so nothing is lost. The previous conf value is restored in
-    ``finally``; localCheckpoint plans at call time, so the toggle
-    scopes exactly the one plan."""
-    spark = df.sparkSession
-    key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
+    state, so nothing is lost. localCheckpoint plans at call time, so
+    the toggle scopes exactly the one plan."""
+    with _scoped_conf(df.sparkSession, "spark.sql.constraintPropagation.enabled", "false"):
         return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set(key, prev)
+
+
+def _drop_refs(prop_refs: DataFrame, kind: str, ids: DataFrame) -> DataFrame:
+    """``prop_refs`` minus the backlinks of the ``kind`` referrers whose
+    ids are the one column of ``ids``, in ``PROP_REFS_SCHEMA`` order."""
+    keys = ids.select(F.lit(kind).alias("ref_kind"), F.col(ids.columns[0]).alias("ref_id"))
+    return prop_refs.join(F.broadcast(keys), ["ref_kind", "ref_id"], "leftanti").select(
+        *PROP_REFS_SCHEMA.names
+    )
 
 
 @dataclass
@@ -142,6 +247,9 @@ class PropertyGraph:
     properties: DataFrame
     prop_refs: DataFrame
     schema: Schema = None  # type: ignore[assignment]
+    # the change since the origin snapshot (GraphDelta); None when the
+    # provenance is unknown (ingest, merge, apply_change, over the cap)
+    delta: Optional[GraphDelta] = None
 
     def __post_init__(self):
         if self.schema is None:
@@ -158,14 +266,19 @@ class PropertyGraph:
             spark.createDataFrame([], PROPERTIES_SCHEMA),
             spark.createDataFrame([], PROP_REFS_SCHEMA),
             schema or DEFAULT_SCHEMA,
+            GraphDelta(None),
         )
 
     @staticmethod
     def load(spark: SparkSession, path: str, schema: Schema | None = None) -> "PropertyGraph":
+        """Read a saved graph. The table schemas are given, not inferred,
+        so a load runs no Spark job and every table has its schema's
+        column order whatever order its files were written in."""
         return PropertyGraph(
             spark,
-            *(spark.read.parquet(f"{path}/{t}") for t in _TABLES),
+            *(spark.read.schema(SCHEMAS[t]).parquet(f"{path}/{t}") for t in _TABLES),
             schema or DEFAULT_SCHEMA,
+            GraphDelta(os.path.realpath(path)),
         )
 
     def save(self, path: str, mode: str = "overwrite") -> None:
@@ -229,9 +342,11 @@ class PropertyGraph:
             df.cache()
         return self
 
-    def _with(self, **tables: DataFrame) -> "PropertyGraph":
+    def _with(self, delta: Optional[GraphDelta] = None, **tables: DataFrame) -> "PropertyGraph":
+        """A graph with some tables replaced. Without ``delta`` the result
+        has unknown provenance; the CRUD methods pass their new delta."""
         kwargs = {t: tables.get(t, getattr(self, t)) for t in _TABLES}
-        return PropertyGraph(self.spark, schema=self.schema, **kwargs)
+        return PropertyGraph(self.spark, schema=self.schema, delta=delta, **kwargs)
 
     # -- point reads / listings (PropertyGraphReader, lib.rs:80-104) --------
 
@@ -280,6 +395,7 @@ class PropertyGraph:
                 vertices=self.vertices.unionByName(v),
                 properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
                 prop_refs=self.prop_refs.unionByName(r).dropDuplicates(),
+                delta=b.added_to(self.delta),
             ),
             ids,
         )
@@ -328,7 +444,8 @@ class PropertyGraph:
         items = list(items)
         # reference semantics: updating a nonexistent node is an error
         # (update_node does read_node first, kv_graph_store.rs:555-560)
-        ids_df = literal_frame(self.spark, (vid for vid, _ in items))
+        ids = [vid for vid, _ in items]
+        ids_df = literal_frame(self.spark, ids)
         missing = ids_df.join(self.vertices, "id", "leftanti").limit(1).collect()
         if missing:
             raise KeyError(f"update_nodes: node {missing[0]['id']} does not exist")
@@ -336,30 +453,17 @@ class PropertyGraph:
         for vid, prop in items:
             b.add_node(prop, id=vid)
         v, _, p, r = b.frames(self.spark)
-        new_v = v.select("id", "prop_hash")
-        vertices = (
-            self.vertices.join(F.broadcast(new_v.select("id")), "id", "leftanti")
-            .unionByName(new_v)
-        )
+        vertices = self.vertices.join(F.broadcast(ids_df), "id", "leftanti").unionByName(v)
         # drop the old node->prop backlinks, add the new ones
-        old_refs = self.vertices.join(F.broadcast(new_v.select("id")), "id", "leftsemi")
-        prop_refs = (
-            self.prop_refs.join(
-                F.broadcast(
-                    old_refs.select(
-                        F.col("prop_hash"), F.lit("node").alias("ref_kind"), F.col("id").alias("ref_id")
-                    )
-                ),
-                ["prop_hash", "ref_kind", "ref_id"],
-                "leftanti",
-            )
-            .unionByName(r)
-            .dropDuplicates()
-        )
+        prop_refs = _drop_refs(self.prop_refs, "node", ids_df).unionByName(r).dropDuplicates()
+        delta = self.delta
+        if delta is not None:
+            delta = delta.retract("vertices", ids).retract("prop_refs", [("node", i) for i in ids])
         return self._with(
             vertices=vertices,
             properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
             prop_refs=prop_refs,
+            delta=b.added_to(delta),
         )
 
     def delete_nodes(self, vertex_ids: Sequence[str], cascade: bool = True) -> "PropertyGraph":
@@ -367,16 +471,20 @@ class PropertyGraph:
         *documented* behavior (docs/key_value_store.adoc:543-544); the
         reference code leaves them dangling (kv_graph_store.rs:584-602) —
         pass ``cascade=False`` to replicate that."""
+        vertex_ids = list(vertex_ids)
         ids = literal_frame(self.spark, vertex_ids)
-        vertices = self.vertices.join(F.broadcast(ids), "id", "leftanti")
-        refs_gone = self.prop_refs.join(
-            F.broadcast(ids.select(F.col("id").alias("ref_id"))), "ref_id", "leftanti"
-        ).unionByName(
-            self.prop_refs.join(
-                F.broadcast(ids.select(F.col("id").alias("ref_id"))), "ref_id", "leftsemi"
-            ).filter(F.col("ref_kind") != "node")
+        delta = self.delta
+        if delta is not None:
+            delta = delta.retract("vertices", vertex_ids).retract(
+                "prop_refs", [("node", i) for i in vertex_ids]
+            )
+            if cascade:
+                delta = delta.drop_incident_edges(vertex_ids)
+        g = self._with(
+            vertices=self.vertices.join(F.broadcast(ids), "id", "leftanti"),
+            prop_refs=_drop_refs(self.prop_refs, "node", ids),
+            delta=delta,
         )
-        g = self._with(vertices=vertices, prop_refs=refs_gone)
         if cascade:
             doomed = (
                 self.edges.join(F.broadcast(ids), F.col("src") == F.col("id"), "leftsemi")
@@ -386,7 +494,7 @@ class PropertyGraph:
                 .select("edge_id")
                 .distinct()
             )
-            g = g._delete_edges_df(doomed)
+            g = g._delete_edges_df(doomed, delta)
         return g
 
     def create_edges(
@@ -403,30 +511,26 @@ class PropertyGraph:
                 edges=self.edges.unionByName(e).dropDuplicates(["edge_id"]),
                 properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
                 prop_refs=self.prop_refs.unionByName(r).dropDuplicates(),
+                delta=b.added_to(self.delta),
             ),
             ids,
         )
 
-    def _delete_edges_df(self, edge_ids: DataFrame) -> "PropertyGraph":
+    def _delete_edges_df(self, edge_ids: DataFrame, delta: Optional[GraphDelta]) -> "PropertyGraph":
         edges = self.edges.join(
             F.broadcast(edge_ids.select("edge_id")), "edge_id", "leftanti"
         )
-        prop_refs = self.prop_refs.join(
-            F.broadcast(edge_ids.select(F.col("edge_id").alias("ref_id"))),
-            "ref_id",
-            "leftanti",
-        ).unionByName(
-            self.prop_refs.join(
-                F.broadcast(edge_ids.select(F.col("edge_id").alias("ref_id"))),
-                "ref_id",
-                "leftsemi",
-            ).filter(F.col("ref_kind") != "edge")
-        )
-        return self._with(edges=edges, prop_refs=prop_refs)
+        prop_refs = _drop_refs(self.prop_refs, "edge", edge_ids.select("edge_id"))
+        return self._with(edges=edges, prop_refs=prop_refs, delta=delta)
 
     def delete_edges(self, edge_ids: Sequence[str]) -> "PropertyGraph":
-        ids = literal_frame(self.spark, edge_ids, "edge_id")
-        return self._delete_edges_df(ids)
+        edge_ids = list(edge_ids)
+        delta = self.delta
+        if delta is not None:
+            delta = delta.retract("edges", edge_ids).retract(
+                "prop_refs", [("edge", e) for e in edge_ids]
+            )
+        return self._delete_edges_df(literal_frame(self.spark, edge_ids, "edge_id"), delta)
 
     def gc(self, max_iters: int = 10) -> "PropertyGraph":
         """Refcount GC of unreferenced properties as a batch job.
@@ -435,30 +539,45 @@ class PropertyGraph:
         (kv_graph_store.rs:388-404,736-752); at scale a periodic anti-join
         fixpoint is cheaper. A property is live iff it has ≥1 prop_refs row;
         deleting a dead parent drops its nesting refs, which may orphan
-        children — iterate to fixpoint (depth = nesting depth, tiny)."""
+        children — iterate to fixpoint (depth = nesting depth, tiny).
+
+        Each round collects its dead hashes (at most ARROW_COMMIT_CAP+1):
+        they are the round's emptiness probe, the literal set the next
+        round anti-joins, and the retractions of the graph's delta. A
+        round with more dead hashes than that keeps them a lazy frame and
+        the result forgets its delta."""
         # r14 (guide §7.3): lazy lineage cuts at entry and per iteration —
-        # uncut, every fixpoint isEmpty re-planned and re-executed the
+        # uncut, every fixpoint probe re-planned and re-executed the
         # graph's whole op lineage (unions/anti-joins of every CRUD op
         # since load), making gc quadratic in plan depth. The first
-        # isEmpty materializes the entry cuts; each iteration's cuts ride
+        # probe materializes the entry cuts; each iteration's cuts ride
         # the next probe. Lazy is sound: nothing external mutates between
         # the cut and its first action.
         properties = _cut(self.properties)
         prop_refs = _cut(self.prop_refs)
+        delta = self.delta
         for _ in range(max_iters):
             dead = properties.join(
                 prop_refs.select("prop_hash").distinct(), "prop_hash", "leftanti"
             ).select("prop_hash")
-            if dead.isEmpty():
+            hashes = [r[0] for r in dead.limit(ARROW_COMMIT_CAP + 1).collect()]
+            if not hashes:
                 break
-            dead = dead.cache()
+            if len(hashes) > ARROW_COMMIT_CAP:
+                delta = None
+            else:
+                dead = literal_frame(self.spark, hashes, "prop_hash")
+                if delta is not None:
+                    delta = delta.retract("properties", hashes).retract(
+                        "prop_refs", [(k, h) for h in hashes for k in ("node", "edge", "prop")]
+                    )
             properties = _cut(properties.join(dead, "prop_hash", "leftanti"))
             prop_refs = _cut(
                 prop_refs.join(
                     dead.select(F.col("prop_hash").alias("ref_id")), "ref_id", "leftanti"
-                ).select("prop_hash", "ref_kind", "ref_id")
+                ).select(*PROP_REFS_SCHEMA.names)
             )
-        return self._with(properties=properties, prop_refs=prop_refs)
+        return self._with(properties=properties, prop_refs=prop_refs, delta=delta)
 
     # -- integrity (planned CLI db_info/doctor, backends_filestore.adoc) ----
 
@@ -599,6 +718,22 @@ class GraphBatchBuilder:
             spark.createDataFrame(sorted(self._prop_refs), PROP_REFS_SCHEMA),
         )
 
+    def added_to(self, delta: Optional[GraphDelta]) -> Optional[GraphDelta]:
+        """``delta`` plus this batch's rows; None when ``delta`` is None,
+        or when the batch repeats a vertex id (the frames then keep both
+        rows, which no keyed delta can say)."""
+        ids = [vid for vid, _ in self._vertices]
+        if delta is None or len(set(ids)) != len(ids):
+            return None
+        return (
+            delta.add("vertices", self._vertices)
+            .add("edges", self._edges.values())
+            .add("properties", self._properties.values())
+            .add("prop_refs", sorted(self._prop_refs))
+        )
+
     def build(self, spark: SparkSession) -> PropertyGraph:
+        """The batch as a graph whose origin is the empty graph, so a
+        commit writes its rows without a Spark job."""
         v, e, p, r = self.frames(spark)
-        return PropertyGraph(spark, v, e, p, r, self.schema)
+        return PropertyGraph(spark, v, e, p, r, self.schema, self.added_to(GraphDelta(None)))

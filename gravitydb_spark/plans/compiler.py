@@ -58,7 +58,7 @@ from dataclasses import dataclass
 from functools import cached_property, reduce
 from typing import Callable, Optional, Union
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..graph import PropertyGraph, literal_frame
 from ..ql import (
@@ -131,28 +131,6 @@ class _Compiled:
     frontier: DataFrame
     v_store: Optional[DataFrame] = None  # DF[id]
     e_store: Optional[DataFrame] = None  # DF[id]
-
-
-# above this optimizer-estimated size, pin shared subtrees with
-# localCheckpoint (lineage cut, partitions on executor-local disk) instead
-# of cache (block-manager memory+disk) — estimates are coarse upper bounds,
-# so this only redirects genuinely join-amplified frontiers
-_PIN_MAX_CACHE_BYTES = 8 * 1024**3
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Make a shared plan subtree a reusable leaf (plans are trees, not
-    DAGs — an unpinned reuse re-executes the whole branch at every use
-    site). Cache when small, localCheckpoint when the optimizer's size
-    estimate says caching twice would pressure executor memory."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # estimation unavailable — default to cache
-        size = -1
-    if 0 <= _PIN_MAX_CACHE_BYTES < size:
-        return df.localCheckpoint(eager=False)
-    df.cache()
-    return df
 
 
 def _merge_store(a: Optional[DataFrame], b: Optional[DataFrame]) -> Optional[DataFrame]:
@@ -308,16 +286,17 @@ class _Compiler:
                 kb = self.ids(fb, element)
             return fa.join(kb, "id", "leftsemi" if kind == "Intersect" else "leftanti")
         if kind == "DisjunctiveUnion":
-            # each side appears twice (frontier + key-set) — pin both so the
-            # doubled tree references a leaf, not a re-executed branch.
-            # Size-aware: small frontiers cache (memory+disk); frontiers the
-            # optimizer estimates beyond the threshold localCheckpoint
-            # instead, so a 100 TB frontier doesn't occupy block-manager
-            # memory twice (SCALE.md §2).
-            fa = _pin(fa)
-            fb = _pin(fb)
-            ka, kb = self.ids(fa, element), self.ids(fb, element)
-            return fa.join(kb, "id", "leftanti").unionByName(fb.join(ka, "id", "leftanti"))
+            # the rows whose id only one side holds, in ONE pass over each
+            # side: anti-joins would read each side twice (as frontier and
+            # as key set), running its plan twice, or needing a cache that
+            # no read releases
+            w = Window.partitionBy("id")
+            both = fa.withColumn("_side", F.lit(0)).unionByName(fb.withColumn("_side", F.lit(1)))
+            return (
+                both.withColumn("_sides", F.max("_side").over(w) - F.min("_side").over(w))
+                .filter("_sides = 0")
+                .drop("_side", "_sides")
+            )
         raise ValueError(kind)
 
     def _apply_filter(self, frontier: DataFrame, flt, element: str) -> DataFrame:
@@ -621,15 +600,14 @@ class QueryResult:
             F.col("edge_id").alias("_eid"), F.col("tagged").alias("_e_tagged")
         )
 
-        paths = self.paths.withColumn(
-            "_pid", F.monotonically_increasing_id()
-        ).cache()
-
+        # paths rows are distinct, so (start, path, end) keys the per-path
+        # fold: one pass over paths, no row id and no cached copy
+        key = ["start", "path", "end"]
         steps = (
-            paths.select("_pid", F.posexplode("path").alias("pos", "step"))
+            self.paths.select(*key, F.posexplode_outer("path").alias("pos", "step"))
             .join(v_props, F.col("step.v") == F.col("_vid"), "left")
             .join(e_props, F.col("step.e") == F.col("_eid"), "left")
-            .groupBy("_pid")
+            .groupBy(*key)
             .agg(
                 F.flatten(
                     F.transform(
@@ -655,8 +633,7 @@ class QueryResult:
         )
 
         out = (
-            paths.join(steps, "_pid", "left")
-            .join(start_props, "start", "left")
+            steps.join(start_props, "start", "left")
             .join(end_props, "end", "left")
             .withColumn(
                 "props",

@@ -9,8 +9,7 @@ commits by atomically replacing the pointer (file rename is atomic), so
 readers always see a complete, valid store and an aborted writer leaves
 the published state untouched.
 
-Spark translation — snapshots are already immutable, so "edit the other
-copy" is free:
+Here:
 
 - :func:`transact` — run a mutation batch against an in-memory
   snapshot, then run the post-batch schema-constraint check
@@ -18,47 +17,47 @@ copy" is free:
   ⇒ the new snapshot is returned (the pointer swap); any failure ⇒ the
   exception propagates and the caller still holds the unmodified base.
 - :class:`TransactionalStore` — the durable version: a store directory
-  holds numbered snapshot subdirectories plus a ``CURRENT`` pointer
-  file. ``commit`` writes the new snapshot into a FRESH subdirectory
-  (never touching the current one), re-reads it, checks constraints,
-  and only then atomically replaces ``CURRENT`` via ``os.replace``. A
-  constraint violation, write error, or crash anywhere before the
-  replace leaves the published store byte-identical — the doc's
-  invariant. A writer-lock file (``O_EXCL`` create, the doc's "zeigen
-  dass er gerade den Zugriff hat") serializes writers.
+  holds numbered snapshot directories ``snap-<n>/`` plus the ``CURRENT``
+  publication log. ``commit`` writes the new snapshot into a FRESH
+  directory (never touching a published one), re-reads it, checks
+  constraints, and only then atomically replaces ``CURRENT`` via
+  ``os.replace``. A constraint violation, write error, or crash anywhere
+  before the replace leaves the published store byte-identical — the
+  doc's invariant. A writer-lock file (``O_EXCL`` create, the doc's
+  "zeigen dass er gerade den Zugriff hat") serializes writers.
+
+The second copy is copy-on-write, as the doc intends. A graph loaded
+from a snapshot (or built with ``GraphBatchBuilder``, whose origin is
+the empty graph) carries its delta (graph.GraphDelta): the rows its CRUD
+calls added and the keys they retracted. ``commit`` writes only that
+delta, with pyarrow and no Spark job: each parent file that holds no
+retracted row is hard-linked into the new directory, a file that does
+is rewritten without those rows, and the added rows go to one tail file
+per table. The commit records its parent and the rows each table lost
+and gained in ``snap-<n>/_delta/``, so ``diff`` of a parent and its
+child reads that record instead of joining the two snapshots. Every
+snapshot directory stays a complete, self-contained set of plain parquet
+directories: readers plan the same scans, and deleting a parent (GC)
+leaves its children whole, since a hard link is a second name for the
+same bytes. Snapshot files are immutable — nothing ever opens one for
+writing, which is what makes sharing them safe. A graph of unknown
+provenance (ingest, merge, apply_change), a delta above
+``ARROW_COMMIT_CAP`` rows, or an origin in another store falls back to
+``graph.save``'s cluster write.
 
 At cluster scale ``CURRENT`` lives on the object store; the atomic-
-replace primitive becomes a conditional PUT — same protocol shape.
+replace primitive becomes a conditional PUT — same protocol shape (an
+object store without hard links copies the unchanged files server-side).
 """
 
 from __future__ import annotations
 
+import json
 import os
 from typing import Callable, Iterable, Optional
 
-from contextlib import contextmanager
-
 from .constraints import check_constraints
-from .graph import PropertyGraph
-
-
-@contextmanager
-def _aqe_off(spark):
-    """Scope-disable AQE around ONE bounded driver-side collect (r14,
-    guide §1.2/§5): a KB-sized tagged-union collect pays one AQE
-    stage-job per exchange (~0.2-0.5s driver scheduling floor each,
-    measured 5 jobs/3.0s vs 1 job/0.06s for the fused-commit union) and
-    adaptivity buys nothing — the result is collected whole either way.
-    The conf is session-global; every caller here runs its collects
-    sequentially on its session (bench loop, tests, CLI verbs,
-    foreachBatch handlers), and the previous value is restored in
-    ``finally``."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+from .graph import _TABLES, ARROW_COMMIT_CAP, SCHEMAS, PropertyGraph, _aqe_off
 
 __all__ = ["DatasetStore", "TransactionalStore", "WriterLockHeld", "transact"]
 
@@ -318,82 +317,32 @@ class TransactionalStore(_SnapshotLog):
         return self._gc_published(keep, grace)
 
     def diff(self, spark, base_snapshot, new_snapshot, schema=None) -> dict:
-        """ChangeSet between two published versions (changeset.graph_diff
-        over time-travel reads): what happened between snapshot a and b —
-        the audit-log query shadow paging gives for free."""
-        from .changeset import graph_diff
+        """ChangeSet between two published versions: what happened
+        between snapshot a and b — the audit-log query shadow paging
+        gives for free. When a is b's parent, the change is read from the
+        delta b's commit recorded (changeset.delta_diff); otherwise it is
+        derived by changeset.graph_diff over time-travel reads."""
+        from .changeset import delta_diff, graph_diff
 
-        return graph_diff(
-            self.load_at(spark, base_snapshot, schema),
-            self.load_at(spark, new_snapshot, schema),
-        )
+        a, b = self._resolve(base_snapshot), self._resolve(new_snapshot)
+        base = self.load_at(spark, a, schema)
+        try:
+            with open(os.path.join(self.path, b, _DELTA, "delta.json"), encoding="utf-8") as f:
+                record = json.load(f)
+        except FileNotFoundError:
+            record = None
+        if record is not None and record["parent"] == a:
+            return delta_diff(base, record, os.path.join(self.path, b))
+        return graph_diff(base, self.load_at(spark, b, schema))
 
     # -- commit protocol ----------------------------------------------
     def init(self, graph: PropertyGraph) -> str:
         """Publish the first snapshot."""
         return self.commit(graph)
 
-    # small-graph fused commit: at most this many rows per table are
-    # collected driver-side; a bigger table falls back to graph.save's
-    # cluster write (same bound philosophy as DatasetStore.small_writes)
-    ARROW_COMMIT_CAP = 100_000
-
-    def _save_graph_small(self, graph: PropertyGraph, target: str) -> bool:
-        """Write all four graph tables behind ONE Spark action (r14,
-        guide §5 — a commit was 4 repartition+write jobs plus their AQE
-        stages, ~12 driver rounds for a KB-sized CLI/test graph): the
-        tables are collected together as one tagged, typed-NULL-padded
-        union bounded by ``limit(cap+1)`` per part, then written
-        driver-side with pyarrow — identical rows, identical schemas
-        (all-string tables), plain unpartitioned parquet dirs any reader
-        of graph.save's layout reads unchanged. Returns False (having
-        written nothing) when any table exceeds the cap — the caller
-        falls back to the cluster write, so commit degrades at scale
-        exactly as before with one bounded probe action of overhead."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as papq
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        cap = self.ARROW_COMMIT_CAP
-        named = [
-            ("vertices", graph.vertices),
-            ("edges", graph.edges),
-            ("properties", graph.properties),
-            ("prop_refs", graph.prop_refs),
-        ]
-        padded = []
-        for i, (_n, df) in enumerate(named):
-            cols = [F.lit(i).alias("_fuse_tag")]
-            for j, (_n2, df2) in enumerate(named):
-                for fld in df2.schema.fields:
-                    cname = f"c{j}_{fld.name}"
-                    cols.append(
-                        F.col(fld.name).alias(cname)
-                        if j == i
-                        else F.lit(None).cast(fld.dataType).alias(cname)
-                    )
-            padded.append(df.limit(cap + 1).select(*cols))
-        union = reduce(lambda a, b: a.unionByName(b), padded)
-        with _aqe_off(graph.spark):
-            tbl = union.toArrow()  # the ONE Spark action
-        tags = tbl.column("_fuse_tag")
-        parts = []
-        for i, (tname, df) in enumerate(named):
-            part = tbl.filter(pc.equal(tags, i)).select(
-                [f"c{i}_{f.name}" for f in df.schema.fields]
-            )
-            if part.num_rows > cap:
-                return False  # nothing written yet — cluster fallback
-            parts.append(
-                (tname, part.rename_columns([f.name for f in df.schema.fields]))
-            )
-        for tname, part in parts:
-            tdir = os.path.join(target, tname)
-            os.makedirs(tdir)  # fresh dir — never overwrite (mode=error)
-            papq.write_table(part, os.path.join(tdir, "part-00000.parquet"))
-        return True
+    # a delta of more rows than this (per table) is not carried through
+    # the driver: the commit falls back to graph.save's cluster write
+    ARROW_COMMIT_CAP = ARROW_COMMIT_CAP
 
     def commit(
         self,
@@ -404,13 +353,19 @@ class TransactionalStore(_SnapshotLog):
         (constraints run against the re-read copy, so what is checked is
         exactly what readers will see), then atomically swap ``CURRENT``.
         Any failure before the swap leaves the published snapshot's bytes
-        untouched. Returns the new snapshot's directory name."""
+        untouched. Returns the new snapshot's directory name.
+
+        A graph that knows its delta from a snapshot of this store (or
+        from the empty graph) is written copy-on-write by
+        :meth:`_write_delta`; any other graph by ``graph.save``."""
+        import shutil
+
         lock = self._acquire_lock()
         try:
             name = self._alloc_name()
             target = os.path.join(self.path, name)
             try:
-                if not self._save_graph_small(graph, target):
+                if not self._write_delta(graph, target):
                     graph.save(target, mode="error")  # fresh dir — never overwrite
                 # verify the COMMITTED bytes, not the in-memory lineage
                 committed = PropertyGraph.load(graph.spark, target, graph.schema)
@@ -418,8 +373,7 @@ class TransactionalStore(_SnapshotLog):
             except BaseException:
                 # the swap never happened: the written dir is garbage, not
                 # a snapshot — collect it so the abort is fully recoverable
-                import shutil
-
+                # (unlinking a hard link leaves the parent's file intact)
                 shutil.rmtree(target, ignore_errors=True)
                 raise
             # the atomic swap: append to the publication log and replace
@@ -427,6 +381,137 @@ class TransactionalStore(_SnapshotLog):
             return name
         finally:
             os.unlink(lock)
+
+    def _write_delta(self, graph: PropertyGraph, target: str) -> bool:
+        """Write ``graph`` as its origin plus its delta, with pyarrow and
+        no Spark job. Returns False, having written nothing, when the
+        graph has no delta, the delta is over the cap, or the origin is
+        not a snapshot directory of this store that still exists.
+
+        Per table: a parent file that holds no retracted row is hard-
+        linked; one that does is rewritten without those rows; the added
+        rows (minus those the parent already holds) go to the tail file,
+        ``tail-<n>.parquet``, which is rewritten with them while it stays
+        within the cap and is otherwise left as it is, a new tail taking
+        the rows. So a table of up to cap rows is one file, as a read
+        wants it (two files are two scan tasks), a bigger one has one
+        file per cap rows, and no file is ever opened for writing once
+        written. The parent name and the rows added and removed go to
+        ``_delta/delta.json`` for :meth:`diff`."""
+        d, cap = graph.delta, self.ARROW_COMMIT_CAP
+        if d is None or d.size() > cap:
+            return False
+        if d.origin is not None and (
+            os.path.dirname(d.origin) != os.path.realpath(self.path)
+            or not os.path.isdir(d.origin)
+        ):
+            return False
+        os.makedirs(target)
+        added, removed = {}, {}
+        for t in _TABLES:
+            keys = d.retracted[t]
+            if t == "prop_refs":
+                # the backlinks of cascaded edges go with them
+                gone = [("edge", r[0]) for r in removed["edges"]]
+                keys = [_SEP.join(k) for k in (*keys, *gone)]
+            removed[t], added[t] = _write_table(
+                d.origin and os.path.join(d.origin, t),
+                os.path.join(target, t),
+                t,
+                keys,
+                d.endpoints if t == "edges" else (),
+                list(d.added[t].values()),
+                cap,
+            )
+        if d.origin is not None:
+            os.makedirs(os.path.join(target, _DELTA))
+            record = {"parent": os.path.basename(d.origin), "added": added, "removed": removed}
+            with open(os.path.join(target, _DELTA, "delta.json"), "w", encoding="utf-8") as f:
+                json.dump(record, f, separators=(",", ":"))
+        return True
+
+
+# the commit record directory of a snapshot, and the separator of the
+# (ref_kind, ref_id) retraction keys
+_DELTA = "_delta"
+_SEP = "\x1f"
+_TAIL = "tail-"
+
+
+def _rows(tbl) -> list:
+    return [list(r) for r in zip(*(c.to_pylist() for c in tbl.columns))]
+
+
+def _write_table(src, dst, table, keys, endpoints, adds, cap) -> tuple:
+    """One table of :meth:`TransactionalStore._write_delta`: link or
+    rewrite each file of ``src`` (None: the empty graph) into ``dst``,
+    append ``adds`` through the tail file, and return the rows removed
+    and the rows really added, as lists."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as papq
+
+    names = SCHEMAS[table].names
+    schema = pa.schema([pa.field(n, pa.string()) for n in names])
+
+    def read(path, columns=names):
+        return papq.read_table(path, columns=list(columns)).select(list(columns)).cast(
+            pa.schema([schema.field(c) for c in columns])
+        )
+
+    def match_key(tbl):  # what a retraction names
+        if table == "prop_refs":
+            return pc.binary_join_element_wise(tbl["ref_kind"], tbl["ref_id"], _SEP)
+        return tbl[names[0]]
+
+    def row_key(tbl):  # what an added row dedupes on
+        if table == "prop_refs":
+            return pc.binary_join_element_wise(*tbl.columns, _SEP)
+        return tbl[names[0]]
+
+    files = sorted(
+        f for f in (os.listdir(src) if src else ())
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    keys = pa.array(sorted(keys), pa.string())
+    endpoints = pa.array(sorted(endpoints), pa.string())
+    scan = names if table == "prop_refs" else names[:1] + (["src", "dst"] if len(endpoints) else [])
+    out, removed, survivors = {}, [], []
+    for f in files:
+        part = read(os.path.join(src, f), scan)
+        hit = pc.is_in(match_key(part), value_set=keys)
+        if len(endpoints):
+            hit = pc.or_(hit, pc.or_(pc.is_in(part["src"], value_set=endpoints),
+                                     pc.is_in(part["dst"], value_set=endpoints)))
+        if pc.any(hit).as_py():
+            full = part if len(scan) == len(names) else read(os.path.join(src, f))
+            removed.append(full.filter(hit))
+            part = out[f] = full.filter(pc.invert(hit))
+        survivors.extend(row_key(part).chunks)
+    cols = list(zip(*adds)) if adds else [()] * len(names)
+    new = pa.table([pa.array(c, pa.string()) for c in cols], schema=schema)
+    if survivors:
+        new = new.filter(pc.invert(pc.is_in(row_key(new), value_set=pa.concat_arrays(survivors))))
+    tails = [f for f in files if f.startswith(_TAIL)]
+    tail = tails[-1] if tails else None
+    if new.num_rows or not files:
+        old = None if tail is None else out[tail] if tail in out else read(os.path.join(src, tail))
+        if old is not None and old.num_rows + new.num_rows <= cap:
+            out[tail] = pa.concat_tables([old, new])
+        else:
+            seq = int(tail[len(_TAIL):-len(".parquet")]) + 1 if tail else 0
+            out[f"{_TAIL}{seq:06d}.parquet"] = new
+    os.makedirs(dst)
+    for f in files:
+        if f not in out:
+            os.link(os.path.join(src, f), os.path.join(dst, f))
+    for f, tbl in out.items():
+        if tbl.num_rows:  # a rewritten file that lost every row is dropped
+            papq.write_table(tbl, os.path.join(dst, f))
+    if not os.listdir(dst):  # a reader needs a file, even one of no rows
+        papq.write_table(schema.empty_table(), os.path.join(dst, "part-00000.parquet"))
+    gone = pa.concat_tables(removed) if removed else schema.empty_table()
+    return _rows(gone), _rows(new)
 
 
 class VersionedViewStore(_SnapshotLog):

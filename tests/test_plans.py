@@ -807,8 +807,14 @@ def test_set_op_reads_leave_no_persistent_rdds(spark, read_graph):
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
     before = persistent()
-    for kind in ("Union", "Intersect", "Substract"):
+    for kind in ("Union", "Intersect", "Substract", "DisjunctiveUnion"):
         # each side used twice, so the compiler's memo shares it
         q = VertexQuery(kind, (VertexQuery("Union", (a, b)), VertexQuery(kind, (a, b))))
         execute(g, q).extract_properties().collect()
+    # DisjunctiveUnion reads each side as frontier and as key set
+    sym = execute(g, VertexQuery("DisjunctiveUnion", (a, b)))
+    assert _ids(sym.vertices) == ["vb", "vc", "vd"]
+    # path properties fold each path's steps and join the path back
+    paths = execute(g, a).extract_path_properties().collect()
+    assert len(paths) == 2 and all(r["props"] for r in paths)
     assert not persistent() - before
