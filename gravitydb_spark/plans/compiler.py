@@ -60,7 +60,7 @@ from typing import Callable, Optional, Union
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..graph import PropertyGraph, literal_frame
+from ..graph import PropertyGraph, _aqe_off, literal_frame
 from ..ql import (
     BasicQuery,
     EdgeQuery,
@@ -495,6 +495,20 @@ class _Compiler:
 _IdSet = Union[None, tuple, DataFrame]
 
 
+def _shuffles(plan) -> bool:
+    """Whether a (JVM) physical plan runs a shuffle exchange of its own.
+    A cached table's plan is not a child of its scan, so a shuffle that
+    built the cache does not count."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "Exchange":  # ShuffleExchangeExec
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 def _keyed(table: DataFrame, col: str, ids: _IdSet) -> DataFrame:
     """Rows of ``table`` whose ``col`` is in ``ids``."""
     if isinstance(ids, tuple):
@@ -564,7 +578,22 @@ class QueryResult:
 
     def extract_properties(self) -> DataFrame:
         """Property payloads of matched vertices then edges: DF[kind, id,
-        prop_hash, schema_type, value, tagged]."""
+        prop_hash, schema_type, value, tagged].
+
+        A read whose static plan has no shuffle (every join a broadcast,
+        as for point reads and short traversals off literal ids) comes
+        back already planned without AQE. AQE only re-plans around
+        shuffles; on such a plan it would run the broadcasts one query
+        stage at a time and re-optimize between them, while the static
+        plan runs them concurrently. Any other read is planned with AQE
+        when it is collected."""
+        df = self._properties()
+        with _aqe_off(df.sparkSession):
+            plan = df._jdf.queryExecution().executedPlan()
+        # a DataFrame keeps the physical plan it was first planned with
+        return self._properties() if _shuffles(plan) else df
+
+    def _properties(self) -> DataFrame:
         g = self.graph
         vs, es = self._v, self._e
         if vs is None and es is None:

@@ -29,21 +29,22 @@ Here:
 The second copy is copy-on-write, as the doc intends. A graph loaded
 from a snapshot (or built with ``GraphBatchBuilder``, whose origin is
 the empty graph) carries its delta (graph.GraphDelta): the rows its CRUD
-calls added and the keys they retracted. ``commit`` writes only that
-delta, with pyarrow and no Spark job: each parent file that holds no
-retracted row is hard-linked into the new directory, a file that does
-is rewritten without those rows, and the added rows go to one tail file
-per table. The commit records its parent and the rows each table lost
-and gained in ``snap-<n>/_delta/``, so ``diff`` of a parent and its
-child reads that record instead of joining the two snapshots. Every
-snapshot directory stays a complete, self-contained set of plain parquet
-directories: readers plan the same scans, and deleting a parent (GC)
-leaves its children whole, since a hard link is a second name for the
-same bytes. Snapshot files are immutable — nothing ever opens one for
-writing, which is what makes sharing them safe. A graph of unknown
-provenance (ingest, merge, apply_change), a delta above
-``ARROW_COMMIT_CAP`` rows, or an origin in another store falls back to
-``graph.save``'s cluster write.
+calls added and the keys they retracted. ``commit`` writes only the
+tables that delta touches, with pyarrow and no Spark job: a table it
+leaves alone has its parent files hard-linked into the new directory,
+and a touched table is rewritten as one file, without its retracted
+rows and with its added ones. The commit records its parent and the
+rows each table lost and gained in ``snap-<n>/_delta/``, so ``diff`` of
+a parent and its child reads that record instead of joining the two
+snapshots. Every snapshot directory stays a complete, self-contained
+set of plain parquet directories: readers plan the same scans, and
+deleting a parent (GC) leaves its children whole, since a hard link is
+a second name for the same bytes. Snapshot files are immutable —
+nothing ever opens one for writing, which is what makes sharing them
+safe. A commit reads no parent table of more than ``ARROW_COMMIT_CAP``
+rows onto the driver: a graph of unknown provenance (ingest, merge,
+apply_change), a delta or a touched parent table above the cap, or an
+origin in another store falls back to ``graph.save``'s cluster write.
 
 At cluster scale ``CURRENT`` lives on the object store; the atomic-
 replace primitive becomes a conditional PUT — same protocol shape (an
@@ -57,7 +58,8 @@ import os
 from typing import Callable, Iterable, Optional
 
 from .constraints import check_constraints
-from .graph import _TABLES, ARROW_COMMIT_CAP, SCHEMAS, PropertyGraph, _aqe_off
+from . import graph as _graph
+from .graph import _TABLES, SCHEMAS, PropertyGraph, _aqe_off
 
 __all__ = ["DatasetStore", "TransactionalStore", "WriterLockHeld", "transact"]
 
@@ -340,10 +342,6 @@ class TransactionalStore(_SnapshotLog):
         """Publish the first snapshot."""
         return self.commit(graph)
 
-    # a delta of more rows than this (per table) is not carried through
-    # the driver: the commit falls back to graph.save's cluster write
-    ARROW_COMMIT_CAP = ARROW_COMMIT_CAP
-
     def commit(
         self,
         graph: PropertyGraph,
@@ -385,20 +383,22 @@ class TransactionalStore(_SnapshotLog):
     def _write_delta(self, graph: PropertyGraph, target: str) -> bool:
         """Write ``graph`` as its origin plus its delta, with pyarrow and
         no Spark job. Returns False, having written nothing, when the
-        graph has no delta, the delta is over the cap, or the origin is
-        not a snapshot directory of this store that still exists.
+        graph has no delta, the origin is not a snapshot directory of
+        this store that still exists, or the delta or a table it touches
+        holds more than ``graph.ARROW_COMMIT_CAP`` rows (parent rows are
+        counted from the parquet footers, reading no data), so the
+        driver never reads more than the cap from a parent table.
 
-        Per table: a parent file that holds no retracted row is hard-
-        linked; one that does is rewritten without those rows; the added
-        rows (minus those the parent already holds) go to the tail file,
-        ``tail-<n>.parquet``, which is rewritten with them while it stays
-        within the cap and is otherwise left as it is, a new tail taking
-        the rows. So a table of up to cap rows is one file, as a read
-        wants it (two files are two scan tasks), a bigger one has one
-        file per cap rows, and no file is ever opened for writing once
-        written. The parent name and the rows added and removed go to
-        ``_delta/delta.json`` for :meth:`diff`."""
-        d, cap = graph.delta, self.ARROW_COMMIT_CAP
+        A table the delta leaves alone has its parent files hard-linked.
+        A touched table is read whole, loses its retracted rows (and, for
+        ``edges``, the edges of deleted vertices), gains the added rows it
+        does not already hold, and is written as one file, since one file
+        per table is what a read wants. The parent name and the rows each
+        table lost and gained go to ``_delta/delta.json`` for
+        :meth:`diff`."""
+        import pyarrow.parquet as papq
+
+        d, cap = graph.delta, _graph.ARROW_COMMIT_CAP
         if d is None or d.size() > cap:
             return False
         if d.origin is not None and (
@@ -406,22 +406,35 @@ class TransactionalStore(_SnapshotLog):
             or not os.path.isdir(d.origin)
         ):
             return False
+        src = {t: d.origin and os.path.join(d.origin, t) for t in _TABLES}
+        files = {t: _parquet_files(src[t]) for t in _TABLES}
+        # a deleted vertex's edges cascade, and their backlinks with them
+        cascade = {"edges", "prop_refs"} if d.endpoints else set()
+        touched = [
+            t for t in _TABLES
+            if t in cascade or d.retracted[t] or d.added[t] or not files[t]
+        ]
+        for t in touched:
+            if sum(papq.read_metadata(f).num_rows for f in files[t]) > cap:
+                return False
         os.makedirs(target)
-        added, removed = {}, {}
+        added = {t: [] for t in _TABLES}
+        removed = {t: [] for t in _TABLES}
         for t in _TABLES:
+            dst = os.path.join(target, t)
+            os.makedirs(dst)
+            if t not in touched:
+                for f in files[t]:
+                    os.link(f, os.path.join(dst, os.path.basename(f)))
+                continue
             keys = d.retracted[t]
             if t == "prop_refs":
-                # the backlinks of cascaded edges go with them
                 gone = [("edge", r[0]) for r in removed["edges"]]
                 keys = [_SEP.join(k) for k in (*keys, *gone)]
             removed[t], added[t] = _write_table(
-                d.origin and os.path.join(d.origin, t),
-                os.path.join(target, t),
-                t,
-                keys,
+                files[t], dst, t, keys,
                 d.endpoints if t == "edges" else (),
                 list(d.added[t].values()),
-                cap,
             )
         if d.origin is not None:
             os.makedirs(os.path.join(target, _DELTA))
@@ -435,18 +448,29 @@ class TransactionalStore(_SnapshotLog):
 # (ref_kind, ref_id) retraction keys
 _DELTA = "_delta"
 _SEP = "\x1f"
-_TAIL = "tail-"
+
+
+def _parquet_files(table_dir) -> list:
+    """The data files of one table directory (None: the empty graph);
+    Spark's ``_SUCCESS`` and ``.crc`` side files are not data."""
+    if table_dir is None:
+        return []
+    return [
+        os.path.join(table_dir, f) for f in sorted(os.listdir(table_dir))
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
 
 
 def _rows(tbl) -> list:
     return [list(r) for r in zip(*(c.to_pylist() for c in tbl.columns))]
 
 
-def _write_table(src, dst, table, keys, endpoints, adds, cap) -> tuple:
-    """One table of :meth:`TransactionalStore._write_delta`: link or
-    rewrite each file of ``src`` (None: the empty graph) into ``dst``,
-    append ``adds`` through the tail file, and return the rows removed
-    and the rows really added, as lists."""
+def _write_table(files, dst, table, keys, endpoints, adds) -> tuple:
+    """One touched table of :meth:`TransactionalStore._write_delta`: the
+    parent rows in ``files`` minus those ``keys`` retract and the edges
+    incident to ``endpoints``, plus the ``adds`` not already among them,
+    written as one file into ``dst``. Returns the rows removed and the
+    rows really added, as lists."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as papq
@@ -454,64 +478,29 @@ def _write_table(src, dst, table, keys, endpoints, adds, cap) -> tuple:
     names = SCHEMAS[table].names
     schema = pa.schema([pa.field(n, pa.string()) for n in names])
 
-    def read(path, columns=names):
-        return papq.read_table(path, columns=list(columns)).select(list(columns)).cast(
-            pa.schema([schema.field(c) for c in columns])
-        )
+    def key(tbl, whole_row):
+        # a retraction names an id (or ref_kind, ref_id); an add dedupes
+        # on its id (or, for prop_refs, the whole row)
+        if table != "prop_refs":
+            return tbl[names[0]]
+        cols = tbl.columns if whole_row else [tbl["ref_kind"], tbl["ref_id"]]
+        return pc.binary_join_element_wise(*cols, _SEP)
 
-    def match_key(tbl):  # what a retraction names
-        if table == "prop_refs":
-            return pc.binary_join_element_wise(tbl["ref_kind"], tbl["ref_id"], _SEP)
-        return tbl[names[0]]
-
-    def row_key(tbl):  # what an added row dedupes on
-        if table == "prop_refs":
-            return pc.binary_join_element_wise(*tbl.columns, _SEP)
-        return tbl[names[0]]
-
-    files = sorted(
-        f for f in (os.listdir(src) if src else ())
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    parent = pa.concat_tables(
+        [papq.read_table(f, columns=names).select(names).cast(schema) for f in files]
+        or [schema.empty_table()]
     )
-    keys = pa.array(sorted(keys), pa.string())
-    endpoints = pa.array(sorted(endpoints), pa.string())
-    scan = names if table == "prop_refs" else names[:1] + (["src", "dst"] if len(endpoints) else [])
-    out, removed, survivors = {}, [], []
-    for f in files:
-        part = read(os.path.join(src, f), scan)
-        hit = pc.is_in(match_key(part), value_set=keys)
-        if len(endpoints):
-            hit = pc.or_(hit, pc.or_(pc.is_in(part["src"], value_set=endpoints),
-                                     pc.is_in(part["dst"], value_set=endpoints)))
-        if pc.any(hit).as_py():
-            full = part if len(scan) == len(names) else read(os.path.join(src, f))
-            removed.append(full.filter(hit))
-            part = out[f] = full.filter(pc.invert(hit))
-        survivors.extend(row_key(part).chunks)
+    hit = pc.is_in(key(parent, False), value_set=pa.array(sorted(keys), pa.string()))
+    if endpoints:
+        ends = pa.array(sorted(endpoints), pa.string())
+        hit = pc.or_(hit, pc.or_(pc.is_in(parent["src"], value_set=ends),
+                                 pc.is_in(parent["dst"], value_set=ends)))
+    kept = parent.filter(pc.invert(hit))
     cols = list(zip(*adds)) if adds else [()] * len(names)
     new = pa.table([pa.array(c, pa.string()) for c in cols], schema=schema)
-    if survivors:
-        new = new.filter(pc.invert(pc.is_in(row_key(new), value_set=pa.concat_arrays(survivors))))
-    tails = [f for f in files if f.startswith(_TAIL)]
-    tail = tails[-1] if tails else None
-    if new.num_rows or not files:
-        old = None if tail is None else out[tail] if tail in out else read(os.path.join(src, tail))
-        if old is not None and old.num_rows + new.num_rows <= cap:
-            out[tail] = pa.concat_tables([old, new])
-        else:
-            seq = int(tail[len(_TAIL):-len(".parquet")]) + 1 if tail else 0
-            out[f"{_TAIL}{seq:06d}.parquet"] = new
-    os.makedirs(dst)
-    for f in files:
-        if f not in out:
-            os.link(os.path.join(src, f), os.path.join(dst, f))
-    for f, tbl in out.items():
-        if tbl.num_rows:  # a rewritten file that lost every row is dropped
-            papq.write_table(tbl, os.path.join(dst, f))
-    if not os.listdir(dst):  # a reader needs a file, even one of no rows
-        papq.write_table(schema.empty_table(), os.path.join(dst, "part-00000.parquet"))
-    gone = pa.concat_tables(removed) if removed else schema.empty_table()
-    return _rows(gone), _rows(new)
+    new = new.filter(pc.invert(pc.is_in(key(new, True), value_set=key(kept, True))))
+    papq.write_table(pa.concat_tables([kept, new]), os.path.join(dst, "part-00000.parquet"))
+    return _rows(parent.filter(hit)), _rows(new)
 
 
 class VersionedViewStore(_SnapshotLog):

@@ -203,29 +203,55 @@ def test_deleted_parent_directories_leave_snapshots_whole(spark, tmp_path):
         assert _state(store.load_at(spark, name)) == models[name], name
 
 
-def test_tail_rolls_over_at_the_cap(spark, tmp_path, monkeypatch):
-    """Above the cap a delta takes graph.save's cluster write (no record,
-    diff falls back to graph_diff); the next delta commit links those
-    Spark-written files and starts a tail; a tail that would pass the cap
-    is kept and a new one takes the rows."""
+def test_a_touched_table_above_the_cap_takes_the_cluster_write(spark, tmp_path, monkeypatch):
+    """A commit reads no parent table above the cap onto the driver: a
+    small delta that touches one takes graph.save (no record, so diff
+    falls back to graph_diff). At the cap it is still a delta commit,
+    and the tables it leaves alone are linked, Spark-written ones too."""
+    from gravitydb_spark import graph as graph_mod
+
     store = TransactionalStore(str(tmp_path / "db"))
-    monkeypatch.setattr(store, "ARROW_COMMIT_CAP", 4)
-    s0 = store.init(_base(spark))  # 6 vertices > 4: cluster write
-    assert not any(f.startswith("tail-") for f in os.listdir(os.path.join(store.path, s0, "vertices")))
-    g = store.load(spark)
-    for i in range(3):
-        g, _ = g.create_nodes([(f"t{i}a", Prop("Town", f"{i}a")), (f"t{i}b", Prop("Town", f"{i}b"))])
-        store.commit(g)
-        g = store.load(spark)
-    cur = os.path.join(store.current_path(), "vertices")
-    tails = sorted(f for f in os.listdir(cur) if f.startswith("tail-"))
-    assert tails == ["tail-000000.parquet", "tail-000001.parquet"]
-    assert [papq.read_metadata(os.path.join(cur, f)).num_rows for f in tails] == [4, 2]
-    assert g.vertices.count() == 12
-    d = store.diff(spark, -2, -1)
-    assert sorted(r["id"] for r in d["created_nodes"].collect()) == ["t2a", "t2b"]
-    d0 = store.diff(spark, s0, store.snapshots()[1])  # s1 has a record, parent s0
-    assert sorted(r["id"] for r in d0["created_nodes"].collect()) == ["t0a", "t0b"]
+    s0 = store.init(_base(spark))
+
+    def rows(snap, t):
+        d = os.path.join(store.path, snap, t)
+        return sum(
+            papq.read_metadata(os.path.join(d, f)).num_rows
+            for f in os.listdir(d) if f.endswith(".parquet")
+        )
+
+    def add_city(name):
+        return store.load(spark).create_nodes([(name, Prop("City", name))])[0]
+
+    # create_nodes touches vertices, properties and prop_refs, not edges
+    cap = max(rows(s0, t) for t in ("vertices", "properties", "prop_refs"))
+    assert cap == rows(s0, "prop_refs")
+    monkeypatch.setattr(graph_mod, "ARROW_COMMIT_CAP", cap)
+    s1 = store.commit(add_city("n1"))
+    assert os.path.exists(os.path.join(store.path, s1, "_delta", "delta.json"))
+    edges = os.path.join(store.path, s1, "edges")
+    assert all(os.stat(os.path.join(edges, f)).st_nlink == 2 for f in os.listdir(edges))
+    assert rows(s1, "prop_refs") > cap
+    g = add_city("n2")
+    s2 = store.commit(g)
+    assert not os.path.exists(os.path.join(store.path, s2, "_delta"))
+    assert os.path.exists(os.path.join(store.path, s2, "vertices", "_SUCCESS"))  # Spark wrote it
+    assert _state(store.load(spark)) == _state(g)
+    d = store.diff(spark, s1, s2)
+    assert [r["id"] for r in d["created_nodes"].collect()] == ["n2"]
+    # below the cap again, a delta commit links Spark's part files and
+    # leaves its side files behind
+    monkeypatch.setattr(graph_mod, "ARROW_COMMIT_CAP", 100_000)
+    g = add_city("n3")
+    s3 = store.commit(g)
+    edges = os.path.join(store.path, s3, "edges")
+    assert os.listdir(edges) and all(
+        f.endswith(".parquet") and os.stat(os.path.join(edges, f)).st_nlink == 2
+        for f in os.listdir(edges)
+    )
+    assert _state(store.load(spark)) == _state(g)
+    d = store.diff(spark, s2, s3)
+    assert [r["id"] for r in d["created_nodes"].collect()] == ["n3"]
 
 
 def test_unknown_provenance_takes_the_cluster_write(spark, tmp_path):
@@ -238,9 +264,7 @@ def test_unknown_provenance_takes_the_cluster_write(spark, tmp_path):
     merged = merge_graphs(base, a, b)
     assert merged.delta is None
     snap = store.init(merged)
-    assert not any(
-        f.startswith("tail-") for f in os.listdir(os.path.join(store.path, snap, "vertices"))
-    )
+    assert os.path.exists(os.path.join(store.path, snap, "vertices", "_SUCCESS"))
     assert _state(store.load(spark)) == _state(merged)
     # a graph loaded from another store commits by cluster write too
     other = TransactionalStore(str(tmp_path / "other"))
@@ -300,7 +324,7 @@ def test_load_runs_no_job_and_reads_drifted_column_order(spark, tmp_path):
     store2._write_log(["snap-0"])
     nxt = store2.load(spark).update_nodes([("v0", Prop("City", "drift"))])
     store2.commit(nxt)
-    tail = os.path.join(store2.current_path(), "prop_refs")
-    for f in os.listdir(tail):
-        assert papq.read_schema(os.path.join(tail, f)).names == SCHEMAS["prop_refs"].names
+    refs = os.path.join(store2.current_path(), "prop_refs")
+    for f in os.listdir(refs):
+        assert papq.read_schema(os.path.join(refs, f)).names == SCHEMAS["prop_refs"].names
     assert _state(store2.load(spark)) == _state(nxt)

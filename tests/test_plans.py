@@ -773,6 +773,25 @@ def test_read_job_counts(spark, read_graph):
     assert _ids(execute(g, two_hop).vertices) == ["vc"]
 
 
+def test_shuffle_free_reads_are_planned_without_aqe(spark, read_graph):
+    """A read whose joins are all broadcasts runs its static plan; one
+    with a shuffle keeps AQE, which re-plans around it."""
+    from gravitydb_spark import execute
+    from gravitydb_spark.graph import _scoped_conf
+    from gravitydb_spark.ql import vq_from_ids
+
+    g, _ = read_graph
+    q = vq_from_ids(["va"]).outgoing().outgoing()
+    df = execute(g, q).extract_properties()
+    assert "BroadcastHashJoin" in _executed(df)
+    assert "AdaptiveSparkPlan" not in _executed(df)
+    assert _ids(df) == ["vb", "vd"]
+    with _scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1", "10485760"):
+        df = execute(g, q).extract_properties()
+        assert _executed(df).startswith("AdaptiveSparkPlan")
+        assert _ids(df) == ["vb", "vd"]
+
+
 def test_specific_keeps_unknown_ids_and_ignores_duplicates(read_graph):
     """Contexts are built without a store lookup (kv_graph_store.rs:151-155,
     229-233): unknown ids pass through into the result sets."""
