@@ -35,7 +35,7 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import PROP_REFS_SCHEMA, SCHEMAS, PropertyGraph, _aqe_off, _cut, literal_rows
+from .graph import PROP_REFS_SCHEMA, SCHEMAS, PropertyGraph, _aqe_off, _scoped_conf, literal_rows
 
 __all__ = [
     "MergeConflictError",
@@ -47,6 +47,20 @@ __all__ = [
     "merge_graphs",
     "snapshot_id",
 ]
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    """``localCheckpoint(eager=False)`` with constraint propagation
+    scoped OFF during the checkpoint's plan finalization (r14): cutting
+    a union whose children reuse an already-checkpointed frame's
+    attribute ids trips a Catalyst bug in
+    ``UnionBase.rewriteConstraints`` ("key not found: id#...") — the
+    changeset tables are exactly that shape. Constraints only feed
+    the optimizer's filter inference; the cut plan is KB-sized change
+    state, so nothing is lost. localCheckpoint plans at call time, so
+    the toggle scopes exactly the one plan."""
+    with _scoped_conf(df.sparkSession, "spark.sql.constraintPropagation.enabled", "false"):
+        return df.localCheckpoint(eager=False)
 
 
 class MergeConflictError(Exception):
@@ -296,8 +310,6 @@ def apply_change(base: PropertyGraph, change: dict) -> PropertyGraph:
     # ids, and forcing the union through localCheckpoint planning trips
     # a Catalyst constraint-rewrite bug (UnionBase.rewriteConstraints:
     # "key not found: id#...", seen in test_sharding's sync-back).
-    # gc() cuts properties/prop_refs at entry, which is where the
-    # fixpoint re-reads happened anyway.
     vertices = (
         base.vertices.join(gone_n, "id", "leftanti")
         .join(modified.select("id"), "id", "leftanti")
@@ -356,11 +368,11 @@ def _rebuild_refs(
             )
         )
         .dropDuplicates()
-        # r14 note: NOT cut here — gc() lineage-cuts prop_refs at entry
-        # (so the fixpoint never re-executes this tree), and forcing the
-        # union through localCheckpoint planning here trips the same
-        # Catalyst UnionBase.rewriteConstraints bug as apply_change's
-        # unions over reused checkpointed diff frames.
+        # r14 note: NOT cut here — forcing the union through
+        # localCheckpoint planning trips the same Catalyst
+        # UnionBase.rewriteConstraints bug as apply_change's unions over
+        # reused checkpointed diff frames. gc() reads this tree once per
+        # fixpoint round (nesting depth + 1 rounds).
     )
     return template._with(
         vertices=vertices, edges=edges, properties=properties, prop_refs=refs

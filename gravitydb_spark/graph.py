@@ -20,7 +20,10 @@ docs/key_value_store.adoc:14-33, kv_graph_store.rs:791-847):
   ``ref_id`` = the referencing element.
 
 Mutations are batch-first and functional: every CRUD call returns a new
-``PropertyGraph`` whose DataFrames are lazy transforms over the old ones.
+``PropertyGraph`` with the same base (the origin's four frames) and a
+new ``GraphDelta``, the one record of the transaction; each table is
+derived from the two by :func:`_derive`, so a table's plan has the same
+size after any number of CRUD calls.
 The observable end-state matches the reference's per-op upkeep; property GC
 runs as an explicit refcount job (``gc()``) instead of per-op refcounting —
 the right trade at scale (SURVEY.md §7 hard-part 4).
@@ -36,11 +39,11 @@ import os
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
-from typing import Iterable, Optional, Sequence
+from typing import ClassVar, Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .hashing import canonical_json, edge_hash, tagged_property
+from .hashing import edge_hash
 from .schema import DEFAULT_SCHEMA, Prop, Schema
 
 __all__ = [
@@ -88,8 +91,16 @@ SCHEMAS = {
     "properties": PROPERTIES_SCHEMA,
     "prop_refs": PROP_REFS_SCHEMA,
 }
+# the columns a delta retracts by, per table
+_KEYS = {
+    "vertices": ["id"],
+    "edges": ["edge_id"],
+    "properties": ["prop_hash"],
+    "prop_refs": ["ref_kind", "ref_id"],
+}
 # at most this many rows per table ride a delta (and one driver-side
-# collect); beyond it a graph forgets its delta and commits by cluster write
+# collect); beyond it a graph folds its delta into its base, forgets its
+# provenance and commits by cluster write
 ARROW_COMMIT_CAP = 100_000
 
 
@@ -118,25 +129,30 @@ def literal_frame(spark: SparkSession, values: Iterable[str], col: str = "id") -
 
 @dataclass(frozen=True)
 class GraphDelta:
-    """What a graph changed relative to its origin snapshot, kept on the
-    driver by the CRUD methods so a commit writes only the change.
+    """What a graph changed relative to its origin, kept on the driver by
+    the CRUD methods: the one record of a transaction. The graph's tables
+    are derived from it (:func:`_derive`) and a commit writes it
+    (``transaction._write_table``).
 
-    ``origin`` is the snapshot directory the graph was loaded from, or
-    None for the empty graph (a ``GraphBatchBuilder`` graph). The graph
-    is ``origin`` minus every retracted row, plus ``added``:
+    ``origin`` is the snapshot directory the graph was loaded from,
+    ``EMPTY`` for the empty graph (``empty()``, a ``GraphBatchBuilder``
+    graph), or None when the provenance is unknown (the origin is
+    whatever frames the graph was given). The graph is the origin minus
+    every retracted row, plus ``added``:
 
     - ``added[table]`` maps a row key to the row (for ``prop_refs`` the
-      key is the whole row); rows already in the origin are dropped at
-      commit, as the CRUD unions' ``dropDuplicates`` drop them;
+      key is the whole row); an added row replaces an origin row with
+      the same key, which content addressing makes the same row;
     - ``retracted[table]`` holds origin keys: ``id``, ``edge_id``,
       ``prop_hash``, or ``(ref_kind, ref_id)`` for ``prop_refs``;
-    - ``endpoints`` are deleted vertex ids whose origin edges cascade
-      (the commit finds those edges, and retracts their backlinks).
+    - ``endpoints`` are deleted vertex ids whose origin edges cascade,
+      and the backlinks of those edges with them.
 
     A retraction also removes the matching added rows, and an add after
     a retraction survives it, so the delta folds the CRUD calls in
     order."""
 
+    EMPTY: ClassVar[str] = ""
     origin: Optional[str]
     added: dict = field(default_factory=lambda: {t: {} for t in _TABLES})
     retracted: dict = field(default_factory=lambda: {t: frozenset() for t in _TABLES})
@@ -146,6 +162,11 @@ class GraphDelta:
         """Rows and keys a commit must carry for the largest table
         (``endpoints`` are retracted vertex keys too)."""
         return max(len(self.added[t]) + len(self.retracted[t]) for t in _TABLES)
+
+    def touches(self, table: str) -> bool:
+        """Whether ``table`` differs from its origin rows."""
+        cascade = table in ("edges", "prop_refs") and self.endpoints
+        return bool(self.added[table] or self.retracted[table] or cascade)
 
     def add(self, table: str, rows: Iterable[tuple]) -> "GraphDelta":
         cur = dict(self.added[table])
@@ -216,44 +237,83 @@ def _prop_rows(prop: Prop, schema: Schema):
     return list(props.values()), refs
 
 
-def _cut(df: DataFrame) -> DataFrame:
-    """``localCheckpoint(eager=False)`` with constraint propagation
-    scoped OFF during the checkpoint's plan finalization (r14): cutting
-    a union whose children reuse an already-checkpointed frame's
-    attribute ids trips a Catalyst bug in
-    ``UnionBase.rewriteConstraints`` ("key not found: id#...") — the
-    CRUD/changeset tables are exactly that shape. Constraints only feed
-    the optimizer's filter inference; the cut plan is KB-sized CRUD
-    state, so nothing is lost. localCheckpoint plans at call time, so
-    the toggle scopes exactly the one plan."""
-    with _scoped_conf(df.sparkSession, "spark.sql.constraintPropagation.enabled", "false"):
-        return df.localCheckpoint(eager=False)
+def _derive(spark: SparkSession, base: dict, d: GraphDelta, table: str) -> DataFrame:
+    """Table ``table`` of the graph that is ``base`` (the origin's four
+    frames) plus ``d``: the base rows no key of ``d`` retracts or adds
+    again (for ``edges`` none incident to ``d.endpoints``, for
+    ``prop_refs`` no backlink of such an edge), then the added rows. The
+    key sets and rows are literal ``LocalRelation``s, so the plan has one
+    shape however many CRUD calls ``d`` folds. A table ``d`` leaves alone
+    is the base frame itself. The one place a graph's tables are made;
+    ``transaction._write_table`` applies the same delta to files."""
+    df = base[table]
+    if not d.touches(table):
+        return df
+    names = SCHEMAS[table].names
+
+    def minus(df, keys, cols):
+        if not keys:
+            return df
+        rows = [k if isinstance(k, tuple) else (k,) for k in keys]
+        return df.join(F.broadcast(literal_rows(spark, rows, cols)), cols, "leftanti")
+
+    if d.origin != GraphDelta.EMPTY:  # the empty graph has no rows to retract
+        df = minus(df, d.retracted[table], _KEYS[table])
+        # an added row stands for its base twin (a prop_refs row is its own key)
+        df = minus(df, d.added[table], names if table == "prop_refs" else _KEYS[table])
+        if table == "edges":
+            df = minus(minus(df, d.endpoints, ["src"]), d.endpoints, ["dst"])
+        if table == "prop_refs" and d.endpoints:
+            ends = F.broadcast(literal_frame(spark, d.endpoints))
+            src, dst = (
+                base["edges"].join(ends, F.col(c) == F.col("id"), "leftsemi")
+                for c in ("src", "dst")
+            )
+            gone = src.unionByName(dst).select(
+                F.lit("edge").alias("ref_kind"), F.col("edge_id").alias("ref_id")
+            )
+            df = df.join(gone, ["ref_kind", "ref_id"], "leftanti")
+    df = df.select(*names)
+    if d.added[table]:
+        df = df.unionByName(literal_rows(spark, list(d.added[table].values()), names))
+    return df
 
 
-def _drop_refs(prop_refs: DataFrame, kind: str, ids: DataFrame) -> DataFrame:
-    """``prop_refs`` minus the backlinks of the ``kind`` referrers whose
-    ids are the one column of ``ids``, in ``PROP_REFS_SCHEMA`` order."""
-    keys = ids.select(F.lit(kind).alias("ref_kind"), F.col(ids.columns[0]).alias("ref_id"))
-    return prop_refs.join(F.broadcast(keys), ["ref_kind", "ref_id"], "leftanti").select(
-        *PROP_REFS_SCHEMA.names
-    )
-
-
-@dataclass
 class PropertyGraph:
-    spark: SparkSession
-    vertices: DataFrame
-    edges: DataFrame
-    properties: DataFrame
-    prop_refs: DataFrame
-    schema: Schema = None  # type: ignore[assignment]
-    # the change since the origin snapshot (GraphDelta); None when the
-    # provenance is unknown (ingest, merge, apply_change, over the cap)
-    delta: Optional[GraphDelta] = None
+    """A graph is its base, the origin's four frames (snapshot scans for
+    ``load``, empty frames for ``empty()`` and ``GraphBatchBuilder.build``,
+    the given frames otherwise), plus its ``GraphDelta``. Each table is
+    derived from the two on first access (:func:`_derive`); a delta that
+    leaves a table alone gives the base frame itself, so read plans of a
+    loaded graph are its scans. The CRUD methods check against the
+    derived tables and otherwise only edit the delta."""
 
-    def __post_init__(self):
-        if self.schema is None:
-            self.schema = DEFAULT_SCHEMA
+    def __init__(
+        self,
+        spark: SparkSession,
+        vertices: DataFrame,
+        edges: DataFrame,
+        properties: DataFrame,
+        prop_refs: DataFrame,
+        schema: Schema | None = None,
+        delta: Optional[GraphDelta] = None,
+    ):
+        self.spark = spark
+        self.base = dict(zip(_TABLES, (vertices, edges, properties, prop_refs)))
+        self.schema = schema or DEFAULT_SCHEMA
+        # None: the given frames are the origin, of unknown provenance
+        self.delta = GraphDelta(None) if delta is None else delta
+        self._tables: dict = {}
+
+    def _table(self, table: str) -> DataFrame:
+        if table not in self._tables:
+            self._tables[table] = _derive(self.spark, self.base, self.delta, table)
+        return self._tables[table]
+
+    vertices = property(lambda self: self._table("vertices"))
+    edges = property(lambda self: self._table("edges"))
+    properties = property(lambda self: self._table("properties"))
+    prop_refs = property(lambda self: self._table("prop_refs"))
 
     # -- construction -------------------------------------------------------
 
@@ -261,12 +321,9 @@ class PropertyGraph:
     def empty(spark: SparkSession, schema: Schema | None = None) -> "PropertyGraph":
         return PropertyGraph(
             spark,
-            spark.createDataFrame([], VERTICES_SCHEMA),
-            spark.createDataFrame([], EDGES_SCHEMA),
-            spark.createDataFrame([], PROPERTIES_SCHEMA),
-            spark.createDataFrame([], PROP_REFS_SCHEMA),
+            *(literal_rows(spark, [], SCHEMAS[t].names) for t in _TABLES),
             schema or DEFAULT_SCHEMA,
-            GraphDelta(None),
+            GraphDelta(GraphDelta.EMPTY),
         )
 
     @staticmethod
@@ -342,11 +399,21 @@ class PropertyGraph:
             df.cache()
         return self
 
-    def _with(self, delta: Optional[GraphDelta] = None, **tables: DataFrame) -> "PropertyGraph":
-        """A graph with some tables replaced. Without ``delta`` the result
-        has unknown provenance; the CRUD methods pass their new delta."""
-        kwargs = {t: tables.get(t, getattr(self, t)) for t in _TABLES}
-        return PropertyGraph(self.spark, schema=self.schema, delta=delta, **kwargs)
+    def _with(self, **tables: DataFrame) -> "PropertyGraph":
+        """A graph of unknown provenance whose origin is ``tables`` and,
+        for the tables not given, this graph's tables."""
+        return PropertyGraph(
+            self.spark,
+            *(tables[t] if t in tables else getattr(self, t) for t in _TABLES),
+            self.schema,
+        )
+
+    def _edit(self, delta: GraphDelta) -> "PropertyGraph":
+        """This graph's base under ``delta``. A delta above
+        ``ARROW_COMMIT_CAP`` folds: the derived tables become the base of
+        a graph of unknown provenance."""
+        g = PropertyGraph(self.spark, *self.base.values(), self.schema, delta)
+        return g._with() if delta.size() > ARROW_COMMIT_CAP else g
 
     # -- point reads / listings (PropertyGraphReader, lib.rs:80-104) --------
 
@@ -385,20 +452,13 @@ class PropertyGraph:
         self, items: Iterable[tuple[Optional[str], Prop]]
     ) -> tuple["PropertyGraph", list[str]]:
         """Batch create_node (kv_graph_store.rs:531-553): errors if any id
-        exists, dedups property content, writes index backlinks."""
+        exists, in the graph or earlier in the batch (as sequential
+        create_node calls would), dedups property content, writes index
+        backlinks."""
         b = GraphBatchBuilder(self.schema)
         ids = [b.add_node(prop, id=vid) for vid, prop in items]
         self._assert_new_node_ids(ids)
-        v, e, p, r = b.frames(self.spark)
-        return (
-            self._with(
-                vertices=self.vertices.unionByName(v),
-                properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
-                prop_refs=self.prop_refs.unionByName(r).dropDuplicates(),
-                delta=b.added_to(self.delta),
-            ),
-            ids,
-        )
+        return self._edit(b.added_to(self.delta)), ids
 
     def get_or_create_nodes(
         self, items: Iterable[tuple[Optional[str], Prop]]
@@ -440,62 +500,31 @@ class PropertyGraph:
         self, items: Iterable[tuple[str, Prop]]
     ) -> "PropertyGraph":
         """Batch update_node (kv_graph_store.rs:555-582): swap the node's
-        property; old property rows become garbage collected by ``gc()``."""
-        items = list(items)
+        property; old property rows become garbage collected by ``gc()``.
+        A repeated id keeps its last property, as sequential calls would."""
+        items = dict(items)
         # reference semantics: updating a nonexistent node is an error
         # (update_node does read_node first, kv_graph_store.rs:555-560)
-        ids = [vid for vid, _ in items]
+        ids = list(items)
         ids_df = literal_frame(self.spark, ids)
         missing = ids_df.join(self.vertices, "id", "leftanti").limit(1).collect()
         if missing:
             raise KeyError(f"update_nodes: node {missing[0]['id']} does not exist")
         b = GraphBatchBuilder(self.schema)
-        for vid, prop in items:
+        for vid, prop in items.items():
             b.add_node(prop, id=vid)
-        v, _, p, r = b.frames(self.spark)
-        vertices = self.vertices.join(F.broadcast(ids_df), "id", "leftanti").unionByName(v)
         # drop the old node->prop backlinks, add the new ones
-        prop_refs = _drop_refs(self.prop_refs, "node", ids_df).unionByName(r).dropDuplicates()
-        delta = self.delta
-        if delta is not None:
-            delta = delta.retract("vertices", ids).retract("prop_refs", [("node", i) for i in ids])
-        return self._with(
-            vertices=vertices,
-            properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
-            prop_refs=prop_refs,
-            delta=b.added_to(delta),
-        )
+        delta = self.delta.retract("vertices", ids).retract("prop_refs", [("node", i) for i in ids])
+        return self._edit(b.added_to(delta))
 
     def delete_nodes(self, vertex_ids: Sequence[str], cascade: bool = True) -> "PropertyGraph":
         """Batch delete_node. ``cascade=True`` removes incident edges — the
         *documented* behavior (docs/key_value_store.adoc:543-544); the
         reference code leaves them dangling (kv_graph_store.rs:584-602) —
         pass ``cascade=False`` to replicate that."""
-        vertex_ids = list(vertex_ids)
-        ids = literal_frame(self.spark, vertex_ids)
-        delta = self.delta
-        if delta is not None:
-            delta = delta.retract("vertices", vertex_ids).retract(
-                "prop_refs", [("node", i) for i in vertex_ids]
-            )
-            if cascade:
-                delta = delta.drop_incident_edges(vertex_ids)
-        g = self._with(
-            vertices=self.vertices.join(F.broadcast(ids), "id", "leftanti"),
-            prop_refs=_drop_refs(self.prop_refs, "node", ids),
-            delta=delta,
-        )
-        if cascade:
-            doomed = (
-                self.edges.join(F.broadcast(ids), F.col("src") == F.col("id"), "leftsemi")
-                .unionByName(
-                    self.edges.join(F.broadcast(ids), F.col("dst") == F.col("id"), "leftsemi")
-                )
-                .select("edge_id")
-                .distinct()
-            )
-            g = g._delete_edges_df(doomed, delta)
-        return g
+        ids = list(vertex_ids)
+        delta = self.delta.retract("vertices", ids).retract("prop_refs", [("node", i) for i in ids])
+        return self._edit(delta.drop_incident_edges(ids) if cascade else delta)
 
     def create_edges(
         self, items: Iterable[tuple[str, str, Prop]]
@@ -505,32 +534,13 @@ class PropertyGraph:
         upkeep needed (derived)."""
         b = GraphBatchBuilder(self.schema)
         ids = [b.add_edge(s, d, prop) for s, d, prop in items]
-        _, e, p, r = b.frames(self.spark)
-        return (
-            self._with(
-                edges=self.edges.unionByName(e).dropDuplicates(["edge_id"]),
-                properties=self.properties.unionByName(p).dropDuplicates(["prop_hash"]),
-                prop_refs=self.prop_refs.unionByName(r).dropDuplicates(),
-                delta=b.added_to(self.delta),
-            ),
-            ids,
-        )
-
-    def _delete_edges_df(self, edge_ids: DataFrame, delta: Optional[GraphDelta]) -> "PropertyGraph":
-        edges = self.edges.join(
-            F.broadcast(edge_ids.select("edge_id")), "edge_id", "leftanti"
-        )
-        prop_refs = _drop_refs(self.prop_refs, "edge", edge_ids.select("edge_id"))
-        return self._with(edges=edges, prop_refs=prop_refs, delta=delta)
+        return self._edit(b.added_to(self.delta)), ids
 
     def delete_edges(self, edge_ids: Sequence[str]) -> "PropertyGraph":
-        edge_ids = list(edge_ids)
-        delta = self.delta
-        if delta is not None:
-            delta = delta.retract("edges", edge_ids).retract(
-                "prop_refs", [("edge", e) for e in edge_ids]
-            )
-        return self._delete_edges_df(literal_frame(self.spark, edge_ids, "edge_id"), delta)
+        ids = list(edge_ids)
+        return self._edit(
+            self.delta.retract("edges", ids).retract("prop_refs", [("edge", e) for e in ids])
+        )
 
     def gc(self, max_iters: int = 10) -> "PropertyGraph":
         """Refcount GC of unreferenced properties as a batch job.
@@ -541,43 +551,31 @@ class PropertyGraph:
         deleting a dead parent drops its nesting refs, which may orphan
         children — iterate to fixpoint (depth = nesting depth, tiny).
 
-        Each round collects its dead hashes (at most ARROW_COMMIT_CAP+1):
-        they are the round's emptiness probe, the literal set the next
-        round anti-joins, and the retractions of the graph's delta. A
-        round with more dead hashes than that keeps them a lazy frame and
-        the result forgets its delta."""
-        # r14 (guide §7.3): lazy lineage cuts at entry and per iteration —
-        # uncut, every fixpoint probe re-planned and re-executed the
-        # graph's whole op lineage (unions/anti-joins of every CRUD op
-        # since load), making gc quadratic in plan depth. The first
-        # probe materializes the entry cuts; each iteration's cuts ride
-        # the next probe. Lazy is sound: nothing external mutates between
-        # the cut and its first action.
-        properties = _cut(self.properties)
-        prop_refs = _cut(self.prop_refs)
-        delta = self.delta
+        Each round collects its dead hashes (at most ARROW_COMMIT_CAP+1)
+        and retracts them in the delta, so the next round's tables are
+        derived again from the base and every hash retracted so far. A
+        round with more dead hashes than the cap folds the graph: its
+        tables, minus those hashes as a lazy frame, become the base of a
+        graph of unknown provenance."""
+        g = self
         for _ in range(max_iters):
-            dead = properties.join(
-                prop_refs.select("prop_hash").distinct(), "prop_hash", "leftanti"
+            dead = g.properties.join(
+                g.prop_refs.select("prop_hash").distinct(), "prop_hash", "leftanti"
             ).select("prop_hash")
             hashes = [r[0] for r in dead.limit(ARROW_COMMIT_CAP + 1).collect()]
             if not hashes:
                 break
-            if len(hashes) > ARROW_COMMIT_CAP:
-                delta = None
-            else:
-                dead = literal_frame(self.spark, hashes, "prop_hash")
-                if delta is not None:
-                    delta = delta.retract("properties", hashes).retract(
-                        "prop_refs", [(k, h) for h in hashes for k in ("node", "edge", "prop")]
-                    )
-            properties = _cut(properties.join(dead, "prop_hash", "leftanti"))
-            prop_refs = _cut(
-                prop_refs.join(
+            if len(hashes) <= ARROW_COMMIT_CAP:
+                refs = [(k, h) for h in hashes for k in ("node", "edge", "prop")]
+                g = g._edit(g.delta.retract("properties", hashes).retract("prop_refs", refs))
+                continue
+            g = g._with(
+                properties=g.properties.join(dead, "prop_hash", "leftanti"),
+                prop_refs=g.prop_refs.join(
                     dead.select(F.col("prop_hash").alias("ref_id")), "ref_id", "leftanti"
-                ).select(*PROP_REFS_SCHEMA.names)
+                ).select(*PROP_REFS_SCHEMA.names),
             )
-        return self._with(properties=properties, prop_refs=prop_refs, delta=delta)
+        return g
 
     # -- integrity (planned CLI db_info/doctor, backends_filestore.adoc) ----
 
@@ -672,7 +670,7 @@ class PropertyGraph:
 
 
 class GraphBatchBuilder:
-    """Accumulate nodes/edges driver-side, emit the four DataFrames.
+    """Accumulate nodes/edges driver-side, emit them as a graph.
 
     This is the literal/ingest path (GraphBuilder trait, lib.rs:67-77).
     For bulk ingest from existing DataFrames use
@@ -682,7 +680,7 @@ class GraphBatchBuilder:
 
     def __init__(self, schema: Schema | None = None):
         self.schema = schema or DEFAULT_SCHEMA
-        self._vertices: list[tuple[str, str]] = []
+        self._vertices: dict[str, tuple[str, str]] = {}
         self._edges: dict[str, tuple[str, str, str, str]] = {}
         self._properties: dict[str, tuple[str, str, str, str]] = {}
         self._prop_refs: set[tuple[str, str, str]] = set()
@@ -695,9 +693,13 @@ class GraphBatchBuilder:
         return prop.hash
 
     def add_node(self, prop: Prop, id: Optional[str] = None) -> str:
+        """Add a node; an explicit ``id`` the batch already holds raises
+        ``NodeExistsError``, as a second create_node would."""
+        if id is not None and id in self._vertices:
+            raise NodeExistsError(f"node {id} already exists")
         vid = id or str(uuid.uuid4())
         ph = self._register_prop(prop)
-        self._vertices.append((vid, ph))
+        self._vertices[vid] = (vid, ph)
         self._prop_refs.add((ph, "node", vid))
         return vid
 
@@ -708,32 +710,18 @@ class GraphBatchBuilder:
         self._prop_refs.add((ph, "edge", eid))
         return eid
 
-    def frames(
-        self, spark: SparkSession
-    ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    def added_to(self, delta: GraphDelta) -> GraphDelta:
+        """``delta`` plus this batch's rows."""
         return (
-            spark.createDataFrame(self._vertices, VERTICES_SCHEMA),
-            spark.createDataFrame(list(self._edges.values()), EDGES_SCHEMA),
-            spark.createDataFrame(list(self._properties.values()), PROPERTIES_SCHEMA),
-            spark.createDataFrame(sorted(self._prop_refs), PROP_REFS_SCHEMA),
-        )
-
-    def added_to(self, delta: Optional[GraphDelta]) -> Optional[GraphDelta]:
-        """``delta`` plus this batch's rows; None when ``delta`` is None,
-        or when the batch repeats a vertex id (the frames then keep both
-        rows, which no keyed delta can say)."""
-        ids = [vid for vid, _ in self._vertices]
-        if delta is None or len(set(ids)) != len(ids):
-            return None
-        return (
-            delta.add("vertices", self._vertices)
+            delta.add("vertices", self._vertices.values())
             .add("edges", self._edges.values())
             .add("properties", self._properties.values())
             .add("prop_refs", sorted(self._prop_refs))
         )
 
     def build(self, spark: SparkSession) -> PropertyGraph:
-        """The batch as a graph whose origin is the empty graph, so a
-        commit writes its rows without a Spark job."""
-        v, e, p, r = self.frames(spark)
-        return PropertyGraph(spark, v, e, p, r, self.schema, self.added_to(GraphDelta(None)))
+        """The batch as the empty graph plus its rows: each table is a
+        ``LocalRelation``, and a commit writes the rows without a Spark
+        job."""
+        g = PropertyGraph.empty(spark, self.schema)
+        return g._edit(self.added_to(g.delta))

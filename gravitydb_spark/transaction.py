@@ -43,8 +43,8 @@ a second name for the same bytes. Snapshot files are immutable —
 nothing ever opens one for writing, which is what makes sharing them
 safe. A commit reads no parent table of more than ``ARROW_COMMIT_CAP``
 rows onto the driver: a graph of unknown provenance (ingest, merge,
-apply_change), a delta or a touched parent table above the cap, or an
-origin in another store falls back to ``graph.save``'s cluster write.
+apply_change, a folded delta), a touched parent table above the cap, or
+an origin in another store falls back to ``graph.save``'s cluster write.
 
 At cluster scale ``CURRENT`` lives on the object store; the atomic-
 replace primitive becomes a conditional PUT — same protocol shape (an
@@ -55,6 +55,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Callable, Iterable, Optional
 
 from .constraints import check_constraints
@@ -199,24 +200,57 @@ class _SnapshotLog:
         lock = self._acquire_lock()
         try:
             meta = self._meta()
-            if bid is not None:
-                bid = int(bid)
-                if bid <= int(meta.get("bid_hwm", -1)):
-                    return None  # already applied — at-least-once replay
-                meta["bid_hwm"] = str(bid)
-            name = self._alloc_name()
-            target = os.path.join(self.path, name)
-            try:
-                write_fn(target)
-            except BaseException:
-                import shutil
-
-                shutil.rmtree(target, ignore_errors=True)
-                raise
+            if self._replayed(meta, bid):
+                return None
+            name = self._new_snapshot(write_fn)
             self._write_log(self._published() + [name], meta)
             return name
         finally:
             os.unlink(lock)
+
+    def _replayed(self, meta: dict, bid: Optional[int]) -> bool:
+        """The ``bid_hwm`` replay guard: True when ``bid`` is at or below
+        the log's applied high-water mark (at-least-once replay of a
+        publish that already committed); otherwise advance the mark in
+        ``meta``, which the caller's log replace publishes."""
+        if bid is None:
+            return False
+        if int(bid) <= int(meta.get("bid_hwm", -1)):
+            return True
+        meta["bid_hwm"] = str(int(bid))
+        return False
+
+    def _new_snapshot(self, write_fn) -> str:
+        """Allocate a snapshot name and let ``write_fn(target_dir)`` fill
+        it; on any error the directory is removed, so the number is never
+        burned with partial data. Returns the (unpublished) name."""
+        name = self._alloc_name()
+        target = os.path.join(self.path, name)
+        try:
+            write_fn(target)
+        except BaseException:
+            shutil.rmtree(target, ignore_errors=True)
+            raise
+        return name
+
+    def _drain_pending(self) -> None:
+        """Pass two of two-phase GC: delete the bytes of the names the
+        previous pass parked in GC_PENDING."""
+        pending = os.path.join(self.path, self.GC_PENDING)
+        if os.path.exists(pending):
+            with open(pending) as f:
+                for n in (ln.strip() for ln in f):
+                    if n:
+                        shutil.rmtree(os.path.join(self.path, n), ignore_errors=True)
+            os.unlink(pending)
+
+    def _park(self, names: list) -> None:
+        """Pass one of two-phase GC: park de-logged names in GC_PENDING
+        (atomic replace) until the next pass drains them."""
+        pending = os.path.join(self.path, self.GC_PENDING)
+        with open(pending + ".tmp", "w") as f:
+            f.write("\n".join(names) + "\n")
+        os.replace(pending + ".tmp", pending)
 
     def _resolve(self, version) -> str:
         """Resolve a published name or index (negative ok, -1 = newest)
@@ -240,19 +274,11 @@ class _SnapshotLog:
         the full reader/GC story): shrink the log now, park names in
         GC_PENDING, delete the PREVIOUS pass's parked bytes. The newest
         entry is always retained (keep >= 1 enforced)."""
-        import shutil
-
         if keep < 1:
             raise ValueError("keep must be >= 1")
         lock = self._acquire_lock()
         try:
-            pending_path = os.path.join(self.path, self.GC_PENDING)
-            if os.path.exists(pending_path):
-                with open(pending_path) as f:
-                    aged = [ln.strip() for ln in f if ln.strip()]
-                for n in aged:
-                    shutil.rmtree(os.path.join(self.path, n), ignore_errors=True)
-                os.unlink(pending_path)
+            self._drain_pending()
             names = self.snapshots()
             current = self._current_name()
             doomed = [
@@ -261,10 +287,7 @@ class _SnapshotLog:
             if doomed:
                 self._write_log([n for n in names if n not in doomed])
                 if grace:
-                    tmp = pending_path + ".tmp"
-                    with open(tmp, "w") as f:
-                        f.write("\n".join(doomed) + "\n")
-                    os.replace(tmp, pending_path)
+                    self._park(doomed)
                 else:
                     for n in doomed:
                         shutil.rmtree(os.path.join(self.path, n))
@@ -356,24 +379,20 @@ class TransactionalStore(_SnapshotLog):
         A graph that knows its delta from a snapshot of this store (or
         from the empty graph) is written copy-on-write by
         :meth:`_write_delta`; any other graph by ``graph.save``."""
-        import shutil
+
+        def write(target):
+            if not self._write_delta(graph, target):
+                graph.save(target, mode="error")  # fresh dir — never overwrite
+            # verify the COMMITTED bytes, not the in-memory graph
+            committed = PropertyGraph.load(graph.spark, target, graph.schema)
+            check_constraints(committed, constraints)
 
         lock = self._acquire_lock()
         try:
-            name = self._alloc_name()
-            target = os.path.join(self.path, name)
-            try:
-                if not self._write_delta(graph, target):
-                    graph.save(target, mode="error")  # fresh dir — never overwrite
-                # verify the COMMITTED bytes, not the in-memory lineage
-                committed = PropertyGraph.load(graph.spark, target, graph.schema)
-                check_constraints(committed, constraints)
-            except BaseException:
-                # the swap never happened: the written dir is garbage, not
-                # a snapshot — collect it so the abort is fully recoverable
-                # (unlinking a hard link leaves the parent's file intact)
-                shutil.rmtree(target, ignore_errors=True)
-                raise
+            # a failed write or check leaves no snapshot dir behind, so the
+            # abort is fully recoverable (unlinking a hard link leaves the
+            # parent's file intact)
+            name = self._new_snapshot(write)
             # the atomic swap: append to the publication log and replace
             self._write_log(self._published() + [name])
             return name
@@ -382,12 +401,13 @@ class TransactionalStore(_SnapshotLog):
 
     def _write_delta(self, graph: PropertyGraph, target: str) -> bool:
         """Write ``graph`` as its origin plus its delta, with pyarrow and
-        no Spark job. Returns False, having written nothing, when the
-        graph has no delta, the origin is not a snapshot directory of
-        this store that still exists, or the delta or a table it touches
-        holds more than ``graph.ARROW_COMMIT_CAP`` rows (parent rows are
-        counted from the parquet footers, reading no data), so the
-        driver never reads more than the cap from a parent table.
+        no Spark job: the second applier of the delta, beside
+        ``graph._derive``. Returns False, having written nothing, when the
+        graph's provenance is unknown, the origin is not a snapshot
+        directory of this store that still exists, or the delta or a table
+        it touches holds more than ``graph.ARROW_COMMIT_CAP`` rows (parent
+        rows are counted from the parquet footers, reading no data), so
+        the driver never reads more than the cap from a parent table.
 
         A table the delta leaves alone has its parent files hard-linked.
         A touched table is read whole, loses its retracted rows (and, for
@@ -399,21 +419,15 @@ class TransactionalStore(_SnapshotLog):
         import pyarrow.parquet as papq
 
         d, cap = graph.delta, _graph.ARROW_COMMIT_CAP
-        if d is None or d.size() > cap:
+        if d.origin is None or d.size() > cap:
             return False
-        if d.origin is not None and (
+        if d.origin and (
             os.path.dirname(d.origin) != os.path.realpath(self.path)
             or not os.path.isdir(d.origin)
         ):
             return False
-        src = {t: d.origin and os.path.join(d.origin, t) for t in _TABLES}
-        files = {t: _parquet_files(src[t]) for t in _TABLES}
-        # a deleted vertex's edges cascade, and their backlinks with them
-        cascade = {"edges", "prop_refs"} if d.endpoints else set()
-        touched = [
-            t for t in _TABLES
-            if t in cascade or d.retracted[t] or d.added[t] or not files[t]
-        ]
+        files = {t: _parquet_files(d.origin and os.path.join(d.origin, t)) for t in _TABLES}
+        touched = [t for t in _TABLES if d.touches(t) or not files[t]]
         for t in touched:
             if sum(papq.read_metadata(f).num_rows for f in files[t]) > cap:
                 return False
@@ -436,7 +450,7 @@ class TransactionalStore(_SnapshotLog):
                 d.endpoints if t == "edges" else (),
                 list(d.added[t].values()),
             )
-        if d.origin is not None:
+        if d.origin:
             os.makedirs(os.path.join(target, _DELTA))
             record = {"parent": os.path.basename(d.origin), "added": added, "removed": removed}
             with open(os.path.join(target, _DELTA, "delta.json"), "w", encoding="utf-8") as f:
@@ -451,9 +465,9 @@ _SEP = "\x1f"
 
 
 def _parquet_files(table_dir) -> list:
-    """The data files of one table directory (None: the empty graph);
+    """The data files of one table directory (empty: the empty graph);
     Spark's ``_SUCCESS`` and ``.crc`` side files are not data."""
-    if table_dir is None:
+    if not table_dir:
         return []
     return [
         os.path.join(table_dir, f) for f in sorted(os.listdir(table_dir))
@@ -761,25 +775,12 @@ class DatasetStore(_SnapshotLog):
         parked by the previous pass are dropped on every call — the
         same cadence compact() ran at (it dropped parked bytes even on
         below-threshold calls)."""
-        import shutil
-
         lock = self._acquire_lock()
         try:
             meta = self._meta()
-            if bid is not None:
-                bid = int(bid)
-                if bid <= int(meta.get("bid_hwm", -1)):
-                    return None  # already applied — at-least-once replay
-                meta["bid_hwm"] = str(bid)
-            pending_path = os.path.join(self.path, self.GC_PENDING)
-            if os.path.exists(pending_path):
-                with open(pending_path) as f:
-                    for n in (ln.strip() for ln in f):
-                        if n:
-                            shutil.rmtree(
-                                os.path.join(self.path, n), ignore_errors=True
-                            )
-                os.unlink(pending_path)
+            if self._replayed(meta, bid):
+                return None
+            self._drain_pending()
             names = self._published()
             compacting = names and len(names) + 1 >= min_deltas
             if compacting:
@@ -789,19 +790,10 @@ class DatasetStore(_SnapshotLog):
                     merged = transform(merged)
             else:
                 merged = df
-            name = self._alloc_name()
-            target = os.path.join(self.path, name)
-            try:
-                self._write(merged, target)
-            except BaseException:
-                shutil.rmtree(target, ignore_errors=True)
-                raise
+            name = self._new_snapshot(lambda target: self._write(merged, target))
             if compacting:
                 self._write_log([name], meta)  # atomic republish + hwm
-                tmp = pending_path + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write("\n".join(names) + "\n")
-                os.replace(tmp, pending_path)
+                self._park(names)
             else:
                 self._write_log(list(names) + [name], meta)
             return name
@@ -822,19 +814,9 @@ class DatasetStore(_SnapshotLog):
         history. The transform must be union-idempotent (applying it to
         already-transformed rows is a no-op shape), which every
         mergeable aggregate (sum/count/min/max) satisfies."""
-        import shutil
-
         lock = self._acquire_lock()
         try:
-            pending_path = os.path.join(self.path, self.GC_PENDING)
-            if os.path.exists(pending_path):
-                with open(pending_path) as f:
-                    for n in (ln.strip() for ln in f):
-                        if n:
-                            shutil.rmtree(
-                                os.path.join(self.path, n), ignore_errors=True
-                            )
-                os.unlink(pending_path)
+            self._drain_pending()
             names = self._published()
             if len(names) < min_deltas:
                 return False
@@ -843,18 +825,9 @@ class DatasetStore(_SnapshotLog):
                 return False
             if transform is not None:
                 merged = transform(merged)
-            name = self._alloc_name()
-            target = os.path.join(self.path, name)
-            try:
-                self._write(merged, target)
-            except BaseException:
-                shutil.rmtree(target, ignore_errors=True)
-                raise
+            name = self._new_snapshot(lambda target: self._write(merged, target))
             self._write_log([name])  # atomic republish
-            tmp = pending_path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write("\n".join(names) + "\n")
-            os.replace(tmp, pending_path)
+            self._park(names)
             return True
         finally:
             os.unlink(lock)

@@ -142,7 +142,7 @@ class TestDoctor:
         # corrupt: orphaned property (no refs at all)
         b2 = GraphBatchBuilder()
         b2.add_node(Prop("City", "Zz"))
-        _, _, p2, _ = b2.frames(spark)
+        p2 = b2.build(spark).properties
         bad2 = PropertyGraph(
             spark, g.vertices, g.edges,
             g.properties.unionByName(p2).dropDuplicates(["prop_hash"]),

@@ -9,7 +9,7 @@ empty). Hashes are our canonical-JSON hashes, not the Rust byte-encodings
 
 import pytest
 
-from gravitydb_spark import NodeExistsError, Prop, PropertyGraph
+from gravitydb_spark import GraphBatchBuilder, NodeExistsError, Prop, PropertyGraph
 from gravitydb_spark.hashing import edge_hash, prop_hash
 from gravitydb_spark.schema import Schema
 
@@ -42,6 +42,13 @@ def test_create_node_twice_errors(spark):
         g.create_nodes([(NODE1, TEXT_PROP)])
     with pytest.raises(NodeExistsError):
         g.create_nodes([(NODE1, Prop("Text", "changed content"))])
+    # an id repeated within one batch, as two sequential create_node calls
+    with pytest.raises(NodeExistsError):
+        g.create_nodes([(NODE2, TEXT_PROP), (NODE2, Prop("Text", "other"))])
+    b = GraphBatchBuilder(RAW)
+    b.add_node(TEXT_PROP, id=NODE2)
+    with pytest.raises(NodeExistsError):
+        b.add_node(Prop("Text", "other"), id=NODE2)
 
 
 def test_self_loop_edge_adjacency(spark):

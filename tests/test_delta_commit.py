@@ -1,11 +1,10 @@
 """Delta commits (graph.GraphDelta + TransactionalStore._write_delta): a
-graph knows what it changed since its origin snapshot, a commit writes
-only that change copy-on-write (hard links for untouched parent files),
-and ``diff`` of a parent and its child reads the commit's record. The
-full rewrite (``graph.save``) and ``changeset.graph_diff`` are the
-oracles."""
+graph is its origin plus what it changed since, its tables are derived
+from the two (graph._derive), a commit writes only that change
+copy-on-write (hard links for untouched parent files), and ``diff`` of a
+parent and its child reads the commit's record. The full rewrite
+(``graph.save``) and ``changeset.graph_diff`` are the oracles."""
 
-import dataclasses
 import hashlib
 import json
 import os
@@ -13,6 +12,7 @@ import uuid
 
 import pyarrow.parquet as papq
 import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from gravitydb_spark import GraphBatchBuilder, Prop
 from gravitydb_spark.changeset import graph_diff
@@ -124,7 +124,7 @@ def test_gc_commit_retracts_dead_properties(spark, tmp_path):
     store.commit(store.load(spark).update_nodes([("v0", Prop("City", "gone-soon"))]))
     store.commit(store.load(spark).update_nodes([("v0", Prop("City", "final"))]))
     g = store.load(spark).gc()
-    assert g.delta is not None
+    assert g.delta.origin == os.path.realpath(store.current_path())
     dead = {Prop("City", "c0").hash, Prop("City", "gone-soon").hash}
     assert g.delta.retracted["properties"] == dead
     store.commit(g)
@@ -174,7 +174,7 @@ def test_commit_from_an_older_snapshot_equals_the_full_rewrite(spark, tmp_path):
     g, _ = g.create_edges([("v1", "v2", Prop("road", {"n": 9}))])
     z = store.commit(g)
     full = TransactionalStore(str(tmp_path / "full"))
-    full.init(dataclasses.replace(g, delta=None))  # graph.save's cluster write
+    full.init(g._with())  # unknown provenance: graph.save's cluster write
     assert not os.path.exists(os.path.join(full.current_path(), "_delta"))
     assert _state(store.load(spark)) == _state(full.load(spark)) == _state(g)
     # the record names the origin, so a diff against it reads the record
@@ -262,7 +262,7 @@ def test_unknown_provenance_takes_the_cluster_write(spark, tmp_path):
     a, _ = base.create_nodes([("a1", Prop("City", "A"))])
     b, _ = base.create_nodes([("b1", Prop("City", "B"))])
     merged = merge_graphs(base, a, b)
-    assert merged.delta is None
+    assert merged.delta.origin is None  # unknown provenance
     snap = store.init(merged)
     assert os.path.exists(os.path.join(store.path, snap, "vertices", "_SUCCESS"))
     assert _state(store.load(spark)) == _state(merged)
@@ -328,3 +328,129 @@ def test_load_runs_no_job_and_reads_drifted_column_order(spark, tmp_path):
     for f in os.listdir(refs):
         assert papq.read_schema(os.path.join(refs, f)).names == SCHEMAS["prop_refs"].names
     assert _state(store2.load(spark)) == _state(nxt)
+
+
+def _plan_lines(df) -> int:
+    return len(df._jdf.queryExecution().analyzed().numberedTreeString().splitlines())
+
+
+def test_table_plans_do_not_grow_with_crud_rounds(spark, tmp_path):
+    """Each table is derived from the base and the delta, so from round 2
+    on (every part of the delta in use) its plan keeps one size over 20
+    rounds of create/update/cascading delete on a ~50-vertex graph; the
+    tables equal a host model and the committed snapshot."""
+    b = GraphBatchBuilder()
+    verts = {f"v{i}": Prop("City", f"c{i}").hash for i in range(50)}
+    edges = {}
+    for vid in verts:
+        b.add_node(Prop("City", f"c{vid[1:]}"), id=vid)
+    for i in range(50):
+        s, d, p = f"v{i}", f"v{(7 * i + 3) % 50}", Prop("road", {"n": i})
+        edges[b.add_edge(s, d, p)] = (s, d, p.hash)
+    store = TransactionalStore(str(tmp_path / "db"))
+    store.init(b.build(spark))
+    g = store.load(spark)
+    sizes = None
+    for r in range(1, 21):
+        new = [(f"a{r}", Prop("Person", {"r": r})), (f"b{r}", Prop("Person", {"r": -r}))]
+        g, _ = g.create_nodes(new)
+        verts.update((vid, p.hash) for vid, p in new)
+        live = sorted(verts)
+        pairs = [(f"a{r}", live[r % len(live)]), (live[(3 * r) % len(live)], f"b{r}")]
+        g, eids = g.create_edges([(s, d, Prop("knows", {"r": r})) for s, d in pairs])
+        for (s, d), eid in zip(pairs, eids):
+            edges[eid] = (s, d, Prop("knows", {"r": r}).hash)
+        upd = live[(5 * r) % len(live)]
+        g = g.update_nodes([(upd, Prop("City", f"u{r}"))])
+        verts[upd] = Prop("City", f"u{r}").hash
+        # an origin vertex, and from round 2 one created a round before
+        gone = [f"v{r}"] + [f"b{r - 1}"] * (r > 1)
+        g = g.delete_nodes(gone)
+        for vid in gone:
+            del verts[vid]
+        edges = {e: row for e, row in edges.items() if not set(gone) & set(row[:2])}
+        now = {t: _plan_lines(getattr(g, t)) for t in TABLES}
+        if r == 2:
+            sizes = now
+        elif r > 2:
+            assert now == sizes, r
+    assert len(verts) == 51
+    assert _rows(g.vertices) == sorted(verts.items())
+    # _rows orders columns by name
+    assert _rows(g.edges) == sorted((d, e, p, s) for e, (s, d, p) in edges.items())
+    backlinks = [("node", v, p) for v, p in verts.items()]
+    backlinks += [("edge", e, p) for e, (_s, _d, p) in edges.items()]
+    refs = g.prop_refs.filter("ref_kind != 'prop'")  # nesting rows aside
+    assert _rows(refs) == sorted((p, i, k) for k, i, p in backlinks)
+    store.commit(g)
+    assert _state(store.load(spark)) == _state(g)
+
+
+_POOL = [
+    Prop("City", "c1"), Prop("City", "pool"), Prop("Person", {"name": "p"}), Prop("road", {"n": 0})
+]
+_OPS = st.one_of(
+    st.tuples(st.just("create"), st.integers(0, 3), st.booleans()),
+    st.tuples(st.just("update"), st.integers(0, 99), st.integers(0, 3)),
+    st.tuples(st.just("delete"), st.integers(0, 99), st.booleans()),
+    st.tuples(st.just("get_or_create"), st.integers(0, 3)),
+    st.tuples(st.just("create_edge"), st.integers(0, 99), st.integers(0, 99), st.integers(0, 3)),
+    st.tuples(st.just("delete_edge"), st.integers(0, 99)),
+    st.tuples(st.just("gc")),
+)
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(ops=st.lists(_OPS, min_size=3, max_size=6))
+@example(ops=[("create", 2, False), ("create_edge", 6, 0, 3), ("update", 0, 1),
+              ("delete", 0, True), ("create", 0, True), ("create_edge", 6, 1, 3),
+              ("get_or_create", 1), ("delete_edge", 0), ("gc",)])
+def test_derived_tables_commit_and_rewrite_agree(spark, tmp_path_factory, ops):
+    """The two appliers of one delta agree: random CRUD sequences on a
+    loaded graph give derived tables equal to the delta commit reloaded
+    and to graph.save's full rewrite, and delta_diff equals graph_diff."""
+    root = tmp_path_factory.mktemp("appliers")
+    store = TransactionalStore(str(root / "db"))
+    parent = store.init(_base(spark))
+    g = store.load(spark)
+    verts, deleted = [f"v{i}" for i in range(6)], []
+    edges = sorted(r["edge_id"] for r in g.edges.collect())
+    for n, op in enumerate(ops):
+        kind, args = op[0], op[1:]
+        if kind == "create":  # possibly again under a deleted id
+            vid = deleted.pop() if args[1] and deleted else f"n{n}"
+            g, _ = g.create_nodes([(vid, _POOL[args[0]])])
+            verts.append(vid)
+        elif kind == "update" and verts:
+            g = g.update_nodes([(verts[args[0] % len(verts)], _POOL[args[1]])])
+        elif kind == "delete" and verts:
+            deleted.append(verts.pop(args[0] % len(verts)))
+            g = g.delete_nodes([deleted[-1]], cascade=args[1])
+        elif kind == "get_or_create":
+            g, ids = g.get_or_create_nodes([(f"n{n}", _POOL[args[0]])])
+            verts += [i for i in ids if i not in verts]
+        elif kind == "create_edge" and verts:
+            s, d = verts[args[0] % len(verts)], verts[args[1] % len(verts)]
+            g, eids = g.create_edges([(s, d, _POOL[args[2]])])
+            edges += eids
+        elif kind == "delete_edge" and edges:
+            g = g.delete_edges([edges.pop(args[0] % len(edges))])
+        elif kind == "gc":
+            g = g.gc()
+    derived = _state(g)
+    snap = store.commit(g)
+    assert os.path.exists(os.path.join(store.path, snap, "_delta", "delta.json"))
+    assert _state(store.load(spark)) == derived
+    full = TransactionalStore(str(root / "full"))
+    full.init(g._with())
+    assert _state(full.load(spark)) == derived
+    got = store.diff(spark, parent, snap)
+    want = graph_diff(store.load_at(spark, parent), store.load_at(spark, snap))
+    for k in want:
+        if k != "depends_on":
+            assert _rows(got[k]) == _rows(want[k]), k
