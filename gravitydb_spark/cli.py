@@ -5,6 +5,13 @@ EP2 compat: ``query-db`` accepts the same serde-JSON query wire format
 (e.g. ``{"V":{"Property":{"Specific":"<hash>"}}}``) so serialized
 reference queries replay unchanged (cli_helpers.rs:271-277).
 
+A ``--db`` is a :class:`~gravitydb_spark.transaction.TransactionalStore`
+directory: ``init`` publishes the empty graph, every verb reads the
+current snapshot, and every mutating verb commits a new snapshot (one
+atomic ``CURRENT`` replace; a failed command leaves the db as it was)
+and then keeps only it, parking the one it replaced until the next
+command for readers that already resolved it.
+
 Usage:
     python -m gravitydb_spark.cli init --db /path/to/graph
     python -m gravitydb_spark.cli create-node --db DB --type T [--value V] [--id ID]
@@ -28,27 +35,25 @@ from .plans.compiler import execute
 from .ql import query_from_json
 from .schema import Prop
 from .session import get_spark
+from .transaction import TransactionalStore
 
 
 def _load(spark, db: str) -> PropertyGraph:
-    return PropertyGraph.load(spark, db)
+    if not os.path.isdir(db):  # a store would make the directory
+        raise FileNotFoundError(f"{db}: no such db (init first)")
+    return TransactionalStore(db).load(spark)
 
 
-def _save_over(spark, g: PropertyGraph, db: str) -> None:
-    """Write-to-temp-then-swap: the new tables are lazy transforms over the
-    parquet being replaced, so an in-place overwrite would read-after-delete."""
-    import os
-    import shutil
-
-    tmp = db.rstrip("/") + ".tmp"
-    g.save(tmp)
-    shutil.rmtree(db)
-    os.rename(tmp, db)
+def _commit(db: str, g: PropertyGraph) -> None:
+    """Publish ``g`` as the db's current snapshot and de-publish the rest."""
+    store = TransactionalStore(db)
+    store.commit(g)
+    store.gc_snapshots(keep=1)
 
 
 def cmd_init(args) -> int:
     spark = get_spark("gravitydb_cli")
-    PropertyGraph.empty(spark).save(args.db)
+    _commit(args.db, PropertyGraph.empty(spark))
     print(f"initialized empty graph at {args.db}")
     return 0
 
@@ -82,7 +87,7 @@ def cmd_create_node(args) -> int:
         except KeyError as e:
             print(str(e.args[0]) if e.args else str(e), file=sys.stderr)
             return 1
-        _save_over(spark, g2, args.db)
+        _commit(args.db, g2)
         print(args.id)
         return 0
     item = (args.id, prop)
@@ -110,7 +115,7 @@ def cmd_create_node(args) -> int:
                 return 1
         g2, ids = g.create_nodes([item])
     if g2 is not g:
-        _save_over(spark, g2, args.db)
+        _commit(args.db, g2)
     print(ids[0])
     return 0
 
@@ -121,7 +126,7 @@ def cmd_create_edge(args) -> int:
     g2, ids = g.create_edges(
         [(getattr(args, "from"), args.to, Prop(args.type, args.value))]
     )
-    _save_over(spark, g2, args.db)
+    _commit(args.db, g2)
     print(ids[0])
     return 0
 
@@ -129,7 +134,7 @@ def cmd_create_edge(args) -> int:
 def cmd_delete_node(args) -> int:
     spark = get_spark("gravitydb_cli")
     g = _load(spark, args.db).delete_nodes([args.id]).gc()
-    _save_over(spark, g, args.db)
+    _commit(args.db, g)
     return 0
 
 
@@ -174,7 +179,7 @@ def cmd_script(args) -> int:
         if mutated is not db:
             # the script ran db:create_node/… — persist, like every other
             # mutating verb (the reference's lua_run mutates the kv store)
-            _save_over(spark, mutated, args.db)
+            _commit(args.db, mutated)
         return 0
     ns = {
         "spark": spark,
@@ -188,7 +193,7 @@ def cmd_script(args) -> int:
     # immutable); persist the rebound graph like the Lua path
     out = ns.get("db")
     if isinstance(out, PropertyGraph) and out is not db:
-        _save_over(spark, out, args.db)
+        _commit(args.db, out)
     return 0
 
 
@@ -377,7 +382,7 @@ def cmd_repl(args) -> int:
             except (ImportError, OSError):
                 pass  # history persistence is best-effort
         if repl.graph is not db:
-            _save_over(spark, repl.graph, args.db)
+            _commit(args.db, repl.graph)
             print(f"persisted mutations to {args.db}", file=sys.stderr)
         return 0
     ns = {

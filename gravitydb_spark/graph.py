@@ -98,9 +98,11 @@ _KEYS = {
     "properties": ["prop_hash"],
     "prop_refs": ["ref_kind", "ref_id"],
 }
-# at most this many rows per table ride a delta (and one driver-side
-# collect); beyond it a graph folds its delta into its base, forgets its
-# provenance and commits by cluster write
+# the one bound on a driver-side collect: at most this many rows per
+# table ride a delta, a gc round's dead hashes, or a frame a store writes
+# with pyarrow (transaction._SnapshotLog._write_frame); beyond it a graph
+# folds its delta into its base and forgets its provenance, and a frame
+# is written by Spark
 ARROW_COMMIT_CAP = 100_000
 
 
@@ -551,18 +553,19 @@ class PropertyGraph:
         deleting a dead parent drops its nesting refs, which may orphan
         children — iterate to fixpoint (depth = nesting depth, tiny).
 
-        Each round collects its dead hashes (at most ARROW_COMMIT_CAP+1)
-        and retracts them in the delta, so the next round's tables are
-        derived again from the base and every hash retracted so far. A
-        round with more dead hashes than the cap folds the graph: its
-        tables, minus those hashes as a lazy frame, become the base of a
-        graph of unknown provenance."""
+        Each round collects its dead hashes (at most ARROW_COMMIT_CAP+1,
+        under ``_aqe_off``) and retracts them in the delta, so the next
+        round's tables are derived again from the base and every hash
+        retracted so far. A round with more dead hashes than the cap
+        folds the graph: its tables, minus those hashes as a lazy frame,
+        become the base of a graph of unknown provenance."""
         g = self
         for _ in range(max_iters):
             dead = g.properties.join(
                 g.prop_refs.select("prop_hash").distinct(), "prop_hash", "leftanti"
             ).select("prop_hash")
-            hashes = [r[0] for r in dead.limit(ARROW_COMMIT_CAP + 1).collect()]
+            with _aqe_off(self.spark):
+                hashes = [r[0] for r in dead.limit(ARROW_COMMIT_CAP + 1).collect()]
             if not hashes:
                 break
             if len(hashes) <= ARROW_COMMIT_CAP:

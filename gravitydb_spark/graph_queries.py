@@ -697,8 +697,8 @@ def g_degrees_maintained(spark, sf_dir):
         gp = os.path.join(work, "graph")
         _land_graph_batches(work, gp, g)
 
-        deg_store = DatasetStore(os.path.join(work, "deg"), write_coalesce=1, small_writes=True)
-        type_store = DatasetStore(os.path.join(work, "types"), write_coalesce=1, small_writes=True)
+        deg_store = DatasetStore(os.path.join(work, "deg"))
+        type_store = DatasetStore(os.path.join(work, "types"))
 
         def fold_deg(df):
             return df.groupBy("id").agg(
@@ -845,7 +845,7 @@ def g_degrees_retractions(spark, sf_dir):
             shutil.rmtree(tmp)
         staged_schema = batches[0].schema
 
-        store = DatasetStore(os.path.join(work, "deg"), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "deg"))
 
         def fold(df):
             return df.groupBy("id").agg(
@@ -971,8 +971,8 @@ def g_cc_maintained(spark, sf_dir):
         gp = os.path.join(work, "graph")
         _land_graph_batches(work, gp, g)
 
-        memb = DatasetStore(os.path.join(work, "memb"), write_coalesce=1, small_writes=True)
-        merges = DatasetStore(os.path.join(work, "merges"), partition_cols=("pb",), write_coalesce=1, small_writes=True)
+        memb = DatasetStore(os.path.join(work, "memb"))
+        merges = DatasetStore(os.path.join(work, "merges"), partition_cols=("pb",))
 
         def bucket(col):
             return F.pmod(F.xxhash64(col), F.lit(nb)).cast("int")
@@ -1235,12 +1235,9 @@ class CCIvm:
 
         self.spark = spark
         self.nb = nb
-        self.labels = DatasetStore(
-            os.path.join(workdir, "labels"), partition_cols=("pb", "rb"), write_coalesce=1, small_writes=True)
-        self.edgelog = DatasetStore(
-            os.path.join(workdir, "elog"), partition_cols=("tb",), write_coalesce=1, small_writes=True)
-        self.forest = DatasetStore(
-            os.path.join(workdir, "forest"), partition_cols=("fb",), write_coalesce=1, small_writes=True)
+        self.labels = DatasetStore(os.path.join(workdir, "labels"), partition_cols=("pb", "rb"))
+        self.edgelog = DatasetStore(os.path.join(workdir, "elog"), partition_cols=("tb",))
+        self.forest = DatasetStore(os.path.join(workdir, "forest"), partition_cols=("fb",))
         self.last_delete_stats: dict | None = None
 
     # ---- row shapes -----------------------------------------------
@@ -3210,8 +3207,8 @@ def g_triangles_retractions(spark, sf_dir):
             F.xxhash64(F.col("v")),
             F.lit(max(_TRI_KB, min(65536, n_cust // 500_000))),
         ).cast("int")
-        adj = DatasetStore(os.path.join(work, "adj"), partition_cols=("vb",), write_coalesce=1, small_writes=True)
-        view = DatasetStore(os.path.join(work, "view"), write_coalesce=1, small_writes=True)
+        adj = DatasetStore(os.path.join(work, "adj"), partition_cols=("vb",))
+        view = DatasetStore(os.path.join(work, "view"))
 
         def fold_adj(df):
             return (
@@ -6752,10 +6749,9 @@ def _lpa_maintain_run(spark, work: str, gp: str, edge_ops: bool = False):
     nb = _LPAM_BUCKETS
     R = _LPA_ROUNDS
     try:
-        memb = DatasetStore(os.path.join(work, "memb"), write_coalesce=1, small_writes=True)
-        edges = DatasetStore(
-            os.path.join(work, "edges"), partition_cols=("pb",), write_coalesce=1, small_writes=True)
-        labels = DatasetStore(os.path.join(work, "labels"), write_coalesce=1, small_writes=True)
+        memb = DatasetStore(os.path.join(work, "memb"))
+        edges = DatasetStore(os.path.join(work, "edges"), partition_cols=("pb",))
+        labels = DatasetStore(os.path.join(work, "labels"))
 
         def bucket(col):
             return F.pmod(F.xxhash64(col), F.lit(nb)).cast("int")

@@ -4305,18 +4305,8 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        members = DatasetStore(
-            os.path.join(work, "members"),
-            partition_cols=("cell",),
-            write_coalesce=1,
-            small_writes=True,
-        )
-        lists = DatasetStore(
-            os.path.join(work, "lists"),
-            partition_cols=("cell",),
-            write_coalesce=1,
-            small_writes=True,
-        )
+        members = DatasetStore(os.path.join(work, "members"), partition_cols=("cell",))
+        lists = DatasetStore(os.path.join(work, "lists"), partition_cols=("cell",))
 
         def handle(batch_df, batch_id) -> None:
             bid = int(batch_id)
@@ -4505,7 +4495,7 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        store = DatasetStore(os.path.join(work, "index"), partition_cols=("cell",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "index"), partition_cols=("cell",))
 
         def handle(batch_df, _bid) -> None:
             v = batch_df.select(
@@ -5088,7 +5078,7 @@ def stream_ivfpq_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
         )
-        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",))
 
         def handle(batch_df, _bid) -> None:
             # assignment + residual encoding fuse into the one Arrow
@@ -5280,8 +5270,7 @@ def stream_ivfpq_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
         )
-        store = DatasetStore(
-            os.path.join(work, "codes"), partition_cols=("cell",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",))
 
         def fold(d: DataFrame) -> DataFrame:
             # forget = physically drop the deleted vectors' code bytes;
@@ -6455,7 +6444,7 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("x"),
             )
 
-        store = DatasetStore(os.path.join(work, "cents"), partition_cols=("cl",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "cents"), partition_cols=("cl",))
         # seed partials: the first-K vectors found their own clusters
         store.append(
             scaled_explode(emb.filter(F.col("vec_id") < KMEANS_K)).select(
@@ -7815,7 +7804,7 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             _docs_count(spark, sf_dir) * LSH_BANDS, _UPKEEP_BKB
         )
         bkb = F.pmod(F.xxhash64("bk"), F.lit(nbkb)).alias("bkb")
-        store = DatasetStore(os.path.join(work, "index"), partition_cols=("bkb",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "index"), partition_cols=("bkb",))
         seed_keys = (
             _seed_band_keys(spark, sf_dir).select("band", "bk").distinct()
         )
@@ -7835,7 +7824,7 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_m = max(
             _BLOOM_MIN_M, (_BLOOM_K * n_bound * 14427 + 9999) // 10000
         )
-        bloom = DatasetStore(os.path.join(work, "bloom"), write_coalesce=1, small_writes=True)
+        bloom = DatasetStore(os.path.join(work, "bloom"))
 
         def bloom_words(keys: DataFrame) -> DataFrame:
             """(w, bits) word-partials of the keys' Bloom positions."""
@@ -8138,8 +8127,7 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             _docs_count(spark, sf_dir) * LSH_BANDS, _UPKEEP_BKB
         )
         bkb = F.pmod(F.xxhash64("bk"), F.lit(nbkb)).alias("bkb")
-        store = DatasetStore(
-            os.path.join(work, "index"), partition_cols=("bkb",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "index"), partition_cols=("bkb",))
         # seed: +1 per (live-even doc, distinct band key) — the memoized
         # codegen seed frame (r9 #3), not a per-invocation rebuild
         store.append(
@@ -8338,10 +8326,8 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
             F.xxhash64("doc_id"),
             F.lit(_state_fanout(_docs_count(spark, sf_dir), _KEYMAP_KB)),
         ).alias("kb")
-        store = DatasetStore(
-            os.path.join(work, "index"), partition_cols=("bkb",), write_coalesce=1, small_writes=True)
-        keymap = DatasetStore(
-            os.path.join(work, "keymap"), partition_cols=("kb",), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "index"), partition_cols=("bkb",))
+        keymap = DatasetStore(os.path.join(work, "keymap"), partition_cols=("kb",))
         # id-keyed Bloom pre-filter over the KEYMAP's doc_id population
         # (r11 VERDICT #4 — the packed-word store of
         # stream_dedup_index_upkeep reused for the family's top wall): a
@@ -8353,7 +8339,7 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
             _BLOOM_MIN_M,
             (_BLOOM_K * _docs_count(spark, sf_dir) * 14427 + 9999) // 10000,
         )
-        id_bloom = DatasetStore(os.path.join(work, "idbloom"), write_coalesce=1, small_writes=True)
+        id_bloom = DatasetStore(os.path.join(work, "idbloom"))
 
         def id_bloom_words(ids: DataFrame) -> DataFrame:
             """(w, bits) word-partials of the ids' Bloom positions."""
@@ -11069,7 +11055,7 @@ def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (base + 60 * b, base + 60 * b))
             shutil.rmtree(tmp)
 
-        store = DatasetStore(os.path.join(work, "view"), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "view"))
 
         def merge(df: DataFrame) -> DataFrame:
             return df.groupBy("event_type", "h").agg(
@@ -11182,7 +11168,7 @@ def stream_rollup_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (base + 60 * b, base + 60 * b))
             shutil.rmtree(tmp)
 
-        store = DatasetStore(os.path.join(work, "deltas"), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "deltas"))
         versions = VersionedViewStore(os.path.join(work, "versions"))
 
         def merge(df: DataFrame) -> DataFrame:
@@ -11307,7 +11293,7 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(tmp)
         staged_schema = batches[0].schema
 
-        store = DatasetStore(os.path.join(work, "view"), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "view"))
 
         def merge(df: DataFrame) -> DataFrame:
             return df.groupBy("event_type", "h").agg(
@@ -11455,9 +11441,9 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.xxhash64(F.col("okey")),
             F.lit(_state_fanout(n_orders, _SJM_KB)),
         ).cast("int")
-        o_store = DatasetStore(os.path.join(work, "o"), partition_cols=("kb",), write_coalesce=1, small_writes=True)
-        l_store = DatasetStore(os.path.join(work, "l"), partition_cols=("kb",), write_coalesce=1, small_writes=True)
-        view = DatasetStore(os.path.join(work, "view"), write_coalesce=1, small_writes=True)
+        o_store = DatasetStore(os.path.join(work, "o"), partition_cols=("kb",))
+        l_store = DatasetStore(os.path.join(work, "l"), partition_cols=("kb",))
+        view = DatasetStore(os.path.join(work, "view"))
 
         def fold_view(df):
             return df.groupBy("o_custkey").agg(
@@ -11652,9 +11638,9 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.xxhash64(F.col("okey")),
             F.lit(_state_fanout(n_orders, _SJM_KB)),
         ).cast("int")
-        o_store = DatasetStore(os.path.join(work, "o"), partition_cols=("kb",), write_coalesce=1, small_writes=True)
-        l_store = DatasetStore(os.path.join(work, "l"), partition_cols=("kb",), write_coalesce=1, small_writes=True)
-        view = DatasetStore(os.path.join(work, "view"), write_coalesce=1, small_writes=True)
+        o_store = DatasetStore(os.path.join(work, "o"), partition_cols=("kb",))
+        l_store = DatasetStore(os.path.join(work, "l"), partition_cols=("kb",))
+        view = DatasetStore(os.path.join(work, "view"))
 
         def fold_view(df):
             return df.groupBy("o_custkey").agg(
@@ -11927,9 +11913,8 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (base + 60 * b, base + 60 * b))
             shutil.rmtree(tmp)
 
-        postings = DatasetStore(
-            os.path.join(work, "postings"), partition_cols=("tb",), write_coalesce=1, small_writes=True)
-        cstats = DatasetStore(os.path.join(work, "cstats"), write_coalesce=1, small_writes=True)
+        postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
+        cstats = DatasetStore(os.path.join(work, "cstats"))
 
         def tbucket(col):
             return F.pmod(
@@ -12452,9 +12437,8 @@ def stream_bm25_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (base + 60 * b, base + 60 * b))
             shutil.rmtree(tmp)
 
-        postings = DatasetStore(
-            os.path.join(work, "postings"), partition_cols=("tb",), write_coalesce=1, small_writes=True)
-        cstats = DatasetStore(os.path.join(work, "cstats"), write_coalesce=1, small_writes=True)
+        postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
+        cstats = DatasetStore(os.path.join(work, "cstats"))
 
         def tbucket(col):
             return F.pmod(
@@ -13170,7 +13154,7 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (base + 60 * b, base + 60 * b))
             shutil.rmtree(tmp)
 
-        store = DatasetStore(os.path.join(work, "regs"), write_coalesce=1, small_writes=True)
+        store = DatasetStore(os.path.join(work, "regs"))
 
         def fold(df: DataFrame) -> DataFrame:
             return df.groupBy("day", "j").agg(F.max("m").alias("m"))

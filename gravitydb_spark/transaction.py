@@ -44,7 +44,8 @@ nothing ever opens one for writing, which is what makes sharing them
 safe. A commit reads no parent table of more than ``ARROW_COMMIT_CAP``
 rows onto the driver: a graph of unknown provenance (ingest, merge,
 apply_change, a folded delta), a touched parent table above the cap, or
-an origin in another store falls back to ``graph.save``'s cluster write.
+an origin in another store is written table by table with
+:meth:`_SnapshotLog._write_frame`, the one writer every store shares.
 
 At cluster scale ``CURRENT`` lives on the object store; the atomic-
 replace primitive becomes a conditional PUT — same protocol shape (an
@@ -252,6 +253,25 @@ class _SnapshotLog:
             f.write("\n".join(names) + "\n")
         os.replace(pending + ".tmp", pending)
 
+    def _write_frame(self, df, target: str, partition_cols=()) -> None:
+        """Write ``df`` as the new parquet directory ``target``: the one
+        way a DataFrame becomes (part of) a published snapshot. At most
+        ``graph.ARROW_COMMIT_CAP + 1`` rows are collected, under
+        ``_aqe_off``; never remove that bound. A frame within the cap is
+        written with pyarrow, one file per (partition) directory. A larger
+        one is written by Spark, shuffled on ``partition_cols`` so AQE
+        sizes the files; an unpartitioned frame keeps its upstream
+        partitioning."""
+        cap = _graph.ARROW_COMMIT_CAP
+        with _aqe_off(df.sparkSession):
+            tbl = df.limit(cap + 1).toArrow()
+        if tbl.num_rows <= cap:
+            _write_arrow(tbl, target, partition_cols)
+            return
+        if partition_cols:
+            df = df.repartition(*partition_cols)
+        df.write.mode("error").partitionBy(*partition_cols).parquet(target)
+
     def _resolve(self, version) -> str:
         """Resolve a published name or index (negative ok, -1 = newest)
         to the snapshot name; FileNotFoundError otherwise."""
@@ -378,11 +398,15 @@ class TransactionalStore(_SnapshotLog):
 
         A graph that knows its delta from a snapshot of this store (or
         from the empty graph) is written copy-on-write by
-        :meth:`_write_delta`; any other graph by ``graph.save``."""
+        :meth:`_write_delta`; any other graph is written one table at a
+        time by :meth:`_write_frame`."""
 
         def write(target):
             if not self._write_delta(graph, target):
-                graph.save(target, mode="error")  # fresh dir — never overwrite
+                for t in _TABLES:
+                    self._write_frame(
+                        getattr(graph, t).select(*SCHEMAS[t].names), os.path.join(target, t)
+                    )
             # verify the COMMITTED bytes, not the in-memory graph
             committed = PropertyGraph.load(graph.spark, target, graph.schema)
             check_constraints(committed, constraints)
@@ -475,6 +499,25 @@ def _parquet_files(table_dir) -> list:
     ]
 
 
+def _write_arrow(tbl, target: str, partition_cols=()) -> None:
+    """Write an Arrow table as the new parquet directory ``target`` in
+    the Spark writer's layout: hive ``col=value`` partition directories
+    of plain part files. An empty partitioned table writes no data file
+    (``DatasetStore._read`` skips such a directory); an empty
+    unpartitioned one writes a schema-bearing empty file, as Spark does."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as papq
+
+    os.makedirs(target)
+    if not partition_cols:
+        papq.write_table(tbl, os.path.join(target, "part-00000.parquet"))
+    elif tbl.num_rows:
+        psch = tbl.schema.empty_table().select(list(partition_cols)).schema
+        pads.write_dataset(
+            tbl, target, format="parquet", partitioning=pads.partitioning(psch, flavor="hive")
+        )
+
+
 def _rows(tbl) -> list:
     return [list(r) for r in zip(*(c.to_pylist() for c in tbl.columns))]
 
@@ -531,9 +574,7 @@ class VersionedViewStore(_SnapshotLog):
 
     def publish(self, df) -> str:
         """Publish one full-state version. Returns its snapshot name."""
-        return self._publish_dir(
-            lambda target: df.write.mode("error").parquet(target)
-        )
+        return self.publish_once(df, None)
 
     def publish_once(self, df, bid) -> Optional[str]:
         """Replay-idempotent :meth:`publish` for at-least-once
@@ -542,9 +583,7 @@ class VersionedViewStore(_SnapshotLog):
         replayed batch can neither publish a DUPLICATE version (which
         would shift every ``load_version`` index after it) nor skip one.
         Returns None when the replay is recognized and skipped."""
-        return self._publish_dir(
-            lambda target: df.write.mode("error").parquet(target), bid=bid
-        )
+        return self._publish_dir(lambda target: self._write_frame(df, target), bid=bid)
 
     def versions(self) -> list:
         return self.snapshots()
@@ -587,106 +626,20 @@ class DatasetStore(_SnapshotLog):
     store. This is how a corpus-sized probe index stays readable per
     micro-batch at 100 TB — the streaming dedup loop partitions its
     band-key index by a hash-bucket column and each batch's probe scans
-    only the buckets its keys hash into (r5 VERDICT directive #1)."""
+    only the buckets its keys hash into (r5 VERDICT directive #1).
 
-    # small-delta Arrow write cap: at most this many rows are collected
-    # driver-side (bounded via limit(cap+1) BEFORE the collect); bigger
-    # frames silently take the cluster write path
-    ARROW_WRITE_CAP = 100_000
+    Every delta and fold is written by :meth:`_SnapshotLog._write_frame`:
+    a micro-batch delta (at most ``graph.ARROW_COMMIT_CAP`` rows) with
+    pyarrow and no write job, a larger one by Spark. The store has no
+    write options."""
 
-    def __init__(
-        self,
-        path: str,
-        partition_cols: tuple = (),
-        write_coalesce: int | None = None,
-        small_writes: bool = False,
-    ):
+    def __init__(self, path: str, partition_cols: tuple = ()):
         super().__init__(path)
         self.partition_cols = tuple(partition_cols)
-        # r12 VERDICT #2 (IVM fixed-cost trim): every append/compact is
-        # a driver-synchronous parquet write JOB whose task count is the
-        # upstream partitioning (8-32 at test configs) even when the
-        # delta is KB-sized — measured ~1s per append across the demo
-        # stores, the single largest store-protocol term. Callers whose
-        # deltas are micro-batch-sized pass write_coalesce=1 (one write
-        # task covers all partition dirs); at 100 TB a delta is GB-sized
-        # and the caller sizes this to delta volume (or leaves None to
-        # keep the upstream parallelism). Implemented as repartition,
-        # NOT coalesce: coalesce(1) collapses the parallelism of the
-        # whole upstream stage through its narrow dependency (a
-        # corpus-sized seed computation would go single-threaded), while
-        # repartition inserts a delta-sized shuffle barrier and leaves
-        # the computation parallel.
-        self.write_coalesce = write_coalesce
-        # r12 VERDICT #2, second trim: even a 1-task partitioned write
-        # job costs ~0.6s for a KB-sized delta (job launch + dynamic-
-        # partition commit across every bucket dir); a driver-side
-        # Arrow write of the same delta costs ~0.1s (toArrow collect +
-        # pyarrow hive-partitioned write — byte-compatible with Spark's
-        # partition discovery, verified by readback tests). The collect
-        # is BOUNDED: at most ARROW_WRITE_CAP+1 rows are fetched (the
-        # limit rides inside the collect), and anything larger falls
-        # back to the cluster write path — so a store flagged
-        # small_writes degrades gracefully when a corpus-sized seed
-        # append comes through, and production stores (GB deltas at
-        # 100 TB) simply leave the flag off.
-        self.small_writes = small_writes
-
-    def _write(self, df, target: str) -> None:
-        if self.small_writes and self._write_arrow_small(df, target):
-            return
-        if self.write_coalesce:
-            df = df.repartition(self.write_coalesce)
-        w = df.write.mode("error")
-        if self.partition_cols:
-            w = w.partitionBy(*self.partition_cols)
-        w.parquet(target)
-
-    def _write_arrow_small(self, df, target: str) -> bool:
-        """Driver-side Arrow write for micro-batch deltas. Returns False
-        (caller falls back to the cluster write) when the frame exceeds
-        ARROW_WRITE_CAP rows. Layout matches the Spark writer: hive
-        ``col=value`` partition dirs, plain part files, an empty
-        PARTITIONED delta writes no data files at all (the _read skip
-        contract), an empty UNpartitioned delta writes a schema-bearing
-        empty parquet (what df.write does)."""
-        cap = self.ARROW_WRITE_CAP
-        with _aqe_off(df.sparkSession):
-            tbl = df.limit(cap + 1).toArrow()
-        if tbl.num_rows > cap:
-            return False
-        self._write_arrow_table(tbl, target)
-        return True
-
-    def _write_arrow_table(self, tbl, target: str) -> None:
-        """The driver-side write step of :meth:`_write_arrow_small`,
-        split out so :func:`append_fused` can reuse it on a table that
-        was collected as part of ONE shared Spark action."""
-        import pyarrow.parquet as papq
-
-        os.makedirs(target, exist_ok=True)
-        if not self.partition_cols:
-            papq.write_table(
-                tbl, os.path.join(target, "part-00000.parquet")
-            )
-            return
-        if tbl.num_rows == 0:
-            return  # no data files — matches Spark's empty write
-        import pyarrow.dataset as pads
-
-        psch = tbl.schema.empty_table().select(
-            list(self.partition_cols)
-        ).schema
-        pads.write_dataset(
-            tbl,
-            target,
-            format="parquet",
-            partitioning=pads.partitioning(psch, flavor="hive"),
-        )
 
     def append(self, df) -> str:
         """Publish one delta. Returns its snapshot name."""
-        return self._publish_dir(lambda target: self._write(df, target))
+        return self.append_once(df, None)
 
     def append_once(self, df, bid) -> Optional[str]:
         """Replay-idempotent :meth:`append` for ADDITIVE deltas under
@@ -700,7 +653,9 @@ class DatasetStore(_SnapshotLog):
         that publishes the delta — and, because the mark lives in the
         log, it survives compaction folding the delta away. Returns
         None when the replay is recognized and skipped."""
-        return self._publish_dir(lambda target: self._write(df, target), bid=bid)
+        return self._publish_dir(
+            lambda target: self._write_frame(df, target, self.partition_cols), bid=bid
+        )
 
     def _publish_arrow(self, tbl, bid: Optional[int] = None) -> Optional[str]:
         """Publish an ALREADY-COLLECTED Arrow table as one delta — the
@@ -708,7 +663,7 @@ class DatasetStore(_SnapshotLog):
         sharing :meth:`_publish_dir`'s lock/bid/log contract (no Spark
         work happens under the lock)."""
         return self._publish_dir(
-            lambda target: self._write_arrow_table(tbl, target), bid=bid
+            lambda target: _write_arrow(tbl, target, self.partition_cols), bid=bid
         )
 
     def _read(self, spark, names):
@@ -790,7 +745,9 @@ class DatasetStore(_SnapshotLog):
                     merged = transform(merged)
             else:
                 merged = df
-            name = self._new_snapshot(lambda target: self._write(merged, target))
+            name = self._new_snapshot(
+                lambda target: self._write_frame(merged, target, self.partition_cols)
+            )
             if compacting:
                 self._write_log([name], meta)  # atomic republish + hwm
                 self._park(names)
@@ -825,7 +782,9 @@ class DatasetStore(_SnapshotLog):
                 return False
             if transform is not None:
                 merged = transform(merged)
-            name = self._new_snapshot(lambda target: self._write(merged, target))
+            name = self._new_snapshot(
+                lambda target: self._write_frame(merged, target, self.partition_cols)
+            )
             self._write_log([name])  # atomic republish
             self._park(names)
             return True
@@ -852,10 +811,11 @@ def append_fused(parts) -> list:
     the ordered sequential appends could have left, so every existing
     replay/superset argument carries over unchanged.
 
-    Size degradation: a part whose frame exceeds ARROW_WRITE_CAP in the
-    shared collect falls back to its store's normal append path (the
-    cluster write) AT ITS POSITION, preserving order — so a corpus-
-    sized seed append degrades exactly as the unfused code did.
+    Size degradation: a part whose frame exceeds ``graph.
+    ARROW_COMMIT_CAP`` in the shared collect takes its store's normal
+    append path (the writer's cluster branch) AT ITS POSITION,
+    preserving order — so a corpus-sized seed append degrades exactly
+    as the unfused code did.
 
     Returns the per-part snapshot names (None where a ``bid`` replay
     was recognized and skipped)."""
@@ -864,7 +824,7 @@ def append_fused(parts) -> list:
     norm = [
         (p[0], p[1], p[2] if len(p) > 2 else None) for p in parts
     ]
-    cap = DatasetStore.ARROW_WRITE_CAP
+    cap = _graph.ARROW_COMMIT_CAP
     # tagged, typed-NULL-padded union: part i owns columns "c{i}_<name>"
     padded = []
     for i, (_store, df, _bid) in enumerate(norm):
@@ -895,13 +855,10 @@ def append_fused(parts) -> list:
         part_tbl = part_tbl.rename_columns(
             [f.name for f in df.schema.fields]
         )
-        if part_tbl.num_rows > cap or not store.small_writes:
-            # over the driver-collect budget (or a cluster-path store):
-            # this part takes the normal append path at its position
-            out.append(
-                store.append_once(df, bid) if bid is not None
-                else store.append(df)
-            )
+        if part_tbl.num_rows > cap:
+            # over the driver-collect budget: this part takes the normal
+            # append path at its position
+            out.append(store.append_once(df, bid))
         else:
             out.append(store._publish_arrow(part_tbl, bid=bid))
     return out

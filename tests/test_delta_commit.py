@@ -174,7 +174,7 @@ def test_commit_from_an_older_snapshot_equals_the_full_rewrite(spark, tmp_path):
     g, _ = g.create_edges([("v1", "v2", Prop("road", {"n": 9}))])
     z = store.commit(g)
     full = TransactionalStore(str(tmp_path / "full"))
-    full.init(g._with())  # unknown provenance: graph.save's cluster write
+    full.init(g._with())  # unknown provenance: the frame writer
     assert not os.path.exists(os.path.join(full.current_path(), "_delta"))
     assert _state(store.load(spark)) == _state(full.load(spark)) == _state(g)
     # the record names the origin, so a diff against it reads the record
@@ -205,9 +205,11 @@ def test_deleted_parent_directories_leave_snapshots_whole(spark, tmp_path):
 
 def test_a_touched_table_above_the_cap_takes_the_cluster_write(spark, tmp_path, monkeypatch):
     """A commit reads no parent table above the cap onto the driver: a
-    small delta that touches one takes graph.save (no record, so diff
-    falls back to graph_diff). At the cap it is still a delta commit,
-    and the tables it leaves alone are linked, Spark-written ones too."""
+    small delta that touches one writes every table through the store's
+    frame writer (no record, so diff falls back to graph_diff), which
+    leaves Spark's files only in tables above the cap. At the cap it is
+    still a delta commit, and the tables it leaves alone are linked,
+    Spark-written ones too."""
     from gravitydb_spark import graph as graph_mod
 
     store = TransactionalStore(str(tmp_path / "db"))
@@ -219,6 +221,9 @@ def test_a_touched_table_above_the_cap_takes_the_cluster_write(spark, tmp_path, 
             papq.read_metadata(os.path.join(d, f)).num_rows
             for f in os.listdir(d) if f.endswith(".parquet")
         )
+
+    def spark_wrote(snap, t):
+        return os.path.exists(os.path.join(store.path, snap, t, "_SUCCESS"))
 
     def add_city(name):
         return store.load(spark).create_nodes([(name, Prop("City", name))])[0]
@@ -235,27 +240,37 @@ def test_a_touched_table_above_the_cap_takes_the_cluster_write(spark, tmp_path, 
     g = add_city("n2")
     s2 = store.commit(g)
     assert not os.path.exists(os.path.join(store.path, s2, "_delta"))
-    assert os.path.exists(os.path.join(store.path, s2, "vertices", "_SUCCESS"))  # Spark wrote it
+    assert rows(s2, "vertices") <= cap < rows(s2, "prop_refs")
+    for t in TABLES:
+        assert spark_wrote(s2, t) == (rows(s2, t) > cap), t
     assert _state(store.load(spark)) == _state(g)
     d = store.diff(spark, s1, s2)
     assert [r["id"] for r in d["created_nodes"].collect()] == ["n2"]
+    # a cap below the edges row count: Spark writes every table
+    monkeypatch.setattr(graph_mod, "ARROW_COMMIT_CAP", rows(s2, "edges") - 1)
+    s3 = store.commit(add_city("n3"))
+    assert all(spark_wrote(s3, t) for t in TABLES)
     # below the cap again, a delta commit links Spark's part files and
     # leaves its side files behind
     monkeypatch.setattr(graph_mod, "ARROW_COMMIT_CAP", 100_000)
-    g = add_city("n3")
-    s3 = store.commit(g)
-    edges = os.path.join(store.path, s3, "edges")
+    g = add_city("n4")
+    s4 = store.commit(g)
+    edges = os.path.join(store.path, s4, "edges")
     assert os.listdir(edges) and all(
         f.endswith(".parquet") and os.stat(os.path.join(edges, f)).st_nlink == 2
         for f in os.listdir(edges)
     )
     assert _state(store.load(spark)) == _state(g)
-    d = store.diff(spark, s2, s3)
-    assert [r["id"] for r in d["created_nodes"].collect()] == ["n3"]
+    d = store.diff(spark, s3, s4)
+    assert [r["id"] for r in d["created_nodes"].collect()] == ["n4"]
 
 
-def test_unknown_provenance_takes_the_cluster_write(spark, tmp_path):
+def test_unknown_provenance_takes_the_frame_writer(spark, tmp_path):
     from gravitydb_spark.changeset import merge_graphs
+
+    def one_file_per_table(snap_dir):
+        for t in TABLES:
+            assert os.listdir(os.path.join(snap_dir, t)) == ["part-00000.parquet"], t
 
     store = TransactionalStore(str(tmp_path / "db"))
     base = _base(spark)
@@ -264,12 +279,14 @@ def test_unknown_provenance_takes_the_cluster_write(spark, tmp_path):
     merged = merge_graphs(base, a, b)
     assert merged.delta.origin is None  # unknown provenance
     snap = store.init(merged)
-    assert os.path.exists(os.path.join(store.path, snap, "vertices", "_SUCCESS"))
+    assert not os.path.exists(os.path.join(store.path, snap, "_delta"))
+    one_file_per_table(os.path.join(store.path, snap))  # within the cap: pyarrow
     assert _state(store.load(spark)) == _state(merged)
-    # a graph loaded from another store commits by cluster write too
+    # a graph loaded from another store commits through the writer too
     other = TransactionalStore(str(tmp_path / "other"))
     snap2 = other.init(store.load(spark).delete_nodes(["a1"]))
     assert not os.path.exists(os.path.join(other.path, snap2, "_delta"))
+    one_file_per_table(os.path.join(other.path, snap2))
     assert sorted(r["id"] for r in other.load(spark).vertices.collect()) == sorted(
         ["b1"] + [f"v{i}" for i in range(6)]
     )

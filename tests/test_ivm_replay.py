@@ -272,8 +272,8 @@ def test_append_compact_once_equals_append_then_compact(spark, tmp_path):
     view, log shape and hwm as append_once + compact did."""
     from gravitydb_spark.transaction import DatasetStore
 
-    a = DatasetStore(str(tmp_path / "old"), write_coalesce=1, small_writes=True)
-    b = DatasetStore(str(tmp_path / "new"), write_coalesce=1, small_writes=True)
+    a = DatasetStore(str(tmp_path / "old"))
+    b = DatasetStore(str(tmp_path / "new"))
     batches = [
         [("a", 1), ("b", 2)],
         [("a", 10), ("c", 3)],
@@ -296,7 +296,7 @@ def test_append_compact_once_equals_append_then_compact(spark, tmp_path):
 def test_append_compact_once_below_threshold_is_plain_append(spark, tmp_path):
     from gravitydb_spark.transaction import DatasetStore
 
-    s = DatasetStore(str(tmp_path / "s"), write_coalesce=1, small_writes=True)
+    s = DatasetStore(str(tmp_path / "s"))
     d0 = spark.createDataFrame([("a", 1)], "k string, n long")
     s.append_compact_once(spark, d0, 0, min_deltas=4, transform=_fold)
     s.append_compact_once(
@@ -316,10 +316,8 @@ def test_append_fused_multi_store_one_action(spark, tmp_path):
     appends (readback, partition pruning, bid gating, publish order)."""
     from gravitydb_spark.transaction import DatasetStore, append_fused
 
-    bloom = DatasetStore(str(tmp_path / "bloom"), write_coalesce=1, small_writes=True)
-    idx = DatasetStore(
-        str(tmp_path / "idx"), partition_cols=("pb",), write_coalesce=1, small_writes=True
-    )
+    bloom = DatasetStore(str(tmp_path / "bloom"))
+    idx = DatasetStore(str(tmp_path / "idx"), partition_cols=("pb",))
     dbloom = spark.createDataFrame([(0, 5), (1, 9)], "w long, bits long")
     didx = spark.createDataFrame(
         [("k1", 0, 0), ("k2", 1, 1)], "bk string, bid long, pb int"
@@ -345,10 +343,8 @@ def test_append_fused_empty_and_types_roundtrip(spark, tmp_path):
 
     from gravitydb_spark.transaction import DatasetStore, append_fused
 
-    s1 = DatasetStore(str(tmp_path / "s1"), write_coalesce=1, small_writes=True)
-    s2 = DatasetStore(
-        str(tmp_path / "s2"), partition_cols=("cell",), write_coalesce=1, small_writes=True
-    )
+    s1 = DatasetStore(str(tmp_path / "s1"))
+    s2 = DatasetStore(str(tmp_path / "s2"), partition_cols=("cell",))
     d1 = spark.createDataFrame(
         [("v", [1.5, 2.5], 7)], "id string, vec array<double>, n long"
     )

@@ -16,6 +16,7 @@ from gravitydb_spark.lua_shim import (
     transliterate,
 )
 
+from gravitydb_spark.transaction import TransactionalStore
 from tests.test_cocktails_e2e import GIN_COCKTAILS
 
 
@@ -138,7 +139,7 @@ local r = db:query(vq_all():outgoing():outgoing())
 class TestCliLuaScript:
     def test_script_verb_runs_lua_cocktail_query(self, spark, cocktail_graph, tmp_path):
         db_path = str(tmp_path / "cocktails_db")
-        cocktail_graph.save(db_path)
+        TransactionalStore(db_path).init(cocktail_graph)
         lua_file = tmp_path / "gin.lua"
         # the CLI environment has no table_json helper: print the sorted
         # list via the db helper's repr (stable: list of strings)
@@ -173,7 +174,7 @@ class TestCliLuaScript:
         from gravitydb_spark.graph import PropertyGraph
 
         db_path = str(tmp_path / "mut_db")
-        PropertyGraph.empty(spark).save(db_path)
+        TransactionalStore(db_path).init(PropertyGraph.empty(spark))
         lua_file = tmp_path / "mutate.lua"
         lua_file.write_text(
             "local id = db:create_node(Prop('City', 'Berlin'))\n"
@@ -197,7 +198,7 @@ class TestCliLuaScript:
         )
         assert r.returncode == 0, r.stderr[-2000:]
         # the mutation must be durable: re-load the store fresh
-        g = PropertyGraph.load(spark, db_path)
+        g = TransactionalStore(db_path).load(spark)
         assert g.vertices.count() == 1
 
 
@@ -270,10 +271,8 @@ class TestLuaRepl:
         """One piped CLI session: the 21-cocktail golden query, a rejected
         control-flow line (error echoed, loop survives), and a mutation
         that must persist to the on-disk store after exit."""
-        from gravitydb_spark.graph import PropertyGraph
-
         db_path = str(tmp_path / "repl_db")
-        cocktail_graph.save(db_path)
+        TransactionalStore(db_path).init(cocktail_graph)
         lines = self._gin_lines()[:-2] + [
             "print(db:query(q)['vertices'])",
             "print(db:extract_properties())",
@@ -302,7 +301,7 @@ class TestLuaRepl:
         assert eval(out_lists[-1]) == _expected_tagged()  # noqa: S307 — list-of-str repr
         assert "outside the shim subset" in r.stderr
         assert "persisted mutations" in r.stderr
-        g = PropertyGraph.load(spark, db_path)
+        g = TransactionalStore(db_path).load(spark)
         n_before = cocktail_graph.vertices.count()
         assert g.vertices.count() == n_before + 1
         berlin = Prop("City", "Berlin").hash
