@@ -26,6 +26,7 @@ from .ql import ExprFilter, pq_from_id, pq_from_to, vq_all, vq_from_ids
 from .registry import load, register
 from .schema import Prop
 from .sources.ingest import ingest_graph
+from .streaming.microbatch import drive, stage_batches
 
 # ---------------------------------------------------------------------------
 # Derived broadcast discipline (r10 VERDICT weak item)
@@ -612,30 +613,22 @@ _CC_ORACLE = """
     """
 
 
-def _land_graph_batches(work: str, gp: str, g, n: int = 3) -> None:
+def _land_graph_batches(gp: str, g, n: int = 3) -> None:
     """Land the graph as ``n`` vertex + edge mutation batches under the
     graph's append-structured storage dirs (what the changefeed tails),
     file mtimes pinning the arrival order — the shared fixture for the
     incrementally-maintained analytics queries."""
-    import shutil
-
-    base = 1_700_000_000
     for sub, df, keycol in (
         ("vertices", g.vertices, "id"),
         ("edges", g.edges, "edge_id"),
     ):
-        ddir = os.path.join(gp, sub)
-        os.makedirs(ddir)
-        for b in range(n):
-            tmp = os.path.join(work, f"tmp_{sub}{b}")
-            df.filter(
-                F.pmod(F.xxhash64(F.col(keycol)), F.lit(n)) == b
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(ddir, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        stage_batches(
+            [
+                df.filter(F.pmod(F.xxhash64(F.col(keycol)), F.lit(n)) == b)
+                for b in range(n)
+            ],
+            os.path.join(gp, sub),
+        )
 
 
 @register(
@@ -662,9 +655,9 @@ def _land_graph_batches(work: str, gp: str, g, n: int = 3) -> None:
 )
 def g_degrees_maintained(spark, sf_dir):
     """INCREMENTALLY MAINTAINED graph analytics (r5 VERDICT directive
-    #5): the changefeed (streaming/changefeed.py — readStream over the
-    graph's append-structured storage dirs, the reference's planned VCS
-    sync surface) composed with :class:`DatasetStore` exactly the way
+    #5): the changefeed (a readStream over the graph's append-structured
+    storage dirs, driven by streaming/microbatch.py — the reference's
+    planned VCS sync surface) composed with :class:`DatasetStore` exactly the way
     stream_rollup_maintained maintains its relational rollup. The graph
     lands in three mutation batches; each foreachBatch appends its
     PARTIAL aggregate as a delta — per-vertex (out, in) degree deltas
@@ -685,9 +678,8 @@ def g_degrees_maintained(spark, sf_dir):
     storage, not executors — the same IVM shape as the 100 TB rollup."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
-    from .streaming.changefeed import stream_edges, stream_vertices
+    from .graph import EDGES_SCHEMA, VERTICES_SCHEMA
     from .transaction import DatasetStore
 
     g = tpch_graph(spark, sf_dir)
@@ -695,7 +687,7 @@ def g_degrees_maintained(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_gdm_")
     try:
         gp = os.path.join(work, "graph")
-        _land_graph_batches(work, gp, g)
+        _land_graph_batches(gp, g)
 
         deg_store = DatasetStore(os.path.join(work, "deg"))
         type_store = DatasetStore(os.path.join(work, "types"))
@@ -742,26 +734,16 @@ def g_degrees_maintained(spark, sf_dir):
                 spark, part, bid, min_deltas=2, transform=fold_types
             )
 
-        for feed, handler, tag in (
-            (stream_edges(spark, gp, max_files_per_trigger=1), on_edges, "e"),
-            (
-                stream_vertices(spark, gp, max_files_per_trigger=1),
-                on_vertices,
-                "v",
-            ),
+        for sub, handler, schema in (
+            ("edges", on_edges, EDGES_SCHEMA),
+            ("vertices", on_vertices, VERTICES_SCHEMA),
         ):
-            q = (
-                feed.writeStream.foreachBatch(handler)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(work, f"ckpt_{tag}_{_uuid.uuid4().hex[:8]}"),
-                )
-                .start()
+            drive(
+                os.path.join(gp, sub),
+                handler,
+                schema=schema,
+                checkpoint=os.path.join(work, f"ckpt_{sub}"),
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
 
         degrees = fold_deg(deg_store.load(spark)).select(
             "id",
@@ -814,7 +796,6 @@ def g_degrees_retractions(spark, sf_dir):
     and nation→region edges only), derived relationally."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -822,8 +803,6 @@ def g_degrees_retractions(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_gdr_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         edges = g.edges.select("edge_id", "src", "dst")
         batches = [
             edges.filter(
@@ -835,15 +814,7 @@ def g_degrees_retractions(spark, sf_dir):
                 "op", F.lit(-1).cast("int")
             )
         ]
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         store = DatasetStore(os.path.join(work, "deg"))
 
@@ -872,23 +843,7 @@ def g_degrees_retractions(spark, sf_dir):
                 spark, fold(ends), bid, min_deltas=2, transform=fold
             )
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         view = (
             fold(store.load(spark))
@@ -958,10 +913,9 @@ def g_cc_maintained(spark, sf_dir):
     maintenance bytes track the delta, not the view."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
+    from .graph import EDGES_SCHEMA, VERTICES_SCHEMA
     from .operators.iterative import cc_labels
-    from .streaming.changefeed import stream_edges, stream_vertices
     from .transaction import DatasetStore
 
     nb = _CC_MERGE_BUCKETS
@@ -969,7 +923,7 @@ def g_cc_maintained(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_gcm_")
     try:
         gp = os.path.join(work, "graph")
-        _land_graph_batches(work, gp, g)
+        _land_graph_batches(gp, g)
 
         memb = DatasetStore(os.path.join(work, "memb"))
         merges = DatasetStore(os.path.join(work, "merges"), partition_cols=("pb",))
@@ -1108,22 +1062,16 @@ def g_cc_maintained(spark, sf_dir):
                     transform=compress,
                 )
 
-        for feed, handler, tag in (
-            (stream_vertices(spark, gp, max_files_per_trigger=1), on_vertices, "v"),
-            (stream_edges(spark, gp, max_files_per_trigger=1), on_edges, "e"),
+        for sub, handler, schema in (
+            ("vertices", on_vertices, VERTICES_SCHEMA),
+            ("edges", on_edges, EDGES_SCHEMA),
         ):
-            q = (
-                feed.writeStream.foreachBatch(handler)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(work, f"ckpt_{tag}_{_uuid.uuid4().hex[:8]}"),
-                )
-                .start()
+            drive(
+                os.path.join(gp, sub),
+                handler,
+                schema=schema,
+                checkpoint=os.path.join(work, f"ckpt_{sub}"),
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
 
         ids = memb.load(spark).select("id").distinct()
         r = merges.load(spark)
@@ -1821,7 +1769,6 @@ def g_cc_retractions(spark, sf_dir):
     out-of-IVM-scope for g_cc_maintained."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     g = tpch_graph(spark, sf_dir)
     # label/edge-log/forest fanout derived from graph size (floored at
@@ -1830,8 +1777,6 @@ def g_cc_retractions(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_gccr_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         edges = g.edges.select("edge_id", "src", "dst")
         doomed = (F.col("src").startswith("n")) & (F.col("dst") == "r0")
         # two insert batches suffice to exercise chase/merge chains
@@ -1844,15 +1789,7 @@ def g_cc_retractions(spark, sf_dir):
             ).withColumn("op", F.lit(1).cast("int"))
             for b in range(2)
         ] + [edges.filter(doomed).withColumn("op", F.lit(-1).cast("int"))]
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         ivm = CCIvm(spark, work, nb)
 
@@ -1865,23 +1802,7 @@ def g_cc_retractions(spark, sf_dir):
                 ivm.delete_batch(batch_df.filter(F.col("op") == -1), bid)
             ivm.compact()
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         ids = g.vertices.select("id").distinct()
         roots = ivm.flat_labels()
@@ -3118,8 +3039,6 @@ def g_triangles_retractions(spark, sf_dir):
     join."""
     import shutil
     import tempfile
-    import uuid as _uuid
-
     from functools import reduce
 
     from .transaction import DatasetStore
@@ -3188,17 +3107,7 @@ def g_triangles_retractions(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_triret_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         n_cust = customer.count()
         vb = F.pmod(
@@ -3344,23 +3253,7 @@ def g_triangles_retractions(spark, sf_dir):
                 transform=fold_adj,
             )
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         loaded = view.load(spark)
         out = (
             fold_view(loaded)
@@ -6588,7 +6481,7 @@ def g_lpa_maintained(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_glpam_")
     try:
         gp = os.path.join(work, "graph")
-        _land_graph_batches(work, gp, g)
+        _land_graph_batches(gp, g)
         return _lpa_maintain_run(spark, work, gp)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -6627,41 +6520,25 @@ def g_lpa_retractions(spark, sf_dir):
     work = tempfile.mkdtemp(prefix="gravityspark_glpar_")
     try:
         gp = os.path.join(work, "graph")
-        _land_lpa_retraction_batches(spark, sf_dir, work, gp, g)
+        _land_lpa_retraction_batches(spark, sf_dir, gp, g)
         return _lpa_maintain_run(spark, work, gp, edge_ops=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _land_lpa_retraction_batches(spark, sf_dir, work, gp, g) -> None:
+def _land_lpa_retraction_batches(spark, sf_dir, gp, g) -> None:
     """Land the mixed insert/delete changefeed for g_lpa_retractions:
     vertices as three op-less hash batches (the _land_graph_batches
     shape), edges as three op-TAGGED batches — real thirds by
     hash(edge_id), cross-wire nation→next-region edges inserted in
     batch 0 and retracted in batch 1 (mixed with batch 1's inserts)."""
-    import shutil
-
-    base = 1_700_000_000
-
-    def land(df, ddir, b):
-        tmp = os.path.join(work, f"tmp_lpar_{os.path.basename(ddir)}{b}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.makedirs(ddir, exist_ok=True)
-        dst = os.path.join(ddir, f"batch-{b}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + 60 * b, base + 60 * b))
-        shutil.rmtree(tmp)
-
-    vdir = os.path.join(gp, "vertices")
-    for b in range(3):
-        land(
-            g.vertices.filter(
-                F.pmod(F.xxhash64(F.col("id")), F.lit(3)) == b
-            ),
-            vdir,
-            b,
-        )
+    stage_batches(
+        [
+            g.vertices.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(3)) == b)
+            for b in range(3)
+        ],
+        os.path.join(gp, "vertices"),
+    )
 
     # cross-wire each nation to the NEXT region, modulo the actual
     # region count (r12 ADVICE: a hard-coded 5 would silently point
@@ -6688,22 +6565,18 @@ def _land_lpa_retraction_batches(spark, sf_dir, work, gp, g) -> None:
         F.lit("xw").alias("prop_hash"),
     )
     third = F.pmod(F.xxhash64(F.col("edge_id")), F.lit(3))
-    edir = os.path.join(gp, "edges")
-    land(
-        g.edges.filter(third == 0)
-        .withColumn("op", F.lit("i"))
-        .unionByName(xwire.withColumn("op", F.lit("i"))),
-        edir,
-        0,
+    stage_batches(
+        [
+            g.edges.filter(third == 0)
+            .withColumn("op", F.lit("i"))
+            .unionByName(xwire.withColumn("op", F.lit("i"))),
+            g.edges.filter(third == 1)
+            .withColumn("op", F.lit("i"))
+            .unionByName(xwire.withColumn("op", F.lit("d"))),
+            g.edges.filter(third == 2).withColumn("op", F.lit("i")),
+        ],
+        os.path.join(gp, "edges"),
     )
-    land(
-        g.edges.filter(third == 1)
-        .withColumn("op", F.lit("i"))
-        .unionByName(xwire.withColumn("op", F.lit("d"))),
-        edir,
-        1,
-    )
-    land(g.edges.filter(third == 2).withColumn("op", F.lit("i")), edir, 2)
 
 
 def _lpa_maintain_run(spark, work: str, gp: str, edge_ops: bool = False):
@@ -6743,7 +6616,9 @@ def _lpa_maintain_run(spark, work: str, gp: str, edge_ops: bool = False):
     whose defining R-neighborhoods are unchanged by the batch."""
     import uuid as _uuid
 
-    from .streaming.changefeed import stream_edges, stream_vertices
+    from pyspark.sql import types as T
+
+    from .graph import EDGES_SCHEMA, VERTICES_SCHEMA
     from .transaction import DatasetStore
 
     nb = _LPAM_BUCKETS
@@ -6935,43 +6810,22 @@ def _lpa_maintain_run(spark, work: str, gp: str, edge_ops: bool = False):
                 ),
             )
 
-        if edge_ops:
-            # op-tagged changefeed: EDGES_SCHEMA + the mutation verb
-            from pyspark.sql import types as T
-
-            from .graph import EDGES_SCHEMA
-
-            esch = T.StructType(
-                list(EDGES_SCHEMA.fields)
-                + [T.StructField("op", T.StringType(), True)]
-            )
-            efeed = (
-                spark.readStream.schema(esch)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{gp}/edges")
-            )
-        else:
-            efeed = stream_edges(spark, gp, max_files_per_trigger=1)
-        for feed, handler, tag in (
-            (
-                stream_vertices(spark, gp, max_files_per_trigger=1),
-                on_vertices,
-                "v",
-            ),
-            (efeed, on_edges, "e"),
+        # op-tagged changefeed: EDGES_SCHEMA + the mutation verb (op-less
+        # batch files read as inserts)
+        esch = T.StructType(
+            list(EDGES_SCHEMA.fields) + [T.StructField("op", T.StringType(), True)]
+        )
+        for sub, handler, schema in (
+            ("vertices", on_vertices, VERTICES_SCHEMA),
+            ("edges", on_edges, esch if edge_ops else EDGES_SCHEMA),
         ):
-            q = (
-                feed.writeStream.foreachBatch(handler)
-                .option(
-                    "checkpointLocation",
-                    os.path.join(work, f"ckpt_{tag}_{_uuid.uuid4().hex[:8]}"),
-                )
-                .start()
+            # the workdir is the caller's: a fresh checkpoint name per run
+            drive(
+                os.path.join(gp, sub),
+                handler,
+                schema=schema,
+                checkpoint=os.path.join(work, f"ckpt_{sub}_{_uuid.uuid4().hex[:8]}"),
             )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
 
         ids = memb.load(spark).select("id").distinct()
         ldf = labels.load(spark)

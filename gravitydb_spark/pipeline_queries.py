@@ -22,6 +22,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from .registry import REGISTRY, load, register
+from .streaming.microbatch import drive, stage_batches
 
 # Explicit whitespace class shared by every tokenizer/normalizer regex on
 # BOTH engines: Java's \s includes \x0B (vertical tab) while RE2's does
@@ -1842,11 +1843,10 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard ≥ 0.5 (doc_a < doc_b). Cached per (session, sf_dir): the pair
     graph feeds three gate queries (pairs, clusters, triangles)."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pair_cache:
-        return _pair_cache[key]
-    out = _pairs_from_sigs(_doc_sigs(spark, sf_dir)).cache()
-    _pair_cache[key] = out
-    return out
+    if key not in _pair_cache:
+        pairs, bands = _pairs_from_sigs(_doc_sigs(spark, sf_dir))
+        _pair_cache[key] = (pairs.cache(), bands)
+    return _pair_cache[key][0]
 
 
 def _pair_count(spark: SparkSession, sf_dir: str) -> int:
@@ -1864,12 +1864,14 @@ def _pair_count(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def _pairs_from_sigs(sigs: DataFrame) -> DataFrame:
+def _pairs_from_sigs(sigs: DataFrame) -> tuple:
     """Banded-LSH candidate pairs (doc_a < doc_b, est ≥ 0.5) from a
     DF[doc_id, sig] of minhash signatures. Factored out so consumers can
     choose WHICH rows join: the pairwise gate query feeds every doc; the
     cluster operator feeds one representative per DISTINCT signature
-    (exact-dup groups collapse before the quadratic step)."""
+    (exact-dup groups collapse before the quadratic step). Returns
+    (pairs, bands): ``bands`` is the cached barrier the pairs read, which
+    the caller memoizes beside them so clear_memo_cache releases it."""
     rows_per_band = LSH_ROWS
     bands = (
         sigs.select(
@@ -1918,7 +1920,7 @@ def _pairs_from_sigs(sigs: DataFrame) -> DataFrame:
         )
     )
     est = matches / F.lit(float(N_MINHASH))
-    return cand.filter(est >= 0.5).select("doc_a", "doc_b", est.alias("est"))
+    return cand.filter(est >= 0.5).select("doc_a", "doc_b", est.alias("est")), bands
 
 
 @register(
@@ -1990,19 +1992,28 @@ def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = _doc_sigs(spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _rep_pair_cache:
-        grp = sigs.groupBy("sig").agg(
-            F.min("doc_id").alias("rep"), F.count("*").alias("gsize")
+        # cached BEFORE the bands barrier is built over it, so the
+        # barrier reads this cache instead of recomputing the groups
+        grp = (
+            sigs.groupBy("sig")
+            .agg(F.min("doc_id").alias("rep"), F.count("*").alias("gsize"))
+            .cache()
         )
         # memoized like _pair_cache: _pairs_from_sigs pins a cached bands
         # relation per call, so repeated invocations (standalone query +
-        # family compound + bench) must share one
-        _rep_pair_cache[key] = (
-            grp.cache(),
-            _pairs_from_sigs(grp.select(F.col("rep").alias("doc_id"), "sig"))
-            .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-            .cache(),
+        # family compound + bench) must share one, and the memo holds it
+        # so clear_memo_cache releases it
+        pairs, bands = _pairs_from_sigs(
+            grp.select(F.col("rep").alias("doc_id"), "sig")
         )
-    grp, rep_pairs = _rep_pair_cache[key]
+        _rep_pair_cache[key] = (
+            grp,
+            pairs.select(
+                F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+            ).cache(),
+            bands,
+        )
+    grp, rep_pairs, _ = _rep_pair_cache[key]
     membership = sigs.join(grp, "sig").select("doc_id", "rep", "gsize")
     rep_labels = cc_labels(rep_pairs).select(
         F.col("id").alias("rep"), F.col("component")
@@ -4275,7 +4286,6 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade the compaction protocol already makes."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore, append_fused
 
@@ -4283,18 +4293,13 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_knnidx_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_KNN_UPKEEP_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            emb.filter(
-                F.col("vec_id") % _KNN_UPKEEP_BATCHES == b
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                emb.filter(F.col("vec_id") % _KNN_UPKEEP_BATCHES == b)
+                for b in range(_KNN_UPKEEP_BATCHES)
+            ],
+            stage,
+        )
 
         cells, _, _ = _ivf_params(spark, sf_dir)
         cent = (
@@ -4393,23 +4398,7 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             if names[1] is not None:
                 lists.compact(spark, min_deltas=3, transform=_knn_lists_fold)
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         return (
             _knn_lists_fold(lists.load(spark))
@@ -4465,7 +4454,6 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell. State lives on storage, not executors."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -4473,18 +4461,13 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_annidx_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_ANN_UPKEEP_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            emb.filter(
-                F.col("vec_id") % _ANN_UPKEEP_BATCHES == b
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b)
+                for b in range(_ANN_UPKEEP_BATCHES)
+            ],
+            stage,
+        )
 
         cells, nprobe, _ = _ivf_params(spark, sf_dir)
         cent = (
@@ -4517,23 +4500,7 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 transform=lambda d: d.dropDuplicates(["vec_id"]),
             )
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         # ---- query path against the maintained index ----
         qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
@@ -5045,7 +5012,6 @@ def stream_ivfpq_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares its oracle string verbatim."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import types as T
 
@@ -5055,18 +5021,13 @@ def stream_ivfpq_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_ivfpqidx_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_ANN_UPKEEP_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            emb.filter(
-                F.col("vec_id") % _ANN_UPKEEP_BATCHES == b
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b)
+                for b in range(_ANN_UPKEEP_BATCHES)
+            ],
+            stage,
+        )
 
         cents, book = _ivfpq_model(spark, sf_dir)
         _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
@@ -5094,23 +5055,7 @@ def stream_ivfpq_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 transform=lambda d: d.dropDuplicates(["vec_id"]),
             )
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         # ---- query path against the maintained codes ----
         qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
@@ -5231,7 +5176,6 @@ def stream_ivfpq_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the deletes arrived."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import types as T
 
@@ -5244,21 +5188,15 @@ def stream_ivfpq_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_ivfpqret_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         feeds = [
             emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b)
             for b in range(_ANN_UPKEEP_BATCHES)
         ] + [emb.filter(del_pred)]
         ops = ["i"] * _ANN_UPKEEP_BATCHES + ["d"]
-        for b, (feed, op) in enumerate(zip(feeds, ops)):
-            tmp = os.path.join(work, f"tmp{b}")
-            feed.withColumn("op", F.lit(op)).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
+            stage,
+        )
 
         cents, book = _ivfpq_model(spark, sf_dir)
         _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
@@ -5309,25 +5247,7 @@ def stream_ivfpq_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, rows.unionByName(tomb), min_deltas=3, transform=fold
             )
 
-        stream = (
-            spark.readStream.schema(
-                emb.withColumn("op", F.lit("i")).schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         # ---- query path over the survivors ----
         qemb = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
@@ -5712,12 +5632,10 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_events_stream(spark, sf_dir, transform, output_mode, name_prefix):
     """Drive an events.parquet-fed Structured Streaming query to
-    completion into a uniquely-named memory sink and return the sink
-    table. Shared by every stream_* gate query so the streaming setup
-    (nanos conf, schema sniff, pathGlobFilter, sink lifecycle) can't
+    completion into a uniquely-named memory sink (``microbatch.drive``)
+    and return the sink table. Shared by every stream_* gate query so
+    the events source (nanos conf, schema sniff, pathGlobFilter) can't
     drift between them."""
-    import uuid as _uuid
-
     from .relational_queries import normalize_events_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -5727,19 +5645,9 @@ def _run_events_stream(spark, sf_dir, transform, output_mode, name_prefix):
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    name = f"{name_prefix}_{_uuid.uuid4().hex[:8]}"
-    q = (
-        transform(normalize_events_ts(stream))
-        .writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+    return drive(
+        transform(normalize_events_ts(stream)), name_prefix, output_mode=output_mode
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
 
 
 @register(
@@ -6411,7 +6319,6 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the seed + per-batch fold/assign/append chain unrolled."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -6419,19 +6326,16 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_skmeans_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_SKM_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            emb.filter(
-                (F.col("vec_id") >= KMEANS_K)
-                & (F.col("vec_id") % _SKM_BATCHES == b)
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                emb.filter(
+                    (F.col("vec_id") >= KMEANS_K)
+                    & (F.col("vec_id") % _SKM_BATCHES == b)
+                )
+                for b in range(_SKM_BATCHES)
+            ],
+            stage,
+        )
 
         def scaled_explode(df):
             return df.select(
@@ -6509,23 +6413,7 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, partials, bid, min_deltas=4, transform=fold
             )
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         out = (
             store.load(spark)
@@ -7523,8 +7411,6 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-memory property that makes streaming dedup viable, vs the
     stateful dropDuplicates variant whose state grows with the key space
     (stream_dedup_keys covers that contract)."""
-    import uuid as _uuid
-
     static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     band_indexes = _stream_band_index(spark, sf_dir)
 
@@ -7540,20 +7426,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             novel[f"bk{b}"] == band_indexes[b][f"ibk{b}"],
             "left_anti",
         )
-    novel = novel.select("doc_id")
-
-    name = f"incdedup_{_uuid.uuid4().hex[:8]}"
-    q = (
-        novel.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drive(novel.select("doc_id"), "incdedup")
 
 
 _UPKEEP_BATCHES = 3
@@ -7771,7 +7644,6 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (idx_{{b+1}} = idx_b ∪ keys(admitted_b))."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -7779,25 +7651,14 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_upkeep_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        # stage the arriving half as one file per micro-batch; mtime +
-        # name order pin the pickup sequence (FileStreamSource sorts by
-        # timestamp, then path)
-        base = 1_700_000_000
-        for b in range(_UPKEEP_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            (
+        # the arriving half, one micro-batch per file
+        feed_schema = stage_batches(
+            [
                 docs.filter(F.expr(f"doc_id % 2 = 1 AND (doc_id % 6) DIV 2 = {b}"))
-                .coalesce(1)
-                .write.parquet(tmp)
-            )
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+                for b in range(_UPKEEP_BATCHES)
+            ],
+            stage,
+        )
 
 
         nbkb = _state_fanout(
@@ -7986,22 +7847,7 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation", os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}")
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         # read + eagerly checkpoint the admitted output so the WHOLE
         # work dir can be dropped on the success path too — returning a
         # lazy reader over /tmp leaked the dir per invocation (r8
@@ -8097,7 +7943,6 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     set, because every −1 cancels one live +1."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -8105,22 +7950,16 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_dedupret_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         feeds = [
             docs.filter(F.expr("doc_id % 2 = 1 AND (doc_id % 6) DIV 2 < 2")),
             docs.filter(F.expr("doc_id % 2 = 0 AND doc_id % 10 = 0")),
             docs.filter(F.expr("doc_id % 2 = 1 AND (doc_id % 6) DIV 2 = 2")),
         ]
         ops = ["i", "d", "i"]
-        for b, (feed, op) in enumerate(zip(feeds, ops)):
-            tmp = os.path.join(work, f"tmp{b}")
-            feed.withColumn("op", F.lit(op)).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
+            stage,
+        )
 
 
         nbkb = _state_fanout(
@@ -8213,25 +8052,7 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(bdir)  # checkpointed batch-sized frame: 1 write task
 
-        stream = (
-            spark.readStream.schema(
-                docs.withColumn("op", F.lit("i")).schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         return (
             spark.read.parquet(out_dir)
             .select("doc_id", "batch")
@@ -8276,7 +8097,6 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
     delta-sized (byte-tested in test_store_compaction_bytes)."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore, append_fused
 
@@ -8284,8 +8104,6 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
     work = tempfile.mkdtemp(prefix="gravityspark_dedupretid_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         null_cols = [
             F.lit(None).cast(f.dataType).alias(f.name)
             for f in docs.schema.fields
@@ -8308,14 +8126,10 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
             docs.filter(F.expr("doc_id % 2 = 1 AND (doc_id % 6) DIV 2 = 2")),
         ]
         ops = ["i", "d", "i"]
-        for b, (feed, op) in enumerate(zip(feeds, ops)):
-            tmp = os.path.join(work, f"tmp{b}")
-            feed.withColumn("op", F.lit(op)).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
+            stage,
+        )
 
 
         nbkb = _state_fanout(
@@ -8528,25 +8342,7 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
                 ),
             )
 
-        stream = (
-            spark.readStream.schema(
-                docs.withColumn("op", F.lit("i")).schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         return (
             spark.read.parquet(out_dir)
             .select("doc_id", "batch")
@@ -10483,7 +10279,6 @@ def stream_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the ingest pipeline decodes/validates media on arrival with
     the same audited kernel the backfill uses)."""
     import pandas as pd
-    import uuid as _uuid
 
     static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     stream = (
@@ -10518,19 +10313,7 @@ def stream_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["sample_sum"].append(wav["sample_sum"])
             yield pd.DataFrame(out)
 
-    decoded = stream.mapInPandas(gen_and_decode, schema)
-    name = f"streamaudio_{_uuid.uuid4().hex[:8]}"
-    q = (
-        decoded.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drive(stream.mapInPandas(gen_and_decode, schema), "streamaudio")
 
 
 @register(
@@ -11042,18 +10825,13 @@ def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_ivm_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_IVM_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}")).coalesce(
-                1
-            ).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}"))
+                for b in range(_IVM_BATCHES)
+            ],
+            stage,
+        )
 
         store = DatasetStore(os.path.join(work, "view"))
 
@@ -11085,18 +10863,7 @@ def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, part, batch_id, min_deltas=2, transform=merge
             )
 
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = stream.writeStream.foreachBatch(handle).option(
-            "checkpointLocation", os.path.join(work, "ckpt")
-        ).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         view = merge(store.load(spark)).select(
             "event_type",
             (F.col("h") * 3600).cast("long").alias("hour_epoch_s"),
@@ -11155,18 +10922,13 @@ def stream_rollup_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_ivmv_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_IVM_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}")).coalesce(
-                1
-            ).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}"))
+                for b in range(_IVM_BATCHES)
+            ],
+            stage,
+        )
 
         store = DatasetStore(os.path.join(work, "deltas"))
         versions = VersionedViewStore(os.path.join(work, "versions"))
@@ -11202,18 +10964,7 @@ def stream_rollup_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             versions.publish_once(merge(store.load(spark)), batch_id)
 
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = stream.writeStream.foreachBatch(handle).option(
-            "checkpointLocation", os.path.join(work, "ckpt")
-        ).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         def asof(idx: int, tag: int) -> DataFrame:
             return versions.load_version(spark, idx).select(
@@ -11271,8 +11022,6 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_ivmr_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         batches = [
             static.filter(F.expr(f"event_id % 3 = {b}")).withColumn(
                 "op", F.lit(1).cast("int")
@@ -11283,15 +11032,7 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "op", F.lit(-1).cast("int")
             )
         ]
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         store = DatasetStore(os.path.join(work, "view"))
 
@@ -11323,18 +11064,7 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, part, batch_id, min_deltas=2, transform=merge
             )
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = stream.writeStream.foreachBatch(handle).option(
-            "checkpointLocation", os.path.join(work, "ckpt")
-        ).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         view = (
             merge(store.load(spark))
             .filter(F.col("n") != 0)
@@ -11393,7 +11123,6 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-aggregate over the full tables."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -11407,8 +11136,6 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_sjm_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         # interleaved arrival: orders half A | lineitems A + orders B |
         # lineitems B — so the delta rule fires in BOTH directions and
         # the Δ⋈Δ term is exercised (batch 1 carries matching o+l rows)
@@ -11426,15 +11153,7 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             tag(items.filter(o_half == 1), "l"),
         ]
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         n_orders = load(spark, sf_dir, "orders").count()
         kb = F.pmod(
@@ -11511,23 +11230,7 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             if names[1] is not None:
                 l_store.compact(spark, min_deltas=4)
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         out = (
             fold_view(view.load(spark))
@@ -11575,7 +11278,6 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes — the stream_join_maintained contract unchanged."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from functools import reduce
 
@@ -11593,8 +11295,6 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_sjr_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         o_half = F.pmod(F.xxhash64(F.col("okey")), F.lit(2))
 
         def tag_o(df):
@@ -11623,15 +11323,7 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             tag_l(items.filter(o_half == 1), 1),
             tag_l(items.filter(doomed), -1),  # the retraction batch
         ]
-        for b, bdf in enumerate(batches):
-            tmp = os.path.join(work, f"tmp{b}")
-            bdf.coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
-        staged_schema = batches[0].schema
+        feed_schema = stage_batches(batches, stage)
 
         n_orders = load(spark, sf_dir, "orders").count()
         kb = F.pmod(
@@ -11713,23 +11405,7 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             if names[1] is not None:
                 l_store.compact(spark, min_deltas=3, transform=fold_l)
 
-        stream = (
-            spark.readStream.schema(staged_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         out = (
             fold_view(view.load(spark))
@@ -11892,7 +11568,6 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim for graph lookups (docs/key_value_store.adoc:367-369)."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -11900,18 +11575,9 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_bm25ix_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(3):
-            tmp = os.path.join(work, f"tmp{b}")
-            docs.filter(F.expr(f"doc_id % 3 = {b}")).coalesce(1).write.parquet(
-                tmp
-            )
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [docs.filter(F.expr(f"doc_id % 3 = {b}")) for b in range(3)], stage
+        )
 
         postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
         cstats = DatasetStore(os.path.join(work, "cstats"))
@@ -11968,23 +11634,7 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             if names[1] is not None:
                 cstats.compact(spark, min_deltas=4, transform=fold_stats)
 
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         # query path: the probe terms' buckets only (PartitionFilters)
         term_df = spark.createDataFrame(
@@ -12329,8 +11979,6 @@ def stream_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers with search_percolate's oracle verbatim. At registry
     scale the guard-term pruning of search_percolate_bucketed applies
     unchanged per micro-batch (candidates first, conjunction second)."""
-    import uuid as _uuid
-
     static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     stream = (
         spark.readStream.schema(static_docs.schema)
@@ -12361,19 +12009,7 @@ def stream_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("q"),
         "doc_id",
     ).select(F.col("q.query_id").alias("query_id"), "doc_id")
-
-    name = f"percolate_{_uuid.uuid4().hex[:8]}"
-    q = (
-        hits.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drive(hits, "percolate")
 
 
 # documents forgotten by the BM25 retraction demo (restricted to indexed
@@ -12416,7 +12052,6 @@ def stream_bm25_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokenize CTE."""
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from .transaction import DatasetStore
 
@@ -12424,18 +12059,12 @@ def stream_bm25_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_bm25ret_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
         feeds = [docs, docs.filter(F.expr("doc_id % 10 = 7"))]
         ops = ["i", "d"]
-        for b, (feed, op) in enumerate(zip(feeds, ops)):
-            tmp = os.path.join(work, f"tmp{b}")
-            feed.withColumn("op", F.lit(op)).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
+            stage,
+        )
 
         postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
         cstats = DatasetStore(os.path.join(work, "cstats"))
@@ -12502,25 +12131,7 @@ def stream_bm25_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, cdelta, bid, min_deltas=2, transform=fold_stats
             )
 
-        stream = (
-            spark.readStream.schema(
-                docs.withColumn("op", F.lit("i")).schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option(
-                "checkpointLocation",
-                os.path.join(work, f"ckpt_{_uuid.uuid4().hex[:8]}"),
-            )
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         # query path: probe-term buckets, fold the signed rows, score
         term_df = spark.createDataFrame(
@@ -13141,18 +12752,13 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = tempfile.mkdtemp(prefix="gravityspark_hllivm_")
     try:
         stage = os.path.join(work, "stage")
-        os.makedirs(stage)
-        base = 1_700_000_000
-        for b in range(_HLL_UPKEEP_BATCHES):
-            tmp = os.path.join(work, f"tmp{b}")
-            static.filter(
-                F.expr(f"event_id % {_HLL_UPKEEP_BATCHES} = {b}")
-            ).coalesce(1).write.parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"batch-{b}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + 60 * b, base + 60 * b))
-            shutil.rmtree(tmp)
+        feed_schema = stage_batches(
+            [
+                static.filter(F.expr(f"event_id % {_HLL_UPKEEP_BATCHES} = {b}"))
+                for b in range(_HLL_UPKEEP_BATCHES)
+            ],
+            stage,
+        )
 
         store = DatasetStore(os.path.join(work, "regs"))
 
@@ -13183,18 +12789,7 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, part, batch_id, min_deltas=2, transform=fold
             )
 
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = stream.writeStream.foreachBatch(handle).option(
-            "checkpointLocation", os.path.join(work, "ckpt")
-        ).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
         regs = fold(store.load(spark))
         den = regs.groupBy("day").agg(
             (

@@ -1724,6 +1724,12 @@ def clear_memo_cache(spark: SparkSession | None = None) -> int:
         pipeline_queries._stream_index_cache,
         pipeline_queries._pq_book_memo,
         pipeline_queries._pq_shortlist_memo,
+        pipeline_queries._emb_count_memo,
+        pipeline_queries._ivf_params_memo,
+        pipeline_queries._ivfpq_model_memo,
+        pipeline_queries._docs_count_memo,
+        pipeline_queries._seed_keys_cache,
+        pipeline_queries._sq8_codes_memo,
         graph_queries._graph_cache,
         graph_queries._scalar_memo,
     ]

@@ -17,26 +17,15 @@ from ..graph import EDGES_SCHEMA, VERTICES_SCHEMA
 __all__ = ["stream_vertices", "stream_edges", "stream_type_counts"]
 
 
-def stream_vertices(
-    spark: SparkSession, graph_path: str, max_files_per_trigger: int = 0
-) -> DataFrame:
+def stream_vertices(spark: SparkSession, graph_path: str) -> DataFrame:
     """Streaming DF of vertex rows as they are appended under
-    ``<graph_path>/vertices``. ``max_files_per_trigger`` > 0 bounds each
-    micro-batch to that many storage files (one mutation batch per
-    trigger when the writer appends file-per-batch)."""
-    r = spark.readStream.schema(VERTICES_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(f"{graph_path}/vertices")
+    ``<graph_path>/vertices`` (the maintained-view demos drive these
+    dirs one file per trigger through ``microbatch.drive``)."""
+    return spark.readStream.schema(VERTICES_SCHEMA).parquet(f"{graph_path}/vertices")
 
 
-def stream_edges(
-    spark: SparkSession, graph_path: str, max_files_per_trigger: int = 0
-) -> DataFrame:
-    r = spark.readStream.schema(EDGES_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(f"{graph_path}/edges")
+def stream_edges(spark: SparkSession, graph_path: str) -> DataFrame:
+    return spark.readStream.schema(EDGES_SCHEMA).parquet(f"{graph_path}/edges")
 
 
 def stream_type_counts(

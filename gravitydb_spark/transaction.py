@@ -203,9 +203,9 @@ class _SnapshotLog:
             meta = self._meta()
             if self._replayed(meta, bid):
                 return None
-            name = self._new_snapshot(write_fn)
-            self._write_log(self._published() + [name], meta)
-            return name
+            return self._new_snapshot(
+                write_fn, lambda name: self._write_log(self._published() + [name], meta)
+            )
         finally:
             os.unlink(lock)
 
@@ -221,14 +221,18 @@ class _SnapshotLog:
         meta["bid_hwm"] = str(int(bid))
         return False
 
-    def _new_snapshot(self, write_fn) -> str:
-        """Allocate a snapshot name and let ``write_fn(target_dir)`` fill
-        it; on any error the directory is removed, so the number is never
-        burned with partial data. Returns the (unpublished) name."""
+    def _new_snapshot(self, write_fn, publish) -> str:
+        """Allocate a snapshot name, let ``write_fn(target_dir)`` fill it,
+        then ``publish(name)`` (the atomic log replace). If either raises,
+        the directory is removed: the number is never burned with partial
+        data, and a snapshot whose publication failed is not left on disk
+        (``CURRENT`` is unchanged, so no reader can hold the name).
+        Returns the published name."""
         name = self._alloc_name()
         target = os.path.join(self.path, name)
         try:
             write_fn(target)
+            publish(name)
         except BaseException:
             shutil.rmtree(target, ignore_errors=True)
             raise
@@ -413,13 +417,13 @@ class TransactionalStore(_SnapshotLog):
 
         lock = self._acquire_lock()
         try:
-            # a failed write or check leaves no snapshot dir behind, so the
-            # abort is fully recoverable (unlinking a hard link leaves the
-            # parent's file intact)
-            name = self._new_snapshot(write)
-            # the atomic swap: append to the publication log and replace
-            self._write_log(self._published() + [name])
-            return name
+            # a failed write, check or swap leaves no snapshot dir behind,
+            # so the abort is fully recoverable (unlinking a hard link
+            # leaves the parent's file intact). The atomic swap appends to
+            # the publication log and replaces it.
+            return self._new_snapshot(
+                write, lambda name: self._write_log(self._published() + [name])
+            )
         finally:
             os.unlink(lock)
 
@@ -746,13 +750,14 @@ class DatasetStore(_SnapshotLog):
             else:
                 merged = df
             name = self._new_snapshot(
-                lambda target: self._write_frame(merged, target, self.partition_cols)
+                lambda target: self._write_frame(merged, target, self.partition_cols),
+                # compacting: atomic republish + hwm
+                lambda name: self._write_log(
+                    [name] if compacting else list(names) + [name], meta
+                ),
             )
             if compacting:
-                self._write_log([name], meta)  # atomic republish + hwm
                 self._park(names)
-            else:
-                self._write_log(list(names) + [name], meta)
             return name
         finally:
             os.unlink(lock)
@@ -782,10 +787,10 @@ class DatasetStore(_SnapshotLog):
                 return False
             if transform is not None:
                 merged = transform(merged)
-            name = self._new_snapshot(
-                lambda target: self._write_frame(merged, target, self.partition_cols)
+            self._new_snapshot(
+                lambda target: self._write_frame(merged, target, self.partition_cols),
+                lambda name: self._write_log([name]),  # atomic republish
             )
-            self._write_log([name])  # atomic republish
             self._park(names)
             return True
         finally:

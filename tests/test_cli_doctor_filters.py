@@ -20,6 +20,8 @@ from gravitydb_spark.hashing import canonical_json, edge_hash, tagged_property
 from gravitydb_spark.plans.compiler import execute
 from gravitydb_spark.ql import ExprFilter, PandasFilter, pq_from_id
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _abc_graph(spark):
     """A --r1--> B --r2--> C (City nodes, Road edges)."""
@@ -423,14 +425,14 @@ def test_cli_explain_verb(tmp_path):
     r = subprocess.run(
         [_sys.executable, "-m", "gravitydb_spark.cli", "explain",
          "--query", "q1_pricing_summary"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert "Physical Plan" in r.stdout and "PushedFilters" in r.stdout
     bad = subprocess.run(
         [_sys.executable, "-m", "gravitydb_spark.cli", "explain",
          "--query", "no_such_query"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert bad.returncode == 1
 
@@ -445,7 +447,7 @@ def test_cli_sql_verb(tmp_path):
          "SELECT r_name, count(*) AS n FROM region JOIN nation"
          " ON n_regionkey = r_regionkey GROUP BY r_name ORDER BY r_name",
          "--limit", "10"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     rows = [_json.loads(l) for l in r.stdout.strip().splitlines() if l.startswith("{")]
@@ -454,7 +456,7 @@ def test_cli_sql_verb(tmp_path):
     r2 = subprocess.run(
         [_sys.executable, "-m", "gravitydb_spark.cli", "sql",
          "SELECT min(ts) AS t0 FROM events"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        capture_output=True, text=True, cwd=REPO, timeout=300,
     )
     assert r2.returncode == 0, r2.stderr[-2000:]
     t0 = _json.loads(r2.stdout.strip().splitlines()[-1])["t0"]

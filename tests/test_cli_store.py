@@ -10,7 +10,7 @@ import pytest
 
 from gravitydb_spark import GraphBatchBuilder, Prop
 from gravitydb_spark.cli import main
-from gravitydb_spark.transaction import TransactionalStore
+from gravitydb_spark.transaction import DatasetStore, TransactionalStore
 
 TABLES = ("vertices", "edges", "properties", "prop_refs")
 
@@ -35,6 +35,14 @@ def _model_state(spark, nodes, edges):
 def _current(db):
     with open(os.path.join(db, "CURRENT"), encoding="utf-8") as f:
         return f.read()
+
+
+def _orphan_snapshots(log):
+    """``snap-*`` dirs on disk that are neither published nor parked."""
+    pending = os.path.join(log.path, log.GC_PENDING)
+    parked = open(pending).read().split() if os.path.exists(pending) else []
+    on_disk = {d for d in os.listdir(log.path) if d.startswith("snap-")}
+    return on_disk - set(log.snapshots()) - set(parked)
 
 
 def test_mutating_verbs_publish_through_the_store(spark, tmp_path, capsys, monkeypatch):
@@ -74,8 +82,26 @@ def test_mutating_verbs_publish_through_the_store(spark, tmp_path, capsys, monke
     with pytest.raises(OSError, match="publication failed"):
         main(["create-node", "--db", db, "--type", "City", "--value", "Rome", "--id", "r"])
     assert _current(db) == before
+    # and leaves no snapshot dir behind
+    assert _orphan_snapshots(TransactionalStore(db)) == set()
     assert _state(TransactionalStore(db).load(spark)) == _model_state(spark, nodes, edges)
     # a read of a path that is no db fails and leaves no directory behind
     with pytest.raises(FileNotFoundError, match="init first"):
         main(["db-info", "--db", str(tmp_path / "typo")])
     assert not (tmp_path / "typo").exists()
+
+
+def test_failed_append_publication_leaves_no_snapshot_dir(spark, tmp_path, monkeypatch):
+    store = DatasetStore(str(tmp_path / "ds"))
+    store.append(spark.range(3))
+    before = _current(store.path)
+
+    def fail(self, names, meta=None):
+        raise OSError("publication failed")
+
+    monkeypatch.setattr(DatasetStore, "_write_log", fail)
+    with pytest.raises(OSError, match="publication failed"):
+        store.append(spark.range(5))
+    assert _current(store.path) == before
+    assert _orphan_snapshots(store) == set()
+    assert sorted(r.id for r in store.load(spark).collect()) == [0, 1, 2]

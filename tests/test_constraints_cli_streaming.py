@@ -1,6 +1,7 @@
 """Schema constraints (§2.11), CLI EP2 wire compat, streaming changefeed."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -20,6 +21,8 @@ from gravitydb_spark.ql import (
     vq_from_ids,
     BasicQuery,
 )
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _start(prop):
@@ -140,7 +143,7 @@ class TestCli:
                 capture_output=True,
                 text=True,
                 input=stdin,
-                cwd="/root/repo",
+                cwd=REPO,
                 timeout=300,
             )
             assert r.returncode == 0, r.stderr[-2000:]

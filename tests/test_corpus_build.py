@@ -15,6 +15,8 @@ from gravitydb_spark.pipeline_queries import (
     export_corpus_jsonl,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_build_corpus_composition_tightens_monotonically(spark, sf_dir):
     """Each stage only removes documents: packed ⊆ clean ⊆ documents, and
@@ -125,7 +127,7 @@ def test_cli_corpus_build_verb(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]

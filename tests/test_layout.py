@@ -11,6 +11,8 @@ import pytest
 from gravitydb_spark.operators.layout import write_zordered
 from gravitydb_spark.registry import queries
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _file_spans(path: str, cols: tuple[str, str]) -> list[dict]:
     """Per-file (min, max) of each column from the parquet footers —
@@ -131,7 +133,7 @@ def test_cli_zorder_verb(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]

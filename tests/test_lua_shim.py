@@ -4,6 +4,7 @@ db surface, and the reference's gin-cocktails e2e query
 both the library entry point and the CLI ``script`` verb."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -18,6 +19,8 @@ from gravitydb_spark.lua_shim import (
 
 from gravitydb_spark.transaction import TransactionalStore
 from tests.test_cocktails_e2e import GIN_COCKTAILS
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 class TestTransliterate:
@@ -160,7 +163,7 @@ class TestCliLuaScript:
             ],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=300,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -193,7 +196,7 @@ class TestCliLuaScript:
             ],
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=300,
         )
         assert r.returncode == 0, r.stderr[-2000:]
@@ -292,7 +295,7 @@ class TestLuaRepl:
             input="\n".join(lines) + "\n",
             capture_output=True,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO,
             timeout=600,
         )
         assert r.returncode == 0, r.stderr[-2000:]

@@ -143,11 +143,15 @@ def test_countmin_estimate_never_undercounts(spark, sf_dir):
         assert r["cm_estimate"] >= r["n_exact"], r
 
 
-def test_clear_memo_cache_unpersists_and_rebuilds(spark, sf_dir):
+def test_clear_memo_cache_unpersists_and_rebuilds(spark, sf_dir, monkeypatch):
     """clear_memo_cache drops every module's per-session cache entries
-    (r4 ADVICE: unbounded growth across sf_dirs) and queries rebuild
-    transparently afterwards."""
+    (r4 ADVICE: unbounded growth across sf_dirs), unpersists every frame
+    they cached, and queries rebuild transparently afterwards."""
+    from pyspark import StorageLevel
+
+    import gravitydb_spark.graph_queries as gq
     import gravitydb_spark.pipeline_queries as pq
+    import gravitydb_spark.relational_queries as rq
     from gravitydb_spark.registry import queries
     from gravitydb_spark.relational_queries import (
         _plan_cache,
@@ -157,12 +161,23 @@ def test_clear_memo_cache_unpersists_and_rebuilds(spark, sf_dir):
     qs = queries()
     n1 = qs["corpus_vocab_topk"](spark, sf_dir).count()
     qs["dedup_minhash_lsh"](spark, sf_dir).count()
+    # record every frame dedup_minhash_cluster caches, memoized or not
+    frame_cls = type(spark.range(1))
+    cache, made = frame_cls.cache, []
+    monkeypatch.setattr(frame_cls, "cache", lambda df: made.append(df) or cache(df))
+    qs["dedup_minhash_cluster"](spark, sf_dir).count()
+    monkeypatch.undo()
+    assert made
     assert _plan_cache or pq._sigs_cache  # something got memoized
     removed = clear_memo_cache(spark)
     assert removed >= 1
     sk = spark.sparkContext.applicationId
-    for cache in (_plan_cache, pq._sigs_cache, pq._pair_cache, pq._shingle_cache):
-        assert not [k for k in cache if k[0] == sk]
+    for mod in (gq, pq, rq):
+        for name, memo in vars(mod).items():
+            if isinstance(memo, dict):
+                left = [k for k in memo if isinstance(k, tuple) and k[:1] == (sk,)]
+                assert not left, (mod.__name__, name, left)
+    assert [df.storageLevel for df in made] == [StorageLevel.NONE] * len(made)
     assert qs["corpus_vocab_topk"](spark, sf_dir).count() == n1
 
 

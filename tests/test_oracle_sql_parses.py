@@ -5,10 +5,13 @@ correctness gate."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 
-
 from gravitydb_spark.registry import oracle_sql
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
@@ -73,7 +76,7 @@ def test_registry_imports_without_spark_session():
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=120,
     )
     assert r.returncode == 0, r.stderr[-2000:]

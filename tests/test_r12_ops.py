@@ -47,20 +47,6 @@ def test_retractions_by_id_bloom_prunes_unknown_ids(spark, sf_dir):
     assert d["kbs_pruned"] < d["kbs_all"]
 
 
-def _land(df, ddir, b, base=1_700_000_000):
-    import os
-    import shutil
-
-    tmp = ddir + f".tmp{b}"
-    df.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.makedirs(ddir, exist_ok=True)
-    dst = os.path.join(ddir, f"batch-{b}.parquet")
-    os.replace(os.path.join(tmp, part), dst)
-    os.utime(dst, (base + 60 * b, base + 60 * b))
-    shutil.rmtree(tmp)
-
-
 def test_lpa_maintain_delete_repair_undoes_published_state(spark):
     """The delete-repair contract that the e2e oracle hash can't isolate:
     a bridge edge inserted in batch 0 merges two chains' communities and
@@ -73,6 +59,7 @@ def test_lpa_maintain_delete_repair_undoes_published_state(spark):
     import tempfile
 
     from gravitydb_spark import graph_queries as gq
+    from gravitydb_spark.streaming.microbatch import stage_batches
 
     n = 10
     work = tempfile.mkdtemp(prefix="lpa_del_test_")
@@ -82,7 +69,7 @@ def test_lpa_maintain_delete_repair_undoes_published_state(spark):
             [(f"{s}{i:02d}", "p") for s in ("a", "b") for i in range(n)],
             "id string, prop_hash string",
         )
-        _land(ids, os.path.join(gp, "vertices"), 0)
+        stage_batches([ids], os.path.join(gp, "vertices"))
 
         def chain(s):
             return [
@@ -94,8 +81,7 @@ def test_lpa_maintain_delete_repair_undoes_published_state(spark):
         bridge = ("ebr", "a00", "b00", "p")
         b0 = spark.createDataFrame(chain("a") + [bridge + ("i",)], sch)
         b1 = spark.createDataFrame(chain("b") + [bridge + ("d",)], sch)
-        _land(b0, os.path.join(gp, "edges"), 0)
-        _land(b1, os.path.join(gp, "edges"), 1)
+        stage_batches([b0, b1], os.path.join(gp, "edges"))
 
         out = gq._lpa_maintain_run(spark, work, gp, edge_ops=True)
         got = {(r["id"], r["community"]) for r in out.collect()}

@@ -8,12 +8,16 @@ redelivered append a no-op so the sum view is exact.
 test_ivm_replay.py proves the store primitive under simulated windows;
 this file proves the composition with Spark's actual redelivery
 machinery, including that batch ids really do repeat across restarts.
+The feed is staged and driven by the harness every streaming demo runs
+on (streaming/microbatch.py), so the drill covers that code, a
+checkpoint reused across a crash included.
 """
 
 import os
 
 from pyspark.sql import functions as F
 
+from gravitydb_spark.streaming.microbatch import drive, stage_batches
 from gravitydb_spark.transaction import DatasetStore
 
 
@@ -21,33 +25,14 @@ def _fold(df):
     return df.groupBy("k").agg(F.sum("n").cast("long").alias("n"))
 
 
-def _run_stream(spark, stage, ckpt, handler, schema):
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(handler)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+def _stage(spark, tmp_path, batches):
+    stage = str(tmp_path / "stage")
+    frames = [spark.createDataFrame(rows, "k string, n long") for rows in batches]
+    return stage, stage_batches(frames, stage)
 
 
 def test_crash_after_append_is_not_double_counted(spark, tmp_path):
-    stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    base = 1_700_000_000
-    for b, rows in enumerate([[("a", 1), ("b", 2)], [("a", 10)]]):
-        df = spark.createDataFrame(rows, "k string, n long")
-        tmp = str(tmp_path / f"tmp{b}")
-        df.coalesce(1).write.parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(stage, f"batch-{b}.parquet")
-        os.rename(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + 60 * b, base + 60 * b))
+    stage, schema = _stage(spark, tmp_path, [[("a", 1), ("b", 2)], [("a", 10)]])
 
     store = DatasetStore(str(tmp_path / "view"))
     ckpt = str(tmp_path / "ckpt")
@@ -66,16 +51,14 @@ def test_crash_after_append_is_not_double_counted(spark, tmp_path):
             raise RuntimeError("injected crash after store append")
 
     try:
-        _run_stream(
-            spark, stage, ckpt, handler, "k string, n long"
-        )
+        drive(stage, handler, schema=schema, checkpoint=ckpt)
         raised = False
     except Exception:
         raised = True
     assert raised, "the injected crash must fail the first run"
 
     # restart against the SAME checkpoint: Spark redelivers batch 1
-    _run_stream(spark, stage, ckpt, handler, "k string, n long")
+    drive(stage, handler, schema=schema, checkpoint=ckpt)
 
     view = {r["k"]: r["n"] for r in _fold(store.load(spark)).collect()}
     assert view == {"a": 11, "b": 2}, view
@@ -89,13 +72,7 @@ def test_crash_before_append_replays_and_applies(spark, tmp_path):
     """The complementary window: crash BEFORE the append — the replayed
     batch must still apply (the mark only skips batches whose append
     committed)."""
-    stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    df = spark.createDataFrame([("a", 5)], "k string, n long")
-    tmp = str(tmp_path / "tmp0")
-    df.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.rename(os.path.join(tmp, part), os.path.join(stage, "batch-0.parquet"))
+    stage, schema = _stage(spark, tmp_path, [[("a", 5)]])
 
     store = DatasetStore(str(tmp_path / "view"))
     ckpt = str(tmp_path / "ckpt")
@@ -109,9 +86,9 @@ def test_crash_before_append_replays_and_applies(spark, tmp_path):
         store.append_once(_fold(batch_df), bid)
 
     try:
-        _run_stream(spark, stage, ckpt, handler, "k string, n long")
+        drive(stage, handler, schema=schema, checkpoint=ckpt)
     except Exception:
         pass
-    _run_stream(spark, stage, ckpt, handler, "k string, n long")
+    drive(stage, handler, schema=schema, checkpoint=ckpt)
     view = {r["k"]: r["n"] for r in _fold(store.load(spark)).collect()}
     assert view == {"a": 5}, view

@@ -95,19 +95,16 @@ def main() -> None:
     )
 
     # force the family to retrain (bench runs it exactly once per
-    # session): clear ALL its driver-side model memos so post-heavy
-    # timing covers the same work the bench measures. r12 ADVICE /
-    # VERDICT #4: the r12 run cleared only the PQ book/shortlist memos,
-    # so ann_ivfpq_topk (the family's largest member) skipped model
-    # retraining post-heavy and the printed verdict understated the
-    # heavy-session cost — _ivfpq_model_memo and _sq8_codes_memo are
-    # now cleared too.
-    from gravitydb_spark import pipeline_queries as pq
+    # session): clear_memo_cache drops ALL driver-side model memos (and
+    # unpersists the memoized caches, as perfbench does before each
+    # pipeline op) so post-heavy timing covers the same work the bench
+    # measures. r12 ADVICE / VERDICT #4: clearing only the PQ
+    # book/shortlist memos let ann_ivfpq_topk (the family's largest
+    # member) skip model retraining post-heavy, understating the
+    # heavy-session cost.
+    from gravitydb_spark.relational_queries import clear_memo_cache
 
-    pq._pq_book_memo.clear()
-    pq._pq_shortlist_memo.clear()
-    pq._ivfpq_model_memo.clear()
-    pq._sq8_codes_memo.clear()
+    clear_memo_cache(spark)
     post = _time_family(spark, sf_dir, qs)
     print(
         "PROBE ann_drift postheavy "

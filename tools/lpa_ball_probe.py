@@ -24,23 +24,10 @@ from pyspark.sql import functions as F
 sys.path.insert(0, "/root/repo")
 
 
-def land(df, ddir: str, b: int, base: int = 1_700_000_000) -> None:
-    """One batch file under ddir, mtime pinning arrival order."""
-    tmp = ddir + f".tmp{b}"
-    df.coalesce(1).write.parquet(tmp)
-    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-    os.makedirs(ddir, exist_ok=True)
-    os.replace(os.path.join(tmp, part), os.path.join(ddir, f"batch-{b}.parquet"))
-    os.utime(
-        os.path.join(ddir, f"batch-{b}.parquet"),
-        (base + 60 * b, base + 60 * b),
-    )
-    shutil.rmtree(tmp)
-
-
 def main() -> None:
     from gravitydb_spark import graph_queries as gq
     from gravitydb_spark.session import get_spark
+    from gravitydb_spark.streaming.microbatch import stage_batches
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
     spark = get_spark(app_name="lpa_ball_probe", shuffle_partitions=8)
@@ -54,7 +41,7 @@ def main() -> None:
         # one vertex batch; three LOCALIZED edge batches: the ring body
         # lands first, then two small arcs re-keyed as fresh inserts
         # (batch 1 touches vertices ~n/4, batch 2 touches ~3n/4)
-        land(ids, os.path.join(gp, "vertices"), 0)
+        stage_batches([ids], os.path.join(gp, "vertices"))
         ring = spark.range(n).select(
             F.format_string("e%05d", F.col("id").cast("int")).alias("edge_id"),
             F.format_string("v%05d", F.col("id").cast("int")).alias("src"),
@@ -72,9 +59,6 @@ def main() -> None:
             & (F.col("src") < F.format_string("v%05d", F.lit(3 * n // 4 + 3)))
         )
         body = ring.exceptAll(arc1).exceptAll(arc2)
-        land(body, os.path.join(gp, "edges"), 0)
-        land(arc1, os.path.join(gp, "edges"), 1)
-        land(arc2, os.path.join(gp, "edges"), 2)
         # batch 3 (r12): a LOCALIZED DELETE — retract two adjacent body
         # edges near n/2 (op='d'; earlier batches land op-less and read
         # as inserts under the edge_ops schema). The repair ball must
@@ -84,7 +68,10 @@ def main() -> None:
             (F.col("src") >= F.format_string("v%05d", F.lit(n // 2)))
             & (F.col("src") < F.format_string("v%05d", F.lit(n // 2 + 2)))
         )
-        land(deleted.withColumn("op", F.lit("d")), os.path.join(gp, "edges"), 3)
+        stage_batches(
+            [body, arc1, arc2, deleted.withColumn("op", F.lit("d"))],
+            os.path.join(gp, "edges"),
+        )
 
         gq._lpam_probe.clear()
         gq._lpam_probe["enabled"] = True
