@@ -3,7 +3,9 @@
 ``entry`` runs the flagship query (graph traversal + revenue rollup) at
 sf0.001; ``queries()`` / ``oracle_sql()`` expose every implemented
 operator from SURVEY.md §2 plus the training-data-pipeline operators,
-each with a DuckDB oracle (see gravitydb_spark/registry.py).
+each with a DuckDB oracle, in registration order (see
+gravitydb_spark/registry.py; tools/oracle_check.py checks each query
+against its oracle).
 """
 
 from __future__ import annotations

@@ -45,20 +45,6 @@ _BCAST_BYTES_PER_ROW = 48
 _BCAST_ROW_LIMIT = _BCAST_BUDGET_BYTES // _BCAST_BYTES_PER_ROW  # ≈1.4M
 
 
-_scalar_memo: dict = {}  # (appId, sf_dir, tag) → int; cleared with the caches
-
-
-def _memo_scalar(spark: SparkSession, sf_dir: str, tag: str, build) -> int:
-    """Memoize a driver-side scalar (a count already needed for derived
-    config) per (session, sf_dir, tag) so repeat invocations don't re-run
-    the counting job. Entries are dropped by clear_memo_cache alongside
-    the DataFrame memos."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _scalar_memo:
-        _scalar_memo[key] = build()
-    return _scalar_memo[key]
-
-
 def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
     """Count-gated broadcast hint for entity-count-sized frames.
 
@@ -92,13 +78,13 @@ def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
 # Graph construction (cached per sf_dir within a session)
 # ---------------------------------------------------------------------------
 
-_graph_cache: dict = {}
-
-
 def tpch_graph(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _graph_cache:
-        return _graph_cache[key]
+    from .relational_queries import _memo
+
+    return _memo(spark, sf_dir, "tpch_graph", lambda: _tpch_graph(spark, sf_dir))
+
+
+def _tpch_graph(spark: SparkSession, sf_dir: str):
     c = load(spark, sf_dir, "customer")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
@@ -118,9 +104,7 @@ def tpch_graph(spark: SparkSession, sf_dir: str):
         .unionByName(s.select(vid("s", "s_suppkey").alias("src"), vid("n", "s_nationkey").alias("dst"), F.lit("LocatedIn").alias("schema_type"), F.lit(None).cast("string").alias("payload")))
         .unionByName(n.select(vid("n", "n_nationkey").alias("src"), vid("r", "n_regionkey").alias("dst"), F.lit("PartOf").alias("schema_type"), F.lit(None).cast("string").alias("payload")))
     )
-    g = ingest_graph(spark, vertices, edges).cache()
-    _graph_cache[key] = g
-    return g
+    return ingest_graph(spark, vertices, edges).cache()
 
 
 # query-builder sugar shared by several queries
@@ -2227,7 +2211,7 @@ def _trade_und(spark, sf_dir):
     ONE orders⋈lineitem distinct and memoized per (session, sf_dir)
     (relational_queries._memo_cache — the r3-ADVICE memo pattern): four
     trade-graph queries (k-core, betweenness, label propagation, random
-    walks) plus their gate-compound and bench re-invocations share one
+    walks) and their re-invocations share one
     cached ~2|E|-row frame instead of each re-running the fact-table
     join (measured ~5s per rebuild at sf0.1)."""
     from .relational_queries import _memo_cache
@@ -3446,7 +3430,9 @@ def _lpa_n_verts(spark, sf_dir) -> int:
     """Vertex count of the LPA (top-5-sparsified trade) graph, memoized
     per (session, sf_dir) — the row bound _maybe_broadcast gates the
     vertex-sized label/community frames on."""
-    return _memo_scalar(
+    from .relational_queries import _memo
+
+    return _memo(
         spark,
         sf_dir,
         "lpa_n_verts",
@@ -3457,7 +3443,7 @@ def _lpa_n_verts(spark, sf_dir) -> int:
 def _lpa_labels(spark, sf_dir):
     """DF[v, lab] — the final synchronous-LPA labels, memoized per
     (session, sf_dir): shared by g_label_propagation and the modularity
-    eval (plus gate-compound/bench re-invocations)."""
+    eval (plus re-invocations)."""
     from .relational_queries import _memo_cache
 
     def build():
@@ -3801,13 +3787,15 @@ def g_node2vec_walks(spark, sf_dir):
     broadcasting; everything stays keyed, nothing is driver-side."""
     from pyspark.sql import Window
 
+    from .relational_queries import _memo
+
     und = _trade_und(spark, sf_dir)
     nbr = _trade_nbr_arr(spark, sf_dir)
     n_verts = nbr.count()  # bounded scalar: one row per vertex
     # byte-honest broadcast bound for the array table: |V| rows but
     # 2|E| array cells — gate on the edge count (memoized scalar over
     # the cached und frame), so the hint drops at corpus scale
-    n_edges = _memo_scalar(
+    n_edges = _memo(
         spark, sf_dir, "trade_und_rows", lambda: und.count()
     )
     nw = _rw_num_walks(n_verts)
@@ -4175,7 +4163,9 @@ def _sg_e0(spark, sf_dir):
 
 def _sg_nvd(spark, sf_dir) -> int:
     """|vocab|·D — the embedding-table row bound for _maybe_broadcast."""
-    return _memo_scalar(
+    from .relational_queries import _memo
+
+    return _memo(
         spark, sf_dir, "sg_nvd", lambda: _sg_e0(spark, sf_dir).count()
     )
 
@@ -5071,7 +5061,9 @@ def _sgf_e0(spark, sf_dir):
 def _sgf_nvd(spark, sf_dir) -> int:
     """|full vocab|·D — the embedding-table row bound for
     _maybe_broadcast (exact count of the memoized init frame)."""
-    return _memo_scalar(
+    from .relational_queries import _memo
+
+    return _memo(
         spark, sf_dir, "sgf_nvd", lambda: _sgf_e0(spark, sf_dir).count()
     )
 
@@ -5214,7 +5206,7 @@ def g_skipgram_full_eval(spark, sf_dir):
     hash, membership/anti joins are keyed equi-joins, and the dot join
     touches |edges| + Θ(n_c·K) pairs instead of n_c·n_s; the only
     crossJoin left is the 1-row scalar mean."""
-    from .relational_queries import _memo_cache
+    from .relational_queries import _memo, _memo_cache
 
     emb = _sgf_embeddings(spark, sf_dir)
     nvd = _sgf_nvd(spark, sf_dir)
@@ -5228,11 +5220,11 @@ def g_skipgram_full_eval(spark, sf_dir):
             .localCheckpoint(eager=True)
         )
 
-    # memoized: the gate compound, bench, and tests all re-invoke this
-    # query in one session — share one checkpointed edge frame
+    # memoized: repeat invocations in one session share one
+    # checkpointed edge frame
     vedges = _memo_cache(spark, sf_dir, "sgf_vedges", build_vedges)
     # exact count of the memoized checkpointed frame (cheap scan)
-    n_edges = _memo_scalar(
+    n_edges = _memo(
         spark, sf_dir, "sgf_vedges_n", lambda: vedges.count()
     )
     from .pipeline_queries import _h32
@@ -6532,6 +6524,8 @@ def _land_lpa_retraction_batches(spark, sf_dir, gp, g) -> None:
     shape), edges as three op-TAGGED batches — real thirds by
     hash(edge_id), cross-wire nation→next-region edges inserted in
     batch 0 and retracted in batch 1 (mixed with batch 1's inserts)."""
+    from .relational_queries import _memo
+
     stage_batches(
         [
             g.vertices.filter(F.pmod(F.xxhash64(F.col("id")), F.lit(3)) == b)
@@ -6545,7 +6539,7 @@ def _land_lpa_retraction_batches(spark, sf_dir, gp, g) -> None:
     # cross-wires at nonexistent vertices on non-TPC-H region counts,
     # weakening the rewire-then-undo scenario; the retraction cancels
     # the insert, so the oracle never sees these edges either way)
-    n_regions = _memo_scalar(
+    n_regions = _memo(
         spark,
         sf_dir,
         "lpar_n_regions",

@@ -1488,9 +1488,6 @@ _DUCK_SH_CTES = f"""
         FROM toks, unnest(generate_series(1, greatest(len(t)-2, 0))) AS u(i)))"""
 
 
-_shingle_cache: dict = {}
-
-
 def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DF[doc_id, shingle, n_sh] — distinct word 3-shingles, EXPLODED, with
     the per-doc distinct-shingle count attached; materialized once and
@@ -1504,13 +1501,14 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~7s of minhash's 9.3s at sf0.1, measured); both consumers exploded
     the array immediately anyway, so the exploded relation is also the
     more useful shape."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _shingle_cache:
+    from .relational_queries import _memo_cache
+
+    def build() -> DataFrame:
         tok = load(spark, sf_dir, "documents").select(
             "doc_id", F.posexplode(_TOKENS_FN()).alias("pos", "w")
         )
         w_ = Window.partitionBy("doc_id").orderBy("pos")
-        sh = (
+        return (
             tok.withColumn("w1", F.lead("w", 1).over(w_))
             .withColumn("w2", F.lead("w", 2).over(w_))
             .filter(F.col("w2").isNotNull())
@@ -1518,8 +1516,8 @@ def _shingled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["doc_id", "shingle"])
             .withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
         )
-        _shingle_cache[key] = sh.cache()
-    return _shingle_cache[key]
+
+    return _memo_cache(spark, sf_dir, "shingles", build)
 
 
 # Boilerplate-shingle ban threshold: a shingle is banned when its document
@@ -1823,40 +1821,43 @@ _DUCK_PAIR_CTES = f"""{_DUCK_SH_CTES},
       WHERE {_DUCK_MATCHES} / {N_MINHASH}.0 >= 0.5)"""
 
 
-_pair_cache: dict = {}
-_sigs_cache: dict = {}
-_rep_pair_cache: dict = {}
-
-
 def _doc_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DF[doc_id, sig] — minhash signatures, cached per (session, sf_dir):
     shared by the pair join, the signature-collapse clustering, and the
     incremental-dedup static index."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _sigs_cache:
-        _sigs_cache[key] = _minhash_sigs(_shingled_docs(spark, sf_dir)).cache()
-    return _sigs_cache[key]
+    from .relational_queries import _memo_cache
+
+    return _memo_cache(
+        spark,
+        sf_dir,
+        "minhash_sigs",
+        lambda: _minhash_sigs(_shingled_docs(spark, sf_dir)),
+    )
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DF[doc_a, doc_b, est] — LSH near-dup candidate pairs with estimated
     Jaccard ≥ 0.5 (doc_a < doc_b). Cached per (session, sf_dir): the pair
-    graph feeds three gate queries (pairs, clusters, triangles)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _pair_cache:
+    graph feeds three queries (pairs, clusters, triangles). The memo
+    also holds the cached bands relation _pairs_from_sigs pins, so
+    clear_memo_cache releases it."""
+    from .relational_queries import _memo
+
+    def build() -> tuple:
         pairs, bands = _pairs_from_sigs(_doc_sigs(spark, sf_dir))
-        _pair_cache[key] = (pairs.cache(), bands)
-    return _pair_cache[key][0]
+        return pairs.cache(), bands
+
+    return _memo(spark, sf_dir, "minhash_pairs", build)[0]
 
 
 def _pair_count(spark: SparkSession, sf_dir: str) -> int:
     """Exact count of the memoized pair graph — the caller-held bound
     the triangle/truss hint contract needs (r14, guide §3.1); one count
     job over the CACHED frame per (session, sf_dir), shared by the
-    three pair-graph consumers via the scalar memo."""
-    from .graph_queries import _memo_scalar
+    three pair-graph consumers via the memo table."""
+    from .relational_queries import _memo
 
-    return _memo_scalar(
+    return _memo(
         spark,
         sf_dir,
         "minhash_pair_count",
@@ -1988,10 +1989,11 @@ def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative has a near-dup edge — exactly the docs the pairwise
     formulation reaches."""
     from .operators.iterative import cc_labels
+    from .relational_queries import _memo
 
     sigs = _doc_sigs(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _rep_pair_cache:
+
+    def build() -> tuple:
         # cached BEFORE the bands barrier is built over it, so the
         # barrier reads this cache instead of recomputing the groups
         grp = (
@@ -1999,21 +2001,21 @@ def dedup_minhash_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("doc_id").alias("rep"), F.count("*").alias("gsize"))
             .cache()
         )
-        # memoized like _pair_cache: _pairs_from_sigs pins a cached bands
-        # relation per call, so repeated invocations (standalone query +
-        # family compound + bench) must share one, and the memo holds it
-        # so clear_memo_cache releases it
+        # memoized like _minhash_pairs: _pairs_from_sigs pins a cached
+        # bands relation per call, so repeated invocations must share
+        # one, and the memo holds it so clear_memo_cache releases it
         pairs, bands = _pairs_from_sigs(
             grp.select(F.col("rep").alias("doc_id"), "sig")
         )
-        _rep_pair_cache[key] = (
+        return (
             grp,
             pairs.select(
                 F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
             ).cache(),
             bands,
         )
-    grp, rep_pairs, _ = _rep_pair_cache[key]
+
+    grp, rep_pairs, _ = _memo(spark, sf_dir, "minhash_rep_pairs", build)
     membership = sigs.join(grp, "sig").select("doc_id", "rep", "gsize")
     rep_labels = cc_labels(rep_pairs).select(
         F.col("id").alias("rep"), F.col("component")
@@ -3013,14 +3015,15 @@ def _pq_train_mod_n(n: int) -> int:
     return max(PQ_TRAIN_MOD_MIN, n // PQ_TRAIN_CAP)
 
 
-_emb_count_memo: dict = {}
-
-
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _emb_count_memo:
-        _emb_count_memo[key] = load(spark, sf_dir, "embeddings").count()
-    return _emb_count_memo[key]
+    from .relational_queries import _memo
+
+    return _memo(
+        spark,
+        sf_dir,
+        "emb_count",
+        lambda: load(spark, sf_dir, "embeddings").count(),
+    )
 
 
 _DUCK_TPRM = (
@@ -3065,9 +3068,6 @@ def _duck_pq_ctes() -> str:
         prev = f"pc{it + 1}"
     parts.append(f"pqcb AS (SELECT * FROM {prev})")
     return ",\n    ".join(parts)
-
-
-_pq_book_memo: dict = {}
 
 
 def _lloyd_rows(ex, init_max: int, iters: int, per_subspace: bool):
@@ -3195,9 +3195,14 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> dict:
     broadcast-sized artifact, memoized per (session, sf_dir) like
     tpch_graph. The per-row assignment and scoring it feeds stay pure
     map-side."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _pq_book_memo:
-        return _pq_book_memo[key]
+    from .relational_queries import _memo
+
+    return _memo(
+        spark, sf_dir, "pq_codebook", lambda: _pq_codebook_build(spark, sf_dir)
+    )
+
+
+def _pq_codebook_build(spark: SparkSession, sf_dir: str) -> dict:
     ex = (
         load(spark, sf_dir, "embeddings")
         .filter(
@@ -3226,12 +3231,10 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> dict:
     book: dict = {}
     for r in rows:
         book.setdefault(r["m"], {}).setdefault(r["cl"], {})[r["i"]] = r["cx"]
-    out = {
+    return {
         m: sorted((cl, vec) for cl, vec in cls.items())
         for m, cls in book.items()
     }
-    _pq_book_memo[key] = out
-    return out
 
 
 def _np_scaled(col):
@@ -3418,7 +3421,6 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PQ_SHORTLIST = 50
-_pq_shortlist_memo: dict = {}
 
 
 def _pq_rerank_oracle() -> str:
@@ -3471,22 +3473,24 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint: the shortlist feeds TWO consumers below — without
     # the barrier Catalyst inlines the whole corpus ADC subtree into
     # both broadcasts and the most expensive stage runs twice. MEMOIZED
-    # per (session, sf_dir) like the codebook: the gate compound runs
-    # both PQ variants, and without the memo each paid the corpus ADC
-    # pass again (and plan-only consumers triggered it eagerly).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _pq_shortlist_memo:
+    # per (session, sf_dir) like the codebook: without the memo every
+    # re-invocation paid the corpus ADC pass again (and plan-only
+    # consumers triggered it eagerly).
+    from .relational_queries import _memo
+
+    def build() -> DataFrame:
         w_adc = Window.partitionBy("q_id").orderBy(
             F.desc("score_scaled"), F.asc("vec_id")
         )
-        _pq_shortlist_memo[key] = (
+        return (
             _pq_adc_scored(spark, sf_dir)
             .withColumn("rn", F.row_number().over(w_adc))
             .filter(F.col("rn") <= PQ_SHORTLIST)
             .select("q_id", "vec_id")
             .localCheckpoint(eager=True)
         )
-    shortlist = _pq_shortlist_memo[key]
+
+    shortlist = _memo(spark, sf_dir, "pq_shortlist", build)
     e = load(spark, sf_dir, "embeddings").withColumn(
         "v", F.col("embedding").cast("array<double>")
     )
@@ -3763,21 +3767,20 @@ def _ivf_shortlist(n: int, cells: int, nprobe: int) -> int:
     return max(IVF_SHORTLIST_MIN, n * nprobe // (cells * IVF_SHORTLIST_DIV))
 
 
-_ivf_params_memo: dict = {}
-
-
 def _ivf_params(spark: SparkSession, sf_dir: str) -> tuple:
     """(cells, nprobe, shortlist) for the IVF/IVFPQ serving family,
     derived from the served corpus count at train time and memoized per
     (session, sf_dir) — one bounded count() job, amortized across the
     whole ANN family like _pq_codebook/_ivfpq_model."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ivf_params_memo:
+    from .relational_queries import _memo
+
+    def build() -> tuple:
         n = load(spark, sf_dir, "embeddings").count()
         cells = _ivf_cells(n)
         nprobe = _ivf_nprobe(cells)
-        _ivf_params_memo[key] = (cells, nprobe, _ivf_shortlist(n, cells, nprobe))
-    return _ivf_params_memo[key]
+        return cells, nprobe, _ivf_shortlist(n, cells, nprobe)
+
+    return _memo(spark, sf_dir, "ivf_params", build)
 
 
 # The same derivation as a DuckDB CTE so every oracle in the family
@@ -3972,9 +3975,8 @@ def ann_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     force is already gate-audited by ann_recall_eval."""
     from .relational_queries import _memo_cache
 
-    # memoized: dedup_knn_graph, the gate compound, and bench all
-    # consume this frame in one session — one n·cells assignment +
-    # cell-local join instead of four
+    # memoized: ann_knn_graph and dedup_knn_graph both consume this
+    # frame in one session — one n·cells assignment + cell-local join
     return _memo_cache(
         spark, sf_dir, "knn_graph", lambda: _knn_graph_build(spark, sf_dir)
     )
@@ -4563,9 +4565,6 @@ IVF_ITERS = 2  # coarse Lloyd iterations (engine-exact, oracle-unrolled)
 # IVF coarse training and residual-PQ training share the derived
 # sample stride (_pq_train_mod_n) — one deterministic sample, capped
 
-_ivfpq_model_memo: dict = {}
-
-
 def _ivfpq_model(spark: SparkSession, sf_dir: str):
     """(cents, book): the two trained artifacts of residual IVFPQ, both
     bounded driver collects memoized per (session, sf_dir):
@@ -4589,9 +4588,14 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str):
     the sample-sized chain used to cost ~8s of tiny-stage scheduling
     on local[32] (the ANN-family bench wall, SCALE.md §4n); the
     corpus-sized encode/probe/ADC stays distributed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ivfpq_model_memo:
-        return _ivfpq_model_memo[key]
+    from .relational_queries import _memo
+
+    return _memo(
+        spark, sf_dir, "ivfpq_model", lambda: _ivfpq_model_build(spark, sf_dir)
+    )
+
+
+def _ivfpq_model_build(spark: SparkSession, sf_dir: str) -> tuple:
     ex = (
         load(spark, sf_dir, "embeddings")
         .filter(
@@ -4634,15 +4638,13 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str):
     book: dict = {}
     for r in rrows:
         book.setdefault(r["m"], {}).setdefault(r["cl"], {})[r["i"]] = r["cx"]
-    out = (
+    return (
         cents,
         {
             m: sorted((cl, vec) for cl, vec in cls.items())
             for m, cls in book.items()
         },
     )
-    _ivfpq_model_memo[key] = out
-    return out
 
 
 def _ivfpq_kernels(cents, book, nprobe: int = IVF_NPROBE_MIN):
@@ -5636,10 +5638,9 @@ def _run_events_stream(spark, sf_dir, transform, output_mode, name_prefix):
     and return the sink table. Shared by every stream_* gate query so
     the events source (nanos conf, schema sniff, pathGlobFilter) can't
     drift between them."""
-    from .relational_queries import normalize_events_ts
+    from .relational_queries import normalize_events_ts, read_raw_events
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_raw_events(spark, sf_dir)
     stream = (
         spark.readStream.schema(static.schema)
         .option("pathGlobFilter", "events.parquet")
@@ -7332,23 +7333,21 @@ def _batch_band_keys(df: DataFrame) -> DataFrame:
     )
 
 
-_stream_index_cache: dict = {}
-
-
 def _stream_band_index(spark: SparkSession, sf_dir: str) -> list:
     """Per-band (band-key) static LSH index DataFrames for the
     incremental-dedup stream, built from the even-doc_id corpus half via
     the CODEGEN batch path (exploded shingles + min aggregates) — only
     the stream side needs the per-row formulation. Memoized per
-    (session, sf_dir) like _sigs_cache: the standalone query, its gate
-    compound, and bench runs all reuse one cached index instead of
-    re-caching a fresh DataFrame per invocation (cache entries otherwise
-    accumulate — the 'Asked to cache already cached data' warnings in the
-    r3 bench tail)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _stream_index_cache:
+    (session, sf_dir) like _doc_sigs: repeat invocations reuse one cached
+    index instead of re-caching a fresh DataFrame each time (cache
+    entries otherwise accumulate — the 'Asked to cache already cached
+    data' warnings). The memo holds the cached index itself, so
+    clear_memo_cache releases it."""
+    from .relational_queries import _memo_cache
+
+    def build() -> DataFrame:
         sigs = _doc_sigs(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
-        index = (
+        return (
             sigs.select(
                 F.array(
                     *[
@@ -7363,13 +7362,13 @@ def _stream_band_index(spark: SparkSession, sf_dir: str) -> list:
             )
             .select(F.posexplode("bks").alias("band", "bk"))
             .distinct()
-            .cache()
         )
-        _stream_index_cache[key] = [
-            index.filter(F.col("band") == b).select(F.col("bk").alias(f"ibk{b}"))
-            for b in range(LSH_BANDS)
-        ]
-    return _stream_index_cache[key]
+
+    index = _memo_cache(spark, sf_dir, "stream_band_index", build)
+    return [
+        index.filter(F.col("band") == b).select(F.col("bk").alias(f"ibk{b}"))
+        for b in range(LSH_BANDS)
+    ]
 
 
 @register(
@@ -7490,19 +7489,15 @@ def _bloom_id_positions(ids: DataFrame, m: int) -> DataFrame:
     )
 
 
-_docs_count_memo: dict = {}
-
-
 def _docs_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _docs_count_memo:
-        _docs_count_memo[key] = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        )
-    return _docs_count_memo[key]
+    from .relational_queries import _memo
 
-
-_seed_keys_cache: dict = {}
+    return _memo(
+        spark,
+        sf_dir,
+        "docs_count",
+        lambda: spark.read.parquet(f"{sf_dir}/documents.parquet").count(),
+    )
 
 
 def _seed_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7518,10 +7513,11 @@ def _seed_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream_incremental_dedup oracle already pins the equivalence).
     Only this FRAME is shared: each demo's DatasetStores stay
     per-invocation for replay-semantics isolation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _seed_keys_cache:
+    from .relational_queries import _memo_cache
+
+    def build() -> DataFrame:
         sigs = _doc_sigs(spark, sf_dir).filter(F.col("doc_id") % 2 == 0)
-        _seed_keys_cache[key] = sigs.select(
+        return sigs.select(
             "doc_id",
             F.posexplode(
                 F.array(
@@ -7535,8 +7531,9 @@ def _seed_band_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ]
                 )
             ).alias("band", "bk"),
-        ).cache()
-    return _seed_keys_cache[key]
+        )
+
+    return _memo_cache(spark, sf_dir, "seed_band_keys", build)
 
 
 def _state_fanout(n_keys: int, base: int) -> int:
@@ -9417,7 +9414,7 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: pure per-row projection — zero shuffles, one scan,
     whole-stage codegen; the posexplode to (vec_id, k, proj) rows keeps
-    the gate schema narrow without widening the compound."""
+    the result schema narrow."""
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "v", F.col("embedding").cast("array<double>")
     )
@@ -9595,9 +9592,6 @@ def _sq8_oracle_sql() -> str:
     """
 
 
-_sq8_codes_memo: dict = {}
-
-
 @register("ann_sq8_topk", oracle=_sq8_oracle_sql())
 def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCALAR-QUANTIZED ANN (SQ8) + exact re-rank — the missing middle
@@ -9633,8 +9627,9 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings").withColumn(
         "v", F.col("embedding").cast("array<double>")
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _sq8_codes_memo:
+    from .relational_queries import _memo
+
+    def build() -> tuple:
         st = (
             emb.select(F.posexplode("v").alias("j", "val"))
             .groupBy("j")
@@ -9652,8 +9647,9 @@ def ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             code, _ = _q_exprs(f"e{j}", f"({mn[j]})", f"({mx[j]})")
             code_exprs.append(F.expr(code).alias(f"c{j}"))
         coded = flat.select("vec_id", *code_exprs).localCheckpoint(eager=True)
-        _sq8_codes_memo[key] = (coded, mn, mx)
-    coded, mn, mx = _sq8_codes_memo[key]
+        return coded, mn, mx
+
+    coded, mn, mx = _memo(spark, sf_dir, "sq8_codes", build)
     q = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
@@ -9708,9 +9704,8 @@ _RECALL_EVAL_METHODS = (("ivf", "ann_ivf_topk"), ("sq8", "ann_sq8_topk"))
 
 def _recall_eval_oracle() -> str:
     """Splice the brute-force truth chain and each evaluated method's
-    full oracle chain (nested WITH inside a derived table — the same
-    wrapping every gate compound already uses) into a per-(method,
-    query) hit count."""
+    full oracle chain (nested WITH inside a derived table) into a
+    per-(method, query) hit count."""
     truth = REGISTRY["ann_cosine_topk"].oracle
     got = {
         m: REGISTRY[q].oracle for m, q in _RECALL_EVAL_METHODS
@@ -10817,11 +10812,10 @@ def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .relational_queries import normalize_events_ts
+    from .relational_queries import normalize_events_ts, read_raw_events
     from .transaction import DatasetStore
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_raw_events(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="gravityspark_ivm_")
     try:
         stage = os.path.join(work, "stage")
@@ -10914,11 +10908,10 @@ def stream_rollup_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .relational_queries import normalize_events_ts
+    from .relational_queries import normalize_events_ts, read_raw_events
     from .transaction import DatasetStore, VersionedViewStore
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_raw_events(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="gravityspark_ivmv_")
     try:
         stage = os.path.join(work, "stage")
@@ -11014,11 +11007,10 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .relational_queries import normalize_events_ts
+    from .relational_queries import normalize_events_ts, read_raw_events
     from .transaction import DatasetStore
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_raw_events(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="gravityspark_ivmr_")
     try:
         stage = os.path.join(work, "stage")
@@ -12266,7 +12258,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact cosine leg is the oracle-checked baseline; at real scale
     the vector leg swaps to ann_ivf_topk / ann_lsh_multiprobe_topk
     (identical fusion over any ranked (doc_id, rank) list) -- measured
-    17x wall at 100x corpus for the exact leg, tools/r6_probe.py;
+    17x wall at 100x corpus for the exact leg, SCALE.md §4h;
     fusion joins two <={_BM25_TOPK}-row lists -- driver-trivial at any
     corpus size. RRF doubles are IEEE-identical on both engines
     (1/(k+rank) sums), rounded to 6dp; ranks tie-break on doc_id."""
@@ -12744,11 +12736,10 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .relational_queries import normalize_events_ts
+    from .relational_queries import normalize_events_ts, read_raw_events
     from .transaction import DatasetStore
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_raw_events(spark, sf_dir)
     work = tempfile.mkdtemp(prefix="gravityspark_hllivm_")
     try:
         stage = os.path.join(work, "stage")

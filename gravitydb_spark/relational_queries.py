@@ -307,9 +307,15 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", (F.unix_micros(ts) * F.lit(1000)).cast("long"))
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet as stored (``ts`` not normalized). The one place
+    that sets the session's nanosAsLong conf the events reads rely on."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return normalize_events_ts(read_raw_events(spark, sf_dir))
 
 
 @register(
@@ -1681,6 +1687,10 @@ _DUCK_HOURLY_GRID = f"""
 
 
 
+# The one memo table of the query modules: (applicationId, sf_dir, tag)
+# -> whatever the site's build() returned (a cached or checkpointed
+# frame, a tuple of them, a trained model, a count). Each memo site
+# names its own tag.
 _plan_cache: dict = {}
 
 
@@ -1691,64 +1701,39 @@ def _session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-def _memo_cache(spark: SparkSession, sf_dir: str, tag: str, build):
-    """Memoize a .cache()d DataFrame per (session, sf_dir, tag): repeat
-    invocations (standalone query + gate compound + bench) reuse ONE
-    cached plan instead of stacking fresh identical cache entries (the
-    'Asked to cache already cached data' noise the r3 bench tail showed
-    for the streaming band index). Keyed on applicationId (stable — not
-    id(), which can be reused after GC); clear_memo_cache() unpersists
-    and drops entries for long-lived sessions spanning many sf_dirs."""
+def _memo(spark: SparkSession, sf_dir: str, tag: str, build):
+    """Return ``build()`` memoized per (session, sf_dir, tag), so repeat
+    invocations reuse one cached frame, model or count instead of
+    building (and caching) it again. clear_memo_cache() unpersists and
+    drops the entries."""
     key = (_session_key(spark), sf_dir, tag)
     if key not in _plan_cache:
-        _plan_cache[key] = build().cache()
+        _plan_cache[key] = build()
     return _plan_cache[key]
 
 
+def _memo_cache(spark: SparkSession, sf_dir: str, tag: str, build):
+    """_memo of ``build().cache()``."""
+    return _memo(spark, sf_dir, tag, lambda: build().cache())
+
+
 def clear_memo_cache(spark: SparkSession | None = None) -> int:
-    """Unpersist and drop ALL per-session memoized cache entries across
-    the query modules (relational memo, shingle/signature/pair caches,
-    stream band index, TPC-H graph). With a session, only that session's
-    entries; without, all (best-effort unpersist — dead sessions just
-    drop the dict entry). Returns the number removed. The hook long-lived
+    """Unpersist and drop the memo table's entries: with a session, only
+    that session's; without, all (best-effort unpersist — dead sessions
+    just drop the entry). A tuple or list entry has each member
+    unpersisted. Returns the number removed. The hook long-lived
     sessions spanning many sf_dirs call between corpora (r4 ADVICE:
     entries were never unpersisted)."""
-    from . import graph_queries, pipeline_queries
-
-    caches = [
-        _plan_cache,
-        pipeline_queries._shingle_cache,
-        pipeline_queries._sigs_cache,
-        pipeline_queries._pair_cache,
-        pipeline_queries._rep_pair_cache,
-        pipeline_queries._stream_index_cache,
-        pipeline_queries._pq_book_memo,
-        pipeline_queries._pq_shortlist_memo,
-        pipeline_queries._emb_count_memo,
-        pipeline_queries._ivf_params_memo,
-        pipeline_queries._ivfpq_model_memo,
-        pipeline_queries._docs_count_memo,
-        pipeline_queries._seed_keys_cache,
-        pipeline_queries._sq8_codes_memo,
-        graph_queries._graph_cache,
-        graph_queries._scalar_memo,
-    ]
     sk = _session_key(spark) if spark is not None else None
     removed = 0
-    for cache in caches:
-        for k in [k for k in cache if sk is None or k[0] == sk]:
-            val = cache.pop(k)
-            vals = (
-                val
-                if isinstance(val, (list, tuple))
-                else [val]
-            )
-            for v in vals:
-                try:
-                    v.unpersist()
-                except Exception:
-                    pass  # not a DataFrame / session already stopped
-            removed += 1
+    for k in [k for k in _plan_cache if sk is None or k[0] == sk]:
+        val = _plan_cache.pop(k)
+        for v in val if isinstance(val, (list, tuple)) else [val]:
+            try:
+                v.unpersist()
+            except Exception:
+                pass  # not a DataFrame / session already stopped
+        removed += 1
     return removed
 
 

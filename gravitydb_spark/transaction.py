@@ -807,9 +807,8 @@ def append_fused(parts) -> list:
     CRASH-REPLAY ORDER — the store whose published state must never lag
     another's goes FIRST (the dedup family's invariant chain:
     bloom ⊇ keymap ⊇ index). The frames are collected together as one
-    tagged, typed-NULL-padded union (the gate-compound trick: every
-    part keeps its exact column types, so the per-store Arrow tables
-    are byte-identical to what ``df.limit(cap+1).toArrow()`` would have
+    tagged, typed-NULL-padded union (every part keeps its exact column
+    types, so the per-store Arrow tables are byte-identical to what ``df.limit(cap+1).toArrow()`` would have
     produced alone), then each store publishes driver-side in list
     order — pure fs work, no Spark under any lock. A crash between
     publishes leaves a PREFIX of the list published: exactly the state

@@ -1,7 +1,7 @@
 """Every registered oracle must at least PLAN in DuckDB against the real
-table schemas — a compound built from a bad member fragment (or a stray
-f-string placeholder) should fail here in seconds, not at the driver's
-correctness gate."""
+table schemas — an oracle that splices in a bad fragment of another (or
+a stray f-string placeholder) should fail here in seconds, not in a full
+tools/oracle_check.py run."""
 
 from __future__ import annotations
 
@@ -81,3 +81,23 @@ def test_registry_imports_without_spark_session():
     )
     assert r.returncode == 0, r.stderr[-2000:]
     assert r.stdout.startswith("OK")
+
+
+def test_oracle_check_rejects_unknown_names():
+    """A misspelled query name must fail tools/oracle_check.py, not pass
+    by checking nothing: the unknown name is listed and the tool exits
+    non-zero before it starts a Spark session."""
+    import subprocess
+    import sys
+
+    r = subprocess.run(
+        [sys.executable, "tools/oracle_check.py", SF_DIR, "q1_pricing_summary",
+         "no_such_query"],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        timeout=120,
+    )
+    assert r.returncode != 0, r.stdout[-2000:]
+    assert "no_such_query" in r.stdout
+    assert "q1_pricing_summary" not in r.stdout

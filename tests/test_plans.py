@@ -550,13 +550,10 @@ def test_no_unbounded_global_windows_anywhere(spark, sf_dir):
     input is already bounded by a prior limit/top-k (the RRF fusion's
     20-row lists). Assert it for EVERY registered query's returned
     plan, so a future operator can't ship a corpus-sized global window
-    silently. Compounds are skipped (their plan is a union of member
-    plans already checked; running them would just re-execute every
-    member). Streaming/iterative queries return localCheckpointed
+    silently. Streaming/iterative queries return localCheckpointed
     results whose visible plan is the (window-free) checkpoint scan —
     trivially compliant, which is correct: their per-batch plans are
     guarded by their own tests."""
-    from gravitydb_spark.gate_queries import COMPOUND_MEMBERS
     from gravitydb_spark.registry import queries
 
     # Streaming/foreachBatch and collect-driven operators return a
@@ -593,8 +590,8 @@ def test_no_unbounded_global_windows_anywhere(spark, sf_dir):
         mentioned = any(name in (here / f).read_text() for f in cited)
         # two accepted evidence forms: a dedicated test that names the
         # query, or a declared full-result oracle check ("oracle-e2e" —
-        # the driver value-hash-matches the query against its batch
-        # oracle every round; the claim requires the oracle to exist)
+        # tools/oracle_check.py value-matches the query against its batch
+        # oracle; the claim requires the oracle to exist)
         oracle_e2e = (
             "oracle-e2e" in reason and REGISTRY[name].oracle is not None
         )
@@ -603,11 +600,7 @@ def test_no_unbounded_global_windows_anywhere(spark, sf_dir):
                 f"{name}: no cited test mentions it and no oracle-e2e claim"
             )
     streaming_unlisted = [
-        n
-        for n in qs
-        if n not in COMPOUND_MEMBERS
-        and n.startswith("stream_")
-        and n not in PLAN_EXEMPT
+        n for n in qs if n.startswith("stream_") and n not in PLAN_EXEMPT
     ]
     assert not problems and not streaming_unlisted, (
         problems,
@@ -615,8 +608,6 @@ def test_no_unbounded_global_windows_anywhere(spark, sf_dir):
     )
     offenders = []
     for name, fn in qs.items():
-        if name in COMPOUND_MEMBERS:
-            continue
         if name in PLAN_EXEMPT:
             continue
         df = fn(spark, sf_dir)

@@ -1,7 +1,7 @@
 """r13 optimization measurement harness (guide §1: measure first).
 
-Isolated per-query timing at a given sf_dir with the SAME methodology as
-bench.py (fresh session, same warm-up, df.count() as the timed action),
+Isolated per-query timing at a given sf_dir (fresh session, one warm-up,
+df.count() as the timed action),
 plus the two diagnostics the round's deliverables need:
 
 - Spark JOB COUNT per query (each driver-synchronous job is a fixed
@@ -57,7 +57,7 @@ def main() -> None:
     spark = get_spark(app_name="opt_measure")
     sc = spark.sparkContext
 
-    # same warm-up as bench.py: JVM/codegen spin-up + property-graph build
+    # warm-up: JVM/codegen spin-up + property-graph build
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     from gravitydb_spark.graph_queries import tpch_graph
 

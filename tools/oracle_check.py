@@ -1,14 +1,12 @@
-"""Local mirror of the driver's correctness gate: run every registered
-query on Spark AND its DuckDB oracle on the same parquet, compare
-row-count + sorted-column schema + exact values.
+"""Check every registered query (or the named ones) on Spark against its
+DuckDB oracle on the same parquet: row count, sorted-column schema and
+exact values.
 
-Usage: python tools/oracle_check.py [--gate] [sf_dir] [name ...]
+Usage: python tools/oracle_check.py [sf_dir] [name ...]
 
---gate scopes to the head-50 of queries() — exactly the rows the driver's
-real CORRECTNESS gate records (see gravitydb_spark/gate_queries.py).
-Combined with explicit names, the run is the INTERSECTION (the named
-queries that sit in the head-50), so '--gate name' never silently widens
-the scope.
+An sf_dir that is not a directory, or unknown names, are rejected (exit
+2) before a Spark session starts, so a misspelled name cannot pass by
+checking nothing.
 """
 
 from __future__ import annotations
@@ -59,28 +57,30 @@ def normalize(rows, cols):
 
 def main():
     args = sys.argv[1:]
-    gate_only = "--gate" in args
-    args = [a for a in args if a != "--gate"]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
 
+    if not os.path.isdir(sf_dir):
+        print(f"not a directory: {sf_dir}")
+        return 2
+
     from gravitydb_spark.registry import oracle_sql, queries
+
+    qs, os_ = queries(), oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"not registered: {' '.join(unknown)}")
+        return 2
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
+
     from gravitydb_spark.session import get_spark
 
     spark = get_spark(app_name="oracle_check")
     con = duck_con(sf_dir)
-    qs, os_ = queries(), oracle_sql()
-    if gate_only:
-        head50 = set(list(qs)[:50])
-        only = only & head50 if only else head50
-        if not only:
-            print("--gate with names: none of the given names are in the head-50")
-            return 1
 
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
@@ -119,7 +119,7 @@ def main():
             continue
         print(f"✓ {name} ({len(a)} rows) [{spark_s:.1f}s]")
 
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {len(qs)} queries checked")
     return 1 if failures else 0
 
 
