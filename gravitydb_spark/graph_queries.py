@@ -25,54 +25,9 @@ from .plans.compiler import execute
 from .ql import ExprFilter, pq_from_id, pq_from_to, vq_all, vq_from_ids
 from .registry import load, register
 from .schema import Prop
+from .session import _maybe_broadcast
 from .sources.ingest import ingest_graph
 from .streaming.microbatch import drive, stage_batches
-
-# ---------------------------------------------------------------------------
-# Derived broadcast discipline (r10 VERDICT weak item)
-# ---------------------------------------------------------------------------
-
-# Broadcast build budget: 64 MiB serialized — safe on a modest 4-8 GiB
-# driver/executor, far under Spark's broadcast hard cap. At ~48 B/row for
-# the 2-3 narrow (BIGINT/short-string) columns these hint sites carry,
-# that is ~1.4M rows. Below the limit the hint is kept (checkpoint/cached
-# scans have NO size stats, so without it Spark sorts the million-row edge
-# side — measured 1.6s vs 1.0s per LPA round at sf0.1); above it the hint
-# is DROPPED and the join degrades to a shuffle join co-partitioned with
-# the vertex-keyed exchange. Same derived-config contract as _ivf_params.
-_BCAST_BUDGET_BYTES = 64 * 2**20
-_BCAST_BYTES_PER_ROW = 48
-_BCAST_ROW_LIMIT = _BCAST_BUDGET_BYTES // _BCAST_BYTES_PER_ROW  # ≈1.4M
-
-
-def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
-    """Count-gated broadcast hint for entity-count-sized frames.
-
-    ``n_rows`` is a bound on the frame's row count that the caller
-    already has in hand (an exact count of a memoized/cached parent —
-    never an extra job over an uncached plan). A hard ``F.broadcast`` on
-    a vertex-sized frame is right at test SFs but a driver-OOM order at
-    100× — Spark attempts the build regardless of size when hinted. This
-    helper keeps the measured win below ``_BCAST_ROW_LIMIT`` and returns
-    the frame unhinted above it, letting AQE/stats pick the join.
-
-    Call-site contract (r11 ADVICE): state the bound's provenance in a
-    comment at every call site (which memoized count / derived config it
-    is). Setting ``GRAVITYSPARK_DEBUG_BCAST=1`` turns on a test-only
-    guard that counts the frame and asserts the supplied bound actually
-    bounds it — cheap at test SFs, never on in production paths."""
-    if os.environ.get("GRAVITYSPARK_DEBUG_BCAST") == "1":
-        actual = df.count()
-        if actual > n_rows:
-            # explicit raise, not `assert` — the guard must survive
-            # `python -O` (r12 ADVICE)
-            raise AssertionError(
-                f"_maybe_broadcast bound violated: caller claimed <="
-                f" {n_rows} rows but the frame has {actual} —"
-                f" stale/wrong provenance"
-            )
-    return F.broadcast(df) if n_rows <= _BCAST_ROW_LIMIT else df
-
 
 # ---------------------------------------------------------------------------
 # Graph construction (cached per sf_dir within a session)
@@ -2399,26 +2354,15 @@ def _strat_src_parts(depth: int = _BC_UNROLL) -> list:
     return parts
 
 
-def _betweenness_oracle_sql(
-    depth: int = _BC_UNROLL, scale: int = _BC_SCALE
-) -> str:
-    """k-source Brandes unrolled: derived source set (kk → srcs CTEs:
-    k = greatest(4, ⌊log₂ n_verts⌋ // 4) smallest custkeys in the edge
-    set — the same derivation _bc_num_sources runs), forward BFS
-    levels l0..l{depth} with integer σ path counts (NOT EXISTS
-    anti-join against the running seen set), then the backward
-    dependency recurrence d{depth}..d0 as LEFT-JOIN sums of
-    σ(v)·(scale + δ(w)) // σ(w) — the identical integer chain
-    betweenness_scaled runs."""
-    parts = [
-        """e AS MATERIALIZED (
-      SELECT DISTINCT 'c' || o_custkey AS a, 's' || l_suppkey AS b
-      FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""",
-        "und AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b, a FROM e)",
-        *_strat_src_parts(depth),
-        "l0 AS (SELECT s, s AS v, 1::BIGINT AS sig FROM srcs)",
-        "seen0 AS (SELECT s, v FROM l0)",
-    ]
+def _brandes_parts(depth: int, scale: int) -> tuple[list[str], str]:
+    """(CTEs, alld) — the unrolled Brandes chain over ``und`` from the
+    level-0 CTEs l0 (s, v, sig) / seen0: forward BFS levels
+    l1..l{depth} with integer σ path counts (NOT EXISTS anti-join
+    against the running seen set), the backward dependency recurrence
+    d{depth}..d0 as LEFT-JOIN sums of σ(v)·(scale + δ(w)) // σ(w), and
+    the UNION ALL of the d levels — the identical integer chain
+    betweenness_scaled runs, shared by both betweenness oracles."""
+    parts = []
     for L in range(1, depth + 1):
         parts.append(
             f"""l{L} AS MATERIALIZED (
@@ -2451,6 +2395,31 @@ def _betweenness_oracle_sql(
     alld = " UNION ALL ".join(
         f"SELECT * FROM d{L}" for L in range(depth + 1)
     )
+    return parts, alld
+
+
+def _betweenness_oracle_sql(
+    depth: int = _BC_UNROLL, scale: int = _BC_SCALE
+) -> str:
+    """k-source Brandes unrolled: derived source set (kk → srcs CTEs:
+    k = greatest(4, ⌊log₂ n_verts⌋ // 4) smallest custkeys in the edge
+    set — the same derivation _bc_num_sources runs), forward BFS
+    levels l0..l{depth} with integer σ path counts (NOT EXISTS
+    anti-join against the running seen set), then the backward
+    dependency recurrence d{depth}..d0 as LEFT-JOIN sums of
+    σ(v)·(scale + δ(w)) // σ(w) — the identical integer chain
+    betweenness_scaled runs."""
+    parts = [
+        """e AS MATERIALIZED (
+      SELECT DISTINCT 'c' || o_custkey AS a, 's' || l_suppkey AS b
+      FROM orders JOIN lineitem ON o_orderkey = l_orderkey)""",
+        "und AS MATERIALIZED (SELECT a, b FROM e UNION ALL SELECT b, a FROM e)",
+        *_strat_src_parts(depth),
+        "l0 AS (SELECT s, s AS v, 1::BIGINT AS sig FROM srcs)",
+        "seen0 AS (SELECT s, v FROM l0)",
+    ]
+    chain, alld = _brandes_parts(depth, scale)
+    parts += chain
     ctes = ",\n    ".join(parts)
     return f"""
     WITH {ctes},
@@ -4134,14 +4103,15 @@ def _sg_pairs(spark, sf_dir):
     return _memo_cache(spark, sf_dir, "sg_pairs", build)
 
 
-def _sg_e0(spark, sf_dir):
-    """DF[v, d, val] — the deterministic h32 embedding init, memoized."""
+def _h32_init(spark, sf_dir, tag: str, vocab) -> DataFrame:
+    """DF[v, d, val] — the deterministic h32 embedding init of the
+    vocabulary DF[v] that ``vocab()`` builds (val = h32("v:d") folded
+    into [-_SG_INIT_A, _SG_INIT_A]), memoized under ``tag``."""
     from .pipeline_queries import _h32
     from .relational_queries import _memo_cache
 
     def build():
-        voc = _rw_corpus(spark, sf_dir).select("v").distinct()
-        return voc.select(
+        return vocab().select(
             "v",
             F.explode(F.sequence(F.lit(0), F.lit(_SG_DIM - 1))).alias("d0"),
         ).select(
@@ -4158,16 +4128,27 @@ def _sg_e0(spark, sf_dir):
             .alias("val"),
         )
 
-    return _memo_cache(spark, sf_dir, "sg_e0", build)
+    return _memo_cache(spark, sf_dir, tag, build)
+
+
+def _init_rows(spark, sf_dir, tag: str, e0) -> int:
+    """|vocab|·D — the embedding-table row bound for _maybe_broadcast:
+    the exact count of the memoized init ``e0(spark, sf_dir)``, memoized
+    under ``tag``."""
+    from .relational_queries import _memo
+
+    return _memo(spark, sf_dir, tag, lambda: e0(spark, sf_dir).count())
+
+
+def _sg_e0(spark, sf_dir):
+    """The h32 init over the log-corpus vocabulary (walk vertices)."""
+    return _h32_init(
+        spark, sf_dir, "sg_e0", lambda: _rw_corpus(spark, sf_dir).select("v").distinct()
+    )
 
 
 def _sg_nvd(spark, sf_dir) -> int:
-    """|vocab|·D — the embedding-table row bound for _maybe_broadcast."""
-    from .relational_queries import _memo
-
-    return _memo(
-        spark, sf_dir, "sg_nvd", lambda: _sg_e0(spark, sf_dir).count()
-    )
+    return _init_rows(spark, sf_dir, "sg_nvd", _sg_e0)
 
 
 def _sg_wide(e):
@@ -5031,41 +5012,18 @@ def _sgf_pairs(spark, sf_dir, gamma: int | None = None):
 
 
 def _sgf_e0(spark, sf_dir):
-    """DF[v, d, val] — the full-vocab h32 init (vocab = every trade
-    vertex, the oracle's fverts), memoized."""
-    from .pipeline_queries import _h32
-    from .relational_queries import _memo_cache
-
-    def build():
-        voc = _trade_und(spark, sf_dir).select(F.col("a").alias("v")).distinct()
-        return voc.select(
-            "v",
-            F.explode(F.sequence(F.lit(0), F.lit(_SG_DIM - 1))).alias("d0"),
-        ).select(
-            "v",
-            F.col("d0").cast("long").alias("d"),
-            (
-                _h32(
-                    F.concat(F.col("v"), F.lit(":"), F.col("d0").cast("string"))
-                )
-                % (2 * _SG_INIT_A + 1)
-                - _SG_INIT_A
-            )
-            .cast("long")
-            .alias("val"),
-        )
-
-    return _memo_cache(spark, sf_dir, "sgf_e0", build)
+    """The h32 init over the full vocabulary (every trade vertex, the
+    oracle's fverts)."""
+    return _h32_init(
+        spark,
+        sf_dir,
+        "sgf_e0",
+        lambda: _trade_und(spark, sf_dir).select(F.col("a").alias("v")).distinct(),
+    )
 
 
 def _sgf_nvd(spark, sf_dir) -> int:
-    """|full vocab|·D — the embedding-table row bound for
-    _maybe_broadcast (exact count of the memoized init frame)."""
-    from .relational_queries import _memo
-
-    return _memo(
-        spark, sf_dir, "sgf_nvd", lambda: _sgf_e0(spark, sf_dir).count()
-    )
+    return _init_rows(spark, sf_dir, "sgf_nvd", _sgf_e0)
 
 
 def _sgf_embeddings(spark, sf_dir):
@@ -5629,6 +5587,31 @@ _HC_SCALE = 10**8  # r12 VERDICT #6: 10⁴ put distinct distance profiles
 # k·10⁸ ≈ 10⁹ for the production stratified-k query; int64 is 9.2·10¹⁸.
 
 
+def _bfs_level_parts(depth: int) -> tuple[list[str], str]:
+    """(CTEs, alll) — the plain multi-source BFS level chain over
+    ``und`` from the level-0 CTEs l0 (s, v) / seen0: levels
+    l1..l{depth} (NOT EXISTS anti-join against the running seen set)
+    and their UNION ALL as (s, v, lvl) — the oracle twin of
+    multi_source_bfs, shared by both harmonic oracles."""
+    parts = []
+    for L in range(1, depth + 1):
+        parts.append(
+            f"""l{L} AS MATERIALIZED (
+      SELECT DISTINCT c.s, c.v FROM (
+        SELECT l.s, u.b AS v FROM l{L - 1} l JOIN und u ON u.a = l.v) c
+      WHERE NOT EXISTS (SELECT 1 FROM seen{L - 1} p
+                        WHERE p.s = c.s AND p.v = c.v))"""
+        )
+        parts.append(
+            f"seen{L} AS (SELECT s, v FROM seen{L - 1}"
+            f" UNION ALL SELECT s, v FROM l{L})"
+        )
+    alll = " UNION ALL ".join(
+        f"SELECT s, v, {L} AS lvl FROM l{L}" for L in range(1, depth + 1)
+    )
+    return parts, alll
+
+
 def _hc_oracle_sql(depth: int = _BC_UNROLL) -> str:
     """Harmonic closeness from the CC-STRATIFIED derived source set and
     the betweenness BFS level chain (kk → ccl → srcs → l0..l{depth},
@@ -5657,21 +5640,8 @@ def _hc_oracle_sql(depth: int = _BC_UNROLL) -> str:
         "l0 AS (SELECT s, s AS v FROM srcs)",
         "seen0 AS (SELECT s, v FROM l0)",
     ]
-    for L in range(1, depth + 1):
-        parts.append(
-            f"""l{L} AS MATERIALIZED (
-      SELECT DISTINCT c.s, c.v FROM (
-        SELECT l.s, u.b AS v FROM l{L - 1} l JOIN und u ON u.a = l.v) c
-      WHERE NOT EXISTS (SELECT 1 FROM seen{L - 1} p
-                        WHERE p.s = c.s AND p.v = c.v))"""
-        )
-        parts.append(
-            f"seen{L} AS (SELECT s, v FROM seen{L - 1}"
-            f" UNION ALL SELECT s, v FROM l{L})"
-        )
-    alll = " UNION ALL ".join(
-        f"SELECT s, v, {L} AS lvl FROM l{L}" for L in range(1, depth + 1)
-    )
+    chain, alll = _bfs_level_parts(depth)
+    parts += chain
     return (
         "WITH "
         + ",\n    ".join(parts)
@@ -5682,64 +5652,23 @@ def _hc_oracle_sql(depth: int = _BC_UNROLL) -> str:
     )
 
 
-def _trade_cc(spark, sf_dir, rounds: int = _BC_UNROLL):
-    """DF[v, comp] — min-label connected components of the trade graph
-    (comp = the component's lexicographically smallest vertex id),
-    memoized per (session, sf_dir). Rounds are capped at the same
-    static unroll depth the centrality oracles use (label distance from
-    the min-id vertex ≤ the measured BFS exhaustion 3/4/4 ≤ cap 6 at
-    every probed SF — the _BC_UNROLL contract) with an early exit at
-    the fixed point, so the fixed-depth oracle chain replays the
-    run-to-convergence result exactly. One edges⋈labels equi-join +
-    a min agg per round, lineage-cut — the LPA plan shape."""
+def _trade_cc(spark, sf_dir):
+    """DF[v, comp] — connected components of the trade graph (comp = the
+    component's lexicographically smallest vertex id), memoized per
+    (session, sf_dir): operators/iterative.py:cc_labels run to its
+    fixpoint. The oracles' static _BC_UNROLL-round min-label chain
+    lands on the same labels because label distance from the min-id
+    vertex is ≤ the measured BFS exhaustion 3/4/4 ≤ cap 6 at every
+    probed SF (the _BC_UNROLL contract); the stratified sources only
+    need the component partition."""
+    from .operators.iterative import cc_labels
     from .relational_queries import _memo_cache
 
     def build():
         und = _trade_und(spark, sf_dir)
-        nv = und.select("a").distinct().count()
-        labels = (
-            und.select(F.col("a").alias("v"))
-            .distinct()
-            .select("v", F.col("v").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        for _ in range(rounds):
-            nxt = (
-                und.join(_maybe_broadcast(labels, nv), und.b == labels.v)
-                .select(und.a.alias("v"), "comp")
-                .unionByName(labels.select("v", "comp"))
-                .groupBy("v")
-                .agg(F.min("comp").alias("comp"))
-            )
-            # pointer-chase: comp ← min(comp, comp(comp)) — a VERTEX-sized
-            # self-join (cheap) that makes label distance grow
-            # multiplicatively, so the edge-sized rounds above run
-            # O(log diameter) times instead of O(diameter) (measured
-            # 13.7→~8s for the sf0.1 build). Same fixpoint (the
-            # component's min id), which is all the oracle's plain chain
-            # needs to agree on.
-            m = nxt.select(
-                F.col("v").alias("cv"), F.col("comp").alias("c2")
-            )
-            nxt = (
-                nxt.join(
-                    _maybe_broadcast(m, nv), nxt.comp == m.cv, "left"
-                )
-                .select(
-                    "v",
-                    F.least(
-                        F.col("comp"), F.coalesce("c2", "comp")
-                    ).alias("comp"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            # fixed point → every later round is a no-op; the oracle's
-            # full static unroll lands on the same labels
-            if nxt.join(labels, ["v", "comp"], "left_anti").isEmpty():
-                labels = nxt
-                break
-            labels = nxt
-        return labels
+        return cc_labels(
+            und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        ).select(F.col("id").alias("v"), F.col("component").alias("comp"))
 
     return _memo_cache(spark, sf_dir, "trade_cc", build)
 
@@ -5788,8 +5717,9 @@ def g_harmonic_closeness(spark, sf_dir):
     Sources are CC-STRATIFIED (r10 VERDICT #4): the k =
     max(4, ⌊log₂ n⌋ // 4) sample is apportioned per connected
     component — each component contributes its max(1, k·n_c // n)
-    smallest customers (component labels from the memoized _trade_cc
-    min-label propagation, mirrored as the oracle's ccl chain). On a
+    smallest customers (component labels from the memoized _trade_cc,
+    the cc_labels operator; the oracle's ccl min-label chain lands on
+    the same labels). On a
     connected graph this reduces to exactly the old k smallest
     custkeys; on a disconnected one every component is reached, so
     sampled closeness covers disjoint replicas (SCALE.md §4l caveat
@@ -5805,47 +5735,31 @@ def g_harmonic_closeness(spark, sf_dir):
     the bound.
 
     Scale posture: the forward pass is the betweenness BFS without the
-    σ bookkeeping — per level ONE (s, v)-keyed equi-join + distinct +
-    an anti-join against the seen set, lineage-cut per level; the final
+    σ bookkeeping (operators/iterative.py:multi_source_bfs) — per level
+    ONE (s, v)-keyed equi-join + distinct + an anti-join against the
+    seen set, lineage-cut per level; the final
     score is one map-side-combinable sum keyed by vertex. State is
     (k · vertices) pairs at worst — the sampling keeps k logarithmic
     in n (Brandes–Pich / Eppstein–Wang). The stratification adds the
-    CC labels (shared memo, LPA-shaped rounds) and one
+    CC labels (shared memo, O(log n) star-contraction rounds) and one
     component-partitioned rank — both vertex-keyed, nothing global."""
     und = _trade_und(spark, sf_dir)
     n_verts, m_und = und.agg(
         F.countDistinct("a").alias("n"), F.count("*").alias("m")
     ).collect()[0]
     k = _bc_num_sources(n_verts)
-    srcs = _stratified_sources(spark, sf_dir, n_verts, k)
-    frontier = srcs.select("s", F.col("s").alias("v")).localCheckpoint(
-        eager=True
-    )
-    seen = frontier
-    levels = []
-    # (s, v) frames are lineage-cut LogicalRDDs with no size stats —
-    # without a hint Spark sorts the cached 2|E|-row edge side every
-    # level (the r10 LPA lesson); both frontier and seen hold ≤ one row
-    # per (source, vertex) pair, so k·n bounds them (count-gated hint).
-    # Cuts are lazy (r12 #2): the isEmpty probe / next level's broadcast
-    # build materializes each in its own job instead of one per mark.
-    kn = k * n_verts
-    for L in range(1, _bc_depth_cap(n_verts, m_und) + 1):
-        nxt = (
-            und.join(_maybe_broadcast(frontier, kn), und.a == frontier.v)
-            .select("s", F.col("b").alias("v"))
-            .distinct()
-            .join(_maybe_broadcast(seen, kn), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if nxt.isEmpty():
-            break  # frontier exhausted (cap is only the runaway guard)
-        levels.append(nxt.withColumn("lvl", F.lit(L).cast("long")))
-        seen = seen.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    from functools import reduce as _reduce
+    from .operators.iterative import multi_source_bfs
 
-    alll = _reduce(lambda x, y: x.unionByName(y), levels)
+    srcs = _stratified_sources(spark, sf_dir, n_verts, k)
+    # frontier and seen hold ≤ one row per (source, vertex) pair, so k·n
+    # bounds them (count-gated hint); the depth cap is only the runaway
+    # guard — the BFS stops when the frontier is exhausted
+    alll = multi_source_bfs(
+        und,
+        srcs.select("s", F.col("s").alias("v")),
+        _bc_depth_cap(n_verts, m_und),
+        k * n_verts,
+    )
     return alll.groupBy(F.col("v").alias("id")).agg(
         F.sum(F.expr(f"{_HC_SCALE} DIV lvl")).cast("long").alias("hc_scaled")
     )
@@ -5924,6 +5838,37 @@ def _cev_slice(spark, sf_dir):
     return und, verts, n_sub, k, srcs
 
 
+def _cev_report(spark, n_sub, k, exact, sampled, score: str, counted: str):
+    """DF[metric, t, value] — the rows both sample-accuracy evals report:
+    the eval parameters (n_eval, k_sources, depth), the row counts of the
+    exact and sampled score frames DF[v, ``score``] as
+    ``{counted}_exact``/``{counted}_sampled``, and the top-T overlap of
+    the two rankings for T in _CEV_TOPS (ties break by v)."""
+    from functools import reduce
+
+    def count_row(metric: str, t: int, df):
+        return df.agg(F.count("*").cast("long").alias("value")).select(
+            F.lit(metric).alias("metric"), F.lit(t).cast("long").alias("t"), "value"
+        )
+
+    params = (("n_eval", n_sub), ("k_sources", k), ("depth", _BC_UNROLL))
+    rows = [
+        spark.range(1).select(
+            F.lit(metric).alias("metric"),
+            F.lit(0).cast("long").alias("t"),
+            F.lit(value).cast("long").alias("value"),
+        )
+        for metric, value in params
+    ]
+    rows.append(count_row(f"{counted}_exact", 0, exact))
+    rows.append(count_row(f"{counted}_sampled", 0, sampled))
+    for T in _CEV_TOPS:
+        tx = exact.orderBy(F.col(score).desc(), "v").limit(T).select("v")
+        ts = sampled.orderBy(F.col(score).desc(), "v").limit(T).select("v")
+        rows.append(count_row("top_overlap", T, tx.join(ts, "v")))
+    return reduce(DataFrame.unionByName, rows)
+
+
 def _hc_eval_oracle_sql(depth: int = _BC_UNROLL) -> str:
     """Exact-vs-sampled harmonic eval, mirrored: ONE BFS level chain
     from ALL slice vertices; the sampled score is the same chain
@@ -5933,21 +5878,8 @@ def _hc_eval_oracle_sql(depth: int = _BC_UNROLL) -> str:
         "l0 AS (SELECT v AS s, v FROM verts)",
         "seen0 AS (SELECT s, v FROM l0)",
     ]
-    for L in range(1, depth + 1):
-        parts.append(
-            f"""l{L} AS MATERIALIZED (
-      SELECT DISTINCT c.s, c.v FROM (
-        SELECT l.s, u.b AS v FROM l{L - 1} l JOIN und u ON u.a = l.v) c
-      WHERE NOT EXISTS (SELECT 1 FROM seen{L - 1} p
-                        WHERE p.s = c.s AND p.v = c.v))"""
-        )
-        parts.append(
-            f"seen{L} AS (SELECT s, v FROM seen{L - 1}"
-            f" UNION ALL SELECT s, v FROM l{L})"
-        )
-    alll = " UNION ALL ".join(
-        f"SELECT s, v, {L} AS lvl FROM l{L}" for L in range(1, depth + 1)
-    )
+    chain, alll = _bfs_level_parts(depth)
+    parts += chain
     parts.append(f"alll AS MATERIALIZED ({alll})")
     parts.append(
         f"""hx AS (SELECT v, sum({_HC_SCALE} // lvl)::BIGINT AS h
@@ -6021,35 +5953,14 @@ def g_harmonic_sample_eval(spark, sf_dir):
     engines compute the identical within-depth harmonic). The top-T
     lists are TakeOrdered (limit, not a global sort), the overlap is a
     T-row join, and the only collect is the 1-row n/k derivation."""
-    und, verts, n_sub, k, srcs = _cev_slice(spark, sf_dir)
-    frontier = verts.select(F.col("v").alias("s"), "v").localCheckpoint(
-        eager=True
-    )
-    seen = frontier
-    levels = []
-    # all-sources BFS state ≤ n_sub² (s, v) pairs — the bounded slice
-    # keeps this inside the broadcast budget (count-gated hint; the r10
-    # no-stats-LogicalRDD lesson), and lazy cuts let the isEmpty probe /
-    # next level's broadcast build materialize each frame in one job.
-    nn2 = n_sub * n_sub
-    for L in range(1, _BC_UNROLL + 1):
-        nxt = (
-            und.join(_maybe_broadcast(frontier, nn2), und.a == frontier.v)
-            .select("s", F.col("b").alias("v"))
-            .distinct()
-            .join(_maybe_broadcast(seen, nn2), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt.withColumn("lvl", F.lit(L).cast("long")))
-        seen = seen.unionByName(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    from functools import reduce as _reduce
+    from .operators.iterative import multi_source_bfs
 
-    alll = _reduce(lambda x, y: x.unionByName(y), levels).localCheckpoint(
-        eager=True
-    )
+    und, verts, n_sub, k, srcs = _cev_slice(spark, sf_dir)
+    # all-sources BFS state ≤ n_sub² (s, v) pairs — the bounded slice
+    # keeps this inside the broadcast budget (count-gated hint)
+    alll = multi_source_bfs(
+        und, verts.select(F.col("v").alias("s"), "v"), _BC_UNROLL, n_sub * n_sub
+    ).localCheckpoint(eager=True)
     hterm = F.sum(F.expr(f"{_HC_SCALE} DIV lvl")).cast("long").alias("h")
     hx = alll.groupBy("v").agg(hterm).localCheckpoint(eager=True)
     hs = (
@@ -6058,42 +5969,7 @@ def g_harmonic_sample_eval(spark, sf_dir):
         .agg(hterm)
         .localCheckpoint(eager=True)
     )
-
-    def lit_row(metric: str, t: int, value: int):
-        return spark.range(1).select(
-            F.lit(metric).alias("metric"),
-            F.lit(t).cast("long").alias("t"),
-            F.lit(value).cast("long").alias("value"),
-        )
-
-    rows = [
-        lit_row("n_eval", 0, n_sub),
-        lit_row("k_sources", 0, k),
-        lit_row("depth", 0, _BC_UNROLL),
-        hx.agg(F.count("*").cast("long").alias("value")).select(
-            F.lit("reached_exact").alias("metric"),
-            F.lit(0).cast("long").alias("t"),
-            "value",
-        ),
-        hs.agg(F.count("*").cast("long").alias("value")).select(
-            F.lit("reached_sampled").alias("metric"),
-            F.lit(0).cast("long").alias("t"),
-            "value",
-        ),
-    ]
-    for T in _CEV_TOPS:
-        tx = hx.orderBy(F.col("h").desc(), "v").limit(T).select("v")
-        ts = hs.orderBy(F.col("h").desc(), "v").limit(T).select("v")
-        rows.append(
-            tx.join(ts, "v")
-            .agg(F.count("*").cast("long").alias("value"))
-            .select(
-                F.lit("top_overlap").alias("metric"),
-                F.lit(T).cast("long").alias("t"),
-                "value",
-            )
-        )
-    return _reduce(lambda x, y: x.unionByName(y), rows)
+    return _cev_report(spark, n_sub, k, hx, hs, "h", "reached")
 
 
 def _bc_eval_oracle_sql(
@@ -6108,38 +5984,8 @@ def _bc_eval_oracle_sql(
         "l0 AS (SELECT v AS s, v, 1::BIGINT AS sig FROM verts)",
         "seen0 AS (SELECT s, v FROM l0)",
     ]
-    for L in range(1, depth + 1):
-        parts.append(
-            f"""l{L} AS MATERIALIZED (
-      SELECT s, v, sum(sig)::BIGINT AS sig FROM (
-        SELECT l.s, u.b AS v, l.sig
-        FROM l{L - 1} l JOIN und u ON u.a = l.v) c
-      WHERE NOT EXISTS (SELECT 1 FROM seen{L - 1} p
-                        WHERE p.s = c.s AND p.v = c.v)
-      GROUP BY s, v)"""
-        )
-        parts.append(
-            f"seen{L} AS (SELECT s, v FROM seen{L - 1}"
-            f" UNION ALL SELECT s, v FROM l{L})"
-        )
-    parts.append(
-        f"d{depth} AS (SELECT s, v, 0::BIGINT AS delta FROM l{depth})"
-    )
-    for L in range(depth - 1, -1, -1):
-        parts.append(
-            f"""d{L} AS MATERIALIZED (
-      SELECT l.s, l.v,
-             coalesce(sum((l.sig * ({scale} + dn.delta)) // ln.sig),
-                      0)::BIGINT AS delta
-      FROM l{L} l
-      LEFT JOIN und u ON u.a = l.v
-      LEFT JOIN l{L + 1} ln ON ln.s = l.s AND ln.v = u.b
-      LEFT JOIN d{L + 1} dn ON dn.s = l.s AND dn.v = u.b
-      GROUP BY l.s, l.v)"""
-        )
-    alld = " UNION ALL ".join(
-        f"SELECT * FROM d{L}" for L in range(depth + 1)
-    )
+    chain, alld = _brandes_parts(depth, scale)
+    parts += chain
     parts.append(f"alld AS MATERIALIZED ({alld})")
     parts.append(
         """bx AS (SELECT v, sum(delta)::BIGINT AS bc FROM alld
@@ -6226,44 +6072,7 @@ def g_betweenness_sample_eval(spark, sf_dir):
         .filter(F.col("bc") > 0)
         .localCheckpoint(eager=True)
     )
-
-    def lit_row(metric: str, t: int, value: int):
-        return spark.range(1).select(
-            F.lit(metric).alias("metric"),
-            F.lit(t).cast("long").alias("t"),
-            F.lit(value).cast("long").alias("value"),
-        )
-
-    rows = [
-        lit_row("n_eval", 0, n_sub),
-        lit_row("k_sources", 0, k),
-        lit_row("depth", 0, _BC_UNROLL),
-        bx.agg(F.count("*").cast("long").alias("value")).select(
-            F.lit("scored_exact").alias("metric"),
-            F.lit(0).cast("long").alias("t"),
-            "value",
-        ),
-        bs.agg(F.count("*").cast("long").alias("value")).select(
-            F.lit("scored_sampled").alias("metric"),
-            F.lit(0).cast("long").alias("t"),
-            "value",
-        ),
-    ]
-    for T in _CEV_TOPS:
-        tx = bx.orderBy(F.col("bc").desc(), "v").limit(T).select("v")
-        ts = bs.orderBy(F.col("bc").desc(), "v").limit(T).select("v")
-        rows.append(
-            tx.join(ts, "v")
-            .agg(F.count("*").cast("long").alias("value"))
-            .select(
-                F.lit("top_overlap").alias("metric"),
-                F.lit(T).cast("long").alias("t"),
-                "value",
-            )
-        )
-    from functools import reduce as _reduce
-
-    return _reduce(lambda x, y: x.unionByName(y), rows)
+    return _cev_report(spark, n_sub, k, bx, bs, "bc", "scored")
 
 
 # ---------------------------------------------------------------------------

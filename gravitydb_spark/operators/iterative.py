@@ -19,9 +19,12 @@ summation order differs between engines.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
 from ..graph import PropertyGraph
+from ..session import _maybe_broadcast
 
 __all__ = [
     "betweenness_scaled",
@@ -30,6 +33,7 @@ __all__ = [
     "connected_components",
     "hits_scaled",
     "kcore_onion",
+    "multi_source_bfs",
     "pagerank",
     "pagerank_scaled",
     "pagerank_weighted_scaled",
@@ -92,6 +96,46 @@ def bfs_distances(
                 f"{max_depth} rounds; raise max_depth"
             )
     return visited
+
+
+def multi_source_bfs(
+    und: DataFrame,
+    level0: DataFrame,
+    max_depth: int,
+    n_rows: int | None = None,
+) -> DataFrame:
+    """DF[s, v, lvl: long] — level-synchronous BFS from many sources at
+    once over a symmetrized edge DF[a, b]: ``level0`` (DF[s, v]) holds
+    each source's level-0 pairs, and the result holds every pair first
+    reached at hop ``lvl`` ≥ 1. Runs until a level comes out empty or
+    ``max_depth`` levels are built (the cap is the caller's contract,
+    not an error).
+
+    Per level ONE (s, v)-keyed equi-join + distinct + an anti-join
+    against the seen set, lineage-cut. The cuts are lazy: the
+    ``isEmpty`` probe (or the next level's broadcast build) materializes
+    each frame in its own job. ``n_rows`` bounds the frontier and the
+    seen set (each holds ≤ one row per (source, vertex) pair) for the
+    count-gated broadcast hint — a lineage-cut frame's size estimate
+    compounds level over level, so without it Spark sorts the edge side
+    every level."""
+    frontier = level0.localCheckpoint(eager=True)
+    seen = frontier
+    levels = []
+    for L in range(1, max_depth + 1):
+        nxt = (
+            und.join(_maybe_broadcast(frontier, n_rows), und.a == frontier.v)
+            .select("s", F.col("b").alias("v"))
+            .distinct()
+            .join(_maybe_broadcast(seen, n_rows), ["s", "v"], "left_anti")
+            .localCheckpoint(eager=False)
+        )
+        if nxt.isEmpty():
+            break
+        levels.append(nxt.withColumn("lvl", F.lit(L).cast("long")))
+        seen = seen.unionByName(nxt).localCheckpoint(eager=False)
+        frontier = nxt
+    return reduce(DataFrame.unionByName, levels)
 
 
 def _star_contraction(edges: DataFrame, max_iters: int) -> DataFrame:
@@ -210,12 +254,12 @@ def cc_labels(edges: DataFrame, max_iters: int = 40) -> DataFrame:
     )
 
 
-def triangle_counts(
-    edges: DataFrame, n_edges: int | None = None
-) -> DataFrame:
-    """DF[id, triangles] — per-vertex triangle participation counts over
-    the undirected simple graph induced by ``edges`` (DF[src, dst]);
-    vertices in no triangle are absent.
+def _triangles(
+    canon: DataFrame, n_edges: int | None, barrier
+) -> tuple[DataFrame, DataFrame]:
+    """(oriented, tri) — every triangle of the undirected simple graph
+    given by the canonical edge DF[a, b] (a < b, one row per edge),
+    enumerated exactly ONCE as tri = DF[x, y, z].
 
     Degree-ordered orientation (the standard MapReduce triangle count):
     orient every edge from its lower-(degree, id) endpoint to the higher
@@ -225,73 +269,87 @@ def triangle_counts(
     celebrity vertex with 10⁶ followers contributes no wedges from its
     own (huge) in-neighborhood. Three equi-joins, no driver iteration.
 
-    ``n_edges`` (r14, guide §3.1 — the k-core hint recipe): a caller-held
-    bound on the canonical edge count. The degree table (≤ 2·m rows),
-    the wedge join's build side and the closing-edge set (m rows each)
-    are agg/cached frames with no usable stats at plan time, so without
-    the hint every join is a SortMergeJoin; above the broadcast budget
-    the hint drops and the shuffle plan returns (100 TB posture)."""
-
-    def _mb(df: DataFrame, bound: int) -> DataFrame:
-        if n_edges is None:
-            return df
-        from ..graph_queries import _maybe_broadcast
-
-        return _maybe_broadcast(df, bound)
-
-    canon = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("lo"), F.greatest("src", "dst").alias("hi")
-        )
-        .distinct()
-    )
+    ``barrier`` cuts the oriented table DF[u, v, vkey] its three
+    consumers share (so the degrees are computed once); it is returned
+    so a caller that caches can release it. ``n_edges`` bounds the
+    canonical edge count: the degree table (≤ 2·m rows), the wedge
+    join's build side and the closing-edge set (m rows each) get
+    count-gated broadcast hints (without them every join is a
+    SortMergeJoin; above the broadcast budget the hint drops and the
+    shuffle plan returns)."""
+    deg_rows = None if n_edges is None else 2 * n_edges
     deg = (
-        canon.select(F.col("lo").alias("id"))
-        .unionByName(canon.select(F.col("hi").alias("id")))
+        canon.select(F.col("a").alias("id"))
+        .unionByName(canon.select(F.col("b").alias("id")))
         .groupBy("id")
         .agg(F.count("*").alias("deg"))
     )
     keyed = canon.join(
-        _mb(
-            deg.select(F.col("id").alias("lo"), F.col("deg").alias("deg_lo")),
-            2 * (n_edges or 0),
+        _maybe_broadcast(
+            deg.select(F.col("id").alias("a"), F.col("deg").alias("deg_a")),
+            deg_rows,
         ),
-        "lo",
+        "a",
     ).join(
-        _mb(
-            deg.select(F.col("id").alias("hi"), F.col("deg").alias("deg_hi")),
-            2 * (n_edges or 0),
+        _maybe_broadcast(
+            deg.select(F.col("id").alias("b"), F.col("deg").alias("deg_b")),
+            deg_rows,
         ),
-        "hi",
+        "b",
     )
-    # lo < hi lexicographically by construction, so the (deg, id) tiebreak
-    # keeps lo first on equal degrees
-    lo_first = F.col("deg_lo") <= F.col("deg_hi")
-    oriented = keyed.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        F.when(
-            lo_first, F.struct(F.col("deg_hi").alias("d"), F.col("hi").alias("i"))
+    # a < b by canonical construction, so (deg, id) ties keep a first
+    a_first = F.col("deg_a") <= F.col("deg_b")
+    oriented = barrier(
+        keyed.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(
+                a_first, F.struct(F.col("deg_b").alias("d"), F.col("b").alias("i"))
+            )
+            .otherwise(F.struct(F.col("deg_a").alias("d"), F.col("a").alias("i")))
+            .alias("vkey"),
         )
-        .otherwise(F.struct(F.col("deg_lo").alias("d"), F.col("lo").alias("i")))
-        .alias("vkey"),
-    ).cache()  # barrier: used three times below — don't recompute degrees
+    )
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     wedges = e1.join(
-        _mb(e2, n_edges or 0),
+        _maybe_broadcast(e2, n_edges),
         (F.col("e1.u") == F.col("e2.u")) & (F.col("e1.vkey") < F.col("e2.vkey")),
     ).select(
-        F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v").alias("c")
+        F.col("e1.u").alias("x"), F.col("e1.v").alias("y"), F.col("e2.v").alias("z")
     )
-    # closing edge b→c exists iff the triangle closes: key(b) < key(c) holds
-    # by wedge construction, so the oriented set contains it exactly then
-    closer = oriented.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    tri = wedges.join(_mb(closer, n_edges or 0), ["b", "c"])
+    # closing edge y→z exists iff the triangle closes: key(y) < key(z)
+    # holds by wedge construction, so the oriented set contains it
+    # exactly then
+    closer = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
+    return oriented, wedges.join(_maybe_broadcast(closer, n_edges), ["y", "z"])
+
+
+def triangle_counts(
+    edges: DataFrame, n_edges: int | None = None
+) -> DataFrame:
+    """DF[id, triangles] — per-vertex triangle participation counts over
+    the undirected simple graph induced by ``edges`` (DF[src, dst]);
+    vertices in no triangle are absent. Triangles come from
+    :func:`_triangles` (degree-ordered orientation, O(m^1.5) wedges).
+
+    ``n_edges``: a caller-held bound on the canonical edge count, for
+    the enumerator's count-gated broadcast hints. The orientation
+    barrier is a lazy ``localCheckpoint`` — no cache entry outlives the
+    call."""
+    canon = (
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .distinct()
+    )
+    _, tri = _triangles(
+        canon, n_edges, lambda df: df.localCheckpoint(eager=False)
+    )
     # one pass over the triangle set: explode the 3 member roles instead of
     # unioning three projections (a union re-evaluates the join per branch)
-    members = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
+    members = tri.select(F.explode(F.array("x", "y", "z")).alias("id"))
     return members.groupBy("id").agg(F.count("*").cast("long").alias("triangles"))
 
 
@@ -366,40 +424,16 @@ def pagerank_scaled(
         dpn       = sum(dangling rank) DIV n
         rank'     = base + (dn * (in_rank + dpn)) DIV dd
         base      = (scale * (dd - dn)) DIV (dd * n)
-    """
-    n = graph.vertices.count()
-    dn, dd = damping_num, damping_den
-    base = (scale * (dd - dn)) // (dd * n)
-    out_deg = graph.edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ranks = graph.vertices.select(
-        "id", F.lit(scale // n).cast("long").alias("rank")
+
+    This is :func:`pagerank_weighted_scaled` over unit weights: with
+    w = 1, ``(rank * w) DIV sum(w)`` is ``rank DIV deg``, and the
+    dangling set (no out-edges) and base are the same."""
+    unit = graph.edges.select(
+        F.col("src").alias("from_id"), F.col("dst").alias("to_id"), F.lit(1).alias("w")
     )
-    edges = graph.edges.select("src", "dst").localCheckpoint(eager=False)
-    for _ in range(iters):
-        contribs = (
-            edges.join(out_deg, "src")
-            .join(ranks, edges.src == ranks.id)
-            .select(F.col("dst").alias("id"), F.expr("rank DIV deg").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("in_rank"))
-        )
-        dng = _dangling_df(
-            ranks, out_deg, f"coalesce(sum(rank), cast(0 as bigint)) DIV {n}"
-        )
-        ranks = (
-            graph.vertices.select("id")
-            .join(contribs, "id", "left")
-            .crossJoin(F.broadcast(dng))
-            .select(
-                "id",
-                F.expr(
-                    f"cast({base} + ({dn} * (coalesce(in_rank, 0) + dpn)) DIV {dd}"
-                    " as bigint)"
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+    return pagerank_weighted_scaled(
+        graph.vertices, unit, iters, scale, damping_num, damping_den
+    ).select("id", F.col("rank_scaled").alias("rank"))
 
 
 def hits_scaled(
@@ -559,26 +593,20 @@ def kcore_onion(
 
     # count-gated broadcast hints (r13 opt, guide §3.1): the per-round
     # degree table and alive set are vertex-sized LogicalRDD/agg frames
-    # with no usable stats, so without a hint every round plans
-    # SortMergeJoin and sorts the edge side three times. ``n_verts``
-    # bounds both; above the broadcast budget the hint is dropped and
-    # the round degrades to the shuffle plan (100 TB posture unchanged).
-    def _mb(df: DataFrame) -> DataFrame:
-        if n_verts is None:
-            return df
-        from ..graph_queries import _maybe_broadcast
-
-        return _maybe_broadcast(df, n_verts)
-
+    # whose size estimates compound round over round, so without a hint
+    # every round plans SortMergeJoin and sorts the edge side three
+    # times. ``n_verts`` bounds both; above the broadcast budget the
+    # hint is dropped and the round degrades to the shuffle plan (100 TB
+    # posture unchanged).
     # max_rounds REMOVAL rounds are budgeted (matching the oracle's CTE
     # unroll depth exactly), plus one confirming round that must remove
     # nothing — without it a peel of depth == max_rounds would raise here
     # while the oracle converges (off-by-one between the two engines)
     for r in range(1, max_rounds + 2):
         deg = edges.groupBy("a").agg(F.count("*").alias("d"))
-        ad = alive.join(_mb(deg), alive.id == deg.a, "left").select(
-            "id", F.coalesce("d", F.lit(0)).alias("d")
-        )
+        ad = alive.join(
+            _maybe_broadcast(deg, n_verts), alive.id == deg.a, "left"
+        ).select("id", F.coalesce("d", F.lit(0)).alias("d"))
         # lazy cut: the isEmpty probe materializes it in its own job
         removed = (
             ad.filter(F.col("d") < k).select("id").localCheckpoint(eager=False)
@@ -593,8 +621,16 @@ def kcore_onion(
         )
         alive = ad.filter(F.col("d") >= k).select("id").localCheckpoint()
         edges = (
-            edges.join(_mb(alive.select(F.col("id").alias("a"))), "a", "semi")
-            .join(_mb(alive.select(F.col("id").alias("b"))), "b", "semi")
+            edges.join(
+                _maybe_broadcast(alive.select(F.col("id").alias("a")), n_verts),
+                "a",
+                "semi",
+            )
+            .join(
+                _maybe_broadcast(alive.select(F.col("id").alias("b")), n_verts),
+                "b",
+                "semi",
+            )
             .localCheckpoint(eager=False)
         )
     if not converged:
@@ -630,82 +666,31 @@ def truss_peel(
     decomposition is silently wrong (same contract as kcore_onion).
 
     Scale posture: each round's support count enumerates each surviving
-    triangle ONCE via the degree-ordered orientation triangle_counts
-    uses (orient every edge low-(degree, id) → high, wedge from
-    outgoing pairs, close against the oriented set — max out-degree
-    O(sqrt(m)), so wedge candidates are O(m^1.5) regardless of skew; a
-    hub in the pair graph contributes no wedges from its own huge
-    neighborhood), then folds each triangle's three edges back to
-    canonical (a, b) for the per-edge support groupBy;
-    ``localCheckpoint`` cuts per-round lineage and the per-round
-    orientation cache is dropped before the next round. Peel depth is
-    the cascade length, small on near-dup pair graphs (dup families
-    are dense cliques; bridges fall in round 1)."""
+    triangle ONCE with the enumerator triangle_counts uses
+    (:func:`_triangles`: degree-ordered orientation, O(m^1.5) wedge
+    candidates regardless of skew; a hub in the pair graph contributes
+    no wedges from its own huge neighborhood), then folds each
+    triangle's three edges back to canonical (a, b) for the per-edge
+    support groupBy; ``localCheckpoint`` cuts per-round lineage and the
+    per-round orientation cache is dropped before the next round. Peel
+    depth is the cascade length, small on near-dup pair graphs (dup
+    families are dense cliques; bridges fall in round 1)."""
     edges = pairs.select("a", "b").localCheckpoint(eager=False)
     thr = k - 2
     peeled = []
     converged = False
 
-    # count-gated hints (r14, the k-core recipe — guide §3.1): per round
-    # the degree table (≤ 2·m rows), wedge build side and closer set
-    # (m rows) are stats-less agg/cached frames; ``n_edges`` bounds them
-    # (edges only shrink across rounds, so the first round's bound holds
-    # for all); above the broadcast budget the hint is dropped
-    def _mb(df: DataFrame, bound: int) -> DataFrame:
-        if n_edges is None:
-            return df
-        from ..graph_queries import _maybe_broadcast
-
-        return _maybe_broadcast(df, bound)
+    # count-gated hints (r14, the k-core recipe — guide §3.1): the
+    # enumerator's degree table, wedge build side and closer set, and
+    # the per-edge support table, are bounded by ``n_edges`` (edges only
+    # shrink across rounds, so the first round's bound holds for all);
+    # above the broadcast budget the hint is dropped.
     # max_rounds REMOVAL rounds budgeted + one confirming empty round
     # (the oracle's unroll depth counts removal rounds — same off-by-one
     # contract as kcore_onion)
     for r in range(1, max_rounds + 2):
-        deg = (
-            edges.select(F.col("a").alias("id"))
-            .unionByName(edges.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count("*").alias("deg"))
-        )
-        keyed = edges.join(
-            _mb(
-                deg.select(F.col("id").alias("a"), F.col("deg").alias("deg_a")),
-                2 * (n_edges or 0),
-            ),
-            "a",
-        ).join(
-            _mb(
-                deg.select(F.col("id").alias("b"), F.col("deg").alias("deg_b")),
-                2 * (n_edges or 0),
-            ),
-            "b",
-        )
-        # a < b by canonical construction, so (deg, id) ties keep a first
-        a_first = F.col("deg_a") <= F.col("deg_b")
-        oriented = keyed.select(
-            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-            F.when(
-                a_first,
-                F.struct(F.col("deg_b").alias("d"), F.col("b").alias("i")),
-            )
-            .otherwise(
-                F.struct(F.col("deg_a").alias("d"), F.col("a").alias("i"))
-            )
-            .alias("vkey"),
-        ).cache()  # barrier: three consumers below share one degree pass
-        e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-        wedges = e1.join(
-            _mb(e2, n_edges or 0),
-            (F.col("e1.u") == F.col("e2.u"))
-            & (F.col("e1.vkey") < F.col("e2.vkey")),
-        ).select(
-            F.col("e1.u").alias("x"),
-            F.col("e1.v").alias("y"),
-            F.col("e2.v").alias("z"),
-        )
-        closer = oriented.select(F.col("u").alias("y"), F.col("v").alias("z"))
-        tri = wedges.join(_mb(closer, n_edges or 0), ["y", "z"])
+        # barrier: three consumers share one degree pass; released below
+        oriented, tri = _triangles(edges, n_edges, DataFrame.cache)
         # each triangle found exactly once → its three edges, re-canonized
         sup = (
             tri.select(
@@ -730,7 +715,7 @@ def truss_peel(
             .groupBy("a", "b")
             .agg(F.count("*").alias("sup"))
         )
-        es = edges.join(_mb(sup, n_edges or 0), ["a", "b"], "left").select(
+        es = edges.join(_maybe_broadcast(sup, n_edges), ["a", "b"], "left").select(
             "a", "b", F.coalesce("sup", F.lit(0)).alias("sup")
         )
         removed = es.filter(F.col("sup") < thr).select("a", "b").localCheckpoint()
@@ -790,20 +775,13 @@ def betweenness_scaled(
     path counts, term ≤ σ·(n+1)·scale)."""
     # count-gated broadcast hints (r13 opt, guide §3.1 + the r10 LPA
     # lesson): every per-level frame here is a lineage-cut LogicalRDD
-    # with NO size stats, so without a hint Spark plans SortMergeJoin
-    # and shuffles+sorts the edge side EVERY round. A level holds at
-    # most one row per (source, vertex) pair and the seen set is a
-    # disjoint union of levels, so ``frontier_rows`` = k·n bounds both;
-    # callers pass it from counts they already hold. Above the broadcast
-    # budget the hint is dropped and the join degrades to the shuffle
-    # plan — the 100 TB posture is unchanged.
-    def _mb(df: DataFrame) -> DataFrame:
-        if frontier_rows is None:
-            return df
-        from ..graph_queries import _maybe_broadcast
-
-        return _maybe_broadcast(df, frontier_rows)
-
+    # whose size estimate compounds level over level, so without a hint
+    # Spark plans SortMergeJoin and shuffles+sorts the edge side EVERY
+    # round. A level holds at most one row per (source, vertex) pair and
+    # the seen set is a disjoint union of levels, so ``frontier_rows`` =
+    # k·n bounds both; callers pass it from counts they already hold.
+    # Above the broadcast budget the hint is dropped and the join
+    # degrades to the shuffle plan — the 100 TB posture is unchanged.
     lev = sources.select(
         F.col("s"), F.col("s").alias("v"), F.lit(1).cast("long").alias("sig")
     ).localCheckpoint()
@@ -812,7 +790,10 @@ def betweenness_scaled(
     for _ in range(max_depth):
         cand = (
             und.join(
-                _mb(levels[-1].select("s", F.col("v").alias("a"), "sig")),
+                _maybe_broadcast(
+                    levels[-1].select("s", F.col("v").alias("a"), "sig"),
+                    frontier_rows,
+                ),
                 "a",
             )
             .select("s", F.col("b").alias("v"), "sig")
@@ -820,7 +801,7 @@ def betweenness_scaled(
         nxt = (
             cand.groupBy("s", "v")
             .agg(F.sum("sig").cast("long").alias("sig"))
-            .join(_mb(seen), ["s", "v"], "left_anti")
+            .join(_maybe_broadcast(seen, frontier_rows), ["s", "v"], "left_anti")
             # lazy cut (r13): the isEmpty probe materializes it in its
             # own job — eager cut + probe measured 4 jobs vs 2
             .localCheckpoint(eager=False)
@@ -837,15 +818,17 @@ def betweenness_scaled(
     )
     succ_edges = und.select(F.col("a").alias("v"), F.col("b").alias("w"))
     for L in range(len(levels) - 2, -1, -1):
-        wnext = levels[L + 1].join(_mb(deltas[L + 1]), ["s", "v"]).select(
+        wnext = levels[L + 1].join(
+            _maybe_broadcast(deltas[L + 1], frontier_rows), ["s", "v"]
+        ).select(
             "s",
             F.col("v").alias("w"),
             F.col("sig").alias("sig_w"),
             "delta",
         )
         contrib = (
-            succ_edges.join(_mb(levels[L]), "v")
-            .join(_mb(wnext), ["s", "w"])
+            succ_edges.join(_maybe_broadcast(levels[L], frontier_rows), "v")
+            .join(_maybe_broadcast(wnext, frontier_rows), ["s", "w"])
             .select(
                 "s",
                 "v",
@@ -858,7 +841,7 @@ def betweenness_scaled(
         deltas[L] = (
             levels[L]
             .select("s", "v")
-            .join(_mb(agg), ["s", "v"], "left")
+            .join(_maybe_broadcast(agg, frontier_rows), ["s", "v"], "left")
             .select(
                 "s",
                 "v",
@@ -869,8 +852,6 @@ def betweenness_scaled(
             # materializes the chain in one job instead of one per level
             .localCheckpoint(eager=False)
         )
-    from functools import reduce
-
     alld = reduce(DataFrame.unionByName, deltas)
     if per_source:
         # (s, v, delta) before the source fold — the sample-accuracy

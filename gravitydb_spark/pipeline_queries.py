@@ -4171,7 +4171,7 @@ def ann_knn_graph_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     degradation); the only window after scoring partitions by src.
     Scores are scaled-int ADC dots (higher = closer), ties on lowest
     nbr — identical to the ann_pq_topk contract."""
-    from .graph_queries import _maybe_broadcast
+    from .session import _maybe_broadcast
 
     cells, nprobe, _ = _ivf_params(spark, sf_dir)
     n_emb = _emb_count(spark, sf_dir)

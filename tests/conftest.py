@@ -7,6 +7,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from gravitydb_spark.session import get_spark
 
+# every count-gated broadcast hint in the suite checks its claimed row
+# bound (session._maybe_broadcast counts the frame and raises if the
+# bound is violated)
+os.environ["GRAVITYSPARK_DEBUG_BCAST"] = "1"
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -191,6 +191,25 @@ def test_truss_peel_cascade_two_rounds(spark):
     }
 
 
+def test_triangle_and_truss_leave_no_cache_entry(spark):
+    """Neither kernel leaves a cached frame behind: triangle_counts cuts
+    its orientation with a lazy localCheckpoint, truss_peel releases its
+    per-round cache."""
+    from gravitydb_spark.operators.iterative import triangle_counts, truss_peel
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    e = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    before = cm.numCachedEntries()
+    got = {r["id"]: r["triangles"] for r in triangle_counts(e, n_edges=4).collect()}
+    assert got == {"a": 1, "b": 1, "c": 1}
+    assert cm.numCachedEntries() == before
+    pairs = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    assert len(truss_peel(pairs, k=3, n_edges=4).collect()) == 4
+    assert cm.numCachedEntries() == before
+
+
 def test_truss_peel_unconverged_raises(spark):
     import pytest as _pytest
 

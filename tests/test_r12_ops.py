@@ -270,15 +270,16 @@ def test_maybe_broadcast_debug_guard(spark):
     from gravitydb_spark import graph_queries as gq
 
     df = spark.range(100).select(F.col("id"))
-    os.environ["GRAVITYSPARK_DEBUG_BCAST"] = "1"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("GRAVITYSPARK_DEBUG_BCAST", "1")
         # correct bound: passes and returns a hinted frame
         out = gq._maybe_broadcast(df, 100)
         assert out.count() == 100
         # stale bound (claims fewer rows than the frame has): asserts
         with pytest.raises(AssertionError, match="bound violated"):
             gq._maybe_broadcast(df, 10)
-    finally:
-        os.environ.pop("GRAVITYSPARK_DEBUG_BCAST", None)
-    # guard off: no count job, no assert, hint applied below the limit
-    assert gq._maybe_broadcast(df, 10).count() == 100
+    # guard off (for this assertion only): no count job, no assert, hint
+    # applied below the limit
+    with pytest.MonkeyPatch.context() as mp:
+        mp.delenv("GRAVITYSPARK_DEBUG_BCAST", raising=False)
+        assert gq._maybe_broadcast(df, 10).count() == 100
