@@ -16,6 +16,7 @@ Property payloads: the entity names (c_name / s_name / n_name / r_name).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,7 +28,7 @@ from .registry import load, register
 from .schema import Prop
 from .session import _maybe_broadcast
 from .sources.ingest import ingest_graph
-from .streaming.microbatch import drive, stage_batches
+from .streaming.microbatch import drive, signed_fold, stage_batches
 
 # ---------------------------------------------------------------------------
 # Graph construction (cached per sf_dir within a session)
@@ -570,6 +571,58 @@ def _land_graph_batches(gp: str, g, n: int = 3) -> None:
         )
 
 
+def _maintain_degrees(spark, stage: str, schema, work: str):
+    """The degree store shared by the maintained-degree demos: per-vertex
+    (out, in) degrees over the edge micro-batches staged at ``stage``.
+    Each foreachBatch appends the batch's SIGNED degree deltas (an
+    ``op`` column of ±1; a feed without one inserts every edge) and
+    folds them by vertex in the same publication. Returns the view
+    (id, out_degree, in_degree) without the vertices whose degrees net
+    to zero."""
+    from .transaction import DatasetStore
+
+    store = DatasetStore(os.path.join(work, "deg"))
+
+    def fold(df):
+        return df.groupBy("id").agg(
+            F.sum("dout").cast("long").alias("dout"),
+            F.sum("din").cast("long").alias("din"),
+        )
+
+    def handle(batch_df, bid) -> None:
+        sign = (F.col("op") if "op" in batch_df.columns else F.lit(1)).cast("long")
+        ends = batch_df.select(
+            F.col("src").alias("id"),
+            sign.alias("dout"),
+            F.lit(0).cast("long").alias("din"),
+        ).unionByName(
+            batch_df.select(
+                F.col("dst").alias("id"),
+                F.lit(0).cast("long").alias("dout"),
+                sign.alias("din"),
+            )
+        )
+        # bid-gated: degree deltas are additive sums, so an
+        # at-least-once foreachBatch replay would double-count (or
+        # double-subtract) them without the bid high-water-mark guard
+        # (r6 VERDICT #1)
+        store.append_compact_once(
+            spark, fold(ends), bid, min_deltas=2, transform=fold
+        )
+
+    drive(stage, handle, schema=schema, checkpoint=os.path.join(work, "ckpt_edges"))
+    return (
+        fold(store.load(spark))
+        # fully-netted vertices vanish (the deletion semantics)
+        .filter((F.col("dout") != 0) | (F.col("din") != 0))
+        .select(
+            "id",
+            F.col("dout").alias("out_degree"),
+            F.col("din").alias("in_degree"),
+        )
+    )
+
+
 @register(
     "g_degrees_maintained",
     oracle="""
@@ -615,52 +668,25 @@ def g_degrees_maintained(spark, sf_dir):
     Scale posture: per batch, work is batch-sized (map-side partial
     aggs) + a key-proportional fold at compaction; state lives on
     storage, not executors — the same IVM shape as the 100 TB rollup."""
-    import shutil
-    import tempfile
-
     from .graph import EDGES_SCHEMA, VERTICES_SCHEMA
     from .transaction import DatasetStore
 
     g = tpch_graph(spark, sf_dir)
     props = g.properties.select("prop_hash", "schema_type")
-    work = tempfile.mkdtemp(prefix="gravityspark_gdm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_gdm_", ignore_cleanup_errors=True
+    ) as work:
         gp = os.path.join(work, "graph")
         _land_graph_batches(gp, g)
+        degrees = _maintain_degrees(
+            spark, os.path.join(gp, "edges"), EDGES_SCHEMA, work
+        )
 
-        deg_store = DatasetStore(os.path.join(work, "deg"))
         type_store = DatasetStore(os.path.join(work, "types"))
-
-        def fold_deg(df):
-            return df.groupBy("id").agg(
-                F.sum("dout").cast("long").alias("dout"),
-                F.sum("din").cast("long").alias("din"),
-            )
 
         def fold_types(df):
             return df.groupBy("schema_type").agg(
                 F.sum("n").cast("long").alias("n")
-            )
-
-        def on_edges(batch_df, bid) -> None:
-            ends = batch_df.select(
-                F.col("src").alias("id"),
-                F.lit(1).cast("long").alias("dout"),
-                F.lit(0).cast("long").alias("din"),
-            ).unionByName(
-                batch_df.select(
-                    F.col("dst").alias("id"),
-                    F.lit(0).cast("long").alias("dout"),
-                    F.lit(1).cast("long").alias("din"),
-                )
-            )
-            # append_once: degree deltas are additive sums, so an
-            # at-least-once foreachBatch replay would double-count them
-            # without the bid high-water-mark guard (r6 VERDICT #1).
-            # r14: append + same-batch fold in ONE publication/action
-            # (min_deltas=2 fired the fold nearly every batch)
-            deg_store.append_compact_once(
-                spark, fold_deg(ends), bid, min_deltas=2, transform=fold_deg
             )
 
         def on_vertices(batch_df, bid) -> None:
@@ -673,21 +699,11 @@ def g_degrees_maintained(spark, sf_dir):
                 spark, part, bid, min_deltas=2, transform=fold_types
             )
 
-        for sub, handler, schema in (
-            ("edges", on_edges, EDGES_SCHEMA),
-            ("vertices", on_vertices, VERTICES_SCHEMA),
-        ):
-            drive(
-                os.path.join(gp, sub),
-                handler,
-                schema=schema,
-                checkpoint=os.path.join(work, f"ckpt_{sub}"),
-            )
-
-        degrees = fold_deg(deg_store.load(spark)).select(
-            "id",
-            F.col("dout").alias("out_degree"),
-            F.col("din").alias("in_degree"),
+        drive(
+            os.path.join(gp, "vertices"),
+            on_vertices,
+            schema=VERTICES_SCHEMA,
+            checkpoint=os.path.join(work, "ckpt_vertices"),
         )
         types = fold_types(type_store.load(spark)).select(
             F.concat(F.lit("type:"), F.col("schema_type")).alias("id"),
@@ -697,8 +713,6 @@ def g_degrees_maintained(spark, sf_dir):
         # materialized-view READ: key-proportional rows; localize before
         # the temp stores vanish
         return degrees.unionByName(types).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -733,70 +747,24 @@ def g_degrees_retractions(spark, sf_dir):
 
     Oracle = per-vertex degrees of the surviving graph (customer→nation
     and nation→region edges only), derived relationally."""
-    import shutil
-    import tempfile
-
-    from .transaction import DatasetStore
-
-    g = tpch_graph(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_gdr_")
-    try:
-        stage = os.path.join(work, "stage")
-        edges = g.edges.select("edge_id", "src", "dst")
-        batches = [
-            edges.filter(
-                F.pmod(F.xxhash64(F.col("edge_id")), F.lit(3)) == b
-            ).withColumn("op", F.lit(1).cast("int"))
-            for b in range(3)
-        ] + [
-            edges.filter(F.col("src").startswith("s")).withColumn(
-                "op", F.lit(-1).cast("int")
-            )
-        ]
-        feed_schema = stage_batches(batches, stage)
-
-        store = DatasetStore(os.path.join(work, "deg"))
-
-        def fold(df):
-            return df.groupBy("id").agg(
-                F.sum("dout").cast("long").alias("dout"),
-                F.sum("din").cast("long").alias("din"),
-            )
-
-        def handle(batch_df, bid) -> None:
-            ends = batch_df.select(
-                F.col("src").alias("id"),
-                F.col("op").cast("long").alias("dout"),
-                F.lit(0).cast("long").alias("din"),
-            ).unionByName(
-                batch_df.select(
-                    F.col("dst").alias("id"),
-                    F.lit(0).cast("long").alias("dout"),
-                    F.col("op").cast("long").alias("din"),
-                )
-            )
-            # signed additive deltas — replay guard (r6 VERDICT #1): a
-            # replayed retraction batch must not subtract twice. r14:
-            # append + same-batch fold in ONE publication/action
-            store.append_compact_once(
-                spark, fold(ends), bid, min_deltas=2, transform=fold
-            )
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        view = (
-            fold(store.load(spark))
-            # fully-netted vertices vanish (the deletion semantics)
-            .filter((F.col("dout") != 0) | (F.col("din") != 0))
-            .select(
-                "id",
-                F.col("dout").alias("out_degree"),
-                F.col("din").alias("in_degree"),
-            )
+    edges = tpch_graph(spark, sf_dir).edges.select("edge_id", "src", "dst")
+    batches = [
+        edges.filter(
+            F.pmod(F.xxhash64(F.col("edge_id")), F.lit(3)) == b
+        ).withColumn("op", F.lit(1).cast("int"))
+        for b in range(3)
+    ] + [
+        edges.filter(F.col("src").startswith("s")).withColumn(
+            "op", F.lit(-1).cast("int")
         )
+    ]
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_gdr_", ignore_cleanup_errors=True
+    ) as work:
+        stage = os.path.join(work, "stage")
+        feed_schema = stage_batches(batches, stage)
+        view = _maintain_degrees(spark, stage, feed_schema, work)
         return view.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _CC_MERGE_BUCKETS = 8
@@ -850,17 +818,15 @@ def g_cc_maintained(spark, sf_dir):
     once per K batches, not per batch. test_ivm_replay-style probe
     evidence lives in tests/test_cc_maintenance.py: per-batch
     maintenance bytes track the delta, not the view."""
-    import shutil
-    import tempfile
-
     from .graph import EDGES_SCHEMA, VERTICES_SCHEMA
     from .operators.iterative import cc_labels
     from .transaction import DatasetStore
 
     nb = _CC_MERGE_BUCKETS
     g = tpch_graph(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_gcm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_gcm_", ignore_cleanup_errors=True
+    ) as work:
         gp = os.path.join(work, "graph")
         _land_graph_batches(gp, g)
 
@@ -1024,8 +990,6 @@ def g_cc_maintained(spark, sf_dir):
                 "id", F.coalesce("component", "id").alias("component")
             )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _CC_RETRACT_ORACLE = """
@@ -1706,15 +1670,13 @@ def g_cc_retractions(spark, sf_dir):
     The reference has no changefeed surface (SURVEY §2.9 mandates the
     analog); the repair policy realizes what COVERAGE.md documented as
     out-of-IVM-scope for g_cc_maintained."""
-    import shutil
-    import tempfile
-
     g = tpch_graph(spark, sf_dir)
     # label/edge-log/forest fanout derived from graph size (floored at
     # the demo constant — the same layout-scaling rule as _state_fanout)
     nb = max(_CC_MERGE_BUCKETS, min(65536, g.edges.count() // 1_000_000))
-    work = tempfile.mkdtemp(prefix="gravityspark_gccr_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_gccr_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         edges = g.edges.select("edge_id", "src", "dst")
         doomed = (F.col("src").startswith("n")) & (F.col("dst") == "r0")
@@ -1752,8 +1714,6 @@ def g_cc_retractions(spark, sf_dir):
                 "id", F.coalesce("component", "id").alias("component")
             )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2990,8 +2950,6 @@ def g_triangles_retractions(spark, sf_dir):
     set). Like dedup_pair_triangles' orientation bound, wedge work is
     delta-bounded: the batch's endpoints, not the corpus, drive every
     join."""
-    import shutil
-    import tempfile
     from functools import reduce
 
     from .transaction import DatasetStore
@@ -3057,8 +3015,9 @@ def g_triangles_retractions(spark, sf_dir):
         ),
         signed(cr.filter(F.col("c_custkey") % 10 == 0).select("x", "y"), -1),
     ]
-    work = tempfile.mkdtemp(prefix="gravityspark_triret_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_triret_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(batches, stage)
 
@@ -3073,18 +3032,10 @@ def g_triangles_retractions(spark, sf_dir):
         view = DatasetStore(os.path.join(work, "view"))
 
         def fold_adj(df):
-            return (
-                df.groupBy("v", "nb", "vb")
-                .agg(F.sum("m").cast("long").alias("m"))
-                .filter(F.col("m") != 0)
-            )
+            return signed_fold(df, ["v", "nb", "vb"], "m")
 
         def fold_view(df):
-            return (
-                df.groupBy("id")
-                .agg(F.sum("t").cast("long").alias("t"))
-                .filter(F.col("t") != 0)
-            )
+            return signed_fold(df, ["id"], "t")
 
         def handle(batch_df, bid) -> None:
             dE = batch_df.select("lo", "hi", "d").localCheckpoint(eager=True)
@@ -3214,8 +3165,6 @@ def g_triangles_retractions(spark, sf_dir):
             .select("id", F.col("t").alias("triangles"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -6275,17 +6224,13 @@ def g_lpa_maintained(spark, sf_dir):
     handled by the same ball-scoped protocol in :func:`g_lpa_retractions`
     (r11 VERDICT #3 — a delete's influence is also ball-bounded, see
     the exactness argument in :func:`_lpa_maintain_run`)."""
-    import shutil
-    import tempfile
-
     g = tpch_graph(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_glpam_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_glpam_", ignore_cleanup_errors=True
+    ) as work:
         gp = os.path.join(work, "graph")
         _land_graph_batches(gp, g)
         return _lpa_maintain_run(spark, work, gp)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register("g_lpa_retractions", oracle=_lpam_oracle_sql())
@@ -6314,17 +6259,13 @@ def g_lpa_retractions(spark, sf_dir):
     compaction nets ±1 pairs away so retracted edges cost no bytes at
     rest — the stream_rollup_retractions discipline applied to the
     graph feed)."""
-    import shutil
-    import tempfile
-
     g = tpch_graph(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_glpar_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_glpar_", ignore_cleanup_errors=True
+    ) as work:
         gp = os.path.join(work, "graph")
         _land_lpa_retraction_batches(spark, sf_dir, gp, g)
         return _lpa_maintain_run(spark, work, gp, edge_ops=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _land_lpa_retraction_batches(spark, sf_dir, gp, g) -> None:
@@ -6470,18 +6411,14 @@ def _lpa_maintain_run(spark, work: str, gp: str, edge_ops: bool = False):
             if e is None:
                 return None
             return (
-                e.groupBy("a", "b")
-                .agg(F.sum("op_m").alias("m"))
-                .filter(F.col("m") > 0)
+                signed_fold(e, ["a", "b"], "op_m")
+                .filter(F.col("op_m") > 0)
                 .select("a", "b")
             )
 
         def _edges_fold(d):
-            return (
-                d.groupBy("a", "b", "pb")
-                .agg(F.sum("op_m").cast("long").alias("op_m"))
-                .filter(F.col("op_m") != 0)
-                .select("a", "b", "op_m", "pb")
+            return signed_fold(d, ["a", "b", "pb"], "op_m").select(
+                "a", "b", "op_m", "pb"
             )
 
         def on_edges(batch_df, bid) -> None:

@@ -16,13 +16,14 @@ bit-identical; minhash takes lexicographic min over hex strings.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from .registry import REGISTRY, load, register
-from .streaming.microbatch import drive, stage_batches
+from .streaming.microbatch import drive, signed_fold, stage_batches
 
 # Explicit whitespace class shared by every tokenizer/normalizer regex on
 # BOTH engines: Java's \s includes \x0B (vertical tab) while RE2's does
@@ -3298,6 +3299,13 @@ def _pq_kernels(book: dict):
     return encode, lut
 
 
+# the LUT kernels' output: per query, one dot table per PQ subspace
+_PQ_LUT_SCHEMA = T.StructType(
+    [T.StructField("q_id", T.LongType())]
+    + [T.StructField(f"lut{m}", T.ArrayType(T.LongType())) for m in range(PQ_M)]
+)
+
+
 def _pq_code_frames(
     spark: SparkSession, sf_dir: str, all_queries: bool = False
 ):
@@ -3309,24 +3317,15 @@ def _pq_code_frames(
     the LUT frame is n·M·K ints, count-gated at the join site)."""
     import pandas as pd  # noqa: F401 -- Arrow path requirement
 
-    from pyspark.sql import types as T
-
     encode, lut = _pq_kernels(_pq_codebook(spark, sf_dir))
     e = load(spark, sf_dir, "embeddings")
     codes_schema = T.StructType(
         [T.StructField("vec_id", T.LongType())]
         + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
     )
-    lut_schema = T.StructType(
-        [T.StructField("q_id", T.LongType())]
-        + [
-            T.StructField(f"lut{m}", T.ArrayType(T.LongType()))
-            for m in range(PQ_M)
-        ]
-    )
     codes = e.select("vec_id", "embedding").mapInPandas(encode, codes_schema)
     qsrc = e if all_queries else e.filter(F.col("vec_id") < ANN_N_QUERIES)
-    qlut = qsrc.select("vec_id", "embedding").mapInPandas(lut, lut_schema)
+    qlut = qsrc.select("vec_id", "embedding").mapInPandas(lut, _PQ_LUT_SCHEMA)
     return codes, qlut
 
 
@@ -3451,6 +3450,42 @@ def _pq_rerank_oracle() -> str:
     """
 
 
+def _exact_rerank(emb: DataFrame, shortlist: DataFrame) -> DataFrame:
+    """The exact re-rank of an ADC ``shortlist`` (q_id, vec_id): each
+    candidate re-scored with exact cosine (rounded to 3 places) against
+    the raw embeddings ``emb``, top-{ANN_K} (q_id, vec_id, cosine, rnk)
+    per query. The shortlist is broadcast (queries × shortlist depth
+    rows), so the corpus side prunes by the equi-join; its q_id
+    universe is the query set by construction."""
+    v = F.col("embedding").cast("array<double>")
+    qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), v.alias("qv")
+    )
+    exact = (
+        emb.select("vec_id", v.alias("v"))
+        .join(F.broadcast(shortlist), "vec_id")
+        .join(F.broadcast(qv), "q_id")
+        .select(
+            "q_id",
+            "vec_id",
+            F.round(
+                _dot(F.col("qv"), F.col("v"))
+                / (
+                    F.sqrt(_dot(F.col("qv"), F.col("qv")))
+                    * F.sqrt(_dot(F.col("v"), F.col("v")))
+                ),
+                3,
+            ).alias("cosine"),
+        )
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    return (
+        exact.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= ANN_K)
+        .select("q_id", "vec_id", "cosine", "rnk")
+    )
+
+
 @register("ann_pq_rerank_topk", oracle=_pq_rerank_oracle())
 def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ + EXACT RE-RANK -- the standard two-stage ANN serving stack:
@@ -3491,36 +3526,7 @@ def ann_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     shortlist = _memo(spark, sf_dir, "pq_shortlist", build)
-    e = load(spark, sf_dir, "embeddings").withColumn(
-        "v", F.col("embedding").cast("array<double>")
-    )
-    # the shortlist's q_id universe IS the query set by construction
-    qv = e.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    exact = (
-        e.select("vec_id", "v")
-        .join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v"))
-                / (
-                    F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(_dot(F.col("v"), F.col("v")))
-                ),
-                3,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ANN_K)
-        .select("q_id", "vec_id", "cosine", "rnk")
-    )
+    return _exact_rerank(load(spark, sf_dir, "embeddings"), shortlist)
 
 
 def _hyperplane_signs() -> list[list[float]]:
@@ -4286,14 +4292,12 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch's cells. Production amortizes further by micro-batching
     per cell (recompute once per cell per window), the same cadence
     trade the compaction protocol already makes."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore, append_fused
 
     emb = load(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="gravityspark_knnidx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_knnidx_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(
             [
@@ -4407,8 +4411,6 @@ def stream_knn_graph_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "nbr", "cosine", "rnk")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 
@@ -4454,14 +4456,12 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch × cells broadcast window); the query path touches a constant
     ~1/8 of the index via partition pruning; compaction folds per
     cell. State lives on storage, not executors."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore
 
     emb = load(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="gravityspark_annidx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_annidx_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(
             [
@@ -4551,8 +4551,6 @@ def stream_ann_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("q_id", "vec_id", "cosine", "rnk")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # Residual IVFPQ (r7 VERDICT directive #2): the coarse quantizer is
@@ -4651,7 +4649,8 @@ def _ivfpq_kernels(cents, book, nprobe: int = IVF_NPROBE_MIN):
     """The Arrow-vectorized residual-IVFPQ kernels, closed over the
     trained coarse centroids and residual codebook as numpy constants:
 
-    - ``encode``: corpus batch → (vec_id, cell, pos0..pos{PQ_M - 1}) —
+    - ``encode``: corpus batch → (vec_id, cell, pos0..pos{PQ_M - 1}),
+      plus the batch's ``op`` column when it has one —
       coarse-assign (argmin L2, first-min == lowest cl), subtract the
       centroid, PQ-encode the residual. Cell ids are positions into the
       cl-ordered centroid list (same convention as the pos codes).
@@ -4665,7 +4664,6 @@ def _ivfpq_kernels(cents, book, nprobe: int = IVF_NPROBE_MIN):
     """
     import numpy as np
 
-    cl_sorted = [cl for cl, _ in cents]
     CIV = np.array(
         [
             [vec[(m, i)] for m in range(PQ_M) for i in range(1, PQ_SUB + 1)]
@@ -4700,6 +4698,8 @@ def _ivfpq_kernels(cents, book, nprobe: int = IVF_NPROBE_MIN):
                 rm = r[:, m * PQ_SUB : (m + 1) * PQ_SUB]
                 d = ((rm[:, None, :] - RC[m][None, :, :]) ** 2).sum(axis=2)
                 out[f"pos{m}"] = (np.argmin(d, axis=1) + 1).astype("int32")
+            if "op" in pdf:
+                out["op"] = pdf["op"]
             yield pd.DataFrame(out)
 
     def probe(batches):
@@ -4735,7 +4735,6 @@ def _ivfpq_kernels(cents, book, nprobe: int = IVF_NPROBE_MIN):
                 out[f"lut{m}"] = list(xm @ RC[m].T)
             yield pd.DataFrame(out)
 
-    del cl_sorted  # cell ids are list positions; cl values stay internal
     return encode, probe, lut
 
 
@@ -4880,6 +4879,51 @@ def _ivfpq_oracle(corpus_pred: str = "TRUE") -> str:
     """
 
 
+_IVFPQ_CODES_SCHEMA = T.StructType(
+    [T.StructField("vec_id", T.LongType()), T.StructField("cell", T.IntegerType())]
+    + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
+)
+
+
+def _ivfpq_serve(
+    emb: DataFrame, codes: DataFrame, probes: DataFrame, lut, shortlist: int
+) -> DataFrame:
+    """The IVFPQ serve path: ADC-score the ``codes`` (vec_id, cell,
+    pos*) of each query's probed cells (``probes``: q_id, cell, qcdot)
+    as dot(q, centroid) + Σ LUT[residual code], keep each query's
+    top-``shortlist`` by ADC score, and re-rank that shortlist with
+    exact cosine against the raw embeddings ``emb``: the top-{ANN_K}
+    (q_id, vec_id, cosine, rnk) per query. Probes and LUTs are
+    query-sized kernel outputs, broadcast; the only corpus-sized
+    Exchange is the per-query shortlist window."""
+    qlut = (
+        emb.filter(F.col("vec_id") < ANN_N_QUERIES)
+        .select("vec_id", "embedding")
+        .mapInPandas(lut, _PQ_LUT_SCHEMA)
+    )
+    scored = (
+        codes.join(F.broadcast(probes), "cell")
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .join(F.broadcast(qlut), "q_id")
+        .select(
+            "q_id",
+            "vec_id",
+            (F.col("qcdot") + _pq_adc_score_expr())
+            .cast("long")
+            .alias("score_scaled"),
+        )
+    )
+    w_sl = Window.partitionBy("q_id").orderBy(
+        F.desc("score_scaled"), F.asc("vec_id")
+    )
+    top = (
+        scored.withColumn("rn", F.row_number().over(w_sl))
+        .filter(F.col("rn") <= shortlist)
+        .select("q_id", "vec_id")
+    )
+    return _exact_rerank(emb, top)
+
+
 @register("ann_ivfpq_topk", oracle=_ivfpq_oracle())
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RESIDUAL IVFPQ — the FAISS-standard serving composition (r6
@@ -4900,88 +4944,114 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas projection over the corpus scan — the corpus-sized
     assignment window Exchange of the raw-vector formulation is GONE
     (argmin over the broadcast centroid constants happens inside the
-    kernel); probes and LUTs are query-sized kernel outputs, broadcast;
-    ADC is the qcdot + element_at sum in one JVM projection; the only
-    corpus-sized Exchange left is the per-query shortlist window.
+    kernel); the rest is :func:`_ivfpq_serve`, shared with the
+    maintained index twins.
     Oracle replays coarse Lloyd + assignment + residual-PQ training +
     in-cell ADC + exact re-rank bit-exactly (same scaled-BIGINT
     arithmetic, argmin ties on lowest cl, probe ties on lowest cl)."""
-    from pyspark.sql import types as T
-
-    emb = load(spark, sf_dir, "embeddings").withColumn(
-        "v", F.col("embedding").cast("array<double>")
-    )
+    emb = load(spark, sf_dir, "embeddings")
     cents, book = _ivfpq_model(spark, sf_dir)
     _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
     encode, probe, lut = _ivfpq_kernels(cents, book, _nprobe)
-    codes_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cell", T.IntegerType()),
-        ]
-        + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
+    codes = emb.select("vec_id", "embedding").mapInPandas(encode, _IVFPQ_CODES_SCHEMA)
+    probes = (
+        emb.filter(F.col("vec_id") < ANN_N_QUERIES)
+        .select("vec_id", "embedding")
+        .mapInPandas(probe, "q_id long, cell int, qcdot long")
     )
-    lut_schema = T.StructType(
-        [T.StructField("q_id", T.LongType())]
-        + [
-            T.StructField(f"lut{m}", T.ArrayType(T.LongType()))
-            for m in range(PQ_M)
-        ]
-    )
-    codes = emb.select("vec_id", "embedding").mapInPandas(
-        encode, codes_schema
-    )
-    qemb = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        "vec_id", "embedding"
-    )
-    probes = qemb.mapInPandas(probe, "q_id long, cell int, qcdot long")
-    qlut = qemb.mapInPandas(lut, lut_schema)
-    scored = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .join(F.broadcast(qlut), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            (F.col("qcdot") + _pq_adc_score_expr())
-            .cast("long")
-            .alias("score_scaled"),
+    return _ivfpq_serve(emb, codes, probes, lut, _shortlist)
+
+
+# deleted vectors for the retraction variant: every 5th corpus vector
+# (queries excluded — they are the probe workload, not index content)
+_ANN_DEL_MOD, _ANN_DEL_REM = 5, 4
+_ANN_DEL_PRED_SQL = (
+    f"NOT (cd.vec_id % {_ANN_DEL_MOD} = {_ANN_DEL_REM}"
+    f" AND cd.vec_id >= {ANN_N_QUERIES})"
+)
+
+
+def _ivfpq_upkeep(
+    spark: SparkSession, sf_dir: str, prefix: str, retract=None
+) -> DataFrame:
+    """The maintained residual-IVFPQ index body: {_ANN_UPKEEP_BATCHES}
+    insert micro-batches (``vec_id % {_ANN_UPKEEP_BATCHES} = b``, op
+    'i'), then, when ``retract`` (a Column predicate over embeddings) is
+    given, one batch forgetting those vectors (op 'd'). Every row runs
+    the fused encode kernel; a tombstone stores only (vec_id, cell). The
+    cell-partitioned store folds to one row per vector every 3 deltas
+    and at read, and the live codes are served by :func:`_ivfpq_serve`."""
+    from .transaction import DatasetStore
+
+    emb = load(spark, sf_dir, "embeddings")
+    feed = [
+        emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b).withColumn(
+            "op", F.lit("i")
         )
-    )
-    w_sl = Window.partitionBy("q_id").orderBy(
-        F.desc("score_scaled"), F.asc("vec_id")
-    )
-    shortlist = (
-        scored.withColumn("rn", F.row_number().over(w_sl))
-        .filter(F.col("rn") <= _shortlist)
-        .select("q_id", "vec_id")
-    )
-    qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
-    )
-    exact = (
-        emb.select("vec_id", "v")
-        .join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(qv), "q_id")
-        .select(
-            "q_id",
-            "vec_id",
-            F.round(
-                _dot(F.col("qv"), F.col("v"))
-                / (
-                    F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(_dot(F.col("v"), F.col("v")))
+        for b in range(_ANN_UPKEEP_BATCHES)
+    ]
+    if retract is not None:
+        feed.append(emb.filter(retract).withColumn("op", F.lit("d")))
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as work:
+        stage = os.path.join(work, "stage")
+        feed_schema = stage_batches(feed, stage)
+
+        cents, book = _ivfpq_model(spark, sf_dir)
+        _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
+        encode, probe, lut = _ivfpq_kernels(cents, book, _nprobe)
+        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",))
+
+        pos = [f"pos{m}" for m in range(PQ_M)]
+
+        def drop_codes(d: DataFrame) -> DataFrame:  # tombstones: id + cell
+            return d.select(
+                "vec_id",
+                "cell",
+                *[F.when(F.col("op") == "i", F.col(c)).alias(c) for c in pos],
+                "op",
+            )
+
+        def fold(d: DataFrame) -> DataFrame:
+            # one row per vector, op 'd' ('d' < 'i') when any tombstone
+            # exists — forget physically drops the code bytes. Adds of
+            # one vector are identical (content-deterministic), so max
+            # picks their codes.
+            return drop_codes(
+                d.groupBy("vec_id").agg(
+                    F.max("cell").alias("cell"),
+                    F.min("op").alias("op"),
+                    *[F.max(c).alias(c) for c in pos],
+                )
+            )
+
+        def handle(batch_df, _bid) -> None:
+            # assignment + residual encoding fuse into the one Arrow
+            # kernel — cell comes out of the encode pass, no join
+            codes = batch_df.select("vec_id", "embedding", "op").mapInPandas(
+                encode,
+                T.StructType(
+                    _IVFPQ_CODES_SCHEMA.fields + [T.StructField("op", T.StringType())]
                 ),
-                3,
-            ).alias("cosine"),
+            )
+            store.append_compact_once(
+                spark, drop_codes(codes), min_deltas=3, transform=fold
+            )
+
+        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
+
+        # ---- query path over the live codes ----
+        probes = (
+            emb.filter(F.col("vec_id") < ANN_N_QUERIES)
+            .select("vec_id", "embedding")
+            .mapInPandas(probe, "q_id long, cell int, qcdot long")
+            .localCheckpoint(eager=True)  # feeds pruning collect + join
         )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= ANN_K)
-        .select("q_id", "vec_id", "cosine", "rnk")
-    )
+        cells = [r.cell for r in probes.select("cell").distinct().collect()]
+        idx = fold(store.load(spark, where=F.col("cell").isin(cells)))
+        out = _ivfpq_serve(
+            emb, idx.filter(F.col("op") == "i"), probes, lut, _shortlist
+        )
+        return out.localCheckpoint(eager=True)
 
 
 @register(
@@ -5008,137 +5078,11 @@ def stream_ivfpq_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replay safety: assignment and encoding are both content-
     deterministic (same vector → same cell, same codes), so
     at-least-once redelivery only creates duplicate rows; compaction
-    and the query fold them with dropDuplicates(vec_id) — inert, like
-    the IVF index and unlike the additive stores (which need the bid
-    mark). Answers bit-identically to the batch ann_ivfpq_topk and
-    shares its oracle string verbatim."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .transaction import DatasetStore
-
-    emb = load(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="gravityspark_ivfpqidx_")
-    try:
-        stage = os.path.join(work, "stage")
-        feed_schema = stage_batches(
-            [
-                emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b)
-                for b in range(_ANN_UPKEEP_BATCHES)
-            ],
-            stage,
-        )
-
-        cents, book = _ivfpq_model(spark, sf_dir)
-        _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
-        encode, probe, lut = _ivfpq_kernels(cents, book, _nprobe)
-        codes_schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("cell", T.IntegerType()),
-            ]
-            + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
-        )
-        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",))
-
-        def handle(batch_df, _bid) -> None:
-            # assignment + residual encoding fuse into the one Arrow
-            # kernel — cell comes out of the encode pass, no join
-            codes = batch_df.select("vec_id", "embedding").mapInPandas(
-                encode, codes_schema
-            )
-            # r14: append + threshold-gated fold in ONE action/publication
-            store.append_compact_once(
-                spark,
-                codes,
-                min_deltas=3,
-                transform=lambda d: d.dropDuplicates(["vec_id"]),
-            )
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        # ---- query path against the maintained codes ----
-        qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        qemb = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-            "vec_id", "embedding"
-        )
-        probes = qemb.mapInPandas(
-            probe, "q_id long, cell int, qcdot long"
-        ).localCheckpoint(eager=True)  # feeds pruning collect + join
-        cells = [r.cell for r in probes.select("cell").distinct().collect()]
-        lut_schema = T.StructType(
-            [T.StructField("q_id", T.LongType())]
-            + [
-                T.StructField(f"lut{m}", T.ArrayType(T.LongType()))
-                for m in range(PQ_M)
-            ]
-        )
-        qlut = qemb.mapInPandas(lut, lut_schema)
-        idx = store.load(spark, where=F.col("cell").isin(cells)).dropDuplicates(
-            ["vec_id"]
-        )
-        scored = (
-            idx.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .join(F.broadcast(qlut), "q_id")
-            .select(
-                "q_id",
-                "vec_id",
-                (F.col("qcdot") + _pq_adc_score_expr())
-                .cast("long")
-                .alias("score_scaled"),
-            )
-        )
-        w_sl = Window.partitionBy("q_id").orderBy(
-            F.desc("score_scaled"), F.asc("vec_id")
-        )
-        shortlist = (
-            scored.withColumn("rn", F.row_number().over(w_sl))
-            .filter(F.col("rn") <= _shortlist)
-            .select("q_id", "vec_id")
-        )
-        exact = (
-            emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-            .join(F.broadcast(shortlist), "vec_id")
-            .join(
-                F.broadcast(qv.select("q_id", "qv")), "q_id"
-            )
-            .select(
-                "q_id",
-                "vec_id",
-                F.round(
-                    _dot(F.col("qv"), F.col("v"))
-                    / (
-                        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                        * F.sqrt(_dot(F.col("v"), F.col("v")))
-                    ),
-                    3,
-                ).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-        out = (
-            exact.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= ANN_K)
-            .select("q_id", "vec_id", "cosine", "rnk")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-
-# deleted vectors for the retraction variant: every 5th corpus vector
-# (queries excluded — they are the probe workload, not index content)
-_ANN_DEL_MOD, _ANN_DEL_REM = 5, 4
-_ANN_DEL_PRED_SQL = (
-    f"NOT (cd.vec_id % {_ANN_DEL_MOD} = {_ANN_DEL_REM}"
-    f" AND cd.vec_id >= {ANN_N_QUERIES})"
-)
+    and the query fold them per vec_id — inert, like the IVF index and
+    unlike the additive stores (which need the bid mark). It runs
+    :func:`_ivfpq_upkeep` on an all-insert feed. Answers bit-identically
+    to the batch ann_ivfpq_topk and shares its oracle string verbatim."""
+    return _ivfpq_upkeep(spark, sf_dir, "gravityspark_ivfpqidx_")
 
 
 @register("stream_ivfpq_retractions", oracle=_ivfpq_oracle(_ANN_DEL_PRED_SQL))
@@ -5159,173 +5103,29 @@ def stream_ivfpq_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Replay safety WITHOUT bid marks: adds and tombstones are both
     content-deterministic and the delete is ABSORBING, so at-least-once
-    redelivery only creates duplicate rows that dropDuplicates folds —
-    the same inert-idempotence argument as the insert-only codes store,
-    extended by "no re-assert after forget". (Re-inserting a forgotten
-    vector would need epoch versioning — the signed-multiset stores
-    show that pattern; GDPR forget is deliberately absorbing.) The
-    tombstone-lands-in-its-add-row's-cell contract additionally
+    redelivery only creates duplicate rows that the per-vector fold
+    absorbs — the same inert-idempotence argument as the insert-only
+    codes store, extended by "no re-assert after forget". (Re-inserting
+    a forgotten vector would need epoch versioning — the signed-multiset
+    stores show that pattern; GDPR forget is deliberately absorbing.)
+    The tombstone-lands-in-its-add-row's-cell contract additionally
     requires a FROZEN coarse quantizer — true here (the model is
     trained once, up front) and in practice (retraining the quantizer
     re-encodes the whole index anyway, at which point forgotten ids
     are simply excluded from the rebuild).
 
-    Query path: probed cells via PartitionFilters, tombstone anti-join,
-    ADC against the broadcast LUT, exact re-rank of the survivor
-    shortlist. Oracle: the shared residual-IVFPQ chain with the served
-    corpus restricted to survivors — the model-training CTEs keep the
-    full corpus, exactly like the engine, whose quantizers were trained
-    before the deletes arrived."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from .transaction import DatasetStore
-
-    emb = load(spark, sf_dir, "embeddings")
-    del_pred = (F.col("vec_id") % _ANN_DEL_MOD == _ANN_DEL_REM) & (
-        F.col("vec_id") >= ANN_N_QUERIES
+    Same body as the upkeep twin (:func:`_ivfpq_upkeep`). Oracle: the
+    shared residual-IVFPQ chain with the served corpus restricted to
+    survivors — the model-training CTEs keep the full corpus, exactly
+    like the engine, whose quantizers were trained before the deletes
+    arrived."""
+    return _ivfpq_upkeep(
+        spark,
+        sf_dir,
+        "gravityspark_ivfpqret_",
+        retract=(F.col("vec_id") % _ANN_DEL_MOD == _ANN_DEL_REM)
+        & (F.col("vec_id") >= ANN_N_QUERIES),
     )
-    work = tempfile.mkdtemp(prefix="gravityspark_ivfpqret_")
-    try:
-        stage = os.path.join(work, "stage")
-        feeds = [
-            emb.filter(F.col("vec_id") % _ANN_UPKEEP_BATCHES == b)
-            for b in range(_ANN_UPKEEP_BATCHES)
-        ] + [emb.filter(del_pred)]
-        ops = ["i"] * _ANN_UPKEEP_BATCHES + ["d"]
-        feed_schema = stage_batches(
-            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
-            stage,
-        )
-
-        cents, book = _ivfpq_model(spark, sf_dir)
-        _, _nprobe, _shortlist = _ivf_params(spark, sf_dir)
-        encode, probe, lut = _ivfpq_kernels(cents, book, _nprobe)
-        codes_schema = T.StructType(
-            [
-                T.StructField("vec_id", T.LongType()),
-                T.StructField("cell", T.IntegerType()),
-            ]
-            + [T.StructField(f"pos{m}", T.IntegerType()) for m in range(PQ_M)]
-        )
-        store = DatasetStore(os.path.join(work, "codes"), partition_cols=("cell",))
-
-        def fold(d: DataFrame) -> DataFrame:
-            # forget = physically drop the deleted vectors' code bytes;
-            # keep id-only tombstones so a replayed add stays vetoed
-            dels = d.filter(F.col("op") == "d")
-            alive = (
-                d.filter(F.col("op") == "i")
-                .dropDuplicates(["vec_id"])
-                .join(dels.select("vec_id"), "vec_id", "left_anti")
-            )
-            return alive.unionByName(dels.dropDuplicates(["vec_id"]))
-
-        def handle(batch_df, _bid) -> None:
-            ins = batch_df.filter(F.col("op") == "i")
-            dels = batch_df.filter(F.col("op") == "d")
-            rows = (
-                ins.select("vec_id", "embedding")
-                .mapInPandas(encode, codes_schema)
-                .withColumn("op", F.lit("i"))
-            )
-            tomb = (
-                dels.select("vec_id", "embedding")
-                .mapInPandas(encode, codes_schema)
-                .select(
-                    "vec_id",
-                    "cell",
-                    *[
-                        F.lit(None).cast("int").alias(f"pos{m}")
-                        for m in range(PQ_M)
-                    ],
-                )
-                .withColumn("op", F.lit("d"))
-            )
-            # r14: append + threshold-gated fold in ONE action/publication
-            store.append_compact_once(
-                spark, rows.unionByName(tomb), min_deltas=3, transform=fold
-            )
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        # ---- query path over the survivors ----
-        qemb = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-            "vec_id", "embedding"
-        )
-        probes = qemb.mapInPandas(
-            probe, "q_id long, cell int, qcdot long"
-        ).localCheckpoint(eager=True)
-        cells = [r.cell for r in probes.select("cell").distinct().collect()]
-        lut_schema = T.StructType(
-            [T.StructField("q_id", T.LongType())]
-            + [
-                T.StructField(f"lut{m}", T.ArrayType(T.LongType()))
-                for m in range(PQ_M)
-            ]
-        )
-        qlut = qemb.mapInPandas(lut, lut_schema)
-        idx = store.load(spark, where=F.col("cell").isin(cells))
-        tombs = idx.filter(F.col("op") == "d").select("vec_id").distinct()
-        alive = (
-            idx.filter(F.col("op") == "i")
-            .dropDuplicates(["vec_id"])
-            .join(tombs, "vec_id", "left_anti")
-        )
-        scored = (
-            alive.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .join(F.broadcast(qlut), "q_id")
-            .select(
-                "q_id",
-                "vec_id",
-                (F.col("qcdot") + _pq_adc_score_expr())
-                .cast("long")
-                .alias("score_scaled"),
-            )
-        )
-        w_sl = Window.partitionBy("q_id").orderBy(
-            F.desc("score_scaled"), F.asc("vec_id")
-        )
-        shortlist = (
-            scored.withColumn("rn", F.row_number().over(w_sl))
-            .filter(F.col("rn") <= _shortlist)
-            .select("q_id", "vec_id")
-        )
-        qv = emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        exact = (
-            emb.select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            )
-            .join(F.broadcast(shortlist), "vec_id")
-            .join(F.broadcast(qv), "q_id")
-            .select(
-                "q_id",
-                "vec_id",
-                F.round(
-                    _dot(F.col("qv"), F.col("v"))
-                    / (
-                        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                        * F.sqrt(_dot(F.col("v"), F.col("v")))
-                    ),
-                    3,
-                ).alias("cosine"),
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-        out = (
-            exact.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= ANN_K)
-            .select("q_id", "vec_id", "cosine", "rnk")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -6318,14 +6118,12 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: the final served centroids (cl, i, cx) with member counts.
     Oracle: the seed + per-batch fold/assign/append chain unrolled."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore
 
     emb = load(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="gravityspark_skmeans_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_skmeans_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(
             [
@@ -6433,8 +6231,6 @@ def stream_kmeans_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -7639,14 +7435,12 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order is pinned by staged file mtimes, so the DuckDB oracle
     can replay the exact greedy admission sequence as an unrolled CTE
     chain (idx_{{b+1}} = idx_b ∪ keys(admitted_b))."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    work = tempfile.mkdtemp(prefix="gravityspark_upkeep_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_upkeep_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         # the arriving half, one micro-batch per file
         feed_schema = stage_batches(
@@ -7854,8 +7648,6 @@ def stream_dedup_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "batch")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _dedup_retract_oracle() -> str:
@@ -7938,14 +7730,12 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the unrolled greedy admission over SURVIVING docs — the
     signed fold's m > 0 is exactly membership in the live docs' key
     set, because every −1 cancels one live +1."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    work = tempfile.mkdtemp(prefix="gravityspark_dedupret_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_dedupret_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feeds = [
             docs.filter(F.expr("doc_id % 2 = 1 AND (doc_id % 6) DIV 2 < 2")),
@@ -7978,17 +7768,8 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_dir = os.path.join(work, "admitted")
 
         def fold(d):
-            return (
-                d.groupBy("band", "bk", "bkb")
-                .agg(F.sum("op_m").cast("long").alias("op_m"))
-                .filter(F.col("op_m") != 0)
-                .select(
-                    "band",
-                    "bk",
-                    "op_m",
-                    F.lit(-1).cast("long").alias("bid"),
-                    "bkb",
-                )
+            return signed_fold(d, ["band", "bk", "bkb"], "op_m").select(
+                "band", "bk", "op_m", F.lit(-1).cast("long").alias("bid"), "bkb"
             )
 
         def handle(batch_df, batch_id) -> None:
@@ -8008,11 +7789,7 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             idx = store.load(spark, where=F.col("bkb").isin(bkbs)).filter(
                 F.col("bid") != bid
             )
-            live = (
-                idx.groupBy("band", "bk")
-                .agg(F.sum("op_m").alias("m"))
-                .filter(F.col("m") > 0)
-            )
+            live = signed_fold(idx, ["band", "bk"], "op_m").filter(F.col("op_m") > 0)
             hits = (
                 ins_keyed.join(live, ["band", "bk"], "left_semi")
                 .select("doc_id")
@@ -8055,8 +7832,6 @@ def stream_dedup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "batch")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _KEYMAP_KB = 32  # hash-bucket fanout of the doc_id → band-key map
@@ -8092,14 +7867,12 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
     Scale posture: the keymap grows with the corpus but every probe
     touches only the retraction batch's kb buckets; writes are
     delta-sized (byte-tested in test_store_compaction_bytes)."""
-    import shutil
-    import tempfile
-
     from .transaction import DatasetStore, append_fused
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    work = tempfile.mkdtemp(prefix="gravityspark_dedupretid_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_dedupretid_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         null_cols = [
             F.lit(None).cast(f.dataType).alias(f.name)
@@ -8186,17 +7959,8 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
         out_dir = os.path.join(work, "admitted")
 
         def fold(d):
-            return (
-                d.groupBy("band", "bk", "bkb")
-                .agg(F.sum("op_m").cast("long").alias("op_m"))
-                .filter(F.col("op_m") != 0)
-                .select(
-                    "band",
-                    "bk",
-                    "op_m",
-                    F.lit(-1).cast("long").alias("bid"),
-                    "bkb",
-                )
+            return signed_fold(d, ["band", "bk", "bkb"], "op_m").select(
+                "band", "bk", "op_m", F.lit(-1).cast("long").alias("bid"), "bkb"
             )
 
         def handle(batch_df, batch_id) -> None:
@@ -8270,11 +8034,7 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
             idx = store.load(spark, where=F.col("bkb").isin(bkbs)).filter(
                 F.col("bid") != bid
             )
-            live = (
-                idx.groupBy("band", "bk")
-                .agg(F.sum("op_m").alias("m"))
-                .filter(F.col("m") > 0)
-            )
+            live = signed_fold(idx, ["band", "bk"], "op_m").filter(F.col("op_m") > 0)
             hits = (
                 ins_keyed.join(live, ["band", "bk"], "left_semi")
                 .select("doc_id")
@@ -8345,8 +8105,6 @@ def stream_dedup_retractions_by_id(spark: SparkSession, sf_dir: str) -> DataFram
             .select("doc_id", "batch")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -10781,53 +10539,54 @@ _IVM_BATCHES = 3
 _NS_PER_HOUR = 3_600_000_000_000
 
 
-@register(
-    "stream_rollup_maintained",
-    oracle=f"""
+def _rollup_oracle(where: str) -> str:
+    """The batch hourly rollup over the events ``where`` keeps."""
+    return f"""
     SELECT event_type,
            (epoch_ns(ts) // {_NS_PER_HOUR}) * 3600 AS hour_epoch_s,
            count(*)::BIGINT AS n,
            sum(floor(value * 100)::BIGINT)::BIGINT AS v_cents
-    FROM events GROUP BY 1, 2
-    """,
-)
-def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED hourly rollup — the materialized-view
-    upkeep loop: events arrive in {_IVM_BATCHES} micro-batches, each
-    foreachBatch appends its PARTIAL aggregate (event_type, hour →
-    count, value-cents) as a delta to a :class:`DatasetStore`, and
-    in-loop compaction folds deltas BY KEY (groupBy-sum transform) so
-    stored bytes track the view size, not the event history. The final
-    view is one key-sum over the store — identical to the batch rollup
-    over all events, which is exactly what the oracle checks.
+    FROM events {where}GROUP BY 1, 2
+    """
 
-    Mergeability is the whole design: count and integer cent-sums are
-    associative partial aggregates (floor(value·100) per event keeps the
-    money column exact — no float-order sensitivity between engines), so
-    delta order, batch boundaries, and compaction timing are all
-    invisible in the result. This is the IVM shape a 100 TB
-    continuously-ingested warehouse runs: per-batch map-side partials,
-    key-proportional state on storage (not executors), readers always
-    consistent via the publication log."""
-    import shutil
-    import tempfile
 
+def _rollup_upkeep(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    retract: Optional[str] = None,
+    versions: bool = False,
+) -> DataFrame:
+    """The hourly-rollup maintenance body: {_IVM_BATCHES} insert
+    micro-batches (``event_id % {_IVM_BATCHES} = b``, op = +1), then,
+    when ``retract`` (a SQL predicate over events) is given, one batch
+    retracting those events (op = -1). Each batch appends its SIGNED
+    partial aggregate and folds by key in the same publication. With
+    ``versions`` each batch also publishes the folded view, and the
+    result is the view as of batch 0 and as of the last batch, tagged
+    ``asof_batch``; otherwise the final view without netted-out groups."""
     from .relational_queries import normalize_events_ts, read_raw_events
-    from .transaction import DatasetStore
+    from .transaction import DatasetStore, VersionedViewStore
 
     static = read_raw_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_ivm_")
-    try:
-        stage = os.path.join(work, "stage")
-        feed_schema = stage_batches(
-            [
-                static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}"))
-                for b in range(_IVM_BATCHES)
-            ],
-            stage,
+    feed = [
+        static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}")).withColumn(
+            "op", F.lit(1).cast("int")
         )
+        for b in range(_IVM_BATCHES)
+    ]
+    if retract is not None:
+        feed.append(
+            static.filter(F.expr(retract)).withColumn("op", F.lit(-1).cast("int"))
+        )
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as work:
+        stage = os.path.join(work, "stage")
+        feed_schema = stage_batches(feed, stage)
 
         store = DatasetStore(os.path.join(work, "view"))
+        vstore = (
+            VersionedViewStore(os.path.join(work, "versions")) if versions else None
+        )
 
         def merge(df: DataFrame) -> DataFrame:
             return df.groupBy("event_type", "h").agg(
@@ -10842,34 +10601,83 @@ def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "event_type", F.expr(f"ts DIV {_NS_PER_HOUR}").alias("h")
                 )
                 .agg(
-                    F.count("*").cast("long").alias("n"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
+                    F.sum("op").cast("long").alias("n"),
+                    F.sum(
+                        F.col("op") * F.floor(F.col("value") * 100).cast("long")
+                    )
                     .cast("long")
                     .alias("v_cents"),
                 )
             )
-            # append_once: foreachBatch is at-least-once, and sum
-            # partials are NOT inert under duplication — a replayed
-            # append would double-count after the key-fold (r6 VERDICT
-            # #1). The bid high-water mark makes the replay a no-op.
-            # r14: append + fold in ONE publication/action
+            # bid-gated: foreachBatch is at-least-once, and sum partials
+            # are NOT inert under duplication — a replayed append would
+            # double-count (or double-subtract) after the key-fold (r6
+            # VERDICT #1). The bid high-water mark makes it a no-op.
             store.append_compact_once(
                 spark, part, batch_id, min_deltas=2, transform=merge
             )
+            if vstore is not None:
+                # the delta append and the version publication each gate
+                # on their OWN bid mark — a crash between them replays
+                # into "skip the delta, still publish the pending
+                # version", so neither a double-counted sum nor a
+                # duplicate version (which would shift load_version
+                # indexes) can occur
+                vstore.publish_once(merge(store.load(spark)), batch_id)
 
         drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-        view = merge(store.load(spark)).select(
-            "event_type",
-            (F.col("h") * 3600).cast("long").alias("hour_epoch_s"),
-            "n",
-            "v_cents",
-        )
-        # materialized-view READ: key-proportional rows; safe to localize
-        # before the temp store vanishes
-        out = view.localCheckpoint(eager=True)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+        def view(df: DataFrame, *tag) -> DataFrame:
+            return df.select(
+                *tag,
+                "event_type",
+                (F.col("h") * 3600).cast("long").alias("hour_epoch_s"),
+                "n",
+                "v_cents",
+            )
+
+        if vstore is None:
+            # fully-netted groups vanish (the deletion semantics)
+            out = view(merge(store.load(spark)).filter(F.col("n") != 0))
+        else:
+            out = view(
+                vstore.load_version(spark, 0),
+                F.lit(0).cast("long").alias("asof_batch"),
+            ).unionByName(
+                view(
+                    vstore.load_version(spark, -1),
+                    F.lit(_IVM_BATCHES - 1).cast("long").alias("asof_batch"),
+                )
+            )
+        # materialized-view READ: key-proportional rows; localize before
+        # the temp store vanishes
+        return out.localCheckpoint(eager=True)
+
+
+@register(
+    "stream_rollup_maintained",
+    oracle=_rollup_oracle(""),
+)
+def stream_rollup_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTALLY MAINTAINED hourly rollup — the materialized-view
+    upkeep loop: events arrive in {_IVM_BATCHES} micro-batches, each
+    foreachBatch appends its PARTIAL aggregate (event_type, hour →
+    count, value-cents) as a delta to a :class:`DatasetStore`, and
+    in-loop compaction folds deltas BY KEY (groupBy-sum transform) so
+    stored bytes track the view size, not the event history. The final
+    view is one key-sum over the store — identical to the batch rollup
+    over all events, which is exactly what the oracle checks. It runs
+    :func:`_rollup_upkeep` on an all-insert feed.
+
+    Mergeability is the whole design: count and integer cent-sums are
+    associative partial aggregates (floor(value·100) per event keeps the
+    money column exact — no float-order sensitivity between engines), so
+    delta order, batch boundaries, and compaction timing are all
+    invisible in the result. This is the IVM shape a 100 TB
+    continuously-ingested warehouse runs: per-batch map-side partials,
+    key-proportional state on storage (not executors), readers always
+    consistent via the publication log."""
+    return _rollup_upkeep(spark, sf_dir, "gravityspark_ivm_")
 
 
 @register(
@@ -10905,84 +10713,12 @@ def stream_rollup_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     view-sized write per batch on top of the delta append — the cost of
     a consistency point, paid only at the cadence the operator chooses
     (here: every batch)."""
-    import shutil
-    import tempfile
-
-    from .relational_queries import normalize_events_ts, read_raw_events
-    from .transaction import DatasetStore, VersionedViewStore
-
-    static = read_raw_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_ivmv_")
-    try:
-        stage = os.path.join(work, "stage")
-        feed_schema = stage_batches(
-            [
-                static.filter(F.expr(f"event_id % {_IVM_BATCHES} = {b}"))
-                for b in range(_IVM_BATCHES)
-            ],
-            stage,
-        )
-
-        store = DatasetStore(os.path.join(work, "deltas"))
-        versions = VersionedViewStore(os.path.join(work, "versions"))
-
-        def merge(df: DataFrame) -> DataFrame:
-            return df.groupBy("event_type", "h").agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("v_cents").cast("long").alias("v_cents"),
-            )
-
-        def handle(batch_df, batch_id) -> None:
-            part = (
-                normalize_events_ts(batch_df)
-                .groupBy(
-                    "event_type", F.expr(f"ts DIV {_NS_PER_HOUR}").alias("h")
-                )
-                .agg(
-                    F.count("*").cast("long").alias("n"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
-                    .cast("long")
-                    .alias("v_cents"),
-                )
-            )
-            # replay-idempotent upkeep (r6 VERDICT #1): the delta append
-            # and the version publication each gate on their OWN bid
-            # high-water mark — a crash between them replays into
-            # "skip the delta, still publish the pending version", so
-            # neither a double-counted sum nor a duplicate version
-            # (which would shift load_version indexes) can occur.
-            # r14: append + fold in ONE publication/action
-            store.append_compact_once(
-                spark, part, batch_id, min_deltas=2, transform=merge
-            )
-            versions.publish_once(merge(store.load(spark)), batch_id)
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        def asof(idx: int, tag: int) -> DataFrame:
-            return versions.load_version(spark, idx).select(
-                F.lit(tag).cast("long").alias("asof_batch"),
-                "event_type",
-                (F.col("h") * 3600).cast("long").alias("hour_epoch_s"),
-                "n",
-                "v_cents",
-            )
-
-        out = asof(0, 0).unionByName(asof(-1, 2))
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _rollup_upkeep(spark, sf_dir, "gravityspark_ivmv_", versions=True)
 
 
 @register(
     "stream_rollup_retractions",
-    oracle=f"""
-    SELECT event_type,
-           (epoch_ns(ts) // {_NS_PER_HOUR}) * 3600 AS hour_epoch_s,
-           count(*)::BIGINT AS n,
-           sum(floor(value * 100)::BIGINT)::BIGINT AS v_cents
-    FROM events WHERE event_id % 5 != 4 GROUP BY 1, 2
-    """,
+    oracle=_rollup_oracle("WHERE event_id % 5 != 4 "),
 )
 def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVM with DELETES — the CDC (change-data-capture) completion of
@@ -11004,119 +10740,36 @@ def stream_rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     invertible aggregates (min/max/distinct) would need the full
     per-key history or a rebuild; that boundary is documented in
     COVERAGE.md."""
-    import shutil
-    import tempfile
-
-    from .relational_queries import normalize_events_ts, read_raw_events
-    from .transaction import DatasetStore
-
-    static = read_raw_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_ivmr_")
-    try:
-        stage = os.path.join(work, "stage")
-        batches = [
-            static.filter(F.expr(f"event_id % 3 = {b}")).withColumn(
-                "op", F.lit(1).cast("int")
-            )
-            for b in range(3)
-        ] + [
-            static.filter(F.expr("event_id % 5 = 4")).withColumn(
-                "op", F.lit(-1).cast("int")
-            )
-        ]
-        feed_schema = stage_batches(batches, stage)
-
-        store = DatasetStore(os.path.join(work, "view"))
-
-        def merge(df: DataFrame) -> DataFrame:
-            return df.groupBy("event_type", "h").agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("v_cents").cast("long").alias("v_cents"),
-            )
-
-        def handle(batch_df, batch_id) -> None:
-            part = (
-                normalize_events_ts(batch_df)
-                .groupBy(
-                    "event_type", F.expr(f"ts DIV {_NS_PER_HOUR}").alias("h")
-                )
-                .agg(
-                    F.sum("op").cast("long").alias("n"),
-                    F.sum(
-                        F.col("op") * F.floor(F.col("value") * 100).cast("long")
-                    )
-                    .cast("long")
-                    .alias("v_cents"),
-                )
-            )
-            # signed deltas are additive too — same replay guard as the
-            # insert-only rollup (a replayed retraction batch must not
-            # subtract twice). r14: append + fold in ONE action
-            store.append_compact_once(
-                spark, part, batch_id, min_deltas=2, transform=merge
-            )
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-        view = (
-            merge(store.load(spark))
-            .filter(F.col("n") != 0)
-            .select(
-                "event_type",
-                (F.col("h") * 3600).cast("long").alias("hour_epoch_s"),
-                "n",
-                "v_cents",
-            )
-        )
-        return view.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _rollup_upkeep(
+        spark, sf_dir, "gravityspark_ivmr_", retract="event_id % 5 = 4"
+    )
 
 
 _SJM_KB = 16  # join-key fanout FLOOR (actual derived via _state_fanout)
 
 
-@register(
-    "stream_join_maintained",
-    oracle="""
+def _join_oracle(where: str) -> str:
+    """The batch per-customer revenue over the lineitems ``where`` keeps."""
+    return f"""
     SELECT o_custkey,
            count(*)::BIGINT AS n_items,
            sum(floor(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
     FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    GROUP BY o_custkey
-    """,
-)
-def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED JOIN VIEW — the textbook delta-join
-    completion of the IVM family (the earlier maintained views are all
-    single-table rollups): a per-customer revenue view over
-    orders ⋈ lineitem, maintained as BOTH inputs arrive interleaved in
-    micro-batches. Each batch applies the classic bilinear delta rule
+    {where}GROUP BY o_custkey
+    """
 
-        ΔV = ΔO ⋈ L_state  ∪  O_state ⋈ ΔL  ∪  ΔO ⋈ ΔL
 
-    where O_state/L_state are the PRE-batch accumulated sides, kept in
-    join-key-bucket-partitioned DatasetStores so every delta-join probe
-    loads only the buckets the batch's keys hash into (PartitionFilters
-    — the dedup-index pruning contract, now on a two-sided join).
-
-    All three stores ride the round-7 replay protocol, and the ORDER of
-    publication is load-bearing: the view delta (additive count/cents
-    partials — double-counting poison) publishes FIRST, then the two
-    side states. A crash anywhere replays into per-store
-    skip-or-apply decisions that reconstruct exactly the committed
-    prefix: the view delta was computed against pre-batch state in
-    whichever run committed it, and a replayed state append can't
-    duplicate join rows (duplicate state rows would double every later
-    delta-join — state appends are NOT inert, unlike membership keys).
-
-    Insert-only by design; deletions compose with the retraction story
-    (signed ΔO/ΔL flow through the same bilinear rule — the
-    stream_rollup_retractions boundary notes apply). Oracle = the batch
-    join-aggregate over the full tables."""
-    import shutil
-    import tempfile
-
-    from .transaction import DatasetStore
+def _join_upkeep(
+    spark: SparkSession, sf_dir: str, prefix: str, retract=None
+) -> DataFrame:
+    """The delta-join maintenance body of the per-customer revenue view
+    over orders ⋈ lineitem: 3 interleaved micro-batches (orders half A |
+    lineitems A + orders B | lineitems B, so the delta rule fires in
+    BOTH directions), then, when ``retract`` (a Column predicate over
+    lineitem) is given, one batch retracting those lineitems. Lineitem
+    rows carry the multiplicity m = op; orders are insert-only. Returns
+    the view without the customers whose items netted to zero."""
+    from .transaction import DatasetStore, append_fused
 
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("okey"), "o_custkey"
@@ -11124,28 +10777,40 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"),
         F.floor(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        "l_linenumber",
     )
-    work = tempfile.mkdtemp(prefix="gravityspark_sjm_")
-    try:
-        stage = os.path.join(work, "stage")
-        # interleaved arrival: orders half A | lineitems A + orders B |
-        # lineitems B — so the delta rule fires in BOTH directions and
-        # the Δ⋈Δ term is exercised (batch 1 carries matching o+l rows)
-        o_half = F.pmod(F.xxhash64(F.col("okey")), F.lit(2))
-        tag = lambda df, kind: df.select(  # noqa: E731
-            F.lit(kind).alias("kind"),
+    o_half = F.pmod(F.xxhash64(F.col("okey")), F.lit(2))
+
+    def tag_o(df):
+        return df.select(
+            F.lit("o").alias("kind"),
             "okey",
-            (F.col("o_custkey") if kind == "o" else F.lit(None)).cast("long").alias("o_custkey"),
-            (F.col("cents") if kind == "l" else F.lit(None)).cast("long").alias("cents"),
+            F.col("o_custkey").cast("long").alias("o_custkey"),
+            F.lit(None).cast("long").alias("cents"),
+            F.lit(0).cast("int").alias("op"),
         )
-        batches = [
-            tag(orders.filter(o_half == 0), "o"),
-            tag(items.filter(o_half == 0), "l").unionByName(
-                tag(orders.filter(o_half == 1), "o")
-            ),
-            tag(items.filter(o_half == 1), "l"),
-        ]
-        feed_schema = stage_batches(batches, stage)
+
+    def tag_l(df, op):
+        return df.select(
+            F.lit("l").alias("kind"),
+            "okey",
+            F.lit(None).cast("long").alias("o_custkey"),
+            "cents",
+            F.lit(op).cast("int").alias("op"),
+        )
+
+    feed = [
+        tag_o(orders.filter(o_half == 0)),
+        tag_l(items.filter(o_half == 0), 1).unionByName(
+            tag_o(orders.filter(o_half == 1))
+        ),
+        tag_l(items.filter(o_half == 1), 1),
+    ]
+    if retract is not None:
+        feed.append(tag_l(items.filter(retract), -1))
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as work:
+        stage = os.path.join(work, "stage")
+        feed_schema = stage_batches(feed, stage)
 
         n_orders = load(spark, sf_dir, "orders").count()
         kb = F.pmod(
@@ -11162,11 +10827,16 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").cast("long").alias("cents"),
             )
 
-        def agg_pairs(joined):
+        def agg_signed(joined):  # rows carry multiplicity m
             return joined.groupBy("o_custkey").agg(
-                F.count("*").cast("long").alias("n_items"),
-                F.sum("cents").cast("long").alias("cents"),
+                F.sum("m").cast("long").alias("n_items"),
+                F.sum(F.col("m") * F.col("cents")).cast("long").alias("cents"),
             )
+
+        def pruned(store, delta):
+            # pre-batch state, pruned to the delta keys' buckets
+            bks = [r.kb for r in delta.select(kb.alias("kb")).distinct().collect()]
+            return store.load(spark, where=F.col("kb").isin(bks))
 
         def handle(batch_df, bid) -> None:
             # r14: lazy cuts — each delta's bucket collect below is its
@@ -11179,35 +10849,28 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             dL = (
                 batch_df.filter(F.col("kind") == "l")
-                .select("okey", "cents")
+                .select("okey", "cents", F.col("op").cast("long").alias("m"))
                 .localCheckpoint(eager=False)
             )
-            # pre-batch state, pruned to the delta keys' buckets
-            def pruned(store, delta):
-                bks = [
-                    r.kb for r in delta.select(kb.alias("kb")).distinct().collect()
-                ]
-                return store.load(spark, where=F.col("kb").isin(bks))
-
-            parts = [agg_pairs(dO.join(dL, "okey"))]  # ΔO ⋈ ΔL
+            # ΔV = (O_state ∪ ΔO) ⋈ ΔL  ∪  ΔO ⋈ L_state. Both terms are
+            # linear in the multiplicities, so unfolded state rows (each
+            # +1 or −1) give the folded state's sums.
+            op_ = pruned(o_store, dL)
+            o_new = (
+                dO
+                if op_ is None
+                else op_.select("okey", "o_custkey").unionByName(dO)
+            )
+            rows = dL.join(o_new, "okey")
             lp = pruned(l_store, dO)
-            if lp is not None:  # ΔO ⋈ L_state
-                parts.append(agg_pairs(dO.join(lp.select("okey", "cents"), "okey")))
-            op = pruned(o_store, dL)
-            if op is not None:  # O_state ⋈ ΔL
-                parts.append(
-                    agg_pairs(dL.join(op.select("okey", "o_custkey"), "okey"))
+            if lp is not None:
+                rows = rows.unionByName(
+                    dO.join(lp.select("okey", "cents", "m"), "okey")
                 )
-            from functools import reduce
-
-            dV = fold_view(reduce(lambda a, b: a.unionByName(b), parts))
+            dV = agg_signed(rows)
             # publication ORDER matters: view first (computed against
-            # pre-batch state), then the sides — every append bid-gated.
-            # r14: the view's every-batch fold rides its append (one
-            # action), and the two side appends share ONE fused collect;
-            # view-then-sides order is preserved by call order.
-            from .transaction import append_fused
-
+            # pre-batch state), then the sides in one fused collect —
+            # every append bid-gated.
             view.append_compact_once(
                 spark, dV, bid, min_deltas=2, transform=fold_view
             )
@@ -11220,30 +10883,60 @@ def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             if names[0] is not None:
                 o_store.compact(spark, min_deltas=4)
             if names[1] is not None:
-                l_store.compact(spark, min_deltas=4)
+                l_store.compact(  # multiset fold: net m, drop zeros
+                    spark,
+                    min_deltas=4,
+                    transform=lambda d: signed_fold(d, ["okey", "cents", "kb"], "m"),
+                )
 
         drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
         out = (
             fold_view(view.load(spark))
-            .filter(F.col("n_items") > 0)
+            .filter(F.col("n_items") != 0)
             .select("o_custkey", "n_items", "cents")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+
+@register(
+    "stream_join_maintained",
+    oracle=_join_oracle(""),
+)
+def stream_join_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTALLY MAINTAINED JOIN VIEW — the textbook delta-join
+    completion of the IVM family (the earlier maintained views are all
+    single-table rollups): a per-customer revenue view over
+    orders ⋈ lineitem, maintained as BOTH inputs arrive interleaved in
+    micro-batches. Each batch applies the classic bilinear delta rule
+
+        ΔV = ΔO ⋈ L_state  ∪  (O_state ∪ ΔO) ⋈ ΔL
+
+    where O_state/L_state are the PRE-batch accumulated sides, kept in
+    join-key-bucket-partitioned DatasetStores so every delta-join probe
+    loads only the buckets the batch's keys hash into (PartitionFilters
+    — the dedup-index pruning contract, now on a two-sided join).
+
+    All three stores ride the round-7 replay protocol, and the ORDER of
+    publication is load-bearing: the view delta (additive count/cents
+    partials — double-counting poison) publishes FIRST, then the two
+    side states. A crash anywhere replays into per-store
+    skip-or-apply decisions that reconstruct exactly the committed
+    prefix: the view delta was computed against pre-batch state in
+    whichever run committed it, and a replayed state append can't
+    duplicate join rows (duplicate state rows would double every later
+    delta-join — state appends are NOT inert, unlike membership keys).
+
+    It runs :func:`_join_upkeep` on an all-insert feed (every lineitem
+    row has m = +1); deletions flow through the same bilinear rule —
+    see stream_join_retractions. Oracle = the batch join-aggregate over
+    the full tables."""
+    return _join_upkeep(spark, sf_dir, "gravityspark_sjm_")
 
 
 @register(
     "stream_join_retractions",
-    oracle="""
-    SELECT o_custkey,
-           count(*)::BIGINT AS n_items,
-           sum(floor(l_extendedprice * 100)::BIGINT)::BIGINT AS cents
-    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE l_linenumber % 3 != 1
-    GROUP BY o_custkey
-    """,
+    oracle=_join_oracle("WHERE l_linenumber % 3 != 1\n    "),
 )
 def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELTA-JOIN IVM WITH DELETES — the signed-MULTISET completion of
@@ -11268,145 +10961,9 @@ def stream_join_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     question, not an algebra one; documented boundary). All stores
     bid-gated, view-first publication order, key-bucket-pruned state
     probes — the stream_join_maintained contract unchanged."""
-    import shutil
-    import tempfile
-
-    from functools import reduce
-
-    from .transaction import DatasetStore
-
-    orders = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"), "o_custkey"
+    return _join_upkeep(
+        spark, sf_dir, "gravityspark_sjr_", retract=F.col("l_linenumber") % 3 == 1
     )
-    items = load(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("okey"),
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        "l_linenumber",
-    )
-    doomed = F.col("l_linenumber") % 3 == 1
-    work = tempfile.mkdtemp(prefix="gravityspark_sjr_")
-    try:
-        stage = os.path.join(work, "stage")
-        o_half = F.pmod(F.xxhash64(F.col("okey")), F.lit(2))
-
-        def tag_o(df):
-            return df.select(
-                F.lit("o").alias("kind"),
-                "okey",
-                F.col("o_custkey").cast("long").alias("o_custkey"),
-                F.lit(None).cast("long").alias("cents"),
-                F.lit(0).cast("int").alias("op"),
-            )
-
-        def tag_l(df, op):
-            return df.select(
-                F.lit("l").alias("kind"),
-                "okey",
-                F.lit(None).cast("long").alias("o_custkey"),
-                "cents",
-                F.lit(op).cast("int").alias("op"),
-            )
-
-        batches = [
-            tag_o(orders.filter(o_half == 0)),
-            tag_l(items.filter(o_half == 0), 1).unionByName(
-                tag_o(orders.filter(o_half == 1))
-            ),
-            tag_l(items.filter(o_half == 1), 1),
-            tag_l(items.filter(doomed), -1),  # the retraction batch
-        ]
-        feed_schema = stage_batches(batches, stage)
-
-        n_orders = load(spark, sf_dir, "orders").count()
-        kb = F.pmod(
-            F.xxhash64(F.col("okey")),
-            F.lit(_state_fanout(n_orders, _SJM_KB)),
-        ).cast("int")
-        o_store = DatasetStore(os.path.join(work, "o"), partition_cols=("kb",))
-        l_store = DatasetStore(os.path.join(work, "l"), partition_cols=("kb",))
-        view = DatasetStore(os.path.join(work, "view"))
-
-        def fold_view(df):
-            return df.groupBy("o_custkey").agg(
-                F.sum("n_items").cast("long").alias("n_items"),
-                F.sum("cents").cast("long").alias("cents"),
-            )
-
-        def fold_l(df):  # multiset fold: net multiplicities, drop zeros
-            return (
-                df.groupBy("okey", "cents", "kb")
-                .agg(F.sum("m").cast("long").alias("m"))
-                .filter(F.col("m") != 0)
-            )
-
-        def handle(batch_df, bid) -> None:
-            # r14: lazy cuts — the bucket collects below materialize each
-            dO = (
-                batch_df.filter(F.col("kind") == "o")
-                .select("okey", "o_custkey")
-                .localCheckpoint(eager=False)
-            )
-            dL = (
-                batch_df.filter(F.col("kind") == "l")
-                .select("okey", "cents", F.col("op").cast("long").alias("m"))
-                .localCheckpoint(eager=False)
-            )
-
-            def pruned(store, delta):
-                bks = [
-                    r.kb
-                    for r in delta.select(kb.alias("kb")).distinct().collect()
-                ]
-                return store.load(spark, where=F.col("kb").isin(bks))
-
-            def agg_signed(joined):  # rows carry multiplicity m
-                return joined.groupBy("o_custkey").agg(
-                    F.sum("m").cast("long").alias("n_items"),
-                    F.sum(F.col("m") * F.col("cents")).cast("long").alias("cents"),
-                )
-
-            parts = [agg_signed(dO.join(dL, "okey"))]  # ΔO ⋈ ΔL
-            lp = pruned(l_store, dO)
-            if lp is not None:  # ΔO ⋈ L_state (state rows carry m)
-                parts.append(
-                    agg_signed(
-                        dO.join(fold_l(lp).select("okey", "cents", "m"), "okey")
-                    )
-                )
-            op_ = pruned(o_store, dL)
-            if op_ is not None:  # O_state ⋈ ΔL
-                parts.append(
-                    agg_signed(dL.join(op_.select("okey", "o_custkey"), "okey"))
-                )
-            dV = fold_view(reduce(lambda a, b: a.unionByName(b), parts))
-            # r14: view fold rides its append (one action, view still
-            # publishes FIRST); the two side appends share one collect
-            from .transaction import append_fused
-
-            view.append_compact_once(
-                spark, dV, bid, min_deltas=2, transform=fold_view
-            )
-            names = append_fused(
-                [
-                    (o_store, dO.withColumn("kb", kb), bid),
-                    (l_store, dL.withColumn("kb", kb), bid),
-                ]
-            )
-            if names[0] is not None:
-                o_store.compact(spark, min_deltas=4)
-            if names[1] is not None:
-                l_store.compact(spark, min_deltas=3, transform=fold_l)
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        out = (
-            fold_view(view.load(spark))
-            .filter(F.col("n_items") != 0)
-            .select("o_custkey", "n_items", "cents")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _BM25_TERMS = ["spark", "data", "value"]
@@ -11448,6 +11005,35 @@ def _bm25_oracle(doc_pred: str = "TRUE") -> str:
     ORDER BY round(s, 4) DESC, doc_id
     LIMIT {_BM25_TOPK}
     """
+
+
+def _bm25_top(tf: DataFrame, stats: DataFrame) -> DataFrame:
+    """The BM25 scorer: top-{_BM25_TOPK} (doc_id, score) by ROUNDED score,
+    doc_id tie-broken, from the probe terms' postings ``tf`` (doc_id,
+    token, tf double, dl) and the 1-row corpus ``stats`` (n, avgdl).
+    Document frequency is a per-term count over ``tf``; df and stats
+    ride as broadcasts."""
+    df = tf.groupBy("token").agg(F.count("*").cast("double").alias("df"))
+    k1, b = _BM25_K1, _BM25_B
+    term = (
+        F.log(
+            (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+        )
+        * F.col("tf")
+        * (k1 + 1.0)
+        / (
+            F.col("tf")
+            + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+        )
+    )
+    return (
+        tf.join(F.broadcast(df), "token")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(term), 4).alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(_BM25_TOPK)
+    )
 
 
 @register(
@@ -11496,79 +11082,36 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("dl").alias("dl"),
         )
     )
-    df = tf.groupBy("token").agg(F.count("*").cast("double").alias("df"))
-    k1, b = _BM25_K1, _BM25_B
-    term = (
-        F.log(
-            (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
-        * F.col("tf")
-        * (k1 + 1.0)
-        / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    return (
-        tf.join(F.broadcast(df), "token")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(term), 4).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(_BM25_TOPK)
-    )
+    return _bm25_top(tf, stats)
 
 
 _BM25_IDX_BUCKETS = 16
 
 
-@register(
-    "stream_bm25_index_upkeep",
-    # the maintained index answers bit-identically to the batch BM25, so
-    # it carries the SAME full oracle (shared string, single source)
-    oracle=REGISTRY["text_bm25_search"].oracle,
-)
-def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTALLY MAINTAINED inverted index — streaming BM25 ingest,
-    and the second operator family on the round-7 replay protocol: the
-    document corpus arrives in 3 micro-batches; each foreachBatch
-    appends two ADDITIVE state deltas guarded by
-    :meth:`DatasetStore.append_once` (the bid high-water mark — a
-    replayed batch can neither double its postings' term frequencies
-    nor double-count the corpus length statistics):
-
-    - ``postings``: the materialized inverted index — (token, doc_id,
-      tf, dl) for EVERY token, partitioned by ``tb = hash(token) %
-      {_BM25_IDX_BUCKETS}``, so the query path loads only the probe
-      terms' buckets via PartitionFilters (document frequency is a
-      per-term count over exactly those pruned rows — df needs no
-      separate store);
-    - ``cstats``: 1-row (n_docs, total_dl) sum deltas — N and avgdl
-      fold associatively (dl sums stay integral, so sum/count division
-      is bit-equal to the batch engine's avg).
-
-    The final read scores BM25 for the fixed probe terms from the
-    maintained state and answers BIT-IDENTICALLY to the batch
-    text_bm25_search — it shares that oracle string verbatim, the same
-    single-source contract as stream_ann_index_upkeep / ann_ivf_topk.
-
-    Scale posture: per batch, work is batch-sized (one tokenize +
-    per-batch partial aggregates, no corpus rescan); index bytes are
-    corpus-proportional BECAUSE an inverted index is a corpus-sized
-    materialization — the query touches |probe terms|/{_BM25_IDX_BUCKETS}
-    of it. The reference's property index makes the same access-path
-    claim for graph lookups (docs/key_value_store.adoc:367-369)."""
-    import shutil
-    import tempfile
-
-    from .transaction import DatasetStore
+def _bm25_upkeep(
+    spark: SparkSession, sf_dir: str, prefix: str, feed: list
+) -> DataFrame:
+    """The maintained inverted-index body. ``feed`` lists the
+    micro-batches as (SQL predicate over documents, op) pairs: op 'i'
+    indexes the matching documents, 'd' forgets them. Each batch
+    appends, in one fused collect, its SIGNED postings (token, doc_id,
+    tf, dl, m = ±1; a forget re-tokenizes the document, so its rows
+    match the insert's) partitioned by ``tb = hash(token) %
+    {_BM25_IDX_BUCKETS}``, and its signed 1-row corpus stats (n_docs,
+    total_dl). The query path loads the probe terms' buckets, folds the
+    signed rows, and scores the live postings with :func:`_bm25_top`."""
+    from .graph import literal_frame
+    from .transaction import DatasetStore, append_fused
 
     docs = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="gravityspark_bm25ix_")
-    try:
+    with tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(
-            [docs.filter(F.expr(f"doc_id % 3 = {b}")) for b in range(3)], stage
+            [
+                docs.filter(F.expr(pred)).withColumn("op", F.lit(op))
+                for pred, op in feed
+            ],
+            stage,
         )
 
         postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
@@ -11583,6 +11126,9 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )),
             ).cast("int")
 
+        def fold_posts(df):
+            return signed_fold(df, ["token", "doc_id", "tf", "dl", "tb"], "m")
+
         def fold_stats(df):
             return df.groupBy().agg(
                 F.sum("n").cast("long").alias("n"),
@@ -11590,8 +11136,12 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def handle(batch_df, bid) -> None:
+            sign = F.when(F.col("op") == "d", F.lit(-1)).otherwise(
+                F.lit(1)
+            ).cast("long")
             toks = batch_df.select(
                 "doc_id",
+                sign.alias("m"),
                 F.explode(_TOKENS_FN()).alias("token"),
                 F.size(_TOKENS_FN()).alias("dl"),
             )
@@ -11600,74 +11150,93 @@ def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(
                     F.count("*").cast("long").alias("tf"),
                     F.first("dl").alias("dl"),
+                    F.first("m").alias("m"),
                 )
                 .withColumn("tb", tbucket(F.col("token")))
             )
             cdelta = (
-                batch_df.select(F.size(_TOKENS_FN()).alias("dl"))
+                batch_df.select(sign.alias("m"), F.size(_TOKENS_FN()).alias("dl"))
                 .filter(F.col("dl") > 0)
                 .agg(
-                    F.count("*").cast("long").alias("n"),
-                    F.sum("dl").cast("long").alias("total_dl"),
+                    F.sum("m").cast("long").alias("n"),
+                    F.sum(F.col("m") * F.col("dl")).cast("long").alias("total_dl"),
                 )
             )
-            # two stores, each gated on its OWN mark: a crash between
-            # the two appends replays into "skip postings, still append
-            # stats" (the rollup_versions pattern). r14: one fused
-            # collect for both appends (prefix-crash = the old ordered
-            # sequence); compacts stay gated on a real (non-replay) append
-            from .transaction import append_fused
-
-            names = append_fused(
-                [(postings, posts, bid), (cstats, cdelta, bid)]
-            )
+            # two stores, each gated on its OWN mark (a replayed batch can
+            # neither double a +1 nor double a −1): a crash between the
+            # two publishes replays into "skip postings, still append
+            # stats"; compacts stay gated on a real (non-replay) append
+            names = append_fused([(postings, posts, bid), (cstats, cdelta, bid)])
             if names[0] is not None:
-                postings.compact(spark, min_deltas=4)
+                postings.compact(spark, min_deltas=4, transform=fold_posts)
             if names[1] is not None:
                 cstats.compact(spark, min_deltas=4, transform=fold_stats)
 
         drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
 
-        # query path: the probe terms' buckets only (PartitionFilters)
-        term_df = spark.createDataFrame(
-            [(t,) for t in _BM25_TERMS], "token string"
-        )
-        tbs = [r.tb for r in term_df.select(tbucket(F.col("token")).alias("tb")).collect()]
-        pruned = postings.load(spark, where=F.col("tb").isin(tbs)).filter(
-            F.col("token").isin(_BM25_TERMS)
-        )
+        # query path: probe-term buckets (a LocalRelation: computed
+        # without a Spark job), fold the signed rows, score
+        tbs = [
+            r.tb
+            for r in literal_frame(spark, _BM25_TERMS, "token")
+            .select(tbucket(F.col("token")).alias("tb"))
+            .collect()
+        ]
+        pruned = fold_posts(
+            postings.load(spark, where=F.col("tb").isin(tbs)).filter(
+                F.col("token").isin(_BM25_TERMS)
+            )
+        ).filter(F.col("m") > 0)
         st = fold_stats(cstats.load(spark)).select(
             "n", (F.col("total_dl").cast("double") / F.col("n")).alias("avgdl")
         )
         tf = pruned.select(
             "doc_id", "token", F.col("tf").cast("double").alias("tf"), "dl"
         )
-        df = tf.groupBy("token").agg(
-            F.count("*").cast("double").alias("df")
-        )
-        k1, b_ = _BM25_K1, _BM25_B
-        term = (
-            F.log(
-                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
-            * F.col("tf")
-            * (k1 + 1.0)
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b_ + b_ * F.col("dl") / F.col("avgdl"))
-            )
-        )
-        out = (
-            tf.join(F.broadcast(df), "token")
-            .crossJoin(F.broadcast(st))
-            .groupBy("doc_id")
-            .agg(F.round(F.sum(term), 4).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(_BM25_TOPK)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _bm25_top(tf, st).localCheckpoint(eager=True)
+
+
+@register(
+    "stream_bm25_index_upkeep",
+    # the maintained index answers bit-identically to the batch BM25, so
+    # it carries the SAME full oracle (shared string, single source)
+    oracle=REGISTRY["text_bm25_search"].oracle,
+)
+def stream_bm25_index_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTALLY MAINTAINED inverted index — streaming BM25 ingest,
+    and the second operator family on the round-7 replay protocol: the
+    document corpus arrives in 3 micro-batches; each foreachBatch
+    appends two ADDITIVE state deltas guarded by the bid high-water
+    mark (a replayed batch can neither double its postings' term
+    frequencies nor double-count the corpus length statistics):
+
+    - ``postings``: the materialized inverted index — (token, doc_id,
+      tf, dl) for EVERY token, partitioned by ``tb = hash(token) %
+      {_BM25_IDX_BUCKETS}``, so the query path loads only the probe
+      terms' buckets via PartitionFilters (document frequency is a
+      per-term count over exactly those pruned rows — df needs no
+      separate store);
+    - ``cstats``: 1-row (n_docs, total_dl) sum deltas — N and avgdl
+      fold associatively.
+
+    It runs :func:`_bm25_upkeep` on an all-insert feed. The final read
+    scores BM25 for the fixed probe terms from the maintained state
+    with text_bm25_search's scorer and answers BIT-IDENTICALLY to it —
+    it shares that oracle string verbatim, the same single-source
+    contract as stream_ann_index_upkeep / ann_ivf_topk.
+
+    Scale posture: per batch, work is batch-sized (one tokenize +
+    per-batch partial aggregates, no corpus rescan); index bytes are
+    corpus-proportional BECAUSE an inverted index is a corpus-sized
+    materialization — the query touches |probe terms|/{_BM25_IDX_BUCKETS}
+    of it. The reference's property index makes the same access-path
+    claim for graph lookups (docs/key_value_store.adoc:367-369)."""
+    return _bm25_upkeep(
+        spark,
+        sf_dir,
+        "gravityspark_bm25ix_",
+        [(f"doc_id % 3 = {b}", "i") for b in range(3)],
+    )
 
 
 # standing percolation queries: (query_id, AND-term list) — the alerting
@@ -12016,158 +11585,37 @@ _BM25_DEL_PRED_SQL = "NOT (doc_id % 10 = 7)"
 def stream_bm25_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25-INDEX RETRACTIONS — document forget on the maintained
     inverted index, completing the lexical-search side of the
-    right-to-be-forgotten family. The postings become a SIGNED
-    MULTISET: an insert batch appends (token, doc_id, tf, dl, m=+1)
-    rows; a retraction batch re-tokenizes the forgotten documents from
-    content and appends the identical rows with m=−1 — compaction's
-    sum-fold cancels them to nothing, so the forgotten doc's bytes
-    leave the index. The 1-row corpus stats are additive in both
-    directions (−n_docs, −total_dl), so N and avgdl track the SURVIVING
-    corpus — a forgotten document stops influencing every other
-    document's score (df, idf, length normalization), not just the
-    result list. That is the part a lazy "filter results at query time"
-    forget gets wrong.
+    right-to-be-forgotten family. The postings are a SIGNED MULTISET:
+    an insert batch appends (token, doc_id, tf, dl, m=+1) rows; a
+    retraction batch re-tokenizes the forgotten documents from content
+    and appends the identical rows with m=−1 — the signed fold (at
+    read, and at every compaction) cancels them to nothing, so the
+    forgotten doc's bytes leave the index. The 1-row corpus stats are
+    additive in both directions (−n_docs, −total_dl), so N and avgdl
+    track the SURVIVING corpus — a forgotten document stops influencing
+    every other document's score (df, idf, length normalization), not
+    just the result list. That is the part a lazy "filter results at
+    query time" forget gets wrong.
 
-    Replay safety: both stores are bid-gated (``append_once`` — the r7
-    additive-IVM protocol: a replayed batch can neither double a +1 nor
-    double a −1); the folds are plain sums, order-independent.
+    Replay safety: both stores are bid-gated (the r7 additive-IVM
+    protocol: a replayed batch can neither double a +1 nor double a
+    −1); the folds are plain sums, order-independent.
 
     Sequence: ONE insert batch, then a retraction batch forgetting the
     doc_id % 10 == 7 docs (r8 directive #4 batch trim: the postings
     algebra is additive, so insert batching exercised nothing the
     single insert doesn't — the signed fold, the bid replay gate, and
     the stats reversal all live in the retraction batch; the upkeep
-    twin still runs the 3-batch ingest). Query path identical to the
-    upkeep twin (probe-term buckets via PartitionFilters, fold-then-
-    score); answers bit-identically to batch BM25 over survivors — the
-    oracle is the shared chain with the survivor predicate pushed into
-    the tokenize CTE."""
-    import shutil
-    import tempfile
-
-    from .transaction import DatasetStore
-
-    docs = load(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="gravityspark_bm25ret_")
-    try:
-        stage = os.path.join(work, "stage")
-        feeds = [docs, docs.filter(F.expr("doc_id % 10 = 7"))]
-        ops = ["i", "d"]
-        feed_schema = stage_batches(
-            [feed.withColumn("op", F.lit(op)) for feed, op in zip(feeds, ops)],
-            stage,
-        )
-
-        postings = DatasetStore(os.path.join(work, "postings"), partition_cols=("tb",))
-        cstats = DatasetStore(os.path.join(work, "cstats"))
-
-        def tbucket(col):
-            return F.pmod(
-                F.xxhash64(col),
-                # postings keys ~ docs x ~100 tokens (nominal)
-                F.lit(_state_fanout(
-                    _docs_count(spark, sf_dir) * 100, _BM25_IDX_BUCKETS
-                )),
-            ).cast("int")
-
-        def fold_posts(df):
-            return (
-                df.groupBy("token", "doc_id", "tf", "dl", "tb")
-                .agg(F.sum("m").cast("long").alias("m"))
-                .filter(F.col("m") != 0)
-            )
-
-        def fold_stats(df):
-            return df.groupBy().agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("total_dl").cast("long").alias("total_dl"),
-            )
-
-        def handle(batch_df, bid) -> None:
-            sign = F.when(F.col("op") == "d", F.lit(-1)).otherwise(
-                F.lit(1)
-            ).cast("long")
-            toks = batch_df.select(
-                "doc_id",
-                sign.alias("m"),
-                F.explode(_TOKENS_FN()).alias("token"),
-                F.size(_TOKENS_FN()).alias("dl"),
-            )
-            posts = (
-                toks.groupBy("token", "doc_id")
-                .agg(
-                    F.count("*").cast("long").alias("tf"),
-                    F.first("dl").alias("dl"),
-                    F.first("m").alias("m"),
-                )
-                .withColumn("tb", tbucket(F.col("token")))
-            )
-            cdelta = (
-                batch_df.select(
-                    sign.alias("m"), F.size(_TOKENS_FN()).alias("dl")
-                )
-                .filter(F.col("dl") > 0)
-                .agg(
-                    F.sum("m").cast("long").alias("n"),
-                    F.sum(F.col("m") * F.col("dl"))
-                    .cast("long")
-                    .alias("total_dl"),
-                )
-            )
-            # r14: append + every-batch fold in ONE action per store
-            # (min_deltas=2 fired the fold on every batch after the first)
-            postings.append_compact_once(
-                spark, posts, bid, min_deltas=2, transform=fold_posts
-            )
-            cstats.append_compact_once(
-                spark, cdelta, bid, min_deltas=2, transform=fold_stats
-            )
-
-        drive(stage, handle, schema=feed_schema, checkpoint=os.path.join(work, "ckpt"))
-
-        # query path: probe-term buckets, fold the signed rows, score
-        term_df = spark.createDataFrame(
-            [(t,) for t in _BM25_TERMS], "token string"
-        )
-        tbs = [
-            r.tb
-            for r in term_df.select(tbucket(F.col("token")).alias("tb")).collect()
-        ]
-        pruned = fold_posts(
-            postings.load(spark, where=F.col("tb").isin(tbs)).filter(
-                F.col("token").isin(_BM25_TERMS)
-            )
-        ).filter(F.col("m") > 0)
-        st = fold_stats(cstats.load(spark)).select(
-            "n", (F.col("total_dl").cast("double") / F.col("n")).alias("avgdl")
-        )
-        tf = pruned.select(
-            "doc_id", "token", F.col("tf").cast("double").alias("tf"), "dl"
-        )
-        df = tf.groupBy("token").agg(F.count("*").cast("double").alias("df"))
-        k1, b_ = _BM25_K1, _BM25_B
-        term = (
-            F.log(
-                (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            )
-            * F.col("tf")
-            * (k1 + 1.0)
-            / (
-                F.col("tf")
-                + k1 * (1.0 - b_ + b_ * F.col("dl") / F.col("avgdl"))
-            )
-        )
-        out = (
-            tf.join(F.broadcast(df), "token")
-            .crossJoin(F.broadcast(st))
-            .groupBy("doc_id")
-            .agg(F.round(F.sum(term), 4).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(_BM25_TOPK)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    twin still runs the 3-batch ingest). Same body as the upkeep twin
+    (:func:`_bm25_upkeep`); answers bit-identically to batch BM25 over
+    survivors — the oracle is the shared chain with the survivor
+    predicate pushed into the tokenize CTE."""
+    return _bm25_upkeep(
+        spark,
+        sf_dir,
+        "gravityspark_bm25ret_",
+        [("TRUE", "i"), ("doc_id % 10 = 7", "d")],
+    )
 
 
 # Hybrid retrieval: fuse the lexical (BM25) and vector (cosine) ranked
@@ -12733,15 +12181,13 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     limitation (not invertible — a retraction stream needs KMV-with-
     history or exact recount; documented boundary, same class as
     min/max in stream_rollup_retractions's docstring)."""
-    import shutil
-    import tempfile
-
     from .relational_queries import normalize_events_ts, read_raw_events
     from .transaction import DatasetStore
 
     static = read_raw_events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="gravityspark_hllivm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="gravityspark_hllivm_", ignore_cleanup_errors=True
+    ) as work:
         stage = os.path.join(work, "stage")
         feed_schema = stage_batches(
             [
@@ -12804,8 +12250,6 @@ def stream_hll_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
             _spark_hll_est("denom", "zeros").alias("hll_view"),
         )
         return view.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -82,7 +82,7 @@ PLAN_EXEMPT: dict[str, str] = {
     "stream_dedup_retractions_by_id": "id-only keymap retraction: test_dedup_retractions.py; keymap bytes: test_store_compaction_bytes.py",
     "stream_ann_index_upkeep": "oracle-e2e (maintained index ≡ batch ann_ivf_topk, SHARED oracle string); partition pruning probed in test_streaming_dedup_buckets.py (same DatasetStore contract)",
     "stream_ivfpq_index_upkeep": "codes store compaction: test_store_compaction_bytes.py",
-    "stream_ivfpq_retractions": "tombstone anti-join fold: test_store_compaction_bytes.py",
+    "stream_ivfpq_retractions": "tombstone fold: test_store_compaction_bytes.py",
     "stream_bm25_index_upkeep": "oracle-e2e (maintained postings ≡ batch BM25); postings bytes: test_store_compaction_bytes.py (bm25_postings family)",
     "stream_bm25_retractions": "oracle-e2e (signed postings ≡ batch BM25 of survivors); bytes: test_store_compaction_bytes.py",
     "stream_join_maintained": "two-sided join state: test_ivm_replay.py",

@@ -9,6 +9,9 @@ batch ``b`` is exactly frame ``b`` and carries batch id ``b`` on a fresh
 checkpoint, or a memory sink whose table it returns. The query is
 stopped in ``finally``; a handler's exception propagates to the caller
 (after a crash, a rerun on the same checkpoint redelivers the batch).
+``signed_fold`` is the one fold of the signed (Z-set) stores the
+handlers maintain: rows carry a multiplicity, inserts +1, retractions
+-1.
 """
 
 from __future__ import annotations
@@ -19,9 +22,10 @@ import uuid
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-__all__ = ["stage_batches", "drive"]
+__all__ = ["stage_batches", "drive", "signed_fold"]
 
 # mtime of batch 0; batch b lands 60 s after batch b-1
 _MTIME0 = 1_700_000_000
@@ -84,3 +88,15 @@ def drive(
     finally:
         q.stop()
     return None if table is None else source.sparkSession.table(table)
+
+
+def signed_fold(df: DataFrame, keys: Sequence[str], m: str) -> DataFrame:
+    """Net the multiplicity column ``m`` per ``keys`` and drop the rows
+    that net to zero: ``keys`` then ``m`` (long). An insert and its
+    retraction cancel to nothing, so a folded store holds only live
+    rows; on an all-insert feed the fold is a duplicate count."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.sum(m).cast("long").alias(m))
+        .filter(F.col(m) != 0)
+    )

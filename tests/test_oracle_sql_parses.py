@@ -101,3 +101,26 @@ def test_oracle_check_rejects_unknown_names():
     assert r.returncode != 0, r.stdout[-2000:]
     assert "no_such_query" in r.stdout
     assert "q1_pricing_summary" not in r.stdout
+
+
+def test_oracle_check_runs_from_another_cwd(tmp_path):
+    """tools/oracle_check.py run from outside its checkout checks THAT
+    checkout end to end: the driver and Spark's Python workers (here a
+    mapInPandas decoder whose closure calls into the package) import the
+    tool's own tree, whatever the cwd holds and with no PYTHONPATH set."""
+    import subprocess
+    import sys
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "oracle_check.py"), SF_DIR,
+         "multimodal_binary_meta"],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stdout[-2000:]
+    assert "0 failures / 1 queries checked" in r.stdout

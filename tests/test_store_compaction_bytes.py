@@ -18,6 +18,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from gravitydb_spark.streaming.microbatch import signed_fold
 from gravitydb_spark.transaction import DatasetStore
 
 
@@ -28,33 +29,22 @@ def _dir_bytes(path):
     return total
 
 
-def _fold_join_l(df):  # pipeline_queries.stream_join_retractions fold_l
-    return (
-        df.groupBy("okey", "cents", "kb")
-        .agg(F.sum("m").cast("long").alias("m"))
-        .filter(F.col("m") != 0)
-    )
+def _fold_join_l(df):  # stream_join_retractions l_store fold (_join_upkeep)
+    return signed_fold(df, ["okey", "cents", "kb"], "m")
 
 
-def _fold_ivfpq(df):  # stream_ivfpq_index_upkeep compact transform
+def _fold_ivfpq(df):  # stream_ivfpq_index_upkeep: duplicates fold per vec_id
     return df.dropDuplicates(["vec_id"])
 
 
 def _fold_dedup_signed(df):  # stream_dedup_retractions fold
-    return (
-        df.groupBy("band", "bk", "bkb")
-        .agg(F.sum("op_m").cast("long").alias("op_m"))
-        .filter(F.col("op_m") != 0)
-        .select("band", "bk", "op_m", F.lit(-1).cast("long").alias("bid"), "bkb")
+    return signed_fold(df, ["band", "bk", "bkb"], "op_m").select(
+        "band", "bk", "op_m", F.lit(-1).cast("long").alias("bid"), "bkb"
     )
 
 
 def _fold_tri_adj(df):  # graph_queries.g_triangles_retractions fold_adj
-    return (
-        df.groupBy("v", "nb", "vb")
-        .agg(F.sum("m").cast("long").alias("m"))
-        .filter(F.col("m") != 0)
-    )
+    return signed_fold(df, ["v", "nb", "vb"], "m")
 
 
 def _seed_join_l(spark):
@@ -163,7 +153,7 @@ def _delta_kmeans(spark, b):
     )
 
 
-def _fold_ivfpq_ret(df):  # stream_ivfpq_retractions fold
+def _fold_ivfpq_ret(df):  # the tombstone semantics of pipeline_queries._ivfpq_upkeep
     dels = df.filter(F.col("op") == "d")
     alive = (
         df.filter(F.col("op") == "i")

@@ -15,11 +15,18 @@ Prints PROBE lines:
 Usage: python tools/cc_stratify_probe.py [base_sf_dir]
 """
 
+import os
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they inherit PYTHONPATH
+# (through the JVM), not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+)
 
 
 def main() -> None:

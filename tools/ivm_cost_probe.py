@@ -1,6 +1,8 @@
 """IVM demo fixed-vs-data cost decomposition (r12 VERDICT #2).
 
-The 21 IVM/streaming demos cost 234s of the 597s r12 bench. Per
+The 23 IVM demos (FAMILY, the default) are the streaming views a
+store maintains under inserts and deletes; at r12 the IVM/streaming
+demos cost 234s of the 597s bench. Per
 SCALE.md these walls are batch-count × per-batch protocol rounds
 (foreachBatch scheduling, store append/compact jobs, localCheckpoints,
 bucket-list collects), not data. This probe MEASURES that split the
@@ -19,23 +21,42 @@ Usage: python tools/ivm_cost_probe.py [names...]   (default: the full family)
 Prints one PROBE line per (demo, sf).
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too; they inherit PYTHONPATH
+# (through the JVM), not this process's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+)
 
 FAMILY = [
-    "stream_dedup_retractions_by_id",
-    "g_cc_retractions",
-    "stream_dedup_retractions",
-    "g_lpa_maintained",
-    "stream_dedup_index_upkeep",
-    "g_cc_maintained",
-    "g_lpa_retractions",
-    "g_triangles_retractions",
+    "stream_rollup_maintained",
+    "stream_rollup_versions",
+    "stream_rollup_retractions",
+    "stream_join_maintained",
     "stream_join_retractions",
-    "stream_ivfpq_retractions",
+    "stream_bm25_index_upkeep",
+    "stream_bm25_retractions",
     "stream_ivfpq_index_upkeep",
+    "stream_ivfpq_retractions",
+    "g_degrees_maintained",
+    "g_degrees_retractions",
+    "g_cc_maintained",
+    "g_cc_retractions",
+    "g_triangles_retractions",
+    "g_lpa_maintained",
+    "g_lpa_retractions",
+    "stream_dedup_index_upkeep",
+    "stream_dedup_retractions",
+    "stream_dedup_retractions_by_id",
+    "stream_knn_graph_upkeep",
+    "stream_ann_index_upkeep",
+    "stream_kmeans_upkeep",
+    "stream_hll_upkeep",
 ]
 
 
@@ -47,11 +68,10 @@ def main() -> None:
     queries()
     spark = get_spark(app_name="ivm_cost_probe", shuffle_partitions=8)
     sc = spark.sparkContext
-    import os as _os
 
     sfs = tuple(
         f"/root/testdata/{x}"
-        for x in _os.environ.get("IVM_PROBE_SFS", "sf0.001,sf0.01").split(",")
+        for x in os.environ.get("IVM_PROBE_SFS", "sf0.001,sf0.01").split(",")
     )
     for sf in sfs:
         for name in names:

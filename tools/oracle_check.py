@@ -16,7 +16,8 @@ import sys
 import os
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -76,6 +77,11 @@ def main():
 
     from gravitydb_spark.session import get_spark
 
+    # Spark's Python workers import the package too; they inherit
+    # PYTHONPATH (through the JVM), not this process's sys.path
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (ROOT, os.environ.get("PYTHONPATH")))
+    )
     spark = get_spark(app_name="oracle_check")
     con = duck_con(sf_dir)
 
